@@ -78,10 +78,12 @@ def rebalance_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     2.5→2.0 s.  For anything cheaper the partition probe (one plan
     compile via ``df.rdd``) plus the text shuffle COSTS more than the
     parallelism returns, and for cached chokepoints feeding iterative
-    consumers it is actively harmful (32-partition cached docs made
-    LinearSVC's treeAggregate rounds 2.5× slower; the quality/dedup
-    families regressed 1.5-6×) — those sites scan unrebalanced by
-    design.  Do not blanket-apply; A/B any new site at sf0.1."""
+    consumers it is actively harmful (32-partition cached docs make
+    the SVM fit 2.2-2.8× slower — warm min-of-3 at sf0.1, local[4] on
+    a 4-vCPU VM, with tasks that no longer ship the IDF closure; 3.0-3.5×
+    while they did; the quality/dedup families regressed 1.5-6×) —
+    those sites scan unrebalanced by design.  Do not blanket-apply;
+    A/B any new site at sf0.1."""
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df

@@ -33,13 +33,32 @@ conditional-count agg — both partial+final hash aggregates); scoring
 is a narrow map over test rows with the model broadcast by MLlib.
 LinearSVC is maxIter-bounded treeAggregate rounds — the same shape
 it has on a 1000-executor cluster.
+
+- Lineage cut: on the reference-order path the featurized
+  (doc_id, label, features) frame is ``localCheckpoint``-ed before
+  ``randomSplit``.  Without it every task of every later job — each of
+  LinearSVC's ~25 loss/gradient rounds, the NB fit, the transform —
+  would carry the fitted IDF stage (two 2^18-long arrays, a 4.1 MiB
+  task binary) in its closure.  The split is unchanged: the
+  checkpoint keeps the partitioning, and ``randomSplit`` samples per
+  partition.
+- Subspace fit (SVM only): the features are sliced to the buckets the
+  IDF fit saw (``docFreq >= max(1, minDocFreq)``, ascending) before the
+  split, so LBFGS iterates over the corpus's few thousand used buckets,
+  not 2^18.  Every other bucket is zero in every row (unseen, or zeroed
+  by minDocFreq), and LinearSVC gives a zero-variance column a zero
+  weight, so the subspace fit solves the same problem: same
+  predictions, same coefficients at the used buckets.
+- NaiveBayes is NOT sliced: its smoothing denominator is
+  ``sum(counts) + smoothing * numFeatures``, so dropping unused
+  columns would change every conditional probability.
 """
 
 from __future__ import annotations
 
 from pyspark.ml import Pipeline, PipelineModel
 from pyspark.ml.classification import LinearSVC, NaiveBayes
-from pyspark.ml.feature import IDF, HashingTF, Tokenizer
+from pyspark.ml.feature import IDF, HashingTF, IDFModel, Tokenizer, VectorSlicer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,6 +105,21 @@ def _base_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _used_buckets(
+    featurized: DataFrame, idf: IDFModel, min_doc_freq: int
+) -> DataFrame:
+    """``features`` sliced to the buckets that can be non-zero: seen by
+    the IDF fit and not zeroed by ``minDocFreq`` (module Scale notes)."""
+    floor = max(1, min_doc_freq)
+    used = [i for i, n in enumerate(idf.docFreq) if n >= floor]
+    if not used:  # every feature is zero; VectorSlicer needs an index
+        return featurized
+    slicer = VectorSlicer(inputCol="features", outputCol="used", indices=used)
+    return slicer.transform(featurized).select(
+        "doc_id", "label", F.col("used").alias("features")
+    )
+
+
 def ml_predictions(
     spark: SparkSession,
     sf_dir: str,
@@ -112,6 +146,13 @@ def ml_predictions(
         featurized = feat_model.transform(base).select(
             "doc_id", "label", "features"
         )
+        if kind == "svm":
+            featurized = _used_buckets(
+                featurized, feat_model.stages[-1], min_doc_freq
+            )
+        # lazy, like the CC/BPE loops: the classifier's first job
+        # materializes it, and no later task ships the IDF closure
+        featurized = featurized.localCheckpoint(eager=False)
         train, test = featurized.randomSplit(SPLIT, seed=SEED)
         scored = _classifier(kind).fit(train).transform(test)
     out = scored.select(

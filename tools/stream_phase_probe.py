@@ -16,6 +16,7 @@ Usage: python tools/stream_phase_probe.py [sf_dir] [laps]
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -57,17 +58,25 @@ def _progress(q) -> list[dict]:
 
 
 def main() -> int:
-    args = [a for a in sys.argv[1:]]
-    parts_list = None
-    if "--parts" in args:
-        i = args.index("--parts")
-        parts_list = [p for p in args[i + 1].split(",")]
-        del args[i : i + 2]
-    sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.1"
-    laps = int(args[1]) if len(args) > 1 else (int(args[0]) if args and not os.path.isdir(args[0]) else 3)
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+        DEFAULT_SF_DIR,
+    )
+
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    ap.add_argument("sf_dir", nargs="?", default=DEFAULT_SF_DIR)
+    ap.add_argument("laps", nargs="?", type=int, default=3)
+    ap.add_argument("--parts", help="comma-separated partition counts to A/B")
+    args = ap.parse_args()
+    if not os.path.isdir(args.sf_dir):
+        ap.error(f"sf_dir {args.sf_dir!r} is not a directory")
+    sf_dir, laps = args.sf_dir, args.laps
+    parts_list = args.parts.split(",") if args.parts else None
 
     from text_sentiment_analysis_in_hadoop_and_spark_spark.session import (
         get_spark,
+    )
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.benchprobes import (
+        PROBE_PARTS,
     )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.joins import (
         attribution_stream,
@@ -101,7 +110,7 @@ def main() -> int:
         finally:
             prog = _progress(q)
             q.stop()
-        spark.catalog.dropTempView("probe_attrib")
+            spark.catalog.dropTempView("probe_attrib")
         return prog
 
     def outer_join():
@@ -117,7 +126,7 @@ def main() -> int:
         finally:
             prog = _progress(q)
             q.stop()
-        spark.catalog.dropTempView("probe_unconv")
+            spark.catalog.dropTempView("probe_unconv")
         return prog
 
     def upsert_view():
@@ -174,7 +183,7 @@ def main() -> int:
                         run(name, fn, parts)
             else:
                 for name, fn in join_probes.items():
-                    run(name, fn, "8")  # the bench's probe scale
+                    run(name, fn, PROBE_PARTS)  # the bench's probe scale
                 for name, fn in other_probes.items():
                     run(name, fn, None)
     finally:
