@@ -20,11 +20,9 @@ SF = "/root/testdata/sf0.001"
 @pytest.fixture()
 def forced_fallback():
     dedup._FORCE_STRING_FALLBACK = True
-    dedup._HASH_BIJECTIVE_CACHE.clear()
     clear_caches()
     yield
     dedup._FORCE_STRING_FALLBACK = False
-    dedup._HASH_BIJECTIVE_CACHE.clear()
     clear_caches()
 
 
@@ -46,7 +44,6 @@ def test_string_fallback_is_identical(spark, forced_fallback, qname):
     fn = entrymod.queries()[qname]
     fallback = _rows(fn(spark, SF))
     dedup._FORCE_STRING_FALLBACK = False
-    dedup._HASH_BIJECTIVE_CACHE.clear()
     clear_caches()
     fast = _rows(fn(spark, SF))
     assert fallback == fast

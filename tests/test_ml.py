@@ -101,7 +101,7 @@ def test_ml_predictions_deterministic(spark):
         tuple(r)
         for r in ml.ml_predictions(spark, SF_DIR, "nb", 0).collect()
     )
-    ml._PRED_CACHE.clear()
+    ml.ml_predictions.memo.clear()
     b = sorted(
         tuple(r)
         for r in ml.ml_predictions(spark, SF_DIR, "nb", 0).collect()
@@ -137,7 +137,7 @@ def _fresh_svm_predictions(spark, sf_dir, min_doc_freq, monkeypatch):
     from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import ml
 
     key = (spark.sparkContext.applicationId, sf_dir, "svm", min_doc_freq, False)
-    old = ml._PRED_CACHE.pop(key, None)
+    old = ml.ml_predictions.memo.pop(key, None)
     if old is not None:
         old.unpersist()
     seen = []

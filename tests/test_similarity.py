@@ -304,10 +304,10 @@ def test_pq_codes_shape_and_determinism(spark):
             for r in S.q_sim_pq_codes(spark, sf).collect()
         }
 
-    S._PQ_CODES_CACHE.clear()
+    S.pq_codes.memo.clear()
     a = grab()
-    S._PQ_CODES_CACHE.clear()
-    S._PQ_CACHE.clear()
+    S.pq_codes.memo.clear()
+    S._pq_codebooks.memo.clear()
     b = grab()
     assert a == b
     assert all(
@@ -378,14 +378,14 @@ def test_norm_outliers_flag_planted_broken_vectors(spark, tmp_path):
         rows, "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
     ).coalesce(1).write.parquet(str(d / "embeddings.parquet"))
 
-    S._EMB_CACHE.clear()
+    S._emb_with_norm.memo.clear()
     try:
         flagged = {
             r["vec_id"]: r["z"]
             for r in S.q_embedding_norm_outliers(spark, str(d)).collect()
         }
     finally:
-        S._EMB_CACHE.clear()
+        S._emb_with_norm.memo.clear()
     assert set(flagged) == {100, 101}
     assert flagged[100] < 0 < flagged[101]
 

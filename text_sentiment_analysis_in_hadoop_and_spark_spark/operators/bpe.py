@@ -29,12 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .common import register_cache
-
-# learned merge lists memoized per (session, sf_dir): the tokenize
-# query replays the trainer's output instead of re-running the
-# 8-round training loop (12.7 s → apply-only at sf0.1)
-_MERGES_CACHE: dict[tuple[str, str], list] = register_cache({})
+from .common import memo
 
 N_MERGES = 8
 END_MARK = "</w>"  # word-end marker, standard BPE
@@ -157,14 +152,12 @@ def apply_merges(docs: DataFrame, merges: list[dict]) -> DataFrame:
     )
 
 
+# learned merge lists memoized per (session, sf_dir): the tokenize
+# query replays the trainer's output instead of re-running the
+# 8-round training loop (12.7 s → apply-only at sf0.1)
+@memo
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[dict]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    merges = _MERGES_CACHE.get(key)
-    if merges is None:
-        docs = load_table(spark, sf_dir, "documents").select("text")
-        merges = train_bpe(docs)
-        _MERGES_CACHE[key] = merges
-    return merges
+    return train_bpe(load_table(spark, sf_dir, "documents").select("text"))
 
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -227,19 +220,11 @@ def train_bpe_sampled(
     return train_bpe(sampled, n_merges)
 
 
-_SAMPLED_CACHE: dict[tuple[str, str], list] = register_cache({})
-
-
-def _trained_merges_sampled(
-    spark: SparkSession, sf_dir: str
-) -> list[dict]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    merges = _SAMPLED_CACHE.get(key)
-    if merges is None:
-        docs = load_table(spark, sf_dir, "documents").select("text")
-        merges = train_bpe_sampled(docs)
-        _SAMPLED_CACHE[key] = merges
-    return merges
+@memo
+def _trained_merges_sampled(spark: SparkSession, sf_dir: str) -> list[dict]:
+    return train_bpe_sampled(
+        load_table(spark, sf_dir, "documents").select("text")
+    )
 
 
 def q_bpe_merges_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -8,9 +8,18 @@ deterministic 75/25 train/test split (``doc_id % 8``) — mirroring the
 reference's fixed 75/25 protocol (/root/reference/README.md:21,
 seeded randomSplit at Spark/NB/src/main/scala/NB.scala:83) in a form
 both engines can recompute exactly.
+
+Expensive intermediates are memoized per Spark session and dataset with
+:func:`memo`.  Every entry is keyed ``(applicationId, sf_dir, *args)``,
+so ``key[1]`` is the dataset; ``None`` results are not stored; and
+:func:`clear_caches` releases values (``unpersist`` for DataFrames,
+``cleanup`` for temporary directories) per ``sf_dir`` or wholesale.
 """
 
 from __future__ import annotations
+
+import functools
+import inspect
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -20,23 +29,51 @@ from ..sources.tables import load_table
 
 # --- Spark side -----------------------------------------------------------
 
-# Every module-level memo of .cache()'d DataFrames registers here so
-# storage memory can be released per sf_dir (or wholesale) in
-# long-lived sessions that touch many datasets (ADVICE r2).
+# Every memo's entry dict registers here so storage memory can be
+# released per sf_dir (or wholesale) in long-lived sessions that touch
+# many datasets (ADVICE r2).
 _CACHE_REGISTRY: list[dict] = []
 
 
-def register_cache(d: dict) -> dict:
-    """Register a {(applicationId, sf_dir): cached-thing} memo dict for
-    eviction via :func:`clear_caches`.  Returns ``d`` for inline use."""
-    _CACHE_REGISTRY.append(d)
-    return d
+def memo(fn):
+    """Memoize ``fn(spark, sf_dir, ...)`` per Spark session and dataset.
+
+    The key is ``(applicationId, sf_dir, *rest)``: ``rest`` is every
+    remaining argument, bound to ``fn``'s signature with defaults
+    applied, so ``key[1]`` is always ``sf_dir`` and a call that spells
+    out a default shares the entry of one that omits it.  A stored
+    value is returned as is; otherwise ``fn`` runs and a non-``None``
+    result is stored (``None`` means "nothing to keep" and is rebuilt on
+    the next call).  Entries live in a dict registered for
+    :func:`clear_caches` and exposed as ``fn.memo``."""
+    sig = inspect.signature(fn)
+    entries: dict[tuple, object] = {}
+    _CACHE_REGISTRY.append(entries)
+
+    @functools.wraps(fn)
+    def memoized(*args, **kwargs):
+        bound = sig.bind(*args, **kwargs)
+        bound.apply_defaults()
+        spark, sf_dir, *rest = bound.arguments.values()
+        key = (spark.sparkContext.applicationId, sf_dir, *rest)
+        hit = entries.get(key)
+        if hit is None:
+            hit = fn(*args, **kwargs)
+            if hit is not None:
+                entries[key] = hit
+        return hit
+
+    memoized.memo = entries
+    return memoized
 
 
 def clear_caches(sf_dir: str | None = None) -> None:
-    """Unpersist and drop memoized DataFrames — all of them, or only
-    the entries for one ``sf_dir``.  Call when a dataset is retired so
-    executor storage memory is released."""
+    """Release and drop memo entries — all of them, or only those whose
+    key has ``key[1] == sf_dir``.  Call when a dataset is retired so
+    executor storage memory is released.  Each value (or each item of
+    a tuple value) is released by its own method: ``unpersist`` for
+    cached DataFrames, ``cleanup`` for temporary directories; plain
+    values are just dropped."""
     for d in _CACHE_REGISTRY:
         for key in list(d):
             if sf_dir is not None and key[1] != sf_dir:
@@ -55,6 +92,8 @@ def clear_caches(sf_dir: str | None = None) -> None:
                         obj.unpersist(blocking=True)
                     except TypeError:  # non-DataFrame registrants
                         obj.unpersist()
+                elif hasattr(obj, "cleanup"):
+                    obj.cleanup()
 
 
 def rebalance_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -93,32 +132,21 @@ def rebalance_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
 # Cleaned docs are the shared prefix of every query DAG; the 7-regex
 # chain dominates scan cost at scale, so run it once per (session,
 # sf_dir) and .cache() — the judge flagged the 3× recompute in r1.
-_DOCS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
-def _cache_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
+@memo
 def labeled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, label, text-cleaned).  Cleaning is the
     P2→P7 chain (NB.java:67-73); label/split derivation above.
     Cached: every downstream query (train, score, metrics) reuses the
     same cleaned snapshot instead of re-running the regex chain."""
-    key = _cache_key(spark, sf_dir)
-    df = _DOCS_CACHE.get(key)
-    if df is None:
-        df = (
-            load_table(spark, sf_dir, "documents")
-            .select(
-                "doc_id",
-                (F.col("doc_id") % 2).cast("int").alias("label"),
-                clean_text(F.col("text")).alias("text"),
-            )
-            .cache()
+    return (
+        load_table(spark, sf_dir, "documents")
+        .select(
+            "doc_id",
+            (F.col("doc_id") % 2).cast("int").alias("label"),
+            clean_text(F.col("text")).alias("text"),
         )
-        _DOCS_CACHE[key] = df
-    return df
+        .cache()
+    )
 
 
 def doc_tokens(docs: DataFrame) -> DataFrame:

@@ -39,7 +39,7 @@ from ..functions.hashing import (
     minhash_sql,
 )
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 from .quality import ORACLES as _QUALITY_ORACLES
 from .quality import q_repetition
 
@@ -56,16 +56,6 @@ SIMHASH_BITS = 32
 # pass (q_dedup_exact here) rather than pairwise verify.  1000 docs →
 # ≤499,500 pairs per surviving bucket, bounded at any corpus size.
 HOT_BUCKET_CAP = 1000
-
-# banded signatures memoized per (session, sf_dir): the sig/pairs/
-# verify queries all consume the same signature table.  The verified
-# Jaccard pairs are memoized too — the cluster/corpus-keep queries
-# re-derive their edge set from them, and without the cache each
-# consumer re-runs the candidate→verify joins (~8 s/sf0.1).
-_SIG_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_JACCARD_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_INCR_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 # --------------------------------------------------------------------------
@@ -216,25 +206,19 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.join(keep, "doc_id", "left_semi")
 
 
+@memo
 def _shingles_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        df = doc_shingles(docs).cache()
-        _SHINGLE_CACHE[key] = df
-    return df
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return doc_shingles(docs).cache()
 
 
+# banded signatures memoized per (session, sf_dir): the sig/pairs/
+# verify queries all consume the same signature table
+@memo
 def _banded_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SIG_CACHE.get(key)
-    if df is None:
-        df = banded_signatures(
-            minhash_signatures(_shingles_cached(spark, sf_dir))
-        ).cache()
-        _SIG_CACHE[key] = df
-    return df
+    return banded_signatures(
+        minhash_signatures(_shingles_cached(spark, sf_dir))
+    ).cache()
 
 
 def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,20 +232,11 @@ def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # true for the truth side only; method_agreement / lsh_s_curve /
 # minhash_error re-ran the band joins and the whole tfidf-cosine
 # token pipeline on every call, ~4 s/run at sf0.1).  Also holds the
-# span-scrub output (consumed by dedup_savings).  Keyed
-# (appId, sf_dir, tag): clear_caches matches on key[1] = sf_dir.
-_METHOD_PAIRS_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache(
-    {}
-)
-
-
-def _memo_pairs(tag, spark, sf_dir, build) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    hit = _METHOD_PAIRS_CACHE.get(key)
-    if hit is None:
-        hit = build().cache()
-        _METHOD_PAIRS_CACHE[key] = hit
-    return hit
+# span-scrub output (consumed by dedup_savings).  One entry per
+# (session, sf_dir, method); the builders are in _PAIR_BUILDERS.
+@memo
+def _method_pairs(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
+    return _PAIR_BUILDERS[method](spark, sf_dir).cache()
 
 
 def _candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -275,20 +250,13 @@ def _candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: 1.2 s per evaluation of a 3.6 s query).  One cached table
     serves all of them; the build bills to the family's first
     toucher inside the dedup group, same as every other memo."""
-    return _memo_pairs(
-        "lsh_candidates",
-        spark,
-        sf_dir,
-        lambda: candidate_pairs(_banded_cached(spark, sf_dir)),
-    )
+    return _method_pairs(spark, sf_dir, "lsh_candidates")
 
 
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with estimated Jaccard = fraction of the 16
     signature components that agree."""
-    return _memo_pairs(
-        "minhash", spark, sf_dir, lambda: _minhash_pairs(spark, sf_dir)
-    )
+    return _method_pairs(spark, sf_dir, "minhash")
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -317,15 +285,6 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (appId, sf_dir) → is xxhash64 a bijection on the corpus shingle set?
-# Plain bools (nothing to unpersist, and clear_caches tolerates that),
-# but registered anyway so a corpus regenerated at the same path in
-# one session can't ride a stale True verdict into the int64 fast
-# path it was never proven collision-free on (ADVICE r11).  One
-# driver round-trip per (session, corpus), shared by every
-# corpus-side array verify that wants the int64 dictionary.
-_HASH_BIJECTIVE_CACHE: dict[tuple[str, str], bool] = register_cache({})
-
 # test hook: forces every guarded int64-dictionary path (verify
 # arrays, okey join key, suffix filter) onto its string fallback, so
 # tests can pin that the fallback produces IDENTICAL results — a real
@@ -333,27 +292,28 @@ _HASH_BIJECTIVE_CACHE: dict[tuple[str, str], bool] = register_cache({})
 _FORCE_STRING_FALLBACK = False
 
 
+# Plain bools (nothing to unpersist), but memoized per (session,
+# sf_dir) so a corpus regenerated at the same path in one session
+# can't ride a stale True verdict into the int64 fast path it was
+# never proven collision-free on (ADVICE r11).  One driver round-trip
+# per (session, corpus), shared by every corpus-side array verify
+# that wants the int64 dictionary.
+@memo
 def _corpus_hash_bijective(spark: SparkSession, sf_dir: str) -> bool:
     """True iff xxhash64 is collision-free on THIS corpus' distinct
     shingles — the guard that lets array verifies pack shingles into
     int64 dictionaries (r10 pattern, generalized r11) while staying
-    unconditionally exact via the string fallback."""
-    if _FORCE_STRING_FALLBACK:
-        return False
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _HASH_BIJECTIVE_CACHE.get(key)
-    if hit is None:
-        r = (
-            _shingles_cached(spark, sf_dir)
-            .agg(
-                F.countDistinct("shingle").alias("n_str"),
-                F.countDistinct(F.xxhash64("shingle")).alias("n_hash"),
-            )
-            .collect()[0]
+    unconditionally exact via the string fallback.  Callers check
+    ``_FORCE_STRING_FALLBACK`` first."""
+    r = (
+        _shingles_cached(spark, sf_dir)
+        .agg(
+            F.countDistinct("shingle").alias("n_str"),
+            F.countDistinct(F.xxhash64("shingle")).alias("n_hash"),
         )
-        hit = bool(r["n_str"] == r["n_hash"])
-        _HASH_BIJECTIVE_CACHE[key] = hit
-    return hit
+        .collect()[0]
+    )
+    return bool(r["n_str"] == r["n_hash"])
 
 
 def verify_jaccard(
@@ -404,6 +364,7 @@ def verify_jaccard(
         F.xxhash64("shingle")
         if same
         and shingles_a is None
+        and not _FORCE_STRING_FALLBACK
         and _corpus_hash_bijective(spark, sf_dir)
         else F.col("shingle")
     )
@@ -447,18 +408,15 @@ def verify_jaccard(
     )
 
 
+@memo
 def q_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verify stage: exact shingle-set Jaccard, computed only for the
     LSH candidate pairs (never all-pairs).  Memoized: the cluster and
-    corpus-keep queries consume this as their edge source."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _JACCARD_CACHE.get(key)
-    if cached is not None:
-        return cached
+    corpus-keep queries consume this as their edge source — without
+    the memo each consumer re-runs the candidate→verify joins
+    (~8 s/sf0.1)."""
     pairs = _candidates_cached(spark, sf_dir)
-    out = verify_jaccard(spark, sf_dir, pairs).cache()
-    _JACCARD_CACHE[key] = out
-    return out
+    return verify_jaccard(spark, sf_dir, pairs).cache()
 
 
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,7 +440,8 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarded, string fallback) like every other corpus-side verify
     key_col = (
         F.xxhash64("shingle")
-        if _corpus_hash_bijective(spark, sf_dir)
+        if not _FORCE_STRING_FALLBACK
+        and _corpus_hash_bijective(spark, sf_dir)
         else F.col("shingle")
     )
     arrs = sh.groupBy("doc_id").agg(
@@ -561,11 +520,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 JACCARD_DUP_MIN = 0.5  # verified-pair threshold for cluster edges
 CC_MAX_ITERS = 25      # safety bound; real convergence is diameter-fast
-
-# converged component labels memoized per (session, sf_dir) — the
-# iteration's intermediates are unpersisted in-loop; only the final
-# labels table stays cached, evictable via common.clear_caches()
-_CC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 
 def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
@@ -727,18 +681,18 @@ def connected_components_star(
     )
 
 
+@memo
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged (node, label) over the verified text near-dup pairs,
-    memoized per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _CC_CACHE:
-        jac = q_jaccard_pairs(spark, sf_dir).filter(
-            F.col("jaccard") >= JACCARD_DUP_MIN
-        )
-        _CC_CACHE[key] = connected_components(jac)
-    return _CC_CACHE[key]
+    memoized per (session, sf_dir) — the iteration's intermediates are
+    unpersisted in-loop; only the final labels table stays cached."""
+    jac = q_jaccard_pairs(spark, sf_dir).filter(
+        F.col("jaccard") >= JACCARD_DUP_MIN
+    )
+    return connected_components(jac)
 
 
+@memo
 def q_corpus_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The end-to-end kept corpus — the capstone composition a
     training-data pipeline actually ships: a doc survives iff it
@@ -760,11 +714,7 @@ def q_corpus_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     r13: the finished keep set memoizes per (session, sf_dir) — five
     consumers (the multimodal keep list, both pipeline capstones, the
     profile rollup, the embedding keep join) re-ran the three-gate
-    composition per call (the _LM_SCORE_CACHE precedent)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CORPUS_KEEP_CACHE.get(key)
-    if hit is not None:
-        return hit
+    composition per call (the quality.q_lm_score precedent)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     gate = q_repetition(spark, sf_dir).filter(F.col("keep")).select("doc_id")
     exact = q_dedup_keep_first(spark, sf_dir).select("doc_id")
@@ -773,18 +723,13 @@ def q_corpus_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") == F.col("cluster_id"))
         .select("doc_id")
     )
-    out = (
+    return (
         docs.join(gate, "doc_id", "left_semi")
         .join(exact, "doc_id", "left_semi")
         .join(canon, "doc_id", "left_semi")
         .cache()
     )
-    _CORPUS_KEEP_CACHE[key] = out
-    return out
 
-
-# finished three-gate keep set (r13 — see q_corpus_keep)
-_CORPUS_KEEP_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
 SPAN_K = 8       # token-gram width for duplicated-span detection
 BATCH_MOD = 10   # incremental probe: doc_id % 10 == 0 is "today's crawl"
@@ -793,35 +738,28 @@ BATCH_MOD = 10   # incremental probe: doc_id % 10 == 0 is "today's crawl"
 # span query it feeds BOTH the dup-gram aggregate and the semi-join
 # probe (uncached, Spark recomputes the tokenize+gram expansion for
 # each branch), and the stats/scrub queries share it across calls.
-_SPAN_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def _span_gpos_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SPAN_CACHE.get(key)
-    if df is None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        tok_df = docs.select(
-            "doc_id",
-            F.explode(F.array(F.split(F.col("text"), " "))).alias("toks"),
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    tok_df = docs.select(
+        "doc_id",
+        F.explode(F.array(F.split(F.col("text"), " "))).alias("toks"),
+    )
+    toks = F.col("toks")
+    n = F.size(toks)
+    grams = F.when(
+        n < SPAN_K, F.array().cast("array<string>")
+    ).otherwise(
+        F.transform(
+            F.sequence(F.lit(0), n - SPAN_K),
+            lambda i: F.md5(
+                F.concat_ws(" ", F.slice(toks, i + 1, SPAN_K))
+            ),
         )
-        toks = F.col("toks")
-        n = F.size(toks)
-        grams = F.when(
-            n < SPAN_K, F.array().cast("array<string>")
-        ).otherwise(
-            F.transform(
-                F.sequence(F.lit(0), n - SPAN_K),
-                lambda i: F.md5(
-                    F.concat_ws(" ", F.slice(toks, i + 1, SPAN_K))
-                ),
-            )
-        )
-        df = tok_df.select(
-            "doc_id", F.posexplode(grams).alias("pos", "g")
-        ).cache()
-        _SPAN_CACHE[key] = df
-    return df
+    )
+    return tok_df.select(
+        "doc_id", F.posexplode(grams).alias("pos", "g")
+    ).cache()
 
 
 def q_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -914,9 +852,7 @@ def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses.  Output memoized (r11): the scrubbed corpus feeds both
     this query and the dedup_savings rollup — same bounded-artifact
     convention as the pair tables."""
-    return _memo_pairs(
-        "span_scrub", spark, sf_dir, lambda: _span_scrub(spark, sf_dir)
-    )
+    return _method_pairs(spark, sf_dir, "span_scrub")
 
 
 def _span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1004,34 +940,7 @@ def q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by that doc's candidate count.  Ordering ranks on the
     ROUNDED jaccard so Spark and the oracle always agree at
     tie boundaries."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    pairs = _INCR_PAIRS_CACHE.get(key)
-    if pairs is None:
-        long = banded_long(_banded_cached(spark, sf_dir))
-        is_batch = F.col("doc_id") % BATCH_MOD == 0
-        b_long = long.filter(is_batch)
-        i_long = long.filter(~is_batch)
-        hot = (
-            i_long.groupBy("bi", "bk")
-            .agg(F.count("*").alias("c"))
-            .filter(F.col("c") > HOT_BUCKET_CAP)
-            .select("bi", "bk")
-        )
-        left = b_long.select(
-            F.col("doc_id").alias("doc_a"), "bi", "bk"
-        ).join(F.broadcast(hot), ["bi", "bk"], "left_anti")
-        right = i_long.select(F.col("doc_id").alias("doc_b"), "bi", "bk")
-        # cache: the verify stage references the pair table twice
-        # (intersection build + final left join) — uncached, the whole
-        # probe-join subtree would execute twice
-        pairs = (
-            left.join(right, ["bi", "bk"])
-            .select("doc_a", "doc_b")
-            .distinct()
-            .cache()
-        )
-        _INCR_PAIRS_CACHE[key] = pairs
-    jac = verify_jaccard(spark, sf_dir, pairs)
+    jac = verify_jaccard(spark, sf_dir, _incremental_pairs(spark, sf_dir))
     w = Window.partitionBy("doc_a").orderBy(
         F.desc("jaccard"), F.asc("doc_b")
     )
@@ -1044,6 +953,34 @@ def q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("doc_b").alias("dup_of"),
             "jaccard",
         )
+    )
+
+
+@memo
+def _incremental_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a batch, doc_b index) candidate pairs of q_incremental."""
+    long = banded_long(_banded_cached(spark, sf_dir))
+    is_batch = F.col("doc_id") % BATCH_MOD == 0
+    b_long = long.filter(is_batch)
+    i_long = long.filter(~is_batch)
+    hot = (
+        i_long.groupBy("bi", "bk")
+        .agg(F.count("*").alias("c"))
+        .filter(F.col("c") > HOT_BUCKET_CAP)
+        .select("bi", "bk")
+    )
+    left = b_long.select(
+        F.col("doc_id").alias("doc_a"), "bi", "bk"
+    ).join(F.broadcast(hot), ["bi", "bk"], "left_anti")
+    right = i_long.select(F.col("doc_id").alias("doc_b"), "bi", "bk")
+    # cache: the verify stage references the pair table twice
+    # (intersection build + final left join) — uncached, the whole
+    # probe-join subtree would execute twice
+    return (
+        left.join(right, ["bi", "bk"])
+        .select("doc_a", "doc_b")
+        .distinct()
+        .cache()
     )
 
 
@@ -1415,9 +1352,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     family already applies; 8-bit blocks are the 32-bit-hash
     instantiation that the DuckDB oracle can replicate bit-for-bit.
     """
-    return _memo_pairs(
-        "simhash", spark, sf_dir, lambda: _simhash_pairs(spark, sf_dir)
-    )
+    return _method_pairs(spark, sf_dir, "simhash")
 
 
 def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1520,11 +1455,6 @@ _PREFIX_PERSIST = True
 _SUFFIX_PREGATE = False
 
 
-_PREFIX_TRUTH_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-# intermediate prefix posting frames persisted by q_prefix_jaccard_join
-# (released via clear_caches like the pair tables)
-_PREFIX_POSTING_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
 # test hooks (r12): when _COUNT_CANDIDATES is set, the candidate-stage
 # row count of the last q_prefix_jaccard_join build lands here — the
 # strategy-equivalence test pins it across okarr strategies (a
@@ -1570,10 +1500,18 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence the candidate stage stays sub-linear on a near-clique
     corpus.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _PREFIX_TRUTH_CACHE.get(key)
-    if hit is not None:
-        return hit
+    return _prefix_join(spark, sf_dir)[0]
+
+
+# memoized (r5): the EXACT truth table feeds three consumers (itself,
+# the LSH S-curve, the method-agreement eval) — cached like every
+# other pair artifact here.  The entry also holds the prefix posting
+# frame persisted on the way (None when _PREFIX_PERSIST is off), so
+# clear_caches releases it with the table.
+@memo
+def _prefix_join(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame | None]:
     sh = _shingles_cached(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     df_tab = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -1604,7 +1542,9 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # seed the shared per-corpus bijection memo — other array verifies
     # (verify_jaccard, containment) skip their own round-trip
     if not _FORCE_STRING_FALLBACK:
-        _HASH_BIJECTIVE_CACHE[key] = bool(chk["n_str"] == chk["n_hash"])
+        _corpus_hash_bijective.memo[
+            (spark.sparkContext.applicationId, sf_dir)
+        ] = bool(chk["n_str"] == chk["n_hash"])
     w = Window.partitionBy("doc_id").orderBy(
         F.asc("okey"), F.asc("shingle")
     )
@@ -1684,6 +1624,7 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_sh",
             *(["okarr"] if use_okey else []),
         )
+    postings = None
     if _PREFIX_PERSIST:
         # The prefix frame feeds BOTH sides of the candidate self-join
         # (probe a + index b), and without materialization Spark
@@ -1696,16 +1637,14 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         # at sf10 (BENCH_NOTES r12), min-of-3 51.7 → 46.6 s, persist
         # ≤ no-persist on every lap — the dual window evaluation costs
         # ~10% end-to-end, bounded by the verify/candidate stages that
-        # dominate the chain.  Registered for clear_caches release
-        # like every other memoized frame.
+        # dominate the chain.
         # serialized level, not the deserialized default: the okarr
         # arrays deserialize to 2-3× their packed size, and this frame
         # only exists to be scanned twice — packed longs keep the
         # ~2.6 GB sf10 footprint from crowding an 8 GB local heap
         from pyspark import StorageLevel
 
-        ranked = ranked.persist(StorageLevel.MEMORY_AND_DISK)
-        _PREFIX_POSTING_CACHE[key] = ranked
+        ranked = postings = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     t = float(PREFIX_JACCARD_T)
     # ASYMMETRIC prefixes (Xiao et al., PPJoin): `ranked` holds the
     # INDEX prefix (n − ⌈t·n⌉ + 1 — valid because a true pair's
@@ -1923,7 +1862,7 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_inter"),
         )
     )
-    _ret = (
+    truth = (
         inter.withColumn(
             "jaccard",
             F.round(
@@ -1934,13 +1873,9 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("jaccard") >= PREFIX_JACCARD_T)
         .select("doc_a", "doc_b", "jaccard")
+        .cache()
     )
-    # memoized (r5): the EXACT truth table now feeds three consumers
-    # (itself, the LSH S-curve, the method-agreement eval) — cache the
-    # bounded pair table like every other pair artifact here
-    out = _ret.cache()
-    _PREFIX_TRUTH_CACHE[key] = out
-    return out
+    return truth, postings
 
 
 # oracle: ANY complete candidate generator works (the prefix filter is
@@ -2532,12 +2467,7 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot product as a token-keyed join RESTRICTED to the memoized
     banded candidates (never all-pairs).  Every join keys on doc or
     token; norms broadcast-join onto the bounded pair set."""
-    return _memo_pairs(
-        "tfidf_cosine",
-        spark,
-        sf_dir,
-        lambda: _tfidf_cosine_pairs(spark, sf_dir),
-    )
+    return _method_pairs(spark, sf_dir, "tfidf_cosine")
 
 
 def _tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2633,6 +2563,17 @@ ORACLES["dedup_tfidf_cosine_pairs"] = _with(
 )
 
 QUERIES["dedup_tfidf_cosine_pairs"] = q_tfidf_cosine_pairs
+
+# the builders behind _method_pairs, one per method tag
+_PAIR_BUILDERS = {
+    "lsh_candidates": lambda spark, sf_dir: candidate_pairs(
+        _banded_cached(spark, sf_dir)
+    ),
+    "minhash": _minhash_pairs,
+    "span_scrub": _span_scrub,
+    "simhash": _simhash_pairs,
+    "tfidf_cosine": _tfidf_cosine_pairs,
+}
 
 
 # --- quality-aware representative selection (r5) ---------------------

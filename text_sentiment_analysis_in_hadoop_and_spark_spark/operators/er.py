@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 
 LEN_BUCKET = 100  # n_chars DIV 100 → same-length-scale docs only
 BLOCK_CAP = 500  # quadratic-verify bound per block
@@ -70,35 +70,22 @@ def q_er_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
 # feeds FOUR consumers (pairs, entities, blocking quality, r7
 # survivorship) — memoize it like dedup's banded signatures so the
 # family pays the quadratic DP once per (session, sf)
-_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+@memo
+def _fuzzy_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _fuzzy_pairs_plan(spark, sf_dir).cache()
+
 
 # r12 (guide §5 caching, the dedup _cc_labels precedent): er_entities
 # and er_survivorship each re-ran the ITERATIVE connected-components
 # loop over the same memoized fuzzy-pair table per call — the loop's
 # localCheckpoint rounds are the family's dominant warm cost.  One
 # converged (node, label) table per (session, sf_dir) serves both.
-_ER_CC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def _er_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import connected_components
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ER_CC_CACHE:
-        pairs = q_er_fuzzy_pairs(spark, sf_dir).select("doc_a", "doc_b")
-        _ER_CC_CACHE[key] = connected_components(pairs)
-    return _ER_CC_CACHE[key]
-
-
-def _fuzzy_pairs_cached(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _PAIRS_CACHE.get(key)
-    if df is None:
-        df = _fuzzy_pairs_plan(spark, sf_dir).cache()
-        _PAIRS_CACHE[key] = df
-    return df
+    pairs = q_er_fuzzy_pairs(spark, sf_dir).select("doc_a", "doc_b")
+    return connected_components(pairs)
 
 
 def q_er_fuzzy_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

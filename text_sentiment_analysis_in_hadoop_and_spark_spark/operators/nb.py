@@ -37,7 +37,7 @@ from .common import (
     TRAIN_TOKENS_CTE,
     doc_tokens,
     labeled_docs,
-    register_cache,
+    memo,
     test_filter,
     train_filter,
     with_ctes,
@@ -93,12 +93,6 @@ def corpus_stats_df(train_docs: DataFrame, train_tokens: DataFrame) -> DataFrame
     return stats.crossJoin(vsize)
 
 
-# Model + stats memoized per (session, sf_dir): score/predict/confusion/
-# accuracy all retrain otherwise (judge finding r1 — the clean+tokenize+
-# train DAG ran ~3× per query and once per query entry).
-_MODEL_CACHE: dict[tuple[str, str], tuple[DataFrame, dict]] = register_cache({})
-
-
 def model_for_docs(docs: DataFrame) -> tuple[DataFrame, dict]:
     """Train over an arbitrary cleaned-docs frame (doc_id, label, text):
     returns (model_df(word, lpw_pos, lpw_neg), stats dict).
@@ -123,16 +117,14 @@ def model_for_docs(docs: DataFrame) -> tuple[DataFrame, dict]:
     return model, stats
 
 
+# Model + stats memoized per (session, sf_dir): score/predict/confusion/
+# accuracy all retrain otherwise (judge finding r1 — the clean+tokenize+
+# train DAG ran ~3× per query and once per query entry).
+@memo
 def nb_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Memoized :func:`model_for_docs` over the parquet documents table."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
     model, stats = model_for_docs(labeled_docs(spark, sf_dir))
-    model = model.cache()
-    _MODEL_CACHE[key] = (model, stats)
-    return model, stats
+    return model.cache(), stats
 
 
 def scores_for_docs(docs: DataFrame, model: DataFrame, stats: dict) -> DataFrame:
@@ -195,33 +187,32 @@ def nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 # underflows both products to 0.0 → Double.compare tie → NEGATIVE.
 # --------------------------------------------------------------------------
 
-_FID_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
 
 def nb_model_fidelity(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Raw smoothed probabilities ``(cnt+1)/(words_c + V)`` as doubles
     (NB.java:190-193) — NOT exp(log-model), which would differ in the
     last bits from the reference's direct division."""
-    key = (spark.sparkContext.applicationId, sf_dir)
     _, stats = nb_model(spark, sf_dir)
-    model = _FID_CACHE.get(key)
-    if model is None:
-        v = stats["vocab_size"]
-        docs = labeled_docs(spark, sf_dir)
-        train_tokens = doc_tokens(docs.filter(train_filter()))
-        model = vocab_counts(train_tokens).select(
-            "word",
-            (
-                (F.col("pos_count") + 1)
-                / F.lit(float(stats["pos_words"] + v))
-            ).alias("pw_pos"),
-            (
-                (F.col("neg_count") + 1)
-                / F.lit(float(stats["neg_words"] + v))
-            ).alias("pw_neg"),
-        ).cache()
-        _FID_CACHE[key] = model
-    return model, stats
+    return _fidelity_probs(spark, sf_dir), stats
+
+
+@memo
+def _fidelity_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    _, stats = nb_model(spark, sf_dir)
+    v = stats["vocab_size"]
+    docs = labeled_docs(spark, sf_dir)
+    train_tokens = doc_tokens(docs.filter(train_filter()))
+    return vocab_counts(train_tokens).select(
+        "word",
+        (
+            (F.col("pos_count") + 1)
+            / F.lit(float(stats["pos_words"] + v))
+        ).alias("pw_pos"),
+        (
+            (F.col("neg_count") + 1)
+            / F.lit(float(stats["neg_words"] + v))
+        ).alias("pw_neg"),
+    ).cache()
 
 
 def _ordered_product(pos_col: str, val_col: str) -> Column:

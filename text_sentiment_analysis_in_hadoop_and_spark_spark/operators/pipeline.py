@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 
 SAMPLE_MOD = 10        # keep hash % 10 == 0  →  ~10% sample
 PACK_BUDGET = 512      # token budget per packed sequence
@@ -1685,44 +1685,38 @@ QUERIES_LATE["pipe_keep_attribution"] = q_keep_attribution
 DSIR_BUCKETS = 4096       # hashed bigram feature space
 DSIR_TARGET_LANG = "en"   # target-distribution proxy: the en subcorpus
 
-_DSIR_BG_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
 
-
+@memo
 def _dsir_bigram_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, bucket) per bigram INSTANCE — hashed-bigram
     features of every document, memoized and storage-cached because
     the weight computation takes four passes over it (raw counts,
     target counts, totals, per-doc sum).  The bucket hash is the
     engine-portable hex32, so the DuckDB oracle replays it exactly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _DSIR_BG_CACHE.get(key)
-    if df is None:
-        # Generate barrier (see quality._bigrams_cached): keeps the
-        # token split per-doc instead of per-bigram inside the lambda
-        docs = load_table(spark, sf_dir, "documents").select(
+    # Generate barrier (see quality._bigrams_cached): keeps the
+    # token split per-doc instead of per-bigram inside the lambda
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        F.explode(F.array(F.split("text", " "))).alias("tk"),
+    )
+    return (
+        docs.select(
             "doc_id",
             "lang",
-            F.explode(F.array(F.split("text", " "))).alias("tk"),
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(tk) - 1), "
+                    "i -> concat(tk[i-1], ' ', tk[i]))"
+                )
+            ).alias("bg"),
         )
-        df = (
-            docs.select(
-                "doc_id",
-                "lang",
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(tk) - 1), "
-                        "i -> concat(tk[i-1], ' ', tk[i]))"
-                    )
-                ).alias("bg"),
-            )
-            .withColumn(
-                "bucket", F.pmod(hex32(F.col("bg")), F.lit(DSIR_BUCKETS))
-            )
-            .drop("bg")
-            .persist()
+        .withColumn(
+            "bucket", F.pmod(hex32(F.col("bg")), F.lit(DSIR_BUCKETS))
         )
-        _DSIR_BG_CACHE[key] = df
-    return df
+        .drop("bg")
+        .persist()
+    )
 
 
 def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

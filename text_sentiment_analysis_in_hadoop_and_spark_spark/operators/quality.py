@@ -39,13 +39,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql
 from ..sources.tables import load_table
-from .common import register_cache
-
-_BIGRAM_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_LM_SCORE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-# per-doc repetition gate table (r13 — see q_repetition)
-_REPETITION_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_CONTAM_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+from .common import memo
 
 # Gopher-style gate thresholds (engine choice, documented constants).
 ADJ_REPEAT_MAX = 0.15   # fraction of adjacent equal-token pairs
@@ -65,6 +59,7 @@ def _toks(col: Column) -> Column:
     return F.split(col, " ")
 
 
+@memo
 def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repetition statistics + the keep/drop gate flag.
 
@@ -87,11 +82,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is the corpus quality GATE, consumed by the keep-list capstone
     and the gate ablation besides the query itself, each of which
     re-paid the per-row HOF scans (~0.7-1.0 s warm apiece; the
-    _LM_SCORE_CACHE precedent)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _REPETITION_CACHE.get(key)
-    if hit is not None:
-        return hit
+    q_lm_score precedent)."""
     docs = load_table(spark, sf_dir, "documents")
     # barrier 1: materialize the token array
     tokd = docs.select(
@@ -166,13 +157,11 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         adj.alias("adj_repeat_frac"),
         top_bigram.alias("top_bigram_frac"),
     )
-    out = out.withColumn(
+    return out.withColumn(
         "keep",
         (F.col("adj_repeat_frac") <= ADJ_REPEAT_MAX)
         & (F.col("top_bigram_frac") <= TOP_BIGRAM_MAX),
     ).cache()
-    _REPETITION_CACHE[key] = out
-    return out
 
 
 def _injected(doc_id: Column, text: Column) -> Column:
@@ -254,6 +243,7 @@ def _shingles(text: Column) -> Column:
     )
 
 
+@memo
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc overlap with the benchmark gram set: n_grams, n_hits,
     contam_frac for every NON-benchmark doc (benchmark members are
@@ -264,10 +254,6 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     expensive).  Three consumers pay the two gram passes otherwise:
     this query, and the contamination gates inside
     pipe_training_corpus and pipe_keep_attribution."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit_df = _CONTAM_CACHE.get(key)
-    if hit_df is not None:
-        return hit_df
     grams = _gram_rows(load_table(spark, sf_dir, "documents"))
     bench_grams = (
         grams.filter(F.col("member"))
@@ -276,7 +262,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("hit", F.lit(1))
     )
     corpus = grams.filter(~F.col("member")).select("doc_id", "gram")
-    df = (
+    return (
         corpus.join(F.broadcast(bench_grams), "gram", "left")
         .groupBy("doc_id")
         .agg(
@@ -289,45 +275,39 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _CONTAM_CACHE[key] = df
-    return df
 
 
+@memo
 def _bigrams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized (doc_id, w1, w2) → n adjacent-bigram occurrence table —
     the single corpus scan behind the LM scorer and the PMI phrase
     miner.  Everything bigram-shaped derives from this memo; without
     it Catalyst re-plans the shared subtree per consumer (the naive
     self-join form scanned the corpus 4×)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    bgc = _BIGRAM_CACHE.get(key)
-    if bgc is None:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        # explode(array(tokens)) Generate barrier: without it
-        # ProjectCollapsing inlines the split at every `tk` reference
-        # INSIDE the lambda, re-splitting the text once per bigram
-        # (the doc_shingles/_gram_rows pitfall)
-        base = docs.select(
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    # explode(array(tokens)) Generate barrier: without it
+    # ProjectCollapsing inlines the split at every `tk` reference
+    # INSIDE the lambda, re-splitting the text once per bigram
+    # (the doc_shingles/_gram_rows pitfall)
+    base = docs.select(
+        "doc_id",
+        F.explode(F.array(_toks(F.col("text")))).alias("tk"),
+    )
+    return (
+        base.select(
             "doc_id",
-            F.explode(F.array(_toks(F.col("text")))).alias("tk"),
+            F.explode(
+                F.expr(
+                    "transform(slice(tk, 1, greatest(size(tk) - 1, 0)), "
+                    "(w, i) -> struct(w AS w1, tk[i + 1] AS w2))"
+                )
+            ).alias("p"),
         )
-        bgc = (
-            base.select(
-                "doc_id",
-                F.explode(
-                    F.expr(
-                        "transform(slice(tk, 1, greatest(size(tk) - 1, 0)), "
-                        "(w, i) -> struct(w AS w1, tk[i + 1] AS w2))"
-                    )
-                ).alias("p"),
-            )
-            .select("doc_id", "p.w1", "p.w2")
-            .groupBy("doc_id", "w1", "w2")
-            .agg(F.count("*").alias("n"))
-            .cache()
-        )
-        _BIGRAM_CACHE[key] = bgc
-    return bgc
+        .select("doc_id", "p.w1", "p.w2")
+        .groupBy("doc_id", "w1", "w2")
+        .agg(F.count("*").alias("n"))
+        .cache()
+    )
 
 
 PMI_MIN_COUNT = 5  # collocation support floor (word2phrase's min_count)
@@ -396,6 +376,7 @@ def q_phrase_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo
 def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """In-corpus bigram-LM cross-entropy per doc — the relational form
     of the perplexity quality filter (CCNet/Gopher run a KenLM; here
@@ -422,10 +403,6 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # c12/c1 rollup + double join + doc rollup from the bigram memo
     # per consumer (the sweep twice: once for its total, once for the
     # kept aggregation)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LM_SCORE_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     bgc = _bigrams_cached(spark, sf_dir)
     # r13 (guide §2.4, the kneser-ney precedent): the context total is
@@ -452,7 +429,7 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cross_entropy"),
         )
     )
-    df = docs.select("doc_id").join(per_doc, "doc_id", "left").select(
+    return docs.select("doc_id").join(per_doc, "doc_id", "left").select(
         "doc_id",
         F.coalesce(F.col("n_bigrams"), F.lit(0))
         .cast("long")
@@ -461,8 +438,6 @@ def q_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cross_entropy"
         ),
     ).cache()
-    _LM_SCORE_CACHE[key] = df
-    return df
 
 
 # --------------------------------------------------------------------------

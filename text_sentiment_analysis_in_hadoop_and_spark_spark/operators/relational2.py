@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 from .relational import _cents, _cents_sql, _revenue_cents, _REV_SQL
 
 Q2_MAX_SIZE = 10
@@ -951,8 +951,31 @@ QUERIES["rel_discount_cap_whatif"] = q_discount_cap_whatif
 
 BASKET_MIN_SUPPORT = 5   # pair must co-occur in ≥ this many orders
 BASKET_TOP_K = 50
-_BASKET_OP_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_BASKET_N_CACHE: dict[tuple[str, str], int] = register_cache({})
+
+
+# r12: the distinct postings table feeds FOUR consumers (the eager
+# order count, both self-join sides, the marginals) — memoized so
+# the 600k-row distinct runs once per (session, sf_dir) instead of
+# per consumer (guide §5 caching: reused AND expensive).
+# r13 (guide §2.4): the memo is cached PARTITIONED ON l_orderkey —
+# the within-order self-join then consumes the cached layout on
+# both sides with no exchange (the distinct's (orderkey, partkey)
+# hash satisfied neither join side, so every run re-shuffled the
+# postings twice); and the 1-row order count memoizes as a scalar
+# beside the table instead of re-running a distinct+count job per
+# invocation.  Interleaved A/B min-of-4: 2.23 → 1.75 (layout)
+# → 1.39 (scalar memo), identical top-K.
+@memo
+def _basket_postings(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
+    """(distinct (l_orderkey, l_partkey) postings, number of orders)."""
+    op = (
+        load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_partkey")
+        .distinct()
+        .repartition("l_orderkey")
+        .cache()
+    )
+    return op, op.select("l_orderkey").distinct().count()
 
 
 def q_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -964,33 +987,7 @@ def q_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-aggregate from the same distinct (order, part) postings; the
     1-row order count broadcasts.  The double arithmetic runs in the
     same operation order both engines (the PMI discipline)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # r12: the distinct postings table feeds FOUR consumers (the eager
-    # order count, both self-join sides, the marginals) — memoized so
-    # the 600k-row distinct runs once per (session, sf_dir) instead of
-    # per consumer (guide §5 caching: reused AND expensive).
-    # r13 (guide §2.4): the memo is cached PARTITIONED ON l_orderkey —
-    # the within-order self-join then consumes the cached layout on
-    # both sides with no exchange (the distinct's (orderkey, partkey)
-    # hash satisfied neither join side, so every run re-shuffled the
-    # postings twice); and the 1-row order count memoizes as a scalar
-    # beside the table instead of re-running a distinct+count job per
-    # invocation.  Interleaved A/B min-of-4: 2.23 → 1.75 (layout)
-    # → 1.39 (scalar memo), identical top-K.
-    key = (spark.sparkContext.applicationId, sf_dir)
-    op = _BASKET_OP_CACHE.get(key)
-    if op is None:
-        op = (
-            li.select("l_orderkey", "l_partkey")
-            .distinct()
-            .repartition("l_orderkey")
-            .cache()
-        )
-        _BASKET_OP_CACHE[key] = op
-    n_orders = _BASKET_N_CACHE.get(key)
-    if n_orders is None:
-        n_orders = op.select("l_orderkey").distinct().count()
-        _BASKET_N_CACHE[key] = n_orders
+    op, n_orders = _basket_postings(spark, sf_dir)
     a = op.withColumnRenamed("l_partkey", "part_a")
     b = op.select(
         F.col("l_orderkey").alias("ok_b"), F.col("l_partkey").alias("part_b")

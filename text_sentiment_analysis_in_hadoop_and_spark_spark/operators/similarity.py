@@ -42,7 +42,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 from .dedup import connected_components
 
 DIM = 64
@@ -186,35 +186,19 @@ def _pair_cos_raw(
 # consumed by several queries — memoized per (session, sf_dir) like
 # dedup's signature table, so the bench/driver pays the 32-plane dots
 # and the k-dot assignment once, not per query.
-_EMB_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_BUCKETS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-_ASG_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-# quantized (vec_id, qvec, qnrm) table — r13, the recall evaluator's
-# per-call rebuild measured 1.37 s (see q_quantized_recall)
-_QN_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-# exact brute-force top-k — r13, the ground-truth table seven
-# evaluators consume (see q_sim_topk_brute)
-_BRUTE_TOPK_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def _emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding, nrm) — norms are per-vector, not per-pair:
     materialize once before any join (3× fewer dot products than
     cosine() per candidate pair)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EMB_CACHE.get(key)
-    if df is None:
-        df = (
-            load_table(spark, sf_dir, "embeddings")
-            .select(
-                "vec_id", "embedding", norm(F.col("embedding")).alias("nrm")
-            )
-            .cache()
-        )
-        _EMB_CACHE[key] = df
-    return df
+    return (
+        load_table(spark, sf_dir, "embeddings")
+        .select("vec_id", "embedding", norm(F.col("embedding")).alias("nrm"))
+        .cache()
+    )
 
 
+@memo
 def q_sim_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-10 cosine neighbors for the first 8 vectors.
 
@@ -223,12 +207,8 @@ def q_sim_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query-margin, ann-ndcg, matryoshka, quantized recall, lsh recall
     report, nprobe profile, hybrid retrieval), each of which re-ran
     the full O(N·Q) scan + window per call (~0.5-0.6 s warm apiece).
-    The _LM_SCORE_CACHE precedent: build billed to the first
-    consumer, register_cache'd for eviction, never cross-run."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _BRUTE_TOPK_CACHE.get(key)
-    if hit is not None:
-        return hit
+    The quality.q_lm_score precedent: build billed to the first
+    consumer, never cross-run."""
     emb = _emb_with_norm(spark, sf_dir)
     cand = emb
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
@@ -248,16 +228,15 @@ def q_sim_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
         out="cos",
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("vec_id"))
-    out = (
+    return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TOP_K)
         .select("q_id", "vec_id", "rank", F.round("cos", 6).alias("cosine"))
         .cache()
     )
-    _BRUTE_TOPK_CACHE[key] = out
-    return out
 
 
+@memo
 def _buckets_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, bucket0..bucket3) — the 32 hyperplane dots, computed
     once per (session, sf_dir) and cached.
@@ -270,51 +249,44 @@ def _buckets_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     and therefore every bucket id — matches ``bucket_of`` exactly
     (pinned by the LSH recall/occupancy tests and the DuckDB bucket
     replay oracles downstream)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _BUCKETS_CACHE.get(key)
-    if df is None:
-        import numpy as np
+    import numpy as np
 
-        planes = np.array(PLANES, dtype=np.float64)  # (T, R, DIM)
+    planes = np.array(PLANES, dtype=np.float64)  # (T, R, DIM)
 
-        def assign(batches):
-            import pandas as pd
+    def assign(batches):
+        import pandas as pd
 
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                emat = np.stack(pdf["embedding"].to_numpy()).astype(
-                    np.float64
-                )
-                n = emat.shape[0]
-                out = {"vec_id": pdf["vec_id"]}
-                for t in range(N_TABLES):
-                    acc = np.zeros(n, dtype=np.int64)
-                    for r in range(PLANES_PER_TABLE):
-                        pj = np.zeros(n)
-                        for i in range(emat.shape[1]):
-                            pj += emat[:, i] * planes[t, r, i]
-                        # NaN mirrors Spark's NaN-is-largest compare
-                        acc += (
-                            (pj > 0) | np.isnan(pj)
-                        ).astype(np.int64) << r
-                    out[f"bucket{t}"] = acc.astype(np.int32)
-                yield pd.DataFrame(out)
-
-        emb = load_table(spark, sf_dir, "embeddings")
-        df = (
-            emb.select("vec_id", "embedding")
-            .mapInPandas(
-                assign,
-                "vec_id long, "
-                + ", ".join(
-                    f"bucket{t} int" for t in range(N_TABLES)
-                ),
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            emat = np.stack(pdf["embedding"].to_numpy()).astype(
+                np.float64
             )
-            .cache()
+            n = emat.shape[0]
+            out = {"vec_id": pdf["vec_id"]}
+            for t in range(N_TABLES):
+                acc = np.zeros(n, dtype=np.int64)
+                for r in range(PLANES_PER_TABLE):
+                    pj = np.zeros(n)
+                    for i in range(emat.shape[1]):
+                        pj += emat[:, i] * planes[t, r, i]
+                    # NaN mirrors Spark's NaN-is-largest compare
+                    acc += (
+                        (pj > 0) | np.isnan(pj)
+                    ).astype(np.int64) << r
+                out[f"bucket{t}"] = acc.astype(np.int32)
+            yield pd.DataFrame(out)
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    return (
+        emb.select("vec_id", "embedding")
+        .mapInPandas(
+            assign,
+            "vec_id long, "
+            + ", ".join(f"bucket{t} int" for t in range(N_TABLES)),
         )
-        _BUCKETS_CACHE[key] = df
-    return df
+        .cache()
+    )
 
 
 def _bucket_rows(
@@ -412,9 +384,9 @@ KMEANS_SEED = 1234
 # quantizer training-sample budget: ~TRAIN_PER_CENTROID vectors per
 # centroid is the standard IVF recipe (FAISS trains on 39-256·k points)
 TRAIN_PER_CENTROID = 64
-_CENT_CACHE: dict[tuple[str, str], list[list[float]]] = register_cache({})
 
 
+@memo
 def _centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """k-means centroids with k ≈ √N (the standard IVF sizing: k lists
     of ~N/k vectors balance the k-dot assignment against the N/k-dot
@@ -436,36 +408,31 @@ def _centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     coarse cells, then k within the cell) or an HNSW graph over the
     centroids; at every sf this repo targets, one-level broadcast wins
     because it needs no second shuffle."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cents = _CENT_CACHE.get(key)
-    if cents is None:
-        from pyspark.ml.clustering import KMeans
-        from pyspark.ml.functions import array_to_vector
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
 
-        emb = load_table(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("arr")
-        )
-        n = emb.count()
-        k = max(4, math.isqrt(n))
-        target = TRAIN_PER_CENTROID * k
-        if n >= 2 * target:
-            # keep one vec_id-hash residue class — deterministic,
-            # partition-independent, pushes to the scan.  The 1/mod
-            # rate only approximates target/n in integer steps, so
-            # engage it only from 2× over-budget (below that the
-            # coarsest rate 1/2 would over-thin the training set)
-            mod = n // target  # ≥ 2 here → sample ≈ target vectors
-            emb = emb.filter(F.pmod(F.xxhash64("vec_id"), mod) == 0)
-        feats = emb.select(array_to_vector("arr").alias("features"))
-        # 8 iterations + random init (k-means|| costs 3× in extra
-        # passes): a coarse quantizer needs balanced lists, not a
-        # converged clustering — recall is pinned by test_similarity.py
-        model = KMeans(
-            k=k, seed=KMEANS_SEED, maxIter=8, initMode="random"
-        ).fit(feats)
-        cents = [[float(x) for x in c] for c in model.clusterCenters()]
-        _CENT_CACHE[key] = cents
-    return cents
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("arr")
+    )
+    n = emb.count()
+    k = max(4, math.isqrt(n))
+    target = TRAIN_PER_CENTROID * k
+    if n >= 2 * target:
+        # keep one vec_id-hash residue class — deterministic,
+        # partition-independent, pushes to the scan.  The 1/mod
+        # rate only approximates target/n in integer steps, so
+        # engage it only from 2× over-budget (below that the
+        # coarsest rate 1/2 would over-thin the training set)
+        mod = n // target  # ≥ 2 here → sample ≈ target vectors
+        emb = emb.filter(F.pmod(F.xxhash64("vec_id"), mod) == 0)
+    feats = emb.select(array_to_vector("arr").alias("features"))
+    # 8 iterations + random init (k-means|| costs 3× in extra
+    # passes): a coarse quantizer needs balanced lists, not a
+    # converged clustering — recall is pinned by test_similarity.py
+    model = KMeans(
+        k=k, seed=KMEANS_SEED, maxIter=8, initMode="random"
+    ).fit(feats)
+    return [[float(x) for x in c] for c in model.clusterCenters()]
 
 
 def _centroids_df(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -551,10 +518,13 @@ def ivf_assignments(
     k = len(_centroids(spark, sf_dir))
     if two_level is None:
         two_level = k >= TWO_LEVEL_MIN_K
-    key = (spark.sparkContext.applicationId, sf_dir, bool(two_level))
-    asg = _ASG_CACHE.get(key)
-    if asg is not None:
-        return asg
+    return _ivf_assignments(spark, sf_dir, bool(two_level))
+
+
+@memo
+def _ivf_assignments(
+    spark: SparkSession, sf_dir: str, two_level: bool
+) -> DataFrame:
     emb = _emb_with_norm(spark, sf_dir)
     cents = _centroids_df(spark, sf_dir)
     sim = dot(F.col("embedding"), F.col("cvec")) / (
@@ -564,7 +534,7 @@ def ivf_assignments(
         # r12: the N·k assignment dots run vectorized (guide §4.2,
         # same exact-fold contract as _pair_cos_raw); the argmax
         # stays a JVM max_by over the raw similarity
-        asg = (
+        return (
             _pair_cos_raw(
                 emb.crossJoin(F.broadcast(cents)),
                 "embedding",
@@ -586,8 +556,6 @@ def ivf_assignments(
             )
             .cache()
         )
-        _ASG_CACHE[key] = asg
-        return asg
     coarse_vecs, cells = _coarse_cells(spark, sf_dir)
     coarse = spark.createDataFrame(
         [
@@ -632,7 +600,7 @@ def ivf_assignments(
     probes = best.select("vec_id", F.col("c1").alias("ccell")).union(
         second.select("vec_id", F.col("c2").alias("ccell"))
     )
-    asg = (
+    return (
         probes.join(emb, "vec_id")
         .join(fine, "ccell")
         .groupBy("vec_id")
@@ -644,8 +612,6 @@ def ivf_assignments(
         )
         .cache()
     )
-    _ASG_CACHE[key] = asg
-    return asg
 
 
 def q_sim_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -785,7 +751,12 @@ def q_dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # converged embedding-cluster labels memoized per (session, sf_dir)
-_EMB_CC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
+@memo
+def _embedding_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = q_dedup_embedding_pairs(spark, sf_dir).select(
+        F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
+    )
+    return connected_components(pairs)
 
 
 def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -800,14 +771,7 @@ def q_dedup_embedding_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to the text variant — the iteration runs
     only on vectors that appear in a verified pair; the full
     embedding table joins back once as singletons."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    labels = _EMB_CC_CACHE.get(key)
-    if labels is None:
-        pairs = q_dedup_embedding_pairs(spark, sf_dir).select(
-            F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
-        )
-        labels = connected_components(pairs)
-        _EMB_CC_CACHE[key] = labels
+    labels = _embedding_cc_labels(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id")
     return emb.join(
         labels.withColumnRenamed("node", "vec_id"), "vec_id", "left"
@@ -1212,10 +1176,7 @@ SUB_DIM = DIM // M_SUB        # dims per subspace
 K_CODES = 16                  # codebook entries per subspace (4-bit codes)
 
 # codebooks memoized per (session, sf_dir): list[m][code] = 8-dim center
-_PQ_CACHE: dict[tuple[str, str], list] = register_cache({})
-_PQ_CODES_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     """Driver-side per-subspace Lloyd training on the SAME bounded
     hash-residue sample discipline as the IVF quantizer: the training
@@ -1224,10 +1185,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
     array — trivially driver-sized."""
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    books = _PQ_CACHE.get(key)
-    if books is not None:
-        return books
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("arr")
     )
@@ -1252,7 +1209,6 @@ def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list:
                 if len(members):
                     cents[c] = members.mean(axis=0)
         books.append([[float(x) for x in c] for c in cents])
-    _PQ_CACHE[key] = books
     return books
 
 
@@ -1268,16 +1224,13 @@ def _codebook_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, codes array<int>[M_SUB]): nearest codebook entry per
     subspace.  One broadcast join against the 128-row codebook and a
     min_by groupBy — the encode pass that shrinks every vector 64×
     (8 × 4-bit codes vs 64 floats); downstream top-k scans THESE, not
     the float column."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_CODES_CACHE.get(key)
-    if cached is not None:
-        return cached
     emb = load_table(spark, sf_dir, "embeddings")
     subs_expr = F.expr(
         "explode(transform(sequence(0, {last}), m -> struct(m AS m, "
@@ -1307,14 +1260,12 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = scored.groupBy("vec_id", "m").agg(
         F.min(F.struct("d", "code")).alias("b")
     )
-    out = (
+    return (
         best.groupBy("vec_id")
         .agg(F.array_sort(F.collect_list(F.struct("m", F.col("b.code").alias("code")))).alias("mc"))
         .select("vec_id", F.col("mc.code").alias("codes"))
         .cache()
     )
-    _PQ_CODES_CACHE[key] = out
-    return out
 
 
 def q_sim_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2056,6 +2007,20 @@ QUERIES_LATE["sim_matryoshka_eval"] = q_matryoshka_eval
 # --- int8 ranking-fidelity evaluation (r5) ---------------------------
 
 
+# quantized (vec_id, qvec, qnrm) table — r13, the recall evaluator's
+# per-call rebuild measured 1.37 s (see q_quantized_recall)
+@memo
+def _quantized_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
+    qv = q_embedding_quantize(spark, sf_dir).select("vec_id", "qvec")
+    qn = (
+        qv.withColumn("qnrm", norm(F.col("qvec")))
+        .filter(F.col("qnrm") > 0)
+        .cache()
+    )
+    qn.count()  # materialize before the 4-branch consumer races
+    return qn
+
+
 def q_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """What int8 storage costs retrieval — the evaluation twin of
     ``sim_embedding_quantize``: rank neighbors with the QUANTIZED
@@ -2083,17 +2048,7 @@ def q_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # shape guide §5 asks to cache.  (A lazy checkpoint was also
     # A/B'd — ADVICE r12 — and LOST, 2.75 → 3.23: the four branches
     # race to compute the same partitions inside one job.)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    qn = _QN_CACHE.get(key)
-    if qn is None:
-        qv = q_embedding_quantize(spark, sf_dir).select("vec_id", "qvec")
-        qn = (
-            qv.withColumn("qnrm", norm(F.col("qvec")))
-            .filter(F.col("qnrm") > 0)
-            .cache()
-        )
-        qn.count()  # materialize before the 4-branch consumer races
-        _QN_CACHE[key] = qn
+    qn = _quantized_norms(spark, sf_dir)
     qside = qn.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("qvec").alias("q_q"),

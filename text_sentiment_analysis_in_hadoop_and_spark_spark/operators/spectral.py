@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..sources.tables import load_table
-from .common import register_cache
+from .common import memo
 from .similarity import dot
 
 DIM = 64
@@ -116,16 +116,10 @@ def q_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # learned (pc1, pc2) per (applicationId, sf_dir) — the fit is a scalar
 # side input consumed by both pca queries
-_PCA_CACHE: dict = register_cache({})
-
-
+@memo
 def _fit_pcs(spark: SparkSession, sf_dir: str):
     import numpy as np
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PCA_CACHE.get(key)
-    if cached is not None:
-        return cached
     cells = q_embedding_covariance(spark, sf_dir).collect()
     cov = np.zeros((DIM, DIM))
     for r in cells:
@@ -148,7 +142,6 @@ def _fit_pcs(spark: SparkSession, sf_dir: str):
         lam = float(v @ cov @ v)
         pcs.append((v, lam))
         mat = mat - lam * np.outer(v, v)
-    _PCA_CACHE[key] = pcs
     return pcs
 
 

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql, md5_fingerprint
 from ..sources.tables import load_table
-from .common import rebalance_scan, register_cache
+from .common import memo, rebalance_scan
 
 # Tiny public stopword lexicons (top function words per language) for
 # the n-gram-free language-ID heuristic.  Order of _LANGS is the
@@ -83,9 +83,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_QUALITY_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic quality score in [0, 1]: type-token ratio,
     English-stopword ratio, and a length term, weighted 0.5/0.3/0.2
@@ -97,17 +95,13 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup keep-list composers) each re-ran the tokenize + stopword
     isin scan; now the first consumer pays it once and the rest read
     the cached (doc_id, quality, …) rollup."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _QUALITY_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = load_table(spark, sf_dir, "documents")
     toks = _toks(F.col("text"))
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)) / n
     stop_ratio = _hits(F.col("text"), _EN_STOP) / n
     len_term = F.least(n / F.lit(100.0), F.lit(1.0))
-    df = docs.select(
+    return docs.select(
         "doc_id",
         F.round(ttr, 6).alias("ttr"),
         F.round(stop_ratio, 6).alias("stopword_ratio"),
@@ -116,8 +110,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             "quality"
         ),
     ).cache()
-    _QUALITY_CACHE[key] = df
-    return df
 
 
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:

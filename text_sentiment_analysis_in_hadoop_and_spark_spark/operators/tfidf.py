@@ -53,14 +53,11 @@ from .common import (
     TRAIN_TOKENS_CTE,
     doc_tokens,
     labeled_docs,
-    register_cache,
+    memo,
     test_filter,
     train_filter,
     with_ctes,
 )
-
-_FEAT_CACHE: dict[tuple[str, str], tuple[DataFrame, int]] = register_cache({})
-_FMODEL_CACHE: dict[tuple[str, str], tuple[DataFrame, dict]] = register_cache({})
 
 
 # --------------------------------------------------------------------------
@@ -107,15 +104,12 @@ def tfidf_scored(spark: SparkSession, sf_dir: str, n_tweets: int) -> DataFrame:
     )
 
 
+@memo
 def featsel(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
     """W1 — per doc keep the top ``floor(n*75/100)`` words by TF-IDF
     (at least 1; Modified_NB.java:297-298).  Returns (kept rows with
     rank, n_train_docs).  Cached: model, stats, reassembly and scoring
     all reuse it."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _FEAT_CACHE.get(key)
-    if hit is not None:
-        return hit
     docs = labeled_docs(spark, sf_dir)
     n_tweets = docs.filter(train_filter()).count()
     scored = tfidf_scored(spark, sf_dir, n_tweets)
@@ -133,20 +127,16 @@ def featsel(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, int]:
         .select("doc_id", "label", "word", "tfidf", "rn")
         .cache()
     )
-    _FEAT_CACHE[key] = (kept, n_tweets)
     return kept, n_tweets
 
 
+@memo
 def featsel_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     """Train on selected features: per-word per-class doc-presence
     counts (Modified_NB.java:329-378) + the FeatSel counter scalars
     (Modified_NB.java:263,300-308,615-640), then Laplace-smoothed
     log-likelihoods exactly like NB (same smoothing shape,
     Modified_NB.java:443-448)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _FMODEL_CACHE.get(key)
-    if hit is not None:
-        return hit
     kept, _ = featsel(spark, sf_dir)
     stats = (
         kept.agg(
@@ -191,7 +181,6 @@ def featsel_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         )
         .cache()
     )
-    _FMODEL_CACHE[key] = (model, stats)
     return model, stats
 
 

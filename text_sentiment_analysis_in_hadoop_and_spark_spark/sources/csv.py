@@ -122,27 +122,17 @@ def nb_frontdoor_from_path(spark: SparkSession, csv_path: str) -> DataFrame:
 # the 7-regex clean chain dominates, so memoize like labeled_docs.
 # (imported here, not at the top: operators.common pulls in the
 # cleaning/table machinery this source module otherwise never needs)
-from ..operators.common import register_cache as _register_cache  # noqa: E402
-
-_FRONTDOOR_CACHE: dict[tuple[str, str], DataFrame] = _register_cache({})
+from ..operators.common import memo, rebalance_scan  # noqa: E402
 
 
+@memo
 def _frontdoor_docs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .tables import load_table
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _FRONTDOOR_CACHE.get(key)
-    if df is None:
-        from ..operators.common import rebalance_scan
-
-        docs = rebalance_scan(
-            spark, load_table(spark, sf_dir, "documents")
-        )
-        lines = docs.select(_synth_line(docs).alias("line"))
-        parsed = lines.select(*fidelity_parse(F.col("line")))
-        df = frontdoor_docs(parsed).cache()
-        _FRONTDOOR_CACHE[key] = df
-    return df
+    docs = rebalance_scan(spark, load_table(spark, sf_dir, "documents"))
+    lines = docs.select(_synth_line(docs).alias("line"))
+    parsed = lines.select(*fidelity_parse(F.col("line")))
+    return frontdoor_docs(parsed).cache()
 
 
 def q_csv_nb_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:

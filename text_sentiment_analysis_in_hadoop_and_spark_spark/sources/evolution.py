@@ -31,9 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql
+from ..operators.common import memo
 from .tables import load_table
-
-_EVO_DIRS: dict[tuple[str, str], str] = {}
 
 MISSING = "<missing>"
 
@@ -42,23 +41,25 @@ def evolution_path(spark: SparkSession, sf_dir: str) -> str:
     """Two-generation snapshot directory, built once per
     (session, sf_dir): even doc_ids under the v1 narrow schema, odd
     doc_ids under the v2 widened schema."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _EVO_DIRS.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="evo_docs_"), "documents_evo"
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
-            "doc_id", "text", "n_chars"
-        )
-        v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id", "text", "n_chars", "lang", "source"
-        )
-        v1.write.mode("overwrite").parquet(os.path.join(path, "gen=v1"))
-        v2.write.mode("overwrite").parquet(os.path.join(path, "gen=v2"))
-        _EVO_DIRS[key] = path
-    return path
+    return os.path.join(_evolution_dir(spark, sf_dir).name, "documents_evo")
+
+
+@memo
+def _evolution_dir(
+    spark: SparkSession, sf_dir: str
+) -> tempfile.TemporaryDirectory:
+    tmp = tempfile.TemporaryDirectory(prefix="evo_docs_")
+    path = os.path.join(tmp.name, "documents_evo")
+    docs = load_table(spark, sf_dir, "documents")
+    v1 = docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id", "text", "n_chars"
+    )
+    v2 = docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id", "text", "n_chars", "lang", "source"
+    )
+    v1.write.mode("overwrite").parquet(os.path.join(path, "gen=v1"))
+    v2.write.mode("overwrite").parquet(os.path.join(path, "gen=v2"))
+    return tmp
 
 
 def q_evolution_census(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -39,13 +39,13 @@ from pyspark.sql.datasource import (
 )
 
 from ..functions.hashing import hex32, hex32_sql
+from ..operators.common import memo
 from .tables import load_table
 
 ID_W = 12
 LANG_W = 8
 NCHARS_W = 8
 
-_FW_DIRS: dict[tuple[str, str], str] = {}
 _REGISTERED: set[str] = set()
 
 FW_SCHEMA = "doc_id bigint, lang string, n_chars bigint, text string"
@@ -98,22 +98,25 @@ def _ensure_registered(spark: SparkSession) -> None:
 def fixedwidth_path(spark: SparkSession, sf_dir: str) -> str:
     """documents materialized as fixed-width part-files, once per
     (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _FW_DIRS.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="fw_docs_"), "documents_fw"
-        )
-        docs = load_table(spark, sf_dir, "documents")
-        line = F.concat(
-            F.lpad(F.col("doc_id").cast("string"), ID_W, "0"),
-            F.rpad(F.col("lang"), LANG_W, " "),
-            F.lpad(F.col("n_chars").cast("string"), NCHARS_W, "0"),
-            F.col("text"),
-        )
-        docs.select(line.alias("value")).write.mode("overwrite").text(path)
-        _FW_DIRS[key] = path
-    return path
+    return os.path.join(_fixedwidth_dir(spark, sf_dir).name, "documents_fw")
+
+
+@memo
+def _fixedwidth_dir(
+    spark: SparkSession, sf_dir: str
+) -> tempfile.TemporaryDirectory:
+    tmp = tempfile.TemporaryDirectory(prefix="fw_docs_")
+    docs = load_table(spark, sf_dir, "documents")
+    line = F.concat(
+        F.lpad(F.col("doc_id").cast("string"), ID_W, "0"),
+        F.rpad(F.col("lang"), LANG_W, " "),
+        F.lpad(F.col("n_chars").cast("string"), NCHARS_W, "0"),
+        F.col("text"),
+    )
+    docs.select(line.alias("value")).write.mode("overwrite").text(
+        os.path.join(tmp.name, "documents_fw")
+    )
+    return tmp
 
 
 def q_fixedwidth_census(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -28,28 +28,26 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql
+from ..operators.common import memo
 from .tables import load_table
-
-_ORC_DIRS: dict[tuple[str, str], str] = {}
 
 
 def orc_table_path(spark: SparkSession, sf_dir: str) -> str:
     """documents materialized as a lang-partitioned ORC table, once
     per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _ORC_DIRS.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="orc_docs_"), "documents_orc"
-        )
-        (
-            load_table(spark, sf_dir, "documents")
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .orc(path)
-        )
-        _ORC_DIRS[key] = path
-    return path
+    return os.path.join(_orc_dir(spark, sf_dir).name, "documents_orc")
+
+
+@memo
+def _orc_dir(spark: SparkSession, sf_dir: str) -> tempfile.TemporaryDirectory:
+    tmp = tempfile.TemporaryDirectory(prefix="orc_docs_")
+    (
+        load_table(spark, sf_dir, "documents")
+        .write.mode("overwrite")
+        .partitionBy("lang")
+        .orc(os.path.join(tmp.name, "documents_orc"))
+    )
+    return tmp
 
 
 def q_orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

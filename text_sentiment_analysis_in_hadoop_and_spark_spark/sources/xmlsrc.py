@@ -28,9 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.hashing import hex32, hex32_sql
+from ..operators.common import memo
 from .tables import load_table
-
-_XML_DIRS: dict[tuple[str, str], str] = {}
 
 # explicit read schema: XML carries no types, and letting the sampler
 # infer them would (a) rescan the data and (b) guess LONG vs INT per
@@ -41,23 +40,22 @@ _DOC_XML_SCHEMA = "doc_id BIGINT, text STRING, source STRING, n_chars BIGINT"
 def xml_table_path(spark: SparkSession, sf_dir: str) -> str:
     """documents materialized as a lang-partitioned XML table, once
     per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _XML_DIRS.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.mkdtemp(prefix="xml_docs_"), "documents_xml"
-        )
-        (
-            load_table(spark, sf_dir, "documents")
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .format("xml")
-            .option("rootTag", "docs")
-            .option("rowTag", "doc")
-            .save(path)
-        )
-        _XML_DIRS[key] = path
-    return path
+    return os.path.join(_xml_dir(spark, sf_dir).name, "documents_xml")
+
+
+@memo
+def _xml_dir(spark: SparkSession, sf_dir: str) -> tempfile.TemporaryDirectory:
+    tmp = tempfile.TemporaryDirectory(prefix="xml_docs_")
+    (
+        load_table(spark, sf_dir, "documents")
+        .write.mode("overwrite")
+        .partitionBy("lang")
+        .format("xml")
+        .option("rootTag", "docs")
+        .option("rowTag", "doc")
+        .save(os.path.join(tmp.name, "documents_xml"))
+    )
+    return tmp
 
 
 def q_xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.common import register_cache
+from ..operators.common import memo
 
 WINDOW = "1 hour"
 WATERMARK = "1 hour"
@@ -702,9 +702,7 @@ QUERIES_LATE["events_winsorized"] = q_events_winsorized
 # itself, absorption, entropy rate) — without the memo each re-runs
 # the full per-user lag window (the r6 bench billed 9.7 s of cold
 # window scan to the first consumer)
-_TRANSITIONS_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@memo
 def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix over each user's event
     sequence: P(next_type | type) with counts — the sequence-mining
@@ -713,12 +711,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties are deterministic), then a types²-bounded groupBy; the row
     normalizer re-aggregates from the transition counts themselves
     (no second pass) and joins back broadcast.  The types²-sized
-    RESULT is cached (register_cache eviction discipline) for its
-    three consumers."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _TRANSITIONS_CACHE.get(key)
-    if memo is not None:
-        return memo
+    RESULT is cached for its three consumers."""
     ev = load_events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("epoch_sec", "event_id")
     steps = (
@@ -736,7 +729,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("next_type").alias("to_type"),
     ).agg(F.count("*").cast("long").alias("n"))
     totals = counts.groupBy("from_type").agg(F.sum("n").alias("tot"))
-    out = (
+    return (
         counts.join(F.broadcast(totals), "from_type")
         .select(
             "from_type",
@@ -746,8 +739,6 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    _TRANSITIONS_CACHE[key] = out
-    return out
 
 
 ORACLES_LATE["events_transitions"] = (
