@@ -98,43 +98,20 @@ def main() -> int:
     #   (r4 split them across eviction boundaries, which evicted the
     #   cleaned-docs cache nb had warmed and doubled the tfidf family —
     #   tfidf_wordcount 0.51→1.14 s, r4 verdict item 3)
-    # - dedup + similarity + pipeline_late share the shingle→signature→
+    # - dedup + similarity + pipeline share the shingle→signature→
     #   jaccard→CC chain and the embedding caches (the multimodal
     #   keep-list composes text-side CC with embedding clusters; the
     #   pretraining capstone composes keep-list + contamination +
     #   mixture) — splitting them measured 7.8 s for
     #   dedup_corpus_keep_mm and 7.0 s for pipe_training_corpus vs ~2 s
     #   warm at sf0.1
+    # - graph and sqlapi consume dedup's verified-pair cache (the
+    #   pagerank/link-prediction edges and the recursive k-hop
+    #   traversal): in their own groups they re-pay the cold
+    #   shingle→minhash→verify chain (~3 s each at sf0.1)
     _SHARED_GROUPS = {
         "nb": ("tfidf", "csv"),
-        # graph and sqlapi consume dedup's verified-pair cache (the
-        # pagerank/link-prediction edges and the recursive k-hop
-        # traversal): in their own groups they re-pay the cold
-        # shingle→minhash→verify chain (~3 s each at sf0.1)
-        "dedup": (
-            "similarity",
-            "pipeline_late",
-            "graph",
-            "sqlapi",
-            # r8: IVFPQ consumes the IVF-assignment + PQ-code memos the
-            # similarity family warms; its own group would re-bill both
-            # one-off fits to the query
-            "similarity_r8",
-            # r9: the occupancy audit reads the similarity family's
-            # memoized wide bucket table
-            "similarity_r9",
-            # r12: graph_degree_powerlaw consumes the same verified-
-            # pair memo as the graph family, but its end-of-order
-            # namespace ran AFTER the group's clear_caches() — its
-            # 4.7 s min-of-k was a re-bill of the cold shingle→verify
-            # chain (billing fix, not a plan change; the chain's build
-            # cost stays billed inside the dedup group)
-            "graph_r7",
-        ),
-        # r8: the quality OLS consumes the corpus bigram memo the
-        # quality family warms (same sharing as text_lm_score); its
-        # own end-of-order group would re-bill the bigram build
-        "quality": ("quality_r8",),
+        "dedup": ("similarity", "pipeline", "graph", "sqlapi"),
     }
     mods = {m.__name__.rsplit(".", 1)[-1]: m for m in entrymod._MODULE_ORDER}
     member_names = {n for ms in _SHARED_GROUPS.values() for n in ms}

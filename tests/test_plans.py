@@ -349,30 +349,6 @@ def test_dominant_suppliers_single_fact_shuffle(spark):
     assert scans == 2, f"expected lineitem+supplier scans only:\n{plan}"
 
 
-def test_no_pathological_operators_in_any_query(spark):
-    """Global physical-plan invariants over EVERY declared query (the
-    hand-written per-query tests above pin specific shapes; this
-    sweep catches a regression in any of the 100+ others):
-
-    - no row-at-a-time Python UDF (BatchEvalPython) — Arrow-batched
-      MapInPandas/ArrowEvalPython is the only sanctioned Python path;
-    - no CartesianProduct — the engine's only cross joins are 1-row /
-      dimension-sized broadcasts, which plan as
-      BroadcastNestedLoopJoin, never a shuffled cartesian.
-
-    ml_* queries are excluded: constructing their DataFrames runs
-    MLlib fits (minutes), and their plans are MLlib-internal; the
-    relational surface is what this engine authors."""
-    import __spark_entry__ as entry
-
-    for name, fn in entry.queries().items():
-        if name.startswith("ml_"):
-            continue
-        plan = _plan(fn(spark, SF_DIR))
-        assert "BatchEvalPython" not in plan, f"{name}: row Python UDF"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
-
-
 def test_global_shuffle_sorts_per_shard_not_globally(spark):
     """pipe_global_shuffle must be N_SHARDS independent sorts: exactly
     one hash Exchange keyed on shard, and the Sort node is per-

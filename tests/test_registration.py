@@ -1,41 +1,29 @@
 """Driver-contract registration guards.
 
 The driver's correctness gate checks only the FIRST 50 ``queries()``
-entries, so registration order is a managed rotation (see the comment
-in ``__spark_entry__.py``).  These tests pin the late-r5 window
-exactly: a mid-round addition that lands inside the window (instead
-of past it, via a late namespace) silently evicts a query the
-rotation promised a driver row — that failure mode becomes a red test
-here, not a discovery in next round's CORRECTNESS file.
+entries.  ``__spark_entry__._PROMOTED`` puts the window that
+``tools/rotation.py`` derives there; these tests pin that the window
+is the head of ``queries()``, that it leads with every never-checked
+name, and that each query and oracle is registered exactly once, in
+one module's ``QUERIES``/``ORACLES``.
 """
 
 from __future__ import annotations
+
+import ast
+import inspect
+import types
+from collections import Counter
 
 import __spark_entry__ as entrymod
 
 
 def test_window_is_exactly_the_promoted_fifty():
-    """The whole 50-slot window is the _PROMOTED list: fifty
-    never-driver-checked queries in registration order per
-    tools/rotation.py."""
+    """The whole 50-slot window is the _PROMOTED list that
+    tools/rotation.py derives."""
     q = list(entrymod.queries())
     assert len(entrymod._PROMOTED) == 50
     assert q[:50] == list(entrymod._PROMOTED)
-
-
-def test_promoted_matches_mechanical_rotation():
-    """Since r7 the window is derived at import time from the
-    CORRECTNESS_r*.json union; it must agree with tools/rotation.py's
-    independent derivation (same green rule, registration order) so
-    neither can silently drift."""
-    import tools.rotation as rotation
-
-    green = rotation.driver_green(entrymod.rows_only())
-    names = list(entrymod.queries())
-    expected = rotation.next_window(
-        names, green, reverify=entrymod._REVERIFY_FIRST
-    )
-    assert list(entrymod._PROMOTED) == expected[:50]
 
 
 def test_promoted_leads_with_every_never_checked_name():
@@ -106,3 +94,89 @@ def test_no_cross_module_name_shadowing():
     )
     o_dupes = sorted(n for n, c in o_counts.items() if c > 1)
     assert not o_dupes, o_dupes
+
+
+def _registered_keys(tree: ast.AST, table: str) -> list[str]:
+    """Every key a module writes into its ``table`` dict: the keys of
+    a ``table = {...}`` literal, ``table[k] = ...`` subscripts and
+    ``table.update({...})`` / ``table.update(k=...)`` calls."""
+    keys: list[str] = []
+
+    def literal(d: ast.AST) -> None:
+        if isinstance(d, ast.Dict):
+            keys.extend(ast.unparse(k) for k in d.keys if k is not None)
+
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = (
+                node.targets if isinstance(node, ast.Assign) else [node.target]
+            )
+            for t in targets:
+                if isinstance(t, ast.Name) and t.id == table:
+                    literal(node.value)
+                elif (
+                    isinstance(t, ast.Subscript)
+                    and isinstance(t.value, ast.Name)
+                    and t.value.id == table
+                ):
+                    keys.append(ast.unparse(t.slice))
+        elif (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "update"
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == table
+        ):
+            for arg in node.args:
+                literal(arg)
+            keys.extend(repr(kw.arg) for kw in node.keywords if kw.arg)
+    return keys
+
+
+def repeated_registrations(source: str) -> dict[str, list[str]]:
+    """``{"QUERIES": [...], "ORACLES": [...]}``: keys one module
+    registers more than once (the later write silently wins)."""
+    tree = ast.parse(source)
+    out = {}
+    for table in ("QUERIES", "ORACLES"):
+        counts = Counter(_registered_keys(tree, table))
+        out[table] = sorted(k for k, c in counts.items() if c > 1)
+    return out
+
+
+def test_module_order_lists_each_module_once():
+    mods = entrymod._MODULE_ORDER
+    assert all(isinstance(m, types.ModuleType) for m in mods), mods
+    assert len({m.__name__ for m in mods}) == len(mods)
+
+
+def test_no_same_module_name_shadowing():
+    """Each module registers into ONE QUERIES/ORACLES pair, so a name
+    written twice in one module is silently overwritten — invisible to
+    the cross-module guard above.  Checked on the source, since the
+    dict itself only keeps the last write."""
+    found = {}
+    for mod in entrymod._MODULE_ORDER:
+        reps = repeated_registrations(inspect.getsource(mod))
+        if any(reps.values()):
+            found[mod.__name__] = reps
+    assert not found, found
+
+
+def test_repeated_registration_detector_sees_every_form():
+    src = (
+        'QUERIES = {"a": f, "b": g}\n'
+        'QUERIES["a"] = h\n'
+        'ORACLES: dict[str, str] = {"x": "1"}\n'
+        'ORACLES.update({"y": "2"})\n'
+        'ORACLES["y"] = "3"\n'
+        'QUERIES["c"] = f\n'
+    )
+    assert repeated_registrations(src) == {
+        "QUERIES": ["'a'"],
+        "ORACLES": ["'y'"],
+    }
+    assert repeated_registrations('QUERIES = {"a": f, "a": g}\n') == {
+        "QUERIES": ["'a'"],
+        "ORACLES": [],
+    }

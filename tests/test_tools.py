@@ -54,28 +54,21 @@ def test_rotation_status_manifest_is_consistent():
     )
     assert st["driver_green"] + st["never_checked"] == st["declared"]
     assert len(st["never_checked_names"]) == st["never_checked"]
-    # window = never-checked head; padded oldest-green-first once the
-    # backlog no longer fills it (r8 verdict #5)
-    k = min(st["never_checked"], rotation.WINDOW)
-    assert st["next_window"][:k] == st["never_checked_names"][:k]
+    # window = never-checked names, then the reverify-due names, both
+    # in registration order, then oldest-green padding
+    never = st["never_checked_names"]
+    due = [n for n in names if n in st["reverify_due"]]
+    head = (never + due)[: rotation.WINDOW]
+    assert st["next_window"][: len(head)] == head
     assert len(st["next_window"]) == min(rotation.WINDOW, st["declared"])
     assert (
         sum(st["never_checked_by_family"].values()) == st["never_checked"]
     )
-    # the manifest's window must BE the driver's derived window —
-    # which is the head of registration order while the backlog still
-    # fills it (the _PROMOTED hoist and rotation.status read the same
-    # CORRECTNESS artifacts with the same rule, so they stay coupled);
-    # once the backlog drops below WINDOW the _PROMOTED head pads with
-    # already-green names, so only the never-checked PREFIX must match
-    # (r8 review: the unconditional form would break on no code
-    # change the round the backlog drains)
-    if st["never_checked"] >= rotation.WINDOW:
-        assert st["next_window"] == names[: len(st["next_window"])]
-    else:
-        assert st["next_window"] == names[: len(st["next_window"])] or (
-            names[: st["never_checked"]] == st["next_window"]
-        )
+    for n, (plan_round, green_round) in st["reverify_due"].items():
+        assert n in names and n not in never
+        assert plan_round > green_round
+    # the manifest's window IS the driver's window
+    assert st["next_window"] == names[: len(st["next_window"])]
     # every name is a declared query, in registration order
     pos = {n: i for i, n in enumerate(names)}
     order = [pos[n] for n in st["never_checked_names"]]
@@ -137,6 +130,62 @@ def test_driver_green_tracks_latest_row(tmp_path, monkeypatch):
     assert green["qb"] == "CORRECTNESS_r01.json"  # failure doesn't erase
     # and the padding order now re-proves qb (stalest proof) before qa
     assert rotation.next_window(["qa", "qb"], green, window=2) == ["qb", "qa"]
+
+
+def _green_row() -> dict:
+    return {"rows_match": True, "schema_match": True, "hash_match": True}
+
+
+def test_rotation_reverify_tier_from_plan_dumps(tmp_path, monkeypatch):
+    """The reverify tier is derived from the plan dumps: a name is due
+    when some plans/rNN/<name>_after.txt is newer than its latest
+    green row.  Due names follow the never-checked ones and precede
+    the oldest-green padding; a malformed CORRECTNESS file is
+    skipped."""
+    (tmp_path / "CORRECTNESS_r01.json").write_text(json.dumps({
+        "q_old": _green_row(),
+        "q_same": _green_row(),
+        "q_pad": _green_row(),
+        "q_regreen": _green_row(),
+    }))
+    (tmp_path / "CORRECTNESS_r02.json").write_text(json.dumps({
+        "q_late": _green_row(),
+        "q_regreen": _green_row(),
+    }))
+    (tmp_path / "CORRECTNESS_r03.json").write_text("{not json")
+    for rnd, name in [
+        ("r01", "q_same"),  # same round as its green row: not due
+        ("r02", "q_old"),  # newer than its r01 row: due
+        ("r02", "q_late"),  # same round as its r02 row: not due
+        ("r02", "q_regreen"),  # re-verified in r02 already: not due
+        ("r02", "q_never"),  # never green: leads anyway
+    ]:
+        (tmp_path / "plans" / rnd).mkdir(parents=True, exist_ok=True)
+        (tmp_path / "plans" / rnd / f"{name}_after.txt").write_text("plan")
+    # a before-only dump is not a rewrite
+    (tmp_path / "plans" / "r02" / "q_pad_before.txt").write_text("plan")
+    monkeypatch.setattr(rotation, "REPO", str(tmp_path))
+
+    names = ["q_pad", "q_same", "q_late", "q_old", "q_regreen", "q_never"]
+    green = rotation.driver_green()
+    assert green == {
+        "q_old": "CORRECTNESS_r01.json",
+        "q_same": "CORRECTNESS_r01.json",
+        "q_pad": "CORRECTNESS_r01.json",
+        "q_regreen": "CORRECTNESS_r02.json",
+        "q_late": "CORRECTNESS_r02.json",
+    }
+    assert rotation.reverify_due(names, green) == {"q_old": (2, 1)}
+    assert rotation.window(names, frozenset()) == [
+        "q_never",  # never green
+        "q_old",  # due
+        "q_pad", "q_same",  # r01 padding, registration order
+        "q_late", "q_regreen",  # r02 padding
+    ]
+    # a small window keeps the tiers' priority
+    assert rotation.next_window(
+        names, green, window=2, due={"q_old": (2, 1)}
+    ) == ["q_never", "q_old"]
 
 
 def test_rotation_status_cli_writes_artifact(tmp_path):

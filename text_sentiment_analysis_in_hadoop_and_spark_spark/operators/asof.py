@@ -430,13 +430,9 @@ BENCH_PROBE_SCALE = {
 
 # same oracle as the JVM composition — one contract, three
 # implementations (window plan, DuckDB native ASOF, pandas merge_asof)
-ORACLES_LATE: dict[str, str] = {
-    "events_asof_cogroup": ORACLES["events_asof"],
-}
+ORACLES["events_asof_cogroup"] = ORACLES["events_asof"]
 
-QUERIES_LATE = {
-    "events_asof_cogroup": q_events_asof_cogroup,
-}
+QUERIES["events_asof_cogroup"] = q_events_asof_cogroup
 
 
 # --- interval × interval overlap join (bucket decomposition) ---------
@@ -546,7 +542,7 @@ _SESS_CTE = (
     "busy AS (SELECT hour_epoch FROM hrs, tot WHERE 2*n*h > 3*t) "
 )
 
-ORACLES_LATE["events_interval_overlap"] = (
+ORACLES["events_interval_overlap"] = (
     _SESS_CTE
     + "SELECT s.user_id, s.session_id, b.hour_epoch, "
     "CAST(LEAST(s.end_epoch, b.hour_epoch + 3599) - "
@@ -557,7 +553,7 @@ ORACLES_LATE["events_interval_overlap"] = (
     "AND s.end_epoch >= b.hour_epoch"
 )
 
-QUERIES_LATE["events_interval_overlap"] = q_events_interval_overlap
+QUERIES["events_interval_overlap"] = q_events_interval_overlap
 
 
 # --- point-in-time feature assembly (r5) ---------------------------------
@@ -642,7 +638,7 @@ def q_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_pit_features"] = (
+ORACLES["events_pit_features"] = (
     "WITH e AS (SELECT event_id, user_id, event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS es, "
     "CAST(round(value * 100, 0) AS BIGINT) AS cents FROM events), "
@@ -663,4 +659,4 @@ ORACLES_LATE["events_pit_features"] = (
     "CAST(coalesce(es - last_seen, -1) AS BIGINT) AS recency_sec "
     f"FROM f WHERE event_type = '{PIT_LABEL}'"
 )
-QUERIES_LATE["events_pit_features"] = q_pit_features
+QUERIES["events_pit_features"] = q_pit_features

@@ -511,8 +511,8 @@ def _er_survivorship_sql() -> str:
     )
 
 
-QUERIES_R7 = {"er_survivorship": q_er_survivorship}
-ORACLES_R7 = {"er_survivorship": _er_survivorship_sql()}
+QUERIES["er_survivorship"] = q_er_survivorship
+ORACLES["er_survivorship"] = _er_survivorship_sql()
 
 
 # --- blocking-hierarchy audit (r10) -----------------------------------
@@ -589,5 +589,5 @@ _REFINE_AUDIT_SQL = (
     "AS BIGINT) AS dropped_docs FROM l1"
 )
 
-QUERIES_R10 = {"er_refinement_audit": q_er_refinement_audit}
-ORACLES_R10 = {"er_refinement_audit": _REFINE_AUDIT_SQL}
+QUERIES["er_refinement_audit"] = q_er_refinement_audit
+ORACLES["er_refinement_audit"] = _REFINE_AUDIT_SQL

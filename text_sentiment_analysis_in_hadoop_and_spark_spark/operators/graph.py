@@ -841,32 +841,30 @@ def q_graph_degree_powerlaw(
     return degree_powerlaw(_verified_edges(spark, sf_dir))
 
 
-ORACLES_R7 = {
-    "graph_degree_powerlaw": (
-        _with(
-            *_TRI_CTES,
-            "pl_hist AS (SELECT deg, CAST(count(*) AS BIGINT) AS cnt "
-            "FROM gdeg GROUP BY deg)",
-            "pl_pts AS (SELECT ln(CAST(deg AS DOUBLE)) AS x, "
-            "ln(CAST(cnt AS DOUBLE)) AS y FROM pl_hist)",
-            "pl_mom AS (SELECT CAST(count(*) AS BIGINT) AS k, "
-            "sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, "
-            "sum(x * x) AS sxx, sum(y * y) AS syy FROM pl_pts)",
-            "pl_tot AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes, "
-            "CAST(max(deg) AS BIGINT) AS max_degree FROM gdeg)",
-        )
-        + "SELECT n_nodes, max_degree, k AS n_degree_bins, "
-        "CASE WHEN k >= 3 AND k * sxx - sx * sx > 0 THEN "
-        "round(-(k * sxy - sx * sy) / (k * sxx - sx * sx), 6) "
-        "END AS alpha_hat, "
-        "CASE WHEN k >= 3 AND k * sxx - sx * sx > 0 "
-        "AND k * syy - sy * sy > 0 THEN "
-        "round((k * sxy - sx * sy) * (k * sxy - sx * sy) / "
-        "((k * sxx - sx * sx) * (k * syy - sy * sy)), 6) "
-        "END AS r2 FROM pl_mom CROSS JOIN pl_tot"
+ORACLES["graph_degree_powerlaw"] = (
+    _with(
+        *_TRI_CTES,
+        "pl_hist AS (SELECT deg, CAST(count(*) AS BIGINT) AS cnt "
+        "FROM gdeg GROUP BY deg)",
+        "pl_pts AS (SELECT ln(CAST(deg AS DOUBLE)) AS x, "
+        "ln(CAST(cnt AS DOUBLE)) AS y FROM pl_hist)",
+        "pl_mom AS (SELECT CAST(count(*) AS BIGINT) AS k, "
+        "sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, "
+        "sum(x * x) AS sxx, sum(y * y) AS syy FROM pl_pts)",
+        "pl_tot AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes, "
+        "CAST(max(deg) AS BIGINT) AS max_degree FROM gdeg)",
     )
-}
-QUERIES_R7 = {"graph_degree_powerlaw": q_graph_degree_powerlaw}
+    + "SELECT n_nodes, max_degree, k AS n_degree_bins, "
+    "CASE WHEN k >= 3 AND k * sxx - sx * sx > 0 THEN "
+    "round(-(k * sxy - sx * sy) / (k * sxx - sx * sx), 6) "
+    "END AS alpha_hat, "
+    "CASE WHEN k >= 3 AND k * sxx - sx * sx > 0 "
+    "AND k * syy - sy * sy > 0 THEN "
+    "round((k * sxy - sx * sy) * (k * sxy - sx * sy) / "
+    "((k * sxx - sx * sx) * (k * syy - sy * sy)), 6) "
+    "END AS r2 FROM pl_mom CROSS JOIN pl_tot"
+)
+QUERIES["graph_degree_powerlaw"] = q_graph_degree_powerlaw
 
 
 # --- bipartite projection: user × event_type (r9) ---------------------
@@ -968,21 +966,19 @@ def q_graph_bipartite_projection(
     )
 
 
-ORACLES_R9 = {
-    "graph_bipartite_projection": (
-        "WITH ev AS (SELECT DISTINCT user_id, event_type FROM events "
-        "WHERE user_id IS NOT NULL), "
-        "pairs AS (SELECT a.event_type AS type_a, c.event_type AS type_b, "
-        "CAST(count(*) AS BIGINT) AS n_co_users "
-        "FROM ev a JOIN ev c ON a.user_id = c.user_id "
-        "AND a.event_type < c.event_type GROUP BY 1, 2), "
-        "marg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_users "
-        "FROM ev GROUP BY 1) "
-        "SELECT p.type_a, p.type_b, p.n_co_users, "
-        "round(CAST(p.n_co_users AS DOUBLE) / "
-        "(ma.n_users + mb.n_users - p.n_co_users), 6) AS jaccard "
-        "FROM pairs p JOIN marg ma ON ma.event_type = p.type_a "
-        "JOIN marg mb ON mb.event_type = p.type_b"
-    )
-}
-QUERIES_R9 = {"graph_bipartite_projection": q_graph_bipartite_projection}
+ORACLES["graph_bipartite_projection"] = (
+    "WITH ev AS (SELECT DISTINCT user_id, event_type FROM events "
+    "WHERE user_id IS NOT NULL), "
+    "pairs AS (SELECT a.event_type AS type_a, c.event_type AS type_b, "
+    "CAST(count(*) AS BIGINT) AS n_co_users "
+    "FROM ev a JOIN ev c ON a.user_id = c.user_id "
+    "AND a.event_type < c.event_type GROUP BY 1, 2), "
+    "marg AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_users "
+    "FROM ev GROUP BY 1) "
+    "SELECT p.type_a, p.type_b, p.n_co_users, "
+    "round(CAST(p.n_co_users AS DOUBLE) / "
+    "(ma.n_users + mb.n_users - p.n_co_users), 6) AS jaccard "
+    "FROM pairs p JOIN marg ma ON ma.event_type = p.type_a "
+    "JOIN marg mb ON mb.event_type = p.type_b"
+)
+QUERIES["graph_bipartite_projection"] = q_graph_bipartite_projection

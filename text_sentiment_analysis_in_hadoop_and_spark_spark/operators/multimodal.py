@@ -693,22 +693,20 @@ _BMP_W_SQL = f"(4 + doc_id % {BMP_W_SPAN})"
 _BMP_H_SQL = f"(3 + doc_id % {BMP_H_SPAN})"
 _BMP_BASE_SQL = f"(doc_id % {BMP_BASE_MOD})"
 
-ORACLES_LATE: dict[str, str] = {
-    # closed form of the synthetic gradient: mean_x over 0..w-1 = (w-1)/2
-    "mm_pixel_stats": (
-        "SELECT doc_id, "
-        f"CAST({_BMP_W_SQL} AS INTEGER) AS width, "
-        f"CAST({_BMP_H_SQL} AS INTEGER) AS height, "
-        f"round({_BMP_BASE_SQL} + ({_BMP_W_SQL} - 1) / 2.0 "
-        f"+ ({_BMP_H_SQL} - 1) / 2.0, 6) AS mean_r, "
-        f"round({_BMP_BASE_SQL} + ({_BMP_H_SQL} - 1) / 2.0, 6) AS mean_g, "
-        f"round({_BMP_BASE_SQL} + ({_BMP_W_SQL} - 1) / 2.0, 6) AS mean_b, "
-        f"CAST({_BMP_BASE_SQL} AS INTEGER) AS tl_g "
-        "FROM documents"
-    ),
-}
+# closed form of the synthetic gradient: mean_x over 0..w-1 = (w-1)/2
+ORACLES["mm_pixel_stats"] = (
+    "SELECT doc_id, "
+    f"CAST({_BMP_W_SQL} AS INTEGER) AS width, "
+    f"CAST({_BMP_H_SQL} AS INTEGER) AS height, "
+    f"round({_BMP_BASE_SQL} + ({_BMP_W_SQL} - 1) / 2.0 "
+    f"+ ({_BMP_H_SQL} - 1) / 2.0, 6) AS mean_r, "
+    f"round({_BMP_BASE_SQL} + ({_BMP_H_SQL} - 1) / 2.0, 6) AS mean_g, "
+    f"round({_BMP_BASE_SQL} + ({_BMP_W_SQL} - 1) / 2.0, 6) AS mean_b, "
+    f"CAST({_BMP_BASE_SQL} AS INTEGER) AS tl_g "
+    "FROM documents"
+)
 
-QUERIES_LATE = {"mm_pixel_stats": q_mm_pixel_stats}
+QUERIES["mm_pixel_stats"] = q_mm_pixel_stats
 
 
 # --------------------------------------------------------------------------
@@ -853,7 +851,7 @@ _WAV_RATE_SQL = (
     + " END"
 )
 
-ORACLES_LATE["mm_audio_meta"] = (
+ORACLES["mm_audio_meta"] = (
         f"WITH meta AS (SELECT doc_id, {_WAV_RATE_SQL} AS sample_rate, "
         "CAST(1 + doc_id % 2 AS INTEGER) AS n_channels, "
         f"CAST(1 + doc_id % {WAV_FRAMES_MOD} AS BIGINT) AS n_frames "
@@ -872,7 +870,7 @@ ORACLES_LATE["mm_audio_meta"] = (
         "FROM meta m JOIN samp s USING (doc_id)"
 )
 
-QUERIES_LATE["mm_audio_meta"] = q_mm_audio_meta
+QUERIES["mm_audio_meta"] = q_mm_audio_meta
 
 
 # --- contrastive pair manifest (r5) ----------------------------------
@@ -993,7 +991,7 @@ _MM_UNPIVOT = " UNION ALL ".join(
     for t in range(4)
 )
 
-ORACLES_LATE["mm_pair_manifest"] = (
+ORACLES["mm_pair_manifest"] = (
     "WITH " + _SIM_B_CTE + ", "
     "cand AS (SELECT DISTINCT a.vec_id AS anchor_id, c.vec_id AS neg_id "
     "FROM (" + _MM_UNPIVOT + ") a JOIN (" + _MM_UNPIVOT
@@ -1012,7 +1010,7 @@ ORACLES_LATE["mm_pair_manifest"] = (
     "ON d.doc_id = b2.anchor_id"
 )
 
-QUERIES_LATE["mm_pair_manifest"] = q_mm_pair_manifest
+QUERIES["mm_pair_manifest"] = q_mm_pair_manifest
 
 
 # --------------------------------------------------------------------------
@@ -1102,7 +1100,7 @@ def q_mm_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["mm_ahash_dedup"] = q_mm_ahash_dedup
+QUERIES["mm_ahash_dedup"] = q_mm_ahash_dedup
 
 
 # --------------------------------------------------------------------------
@@ -1189,7 +1187,7 @@ def q_mm_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _WAV_N_SAMPLES_SQL = f"((1 + doc_id % {WAV_FRAMES_MOD}) * (1 + doc_id % 2))"
 
-ORACLES_LATE["mm_audio_quality"] = (
+ORACLES["mm_audio_quality"] = (
     f"WITH p AS (SELECT doc_id, {_WAV_N_SAMPLES_SQL} AS n FROM documents), "
     "s AS (SELECT doc_id, n, unnest(range(0, n)) AS k FROM p), "
     "v AS (SELECT doc_id, n, "
@@ -1203,7 +1201,7 @@ ORACLES_LATE["mm_audio_quality"] = (
     "FROM v GROUP BY doc_id"
 )
 
-QUERIES_LATE["mm_audio_quality"] = q_mm_audio_quality
+QUERIES["mm_audio_quality"] = q_mm_audio_quality
 
 
 def image_quality_batches(
@@ -1253,7 +1251,7 @@ def q_mm_image_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mm_image_quality"] = (
+ORACLES["mm_image_quality"] = (
     "SELECT doc_id, "
     f"round({_BMP_BASE_SQL} + ({_BMP_W_SQL} + {_BMP_H_SQL} - 2) / 3.0, 6) "
     "AS gray_mean, "
@@ -1264,7 +1262,7 @@ ORACLES_LATE["mm_image_quality"] = (
     "FROM documents"
 )
 
-QUERIES_LATE["mm_image_quality"] = q_mm_image_quality
+QUERIES["mm_image_quality"] = q_mm_image_quality
 
 
 # --- video scene-cut detection (r5) ----------------------------------
@@ -1342,7 +1340,7 @@ def q_mm_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["mm_scene_cuts"] = (
+ORACLES["mm_scene_cuts"] = (
     "WITH meta AS (SELECT doc_id, "
     "CAST(octet_length(encode(text)) AS BIGINT) AS nb, "
     "CAST(1 + octet_length(encode(text)) % 10 AS INTEGER) AS n_frames "
@@ -1362,7 +1360,7 @@ ORACLES_LATE["mm_scene_cuts"] = (
     "FROM j GROUP BY doc_id"
 )
 
-QUERIES_LATE["mm_scene_cuts"] = q_mm_scene_cuts
+QUERIES["mm_scene_cuts"] = q_mm_scene_cuts
 
 
 # --------------------------------------------------------------------------
@@ -1454,7 +1452,7 @@ def q_mm_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["mm_audio_spectral"] = q_mm_audio_spectral
+QUERIES["mm_audio_spectral"] = q_mm_audio_spectral
 
 
 # --------------------------------------------------------------------------
@@ -1550,7 +1548,7 @@ def q_mm_ahash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ahash_near_pairs(families)
 
 
-QUERIES_LATE["mm_ahash_pairs"] = q_mm_ahash_pairs
+QUERIES["mm_ahash_pairs"] = q_mm_ahash_pairs
 
 
 # --------------------------------------------------------------------------
@@ -1605,7 +1603,5 @@ def q_mm_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same closed form as mm_pixel_stats: the PNG stores the identical
 # gradient, just through a DEFLATE + filter pipeline instead of BMP
 # padding/orientation
-QUERIES_R7 = {"mm_png_pixel_stats": q_mm_png_pixel_stats}
-ORACLES_R7 = {
-    "mm_png_pixel_stats": ORACLES_LATE["mm_pixel_stats"],
-}
+QUERIES["mm_png_pixel_stats"] = q_mm_png_pixel_stats
+ORACLES["mm_png_pixel_stats"] = ORACLES["mm_pixel_stats"]

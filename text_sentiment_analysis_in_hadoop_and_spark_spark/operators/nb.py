@@ -615,7 +615,7 @@ QUERIES = {
 }
 
 
-# --- score calibration (r5, late namespace) ---------------------------
+# --- score calibration (r5) ------------------------------------------
 
 CALIB_FENCES = (1.0, 2.0, 4.0, 8.0)  # |log-odds margin| bucket edges
 
@@ -684,11 +684,8 @@ def _calibration_sql() -> str:
     )
 
 
-# registered via the _nb_late namespace in __spark_entry__ (the
-# window policy: mid-round additions to early modules must land past
-# the driver's 50-query cap)
-QUERIES_LATE = {"nb_calibration": q_nb_calibration}
-ORACLES_LATE = {"nb_calibration": _calibration_sql()}
+QUERIES["nb_calibration"] = q_nb_calibration
+ORACLES["nb_calibration"] = _calibration_sql()
 
 
 # --- ROC AUC via the rank identity (r5) ------------------------------
@@ -769,8 +766,8 @@ def _auc_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_auc"] = q_nb_auc
-ORACLES_LATE["nb_auc"] = _auc_sql()
+QUERIES["nb_auc"] = q_nb_auc
+ORACLES["nb_auc"] = _auc_sql()
 
 
 # --- learning curve over deterministic train fractions (r5) ----------
@@ -948,8 +945,8 @@ def _learning_curve_sql() -> str:
     return " UNION ALL ".join(parts)
 
 
-QUERIES_LATE["nb_learning_curve"] = q_nb_learning_curve
-ORACLES_LATE["nb_learning_curve"] = _learning_curve_sql()
+QUERIES["nb_learning_curve"] = q_nb_learning_curve
+ORACLES["nb_learning_curve"] = _learning_curve_sql()
 
 
 # --- decile lift / gains table (r5) --------------------------------------
@@ -1037,8 +1034,8 @@ def _lift_gains_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_lift_gains"] = q_nb_lift_gains
-ORACLES_LATE["nb_lift_gains"] = _lift_gains_sql()
+QUERIES["nb_lift_gains"] = q_nb_lift_gains
+ORACLES["nb_lift_gains"] = _lift_gains_sql()
 
 
 # --- k-fold cross-validated accuracy (r5) ---------------------------------
@@ -1339,8 +1336,8 @@ def _cv_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_cv_accuracy"] = q_nb_cv_accuracy
-ORACLES_LATE["nb_cv_accuracy"] = _cv_sql()
+QUERIES["nb_cv_accuracy"] = q_nb_cv_accuracy
+ORACLES["nb_cv_accuracy"] = _cv_sql()
 
 
 # --- active-learning uncertainty sample (r5) -------------------------------
@@ -1399,8 +1396,8 @@ def _uncertainty_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_uncertainty_sample"] = q_nb_uncertainty_sample
-ORACLES_LATE["nb_uncertainty_sample"] = _uncertainty_sql()
+QUERIES["nb_uncertainty_sample"] = q_nb_uncertainty_sample
+ORACLES["nb_uncertainty_sample"] = _uncertainty_sql()
 
 
 # --- top discriminative features (r5) --------------------------------------
@@ -1472,8 +1469,8 @@ def _top_features_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_top_features"] = q_nb_top_features
-ORACLES_LATE["nb_top_features"] = _top_features_sql()
+QUERIES["nb_top_features"] = q_nb_top_features
+ORACLES["nb_top_features"] = _top_features_sql()
 
 
 # --- confident-learning label audit (r5) -----------------------------------
@@ -1530,8 +1527,8 @@ def _label_issues_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_label_issues"] = q_nb_label_issues
-ORACLES_LATE["nb_label_issues"] = _label_issues_sql()
+QUERIES["nb_label_issues"] = q_nb_label_issues
+ORACLES["nb_label_issues"] = _label_issues_sql()
 
 
 # --- label-permutation null calibration (r5) --------------------------------
@@ -1627,8 +1624,8 @@ def _null_calibration_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_null_calibration"] = q_nb_null_calibration
-ORACLES_LATE["nb_null_calibration"] = _null_calibration_sql()
+QUERIES["nb_null_calibration"] = q_nb_null_calibration
+ORACLES["nb_null_calibration"] = _null_calibration_sql()
 
 
 # --- split-conformal prediction sets (r6) -----------------------------
@@ -1768,5 +1765,5 @@ def _conformal_sql() -> str:
     )
 
 
-QUERIES_LATE["nb_conformal"] = q_nb_conformal
-ORACLES_LATE["nb_conformal"] = _conformal_sql()
+QUERIES["nb_conformal"] = q_nb_conformal
+ORACLES["nb_conformal"] = _conformal_sql()

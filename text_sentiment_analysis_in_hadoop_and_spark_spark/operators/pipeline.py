@@ -453,9 +453,7 @@ QUERIES = {
     "pipe_profile": q_profile,
 }
 
-# Registered AFTER the never-driver-checked r4 block (__spark_entry__
-# wraps these in a late namespace) so mid-round additions don't push
-# the critical queries past the driver's 50-query correctness window.
+
 def _training_corpus_sql() -> str:
     """Composed oracle: the keep-list recursive CTE, the contamination
     query, and the mixture filter nest as self-contained derived
@@ -487,28 +485,26 @@ def _training_corpus_sql() -> str:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "pipe_mixture": (
-        "WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_avail, "
-        "CAST(CAST(substr(source, 4) AS BIGINT) % 3 + 1 AS BIGINT) AS w "
-        "FROM documents GROUP BY source), "
-        "t AS (SELECT CAST(sum(n_avail) AS BIGINT) AS n_total, "
-        "CAST(sum(w) AS BIGINT) AS w_total FROM c), "
-        "k AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept "
-        "FROM documents d JOIN c USING (source) CROSS JOIN t "
-        f"WHERE ({hex32_sql('d.text')} % {MIX_DENOM}) * c.n_avail "
-        f"* t.w_total * {MIX_BUDGET_FRAC} < t.n_total * c.w * {MIX_DENOM} "
-        "GROUP BY d.source) "
-        "SELECT c.source, c.w, c.n_avail, "
-        "CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept, "
-        "round(least(1.0, t.n_total * c.w / "
-        f"CAST(t.w_total * {MIX_BUDGET_FRAC} * c.n_avail AS DOUBLE)), 6) "
-        "AS target_frac, "
-        "round(coalesce(k.n_kept, 0) / CAST(c.n_avail AS DOUBLE), 6) "
-        "AS realized_frac "
-        "FROM c CROSS JOIN t LEFT JOIN k ON c.source = k.source"
-    ),
-}
+ORACLES["pipe_mixture"] = (
+    "WITH c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_avail, "
+    "CAST(CAST(substr(source, 4) AS BIGINT) % 3 + 1 AS BIGINT) AS w "
+    "FROM documents GROUP BY source), "
+    "t AS (SELECT CAST(sum(n_avail) AS BIGINT) AS n_total, "
+    "CAST(sum(w) AS BIGINT) AS w_total FROM c), "
+    "k AS (SELECT d.source, CAST(count(*) AS BIGINT) AS n_kept "
+    "FROM documents d JOIN c USING (source) CROSS JOIN t "
+    f"WHERE ({hex32_sql('d.text')} % {MIX_DENOM}) * c.n_avail "
+    f"* t.w_total * {MIX_BUDGET_FRAC} < t.n_total * c.w * {MIX_DENOM} "
+    "GROUP BY d.source) "
+    "SELECT c.source, c.w, c.n_avail, "
+    "CAST(coalesce(k.n_kept, 0) AS BIGINT) AS n_kept, "
+    "round(least(1.0, t.n_total * c.w / "
+    f"CAST(t.w_total * {MIX_BUDGET_FRAC} * c.n_avail AS DOUBLE)), 6) "
+    "AS target_frac, "
+    "round(coalesce(k.n_kept, 0) / CAST(c.n_avail AS DOUBLE), 6) "
+    "AS realized_frac "
+    "FROM c CROSS JOIN t LEFT JOIN k ON c.source = k.source"
+)
 
 CONTAM_MAX = 0.2  # training-corpus gate: max benchmark 5-gram overlap
 
@@ -576,7 +572,7 @@ def q_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_training_corpus"] = _training_corpus_sql()
+ORACLES["pipe_training_corpus"] = _training_corpus_sql()
 
 
 # --------------------------------------------------------------------------
@@ -686,8 +682,8 @@ def _split_leakage_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_split_leakage_safe"] = None  # filled below
-ORACLES_LATE["pipe_sample_ttr_weighted"] = (
+ORACLES["pipe_split_leakage_safe"] = _split_leakage_sql()
+ORACLES["pipe_sample_ttr_weighted"] = (
     "SELECT doc_id, "
     "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, "
     "CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) "
@@ -695,27 +691,18 @@ ORACLES_LATE["pipe_sample_ttr_weighted"] = (
     f"WHERE ({hex32_sql('text')}) % len(string_split(text, ' ')) "
     "< len(list_distinct(string_split(text, ' ')))"
 )
-ORACLES_LATE["pipe_global_shuffle"] = (
+ORACLES["pipe_global_shuffle"] = (
     f"SELECT doc_id, CAST(h % {N_SHARDS} AS BIGINT) AS shard, "
     "CAST(row_number() OVER ("
     f"PARTITION BY h % {N_SHARDS} ORDER BY h, doc_id) AS BIGINT) AS pos "
     f"FROM (SELECT doc_id, {hex32_sql('text')} AS h FROM documents)"
 )
 
-QUERIES_LATE = {
-    "pipe_mixture": q_mixture,
-    "pipe_training_corpus": q_training_corpus,
-    "pipe_split_leakage_safe": q_split_leakage_safe,
-    "pipe_sample_ttr_weighted": q_sample_ttr_weighted,
-    "pipe_global_shuffle": q_global_shuffle,
-}
-
-
-def _late_init() -> None:
-    ORACLES_LATE["pipe_split_leakage_safe"] = _split_leakage_sql()
-
-
-_late_init()
+QUERIES["pipe_mixture"] = q_mixture
+QUERIES["pipe_training_corpus"] = q_training_corpus
+QUERIES["pipe_split_leakage_safe"] = q_split_leakage_safe
+QUERIES["pipe_sample_ttr_weighted"] = q_sample_ttr_weighted
+QUERIES["pipe_global_shuffle"] = q_global_shuffle
 
 
 # --- Efraimidis–Spirakis weighted sample (r5) ------------------------
@@ -752,7 +739,7 @@ def q_sample_weighted_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_sample_weighted_k"] = (
+ORACLES["pipe_sample_weighted_k"] = (
     "SELECT doc_id, n_chars, "
     f"round(ln(CAST({hex32_sql('text')} + 1 AS DOUBLE) / {float(1 << 32)}) "
     "/ n_chars, 6) AS log_key "
@@ -760,7 +747,7 @@ ORACLES_LATE["pipe_sample_weighted_k"] = (
     f"LIMIT {WEIGHTED_K}"
 )
 
-QUERIES_LATE["pipe_sample_weighted_k"] = q_sample_weighted_k
+QUERIES["pipe_sample_weighted_k"] = q_sample_weighted_k
 
 
 # --- incremental aggregate maintenance (r5) --------------------------
@@ -816,7 +803,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_incremental_agg"] = (
+ORACLES["pipe_incremental_agg"] = (
     "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
     "CAST(sum(n_chars) AS BIGINT) AS sum_chars, "
     "round(sum(n_chars) * 1.0 / count(*), 6) AS mean_chars, "
@@ -826,7 +813,7 @@ ORACLES_LATE["pipe_incremental_agg"] = (
     "FROM documents GROUP BY lang"
 )
 
-QUERIES_LATE["pipe_incremental_agg"] = q_incremental_agg
+QUERIES["pipe_incremental_agg"] = q_incremental_agg
 
 
 def q_shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -849,7 +836,7 @@ def q_shard_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_shard_skew_report"] = (
+ORACLES["pipe_shard_skew_report"] = (
     "WITH m AS ("
     + ORACLES["pipe_export_manifest"]
     + ") SELECT CAST(count(*) AS BIGINT) AS n_shards, "
@@ -860,7 +847,7 @@ ORACLES_LATE["pipe_shard_skew_report"] = (
     "round(stddev_pop(n_tokens) / avg(n_tokens), 6) AS cv FROM m"
 )
 
-QUERIES_LATE["pipe_shard_skew_report"] = q_shard_skew_report
+QUERIES["pipe_shard_skew_report"] = q_shard_skew_report
 
 
 def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -910,7 +897,7 @@ def q_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from .quality import ORACLES as _QUALITY_ORACLES  # noqa: E402
 
-ORACLES_LATE["pipe_data_card"] = (
+ORACLES["pipe_data_card"] = (
     "WITH rep AS (SELECT doc_id, keep FROM ("
     + _QUALITY_ORACLES["text_repetition"]
     + ")), "
@@ -930,7 +917,7 @@ ORACLES_LATE["pipe_data_card"] = (
     "FROM base GROUP BY lang, source"
 )
 
-QUERIES_LATE["pipe_data_card"] = q_data_card
+QUERIES["pipe_data_card"] = q_data_card
 
 
 SNAP_MOD = 11   # docs new in the current snapshot (absent from prev)
@@ -988,7 +975,7 @@ def q_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_manifest_diff"] = (
+ORACLES["pipe_manifest_diff"] = (
     "WITH base AS (SELECT doc_id, "
     "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens, "
     f"{hex32_sql('text')} % {N_SHARDS} AS shard FROM documents), "
@@ -1009,8 +996,8 @@ ORACLES_LATE["pipe_manifest_diff"] = (
     "LEFT JOIN a USING (shard) LEFT JOIN r USING (shard)"
 )
 
-QUERIES_LATE["pipe_manifest_diff"] = q_manifest_diff
-QUERIES_LATE["pipe_pack_ffd"] = q_pack_ffd
+QUERIES["pipe_manifest_diff"] = q_manifest_diff
+QUERIES["pipe_pack_ffd"] = q_pack_ffd
 
 
 WF_BUDGET_FRAC = 2  # global token budget = corpus tokens / 2
@@ -1085,7 +1072,7 @@ def q_water_filling(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_water_filling"] = (
+ORACLES["pipe_water_filling"] = (
     "WITH demands AS (SELECT source, "
     "CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS demand "
     "FROM documents GROUP BY source), "
@@ -1113,7 +1100,7 @@ ORACLES_LATE["pipe_water_filling"] = (
     "FROM ranked r LEFT JOIN lvl l ON TRUE"
 )
 
-QUERIES_LATE["pipe_water_filling"] = q_water_filling
+QUERIES["pipe_water_filling"] = q_water_filling
 
 
 def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1156,7 +1143,7 @@ def q_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_curriculum"] = (
+ORACLES["pipe_curriculum"] = (
     "WITH qs AS (SELECT quantile_cont(n_chars, 0.25) AS q1, "
     "quantile_cont(n_chars, 0.5) AS q2, "
     "quantile_cont(n_chars, 0.75) AS q3 FROM documents), "
@@ -1168,7 +1155,7 @@ ORACLES_LATE["pipe_curriculum"] = (
     "round(avg(n_chars), 6) AS avg_chars FROM staged GROUP BY stage"
 )
 
-QUERIES_LATE["pipe_curriculum"] = q_curriculum
+QUERIES["pipe_curriculum"] = q_curriculum
 
 
 KFOLDS = 5
@@ -1194,7 +1181,7 @@ def q_kfold_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_kfold_manifest"] = (
+ORACLES["pipe_kfold_manifest"] = (
     f"WITH f AS (SELECT CAST({hex32_sql('text')} % {KFOLDS} AS INTEGER) "
     "AS fold, n_chars, doc_id % 2 AS label FROM documents) "
     "SELECT fold, CAST(count(*) AS BIGINT) AS n_docs, "
@@ -1202,7 +1189,7 @@ ORACLES_LATE["pipe_kfold_manifest"] = (
     "round(avg(label), 6) AS label1_share FROM f GROUP BY fold"
 )
 
-QUERIES_LATE["pipe_kfold_manifest"] = q_kfold_manifest
+QUERIES["pipe_kfold_manifest"] = q_kfold_manifest
 
 
 TARGET_SPLIT_MB = 128
@@ -1248,7 +1235,7 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_partition_advisor"] = (
+ORACLES["pipe_partition_advisor"] = (
     "SELECT 'documents' AS table, CAST(count(*) AS BIGINT) AS n_rows, "
     "round((sum(length(text)) + sum(length(lang)) + sum(length(source)) "
     "+ count(*) * 16) / 1048576.0, 6) AS est_mb, "
@@ -1270,7 +1257,7 @@ ORACLES_LATE["pipe_partition_advisor"] = (
     f"/ ({TARGET_SPLIT_MB} * 1048576.0))) AS BIGINT) FROM lineitem"
 )
 
-QUERIES_LATE["pipe_partition_advisor"] = q_partition_advisor
+QUERIES["pipe_partition_advisor"] = q_partition_advisor
 
 
 INTERLEAVE_HEAD = 100
@@ -1319,7 +1306,7 @@ def q_interleave_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_interleave_schedule"] = (
+ORACLES["pipe_interleave_schedule"] = (
     f"WITH d AS (SELECT doc_id, source, {hex32_sql('text')} AS h "
     "FROM documents), "
     "s AS (SELECT source, dense_rank() OVER (ORDER BY source) - 1 "
@@ -1334,7 +1321,7 @@ ORACLES_LATE["pipe_interleave_schedule"] = (
     f"ORDER BY position LIMIT {INTERLEAVE_HEAD}"
 )
 
-QUERIES_LATE["pipe_interleave_schedule"] = q_interleave_schedule
+QUERIES["pipe_interleave_schedule"] = q_interleave_schedule
 
 
 # --- per-epoch global shuffle via two-phase ranking (r5) -------------
@@ -1419,7 +1406,7 @@ def q_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_epoch_shuffle"] = (
+ORACLES["pipe_epoch_shuffle"] = (
     "WITH e AS (SELECT doc_id, CAST(ep.epoch AS INTEGER) AS epoch "
     "FROM documents CROSS JOIN (SELECT unnest(generate_series(0, "
     f"{N_EPOCHS - 1})) AS epoch) ep), "
@@ -1430,7 +1417,7 @@ ORACLES_LATE["pipe_epoch_shuffle"] = (
     "PARTITION BY epoch ORDER BY key, doc_id) AS BIGINT) AS pos FROM k"
 )
 
-QUERIES_LATE["pipe_epoch_shuffle"] = q_epoch_shuffle
+QUERIES["pipe_epoch_shuffle"] = q_epoch_shuffle
 
 
 # --- token-budget planner (r5) ---------------------------------------
@@ -1480,7 +1467,7 @@ def q_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_token_budget"] = (
+ORACLES["pipe_token_budget"] = (
     "WITH s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs, "
     "CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens, "
     "CAST(CAST(substr(source, 4) AS BIGINT) % 3 + 1 AS BIGINT) AS w "
@@ -1496,7 +1483,7 @@ ORACLES_LATE["pipe_token_budget"] = (
     "FROM s CROSS JOIN t"
 )
 
-QUERIES_LATE["pipe_token_budget"] = q_token_budget
+QUERIES["pipe_token_budget"] = q_token_budget
 
 
 # --- Neyman-allocation stratified sample (r5) ------------------------
@@ -1564,7 +1551,7 @@ def q_neyman_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_neyman_sample"] = (
+ORACLES["pipe_neyman_sample"] = (
     "WITH st AS (SELECT source, CAST(count(*) AS BIGINT) AS n_avail, "
     "CAST(sum(n_chars) AS BIGINT) AS s, "
     "CAST(sum(n_chars * n_chars) AS BIGINT) AS ss "
@@ -1583,7 +1570,7 @@ ORACLES_LATE["pipe_neyman_sample"] = (
     f"WHERE r.rk <= CAST(floor({NEYMAN_N} * a.alloc_frac) AS BIGINT)"
 )
 
-QUERIES_LATE["pipe_neyman_sample"] = q_neyman_sample
+QUERIES["pipe_neyman_sample"] = q_neyman_sample
 
 
 # --- per-gate keep attribution (r5) ----------------------------------
@@ -1676,8 +1663,8 @@ def _keep_attribution_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_keep_attribution"] = _keep_attribution_sql()
-QUERIES_LATE["pipe_keep_attribution"] = q_keep_attribution
+ORACLES["pipe_keep_attribution"] = _keep_attribution_sql()
+QUERIES["pipe_keep_attribution"] = q_keep_attribution
 
 
 # --- DSIR importance weights (data selection, Xie et al. 2023) -------
@@ -1804,8 +1791,8 @@ FROM (SELECT doc_id FROM documents) d LEFT JOIN dw USING (doc_id)
 """
 
 
-ORACLES_LATE["pipe_dsir_weights"] = _dsir_sql()
-QUERIES_LATE["pipe_dsir_weights"] = q_dsir_weights
+ORACLES["pipe_dsir_weights"] = _dsir_sql()
+QUERIES["pipe_dsir_weights"] = q_dsir_weights
 
 
 # --- contrastive negative sampling (near-dup-safe) -------------------
@@ -1907,8 +1894,8 @@ def _contrastive_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_contrastive_negatives"] = _contrastive_sql()
-QUERIES_LATE["pipe_contrastive_negatives"] = q_contrastive_negatives
+ORACLES["pipe_contrastive_negatives"] = _contrastive_sql()
+QUERIES["pipe_contrastive_negatives"] = q_contrastive_negatives
 
 
 # --- rendezvous (HRW) sharding — stable placement under resharding ---
@@ -1978,10 +1965,10 @@ def _rendezvous_sql(n_shards: int) -> str:
     )
 
 
-ORACLES_LATE["pipe_rendezvous_shards"] = _rendezvous_sql(
+ORACLES["pipe_rendezvous_shards"] = _rendezvous_sql(
     RENDEZVOUS_SHARDS
 )
-QUERIES_LATE["pipe_rendezvous_shards"] = q_rendezvous_shards
+QUERIES["pipe_rendezvous_shards"] = q_rendezvous_shards
 
 
 # --- temperature-scaled mixture (r5) -----------------------------------
@@ -2111,8 +2098,8 @@ def _temperature_mixture_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_temperature_mixture"] = _temperature_mixture_sql()
-QUERIES_LATE["pipe_temperature_mixture"] = q_temperature_mixture
+ORACLES["pipe_temperature_mixture"] = _temperature_mixture_sql()
+QUERIES["pipe_temperature_mixture"] = q_temperature_mixture
 
 
 # --- length-bucketed inference batching (r5) ----------------------------
@@ -2205,8 +2192,8 @@ def _length_batching_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_length_batching"] = _length_batching_sql()
-QUERIES_LATE["pipe_length_batching"] = q_length_batching
+ORACLES["pipe_length_batching"] = _length_batching_sql()
+QUERIES["pipe_length_batching"] = q_length_batching
 
 
 # --- order-invariant corpus fingerprint (r5) ----------------------------
@@ -2271,8 +2258,8 @@ def _corpus_fingerprint_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_corpus_fingerprint"] = _corpus_fingerprint_sql()
-QUERIES_LATE["pipe_corpus_fingerprint"] = q_corpus_fingerprint
+ORACLES["pipe_corpus_fingerprint"] = _corpus_fingerprint_sql()
+QUERIES["pipe_corpus_fingerprint"] = q_corpus_fingerprint
 
 
 # --- packing-efficiency scoreboard (r5) -------------------------------------
@@ -2338,7 +2325,7 @@ def q_packing_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["pipe_packing_efficiency"] = q_packing_efficiency
+QUERIES["pipe_packing_efficiency"] = q_packing_efficiency
 
 
 # --- leakage-safe target encoding (r6) ------------------------------------
@@ -2407,7 +2394,7 @@ def q_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["pipe_target_encoding"] = (
+ORACLES["pipe_target_encoding"] = (
     "WITH o AS (SELECT o_custkey, "
     f"CAST(o_orderkey % {TE_FOLDS} AS INTEGER) AS fold, "
     "CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents "
@@ -2427,7 +2414,7 @@ ORACLES_LATE["pipe_target_encoding"] = (
     "ELSE CAST(g_s AS DOUBLE) / g_n END / 100.0, 6) AS encoding "
     "FROM w"
 )
-QUERIES_LATE["pipe_target_encoding"] = q_target_encoding
+QUERIES["pipe_target_encoding"] = q_target_encoding
 
 
 # --- corpus health one-liner (r6 capstone) --------------------------------
@@ -2511,8 +2498,8 @@ def _corpus_health_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_corpus_health"] = _corpus_health_sql()
-QUERIES_LATE["pipe_corpus_health"] = q_corpus_health
+ORACLES["pipe_corpus_health"] = _corpus_health_sql()
+QUERIES["pipe_corpus_health"] = q_corpus_health
 
 
 # --------------------------------------------------------------------------
@@ -2584,22 +2571,18 @@ def q_observed_gate_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_R8: dict[str, str] = {
-    "pipe_observed_gate_metrics": (
-        "WITH t AS (SELECT n_chars, "
-        "len(string_split(text, ' ')) AS n_tok FROM documents), "
-        "pre AS (SELECT CAST(count(*) AS BIGINT) AS n_total, "
-        "CAST(sum(n_chars) AS BIGINT) AS chars_total FROM t), "
-        "post AS (SELECT CAST(count(*) AS BIGINT) AS n_kept, "
-        "CAST(sum(n_tok) AS BIGINT) AS tokens_kept, "
-        "CAST(sum(n_chars) AS BIGINT) AS chars_kept FROM t "
-        f"WHERE n_tok >= {OBS_MIN_TOKENS}) "
-        "SELECT n_total, chars_total, n_kept, tokens_kept, chars_kept, "
-        "round(CAST(n_kept AS DOUBLE) / n_total, 6) AS keep_rate "
-        "FROM pre CROSS JOIN post"
-    ),
-}
+ORACLES["pipe_observed_gate_metrics"] = (
+    "WITH t AS (SELECT n_chars, "
+    "len(string_split(text, ' ')) AS n_tok FROM documents), "
+    "pre AS (SELECT CAST(count(*) AS BIGINT) AS n_total, "
+    "CAST(sum(n_chars) AS BIGINT) AS chars_total FROM t), "
+    "post AS (SELECT CAST(count(*) AS BIGINT) AS n_kept, "
+    "CAST(sum(n_tok) AS BIGINT) AS tokens_kept, "
+    "CAST(sum(n_chars) AS BIGINT) AS chars_kept FROM t "
+    f"WHERE n_tok >= {OBS_MIN_TOKENS}) "
+    "SELECT n_total, chars_total, n_kept, tokens_kept, chars_kept, "
+    "round(CAST(n_kept AS DOUBLE) / n_total, 6) AS keep_rate "
+    "FROM pre CROSS JOIN post"
+)
 
-QUERIES_R8 = {
-    "pipe_observed_gate_metrics": q_observed_gate_metrics,
-}
+QUERIES["pipe_observed_gate_metrics"] = q_observed_gate_metrics

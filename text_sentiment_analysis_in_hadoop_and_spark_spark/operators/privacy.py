@@ -443,9 +443,7 @@ def q_dp_error_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_R7 = {}
-QUERIES_R7 = {}
-ORACLES_R7["priv_dp_error_budget"] = (
+ORACLES["priv_dp_error_budget"] = (
     "WITH cells AS (SELECT CAST(c_nationkey AS BIGINT) AS nationkey, "
     "c_mktsegment AS segment, CAST(count(*) AS BIGINT) AS n "
     "FROM customer GROUP BY c_nationkey, c_mktsegment), "
@@ -457,7 +455,7 @@ ORACLES_R7["priv_dp_error_budget"] = (
     "CAST(1.0 / epsilon / n <= 0.10 AS INTEGER) AS releasable "
     "FROM cells CROSS JOIN eps"
 )
-QUERIES_R7["priv_dp_error_budget"] = q_dp_error_budget
+QUERIES["priv_dp_error_budget"] = q_dp_error_budget
 
 
 # --- generalization ladder (r10) ---------------------------------------
@@ -560,5 +558,5 @@ def _ladder_sql() -> str:
     return "WITH " + base + " " + " UNION ALL ".join(arms)
 
 
-QUERIES_R10 = {"priv_generalization_ladder": q_generalization_ladder}
-ORACLES_R10 = {"priv_generalization_ladder": _ladder_sql()}
+QUERIES["priv_generalization_ladder"] = q_generalization_ladder
+ORACLES["priv_generalization_ladder"] = _ladder_sql()

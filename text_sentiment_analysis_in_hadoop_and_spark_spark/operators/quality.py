@@ -550,7 +550,7 @@ QUERIES = {
 }
 
 
-# --- Bloom-filter decontamination pre-filter (late registration) -----
+# --- Bloom-filter decontamination pre-filter -----------------------
 
 BLOOM_M = 1 << 17   # bits in the benchmark-gram bloom filter
 BLOOM_WORDS = BLOOM_M // 64
@@ -648,18 +648,14 @@ def q_contamination_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    # identical semantics to text_contamination — the bloom is a
-    # physical pre-filter, so the exact oracle carries over verbatim
-    "text_contamination_bloom": ORACLES["text_contamination"],
-}
+# identical semantics to text_contamination — the bloom is a
+# physical pre-filter, so the exact oracle carries over verbatim
+ORACLES["text_contamination_bloom"] = ORACLES["text_contamination"]
 
-QUERIES_LATE = {
-    "text_contamination_bloom": q_contamination_bloom,
-}
+QUERIES["text_contamination_bloom"] = q_contamination_bloom
 
 
-# --- per-source divergence from the corpus (late, r5) ----------------
+# --- per-source divergence from the corpus (r5) ----------------------
 
 KL_SMOOTH = 0.5  # add-λ smoothing keeps log finite for unseen tokens
 
@@ -704,7 +700,7 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_source_divergence"] = (
+ORACLES["text_source_divergence"] = (
     "WITH st AS (SELECT source, token, CAST(count(*) AS DOUBLE) AS c_st "
     "FROM (SELECT source, unnest(string_split(text, ' ')) AS token "
     "FROM documents) WHERE token <> '' GROUP BY source, token), "
@@ -720,10 +716,10 @@ ORACLES_LATE["text_source_divergence"] = (
     "FROM j GROUP BY source"
 )
 
-QUERIES_LATE["text_source_divergence"] = q_source_divergence
+QUERIES["text_source_divergence"] = q_source_divergence
 
 
-# --- readability scoring (late, r5) ----------------------------------
+# --- readability scoring (r5) ----------------------------------------
 
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch-reading-ease-shaped readability score per doc: 206.835 −
@@ -754,7 +750,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_readability"] = (
+ORACLES["text_readability"] = (
     "WITH b AS (SELECT doc_id, "
     "len(list_filter(string_split(text, ' '), t -> t <> '')) AS n_words, "
     "greatest(len(regexp_extract_all(text, '[.!?]+')), 1) AS n_sent, "
@@ -767,10 +763,10 @@ ORACLES_LATE["text_readability"] = (
     "- 84.6 * (n_syll * 1.0 / n_words), 6) AS flesch_score FROM b"
 )
 
-QUERIES_LATE["text_readability"] = q_readability
+QUERIES["text_readability"] = q_readability
 
 
-# --- encoding sanity (late, r5) --------------------------------------
+# --- encoding sanity (r5) --------------------------------------------
 
 def q_encoding_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mojibake/encoding QA per language: fraction of non-ASCII
@@ -794,7 +790,7 @@ def q_encoding_sanity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_encoding_sanity"] = (
+ORACLES["text_encoding_sanity"] = (
     "SELECT lang, CAST(count(*) AS BIGINT) AS n_docs, "
     "round(sum(len(regexp_extract_all(text, '[^\\x00-\\x7F]'))) "
     "* 1.0 / sum(len(text)), 6) AS frac_non_ascii, "
@@ -806,10 +802,10 @@ ORACLES_LATE["text_encoding_sanity"] = (
     "FROM documents GROUP BY lang"
 )
 
-QUERIES_LATE["text_encoding_sanity"] = q_encoding_sanity
+QUERIES["text_encoding_sanity"] = q_encoding_sanity
 
 
-# --- CCNet-style LM buckets (late, r5) -------------------------------
+# --- CCNet-style LM buckets (r5) -------------------------------------
 
 def q_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CCNet's head/middle/tail split: docs bucketed by in-corpus
@@ -842,7 +838,7 @@ def q_lm_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_lm_buckets"] = (
+ORACLES["text_lm_buckets"] = (
     "WITH lm AS (" + ORACLES["text_lm_score"] + "), "
     "scored AS (SELECT lm.doc_id, lm.cross_entropy, d.lang "
     "FROM lm JOIN documents d USING (doc_id)), "
@@ -857,7 +853,7 @@ ORACLES_LATE["text_lm_buckets"] = (
     "FROM scored s JOIN fences f USING (lang) GROUP BY 1, 2"
 )
 
-QUERIES_LATE["text_lm_buckets"] = q_lm_buckets
+QUERIES["text_lm_buckets"] = q_lm_buckets
 
 
 # --- C4-style heuristic filter battery (Raffel et al. 2020) ----------
@@ -918,7 +914,7 @@ def c4_flags(docs: DataFrame) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_c4_filters"] = (
+ORACLES["text_c4_filters"] = (
     "SELECT doc_id, "
     "CAST(instr(text, '{') > 0 AS INTEGER) AS has_brace, "
     "CAST(instr(lower(text), 'lorem ipsum') > 0 AS INTEGER) "
@@ -936,7 +932,7 @@ ORACLES_LATE["text_c4_filters"] = (
     "FROM documents"
 )
 
-QUERIES_LATE["text_c4_filters"] = q_c4_filters
+QUERIES["text_c4_filters"] = q_c4_filters
 
 
 # --- Kneser-Ney smoothed LM scorer (r5) ------------------------------
@@ -1024,7 +1020,7 @@ def q_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_lm_kneser_ney"] = (
+ORACLES["text_lm_kneser_ney"] = (
     "WITH base AS (SELECT doc_id, string_split(text, ' ') AS tk "
     "FROM documents), "
     "bg AS (SELECT doc_id, tk[i + 1] AS w1, tk[i + 2] AS w2 FROM "
@@ -1049,7 +1045,7 @@ ORACLES_LATE["text_lm_kneser_ney"] = (
     "FROM documents d LEFT JOIN per p USING (doc_id)"
 )
 
-QUERIES_LATE["text_lm_kneser_ney"] = q_lm_kneser_ney
+QUERIES["text_lm_kneser_ney"] = q_lm_kneser_ney
 
 
 # --- quality-signal correlation matrix (r5) -------------------------------
@@ -1157,7 +1153,7 @@ def _signal_correlation_sql() -> str:
         + ")), lm AS (SELECT doc_id, cross_entropy FROM ("
         + ORACLES["text_lm_score"]
         + ")), fl AS (SELECT doc_id, flesch_score FROM ("
-        + ORACLES_LATE["text_readability"]
+        + ORACLES["text_readability"]
         + ")), "
         "j AS (SELECT "
         f"CAST(round(q.quality * {s}, 0) AS BIGINT) AS x_quality, "
@@ -1185,8 +1181,8 @@ def _signal_correlation_sql() -> str:
     )
 
 
-ORACLES_LATE["text_signal_correlation"] = _signal_correlation_sql()
-QUERIES_LATE["text_signal_correlation"] = q_signal_correlation
+ORACLES["text_signal_correlation"] = _signal_correlation_sql()
+QUERIES["text_signal_correlation"] = q_signal_correlation
 
 
 # --- quality-gate threshold sweep (r5) -------------------------------------
@@ -1279,8 +1275,8 @@ def _threshold_sweep_sql() -> str:
     )
 
 
-ORACLES_LATE["pipe_quality_threshold_sweep"] = _threshold_sweep_sql()
-QUERIES_LATE["pipe_quality_threshold_sweep"] = q_quality_threshold_sweep
+ORACLES["pipe_quality_threshold_sweep"] = _threshold_sweep_sql()
+QUERIES["pipe_quality_threshold_sweep"] = q_quality_threshold_sweep
 
 
 # --------------------------------------------------------------------------
@@ -1418,47 +1414,43 @@ def q_quality_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _OLS_STOP_IN = ", ".join(f"'{w}'" for w in _EN_STOP_OLS)
-ORACLES_R8: dict[str, str] = {
-    "text_quality_ols": (
-        "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk "
-        "FROM documents), "
-        "feats AS (SELECT doc_id, "
-        "CAST(round(CAST(len(list_filter(tk, t -> t IN "
-        f"({_OLS_STOP_IN}))) AS DOUBLE) / len(tk) * {OLS_SCALE}, 0) "
-        "AS BIGINT) AS x1_i, "
-        "CAST(round(CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) "
-        f"* {OLS_SCALE}, 0) AS BIGINT) AS x2_i FROM toks), "
-        "bg AS (SELECT doc_id, tk[i + 1] AS w1, tk[i + 2] AS w2 "
-        "FROM (SELECT doc_id, tk, "
-        "unnest(range(0, greatest(len(tk) - 1, 0))) AS i FROM toks)), "
-        "bgc AS (SELECT doc_id, w1, w2, count(*) AS n FROM bg "
-        "GROUP BY doc_id, w1, w2), "
-        "c12 AS (SELECT w1, w2, sum(n) AS c12 FROM bgc GROUP BY w1, w2), "
-        "c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY w1), "
-        "xent AS (SELECT bgc.doc_id, CAST(round(-sum(bgc.n * "
-        "ln(CAST(c12.c12 AS DOUBLE) / c1.c1)) / sum(bgc.n) "
-        f"* {OLS_SCALE}, 0) AS BIGINT) AS y_i "
-        "FROM bgc JOIN c12 USING (w1, w2) JOIN c1 USING (w1) "
-        "GROUP BY bgc.doc_id), "
-        "rows_ AS (SELECT x1_i, x2_i, coalesce(y_i, 0) AS y_i "
-        "FROM feats LEFT JOIN xent USING (doc_id)), "
-        "m AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, "
-        "sum(CAST(x1_i AS HUGEINT)) AS s1_i, "
-        "sum(CAST(x2_i AS HUGEINT)) AS s2_i, "
-        "sum(CAST(x1_i AS HUGEINT) * x1_i) AS s11_i, "
-        "sum(CAST(x1_i AS HUGEINT) * x2_i) AS s12_i, "
-        "sum(CAST(x2_i AS HUGEINT) * x2_i) AS s22_i, "
-        "sum(CAST(y_i AS HUGEINT)) AS sy_i, "
-        "sum(CAST(x1_i AS HUGEINT) * y_i) AS s1y_i, "
-        "sum(CAST(x2_i AS HUGEINT) * y_i) AS s2y_i, "
-        "sum(CAST(y_i AS HUGEINT) * y_i) AS syy_i FROM rows_), "
-        f"u AS (SELECT {', '.join(_OLS_UNIT_EXPRS)} FROM m), "
-        f"dt AS (SELECT {', '.join(_OLS_DET_EXPRS)} FROM u), "
-        f"bt AS (SELECT {', '.join(_OLS_BETA_EXPRS)} FROM dt) "
-        f"SELECT {', '.join(_OLS_OUT_EXPRS)} FROM bt"
-    ),
-}
+ORACLES["text_quality_ols"] = (
+    "WITH toks AS (SELECT doc_id, string_split(text, ' ') AS tk "
+    "FROM documents), "
+    "feats AS (SELECT doc_id, "
+    "CAST(round(CAST(len(list_filter(tk, t -> t IN "
+    f"({_OLS_STOP_IN}))) AS DOUBLE) / len(tk) * {OLS_SCALE}, 0) "
+    "AS BIGINT) AS x1_i, "
+    "CAST(round(CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk) "
+    f"* {OLS_SCALE}, 0) AS BIGINT) AS x2_i FROM toks), "
+    "bg AS (SELECT doc_id, tk[i + 1] AS w1, tk[i + 2] AS w2 "
+    "FROM (SELECT doc_id, tk, "
+    "unnest(range(0, greatest(len(tk) - 1, 0))) AS i FROM toks)), "
+    "bgc AS (SELECT doc_id, w1, w2, count(*) AS n FROM bg "
+    "GROUP BY doc_id, w1, w2), "
+    "c12 AS (SELECT w1, w2, sum(n) AS c12 FROM bgc GROUP BY w1, w2), "
+    "c1 AS (SELECT w1, sum(c12) AS c1 FROM c12 GROUP BY w1), "
+    "xent AS (SELECT bgc.doc_id, CAST(round(-sum(bgc.n * "
+    "ln(CAST(c12.c12 AS DOUBLE) / c1.c1)) / sum(bgc.n) "
+    f"* {OLS_SCALE}, 0) AS BIGINT) AS y_i "
+    "FROM bgc JOIN c12 USING (w1, w2) JOIN c1 USING (w1) "
+    "GROUP BY bgc.doc_id), "
+    "rows_ AS (SELECT x1_i, x2_i, coalesce(y_i, 0) AS y_i "
+    "FROM feats LEFT JOIN xent USING (doc_id)), "
+    "m AS (SELECT CAST(count(*) AS BIGINT) AS n_docs, "
+    "sum(CAST(x1_i AS HUGEINT)) AS s1_i, "
+    "sum(CAST(x2_i AS HUGEINT)) AS s2_i, "
+    "sum(CAST(x1_i AS HUGEINT) * x1_i) AS s11_i, "
+    "sum(CAST(x1_i AS HUGEINT) * x2_i) AS s12_i, "
+    "sum(CAST(x2_i AS HUGEINT) * x2_i) AS s22_i, "
+    "sum(CAST(y_i AS HUGEINT)) AS sy_i, "
+    "sum(CAST(x1_i AS HUGEINT) * y_i) AS s1y_i, "
+    "sum(CAST(x2_i AS HUGEINT) * y_i) AS s2y_i, "
+    "sum(CAST(y_i AS HUGEINT) * y_i) AS syy_i FROM rows_), "
+    f"u AS (SELECT {', '.join(_OLS_UNIT_EXPRS)} FROM m), "
+    f"dt AS (SELECT {', '.join(_OLS_DET_EXPRS)} FROM u), "
+    f"bt AS (SELECT {', '.join(_OLS_BETA_EXPRS)} FROM dt) "
+    f"SELECT {', '.join(_OLS_OUT_EXPRS)} FROM bt"
+)
 
-QUERIES_R8 = {
-    "text_quality_ols": q_quality_ols,
-}
+QUERIES["text_quality_ols"] = q_quality_ols

@@ -888,21 +888,16 @@ def q_q12_priority_class(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _Q12_HIGH_IN = ", ".join(f"'{p}'" for p in Q12_HIGH)
-ORACLES_R8: dict[str, str] = {
-    "rel_q12_priority_class": (
-        "SELECT l_linestatus, "
-        f"CAST(sum(CASE WHEN o_orderpriority IN ({_Q12_HIGH_IN}) "
-        "THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, "
-        f"CAST(sum(CASE WHEN o_orderpriority IN ({_Q12_HIGH_IN}) "
-        "THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count "
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
-        f"WHERE l_shipdate >= TIMESTAMP '{Q12_FROM}' "
-        f"AND l_shipdate < TIMESTAMP '{Q12_TO}' "
-        f"AND l_shipdate > o_orderdate + INTERVAL {Q12_LATE_DAYS} DAY "
-        "GROUP BY l_linestatus"
-    ),
-}
-
-QUERIES_R8 = {
-    "rel_q12_priority_class": q_q12_priority_class,
-}
+ORACLES["rel_q12_priority_class"] = (
+    "SELECT l_linestatus, "
+    f"CAST(sum(CASE WHEN o_orderpriority IN ({_Q12_HIGH_IN}) "
+    "THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count, "
+    f"CAST(sum(CASE WHEN o_orderpriority IN ({_Q12_HIGH_IN}) "
+    "THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count "
+    "FROM lineitem JOIN orders ON l_orderkey = o_orderkey "
+    f"WHERE l_shipdate >= TIMESTAMP '{Q12_FROM}' "
+    f"AND l_shipdate < TIMESTAMP '{Q12_TO}' "
+    f"AND l_shipdate > o_orderdate + INTERVAL {Q12_LATE_DAYS} DAY "
+    "GROUP BY l_linestatus"
+)
+QUERIES["rel_q12_priority_class"] = q_q12_priority_class

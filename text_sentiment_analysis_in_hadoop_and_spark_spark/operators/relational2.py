@@ -3213,20 +3213,18 @@ def q_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out
 
 
-ORACLES_R7 = {
-    "rel_referential_audit": " UNION ALL ".join(
-        f"SELECT '{label}' AS edge, "
-        f"CAST((SELECT count(*) FROM {child}) AS BIGINT) AS n_child, "
-        f"CAST((SELECT count(*) FROM {child} c WHERE NOT EXISTS "
-        f"(SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})) AS BIGINT) "
-        "AS n_orphans, "
-        f"round(CAST((SELECT count(*) FROM {child} c WHERE NOT EXISTS "
-        f"(SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})) AS DOUBLE) "
-        f"/ (SELECT count(*) FROM {child}), 6) AS orphan_rate"
-        for label, child, ck, parent, pk in _FK_EDGES
-    )
-}
-QUERIES_R7 = {"rel_referential_audit": q_referential_audit}
+ORACLES["rel_referential_audit"] = " UNION ALL ".join(
+    f"SELECT '{label}' AS edge, "
+    f"CAST((SELECT count(*) FROM {child}) AS BIGINT) AS n_child, "
+    f"CAST((SELECT count(*) FROM {child} c WHERE NOT EXISTS "
+    f"(SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})) AS BIGINT) "
+    "AS n_orphans, "
+    f"round(CAST((SELECT count(*) FROM {child} c WHERE NOT EXISTS "
+    f"(SELECT 1 FROM {parent} p WHERE p.{pk} = c.{ck})) AS DOUBLE) "
+    f"/ (SELECT count(*) FROM {child}), 6) AS orphan_rate"
+    for label, child, ck, parent, pk in _FK_EDGES
+)
+QUERIES["rel_referential_audit"] = q_referential_audit
 
 
 # --- release gate (r7 capstone) ----------------------------------------
@@ -3293,7 +3291,7 @@ def q_release_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _release_gate_sql() -> str:
-    ref = ORACLES_R7["rel_referential_audit"]
+    ref = ORACLES["rel_referential_audit"]
     fd_parts = " + ".join(
         f"(SELECT CAST(sum(CASE WHEN n_dep > 1 THEN 1 ELSE 0 END) "
         f"AS BIGINT) FROM (SELECT {det}, count(DISTINCT {dep}) AS "
@@ -3318,5 +3316,5 @@ def _release_gate_sql() -> str:
     )
 
 
-ORACLES_R7["rel_release_gate"] = _release_gate_sql()
-QUERIES_R7["rel_release_gate"] = q_release_gate
+ORACLES["rel_release_gate"] = _release_gate_sql()
+QUERIES["rel_release_gate"] = q_release_gate

@@ -1394,15 +1394,6 @@ def q_sim_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _adc_refine_topk(spark, sf_dir, adc)
 
 
-# late namespace (driver-window policy): PQ entries must not consume
-# window slots — rows-only, pinned by the recall tests
-QUERIES_LATE = {
-    "sim_pq_codes": q_sim_pq_codes,
-    "sim_topk_pq": q_sim_topk_pq,
-}
-ORACLES_LATE: dict[str, str] = {}
-
-
 def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN quality as a FIRST-CLASS query (the sim-family twin of
     dedup's MinHash error audit): per-query recall@k of the LSH top-k
@@ -1557,6 +1548,9 @@ ORACLES["sim_cosine_calibration"] = (
 )
 
 QUERIES["sim_cosine_calibration"] = q_cosine_calibration
+# PQ entries are rows-only, pinned by the recall tests
+QUERIES["sim_pq_codes"] = q_sim_pq_codes
+QUERIES["sim_topk_pq"] = q_sim_topk_pq
 
 
 # --- kNN leave-one-out label evaluation -----------------------------------
@@ -1646,7 +1640,7 @@ def q_knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sim_knn_loo_accuracy"] = (
+ORACLES["sim_knn_loo_accuracy"] = (
     "WITH q AS (SELECT vec_id AS qid, embedding AS q_emb, label AS q_label "
     f"FROM embeddings WHERE vec_id % {KNN_QUERY_MOD} = 0), "
     "p AS (SELECT q.qid, q.q_label, c.vec_id, c.label AS n_label, "
@@ -1666,7 +1660,7 @@ ORACLES_LATE["sim_knn_loo_accuracy"] = (
     "/ CAST(count(*) AS DOUBLE), 6) AS accuracy FROM m GROUP BY q_label"
 )
 
-QUERIES_LATE["sim_knn_loo_accuracy"] = q_knn_loo_accuracy
+QUERIES["sim_knn_loo_accuracy"] = q_knn_loo_accuracy
 
 
 def q_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1712,7 +1706,7 @@ def q_centroid_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sim_centroid_separation"] = (
+ORACLES["sim_centroid_separation"] = (
     "WITH ex AS (SELECT label, generate_subscripts(embedding, 1) AS pos, "
     "CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings), "
     "m AS (SELECT label, pos, round(avg(v), 6) AS m FROM ex GROUP BY 1, 2), "
@@ -1726,7 +1720,7 @@ ORACLES_LATE["sim_centroid_separation"] = (
     "JOIN n nb ON nb.label = d.label_b"
 )
 
-QUERIES_LATE["sim_centroid_separation"] = q_centroid_separation
+QUERIES["sim_centroid_separation"] = q_centroid_separation
 
 
 # --- MMR diversified re-rank ----------------------------------------------
@@ -1821,7 +1815,7 @@ def q_topk_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["sim_topk_mmr"] = q_topk_mmr
+QUERIES["sim_topk_mmr"] = q_topk_mmr
 
 
 def q_query_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1845,7 +1839,7 @@ def q_query_margin(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sim_query_margin"] = (
+ORACLES["sim_query_margin"] = (
     "WITH topk AS (" + _BRUTE_SQL + ") "
     "SELECT q_id, "
     "round(max(CASE WHEN rank = 1 THEN cosine END) "
@@ -1855,7 +1849,7 @@ ORACLES_LATE["sim_query_margin"] = (
     "FROM topk GROUP BY q_id"
 )
 
-QUERIES_LATE["sim_query_margin"] = q_query_margin
+QUERIES["sim_query_margin"] = q_query_margin
 
 
 # --- Matryoshka truncation evaluation (r5) ---------------------------
@@ -1992,7 +1986,7 @@ def _mrl_topk_cte(d: int) -> str:
     )
 
 
-ORACLES_LATE["sim_matryoshka_eval"] = (
+ORACLES["sim_matryoshka_eval"] = (
     "WITH fulltk AS (SELECT q_id, vec_id, rank FROM ("
     + _BRUTE_SQL
     + ")), "
@@ -2001,7 +1995,7 @@ ORACLES_LATE["sim_matryoshka_eval"] = (
     + " UNION ALL ".join(_mrl_row_sql(d) for d in MRL_DIMS)
 )
 
-QUERIES_LATE["sim_matryoshka_eval"] = q_matryoshka_eval
+QUERIES["sim_matryoshka_eval"] = q_matryoshka_eval
 
 
 # --- int8 ranking-fidelity evaluation (r5) ---------------------------
@@ -2132,7 +2126,7 @@ def _qdot_sql(a: str, b: str) -> str:
     )
 
 
-ORACLES_LATE["sim_quantized_recall"] = (
+ORACLES["sim_quantized_recall"] = (
     "WITH qv AS (SELECT vec_id, qvec FROM ("
     + _QUANT_SQL
     + ")), "
@@ -2161,7 +2155,7 @@ ORACLES_LATE["sim_quantized_recall"] = (
     "AS mean_abs_cos_err"
 )
 
-QUERIES_LATE["sim_quantized_recall"] = q_quantized_recall
+QUERIES["sim_quantized_recall"] = q_quantized_recall
 
 
 # --- embedding drift monitor (r5) ------------------------------------
@@ -2227,7 +2221,7 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sim_embedding_drift"] = (
+ORACLES["sim_embedding_drift"] = (
     "WITH ex AS (SELECT label, vec_id % 2 AS half, "
     "generate_subscripts(embedding, 1) - 1 AS pos, "
     "CAST(unnest(embedding) AS DOUBLE) AS v FROM embeddings), "
@@ -2245,7 +2239,7 @@ ORACLES_LATE["sim_embedding_drift"] = (
     "GROUP BY a.label"
 )
 
-QUERIES_LATE["sim_embedding_drift"] = q_embedding_drift
+QUERIES["sim_embedding_drift"] = q_embedding_drift
 
 
 # --- nDCG ranking-quality eval of the ANN index ----------------------
@@ -2310,8 +2304,8 @@ def _ann_ndcg_sql() -> str:
     )
 
 
-ORACLES_LATE["sim_ann_ndcg"] = _ann_ndcg_sql()
-QUERIES_LATE["sim_ann_ndcg"] = q_ann_ndcg
+ORACLES["sim_ann_ndcg"] = _ann_ndcg_sql()
+QUERIES["sim_ann_ndcg"] = q_ann_ndcg
 
 
 # --- IVF tuning curve: recall vs nprobe ------------------------------
@@ -2401,7 +2395,7 @@ def q_sim_ivf_nprobe_profile(
     )
 
 
-QUERIES_LATE["sim_ivf_nprobe_profile"] = q_sim_ivf_nprobe_profile
+QUERIES["sim_ivf_nprobe_profile"] = q_sim_ivf_nprobe_profile
 
 
 # --- SemDeDup: semantic dedup scoped to IVF cells --------------------
@@ -2493,7 +2487,7 @@ def q_sim_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["sim_semdedup"] = q_sim_semdedup
+QUERIES["sim_semdedup"] = q_sim_semdedup
 
 
 # --- Johnson-Lindenstrauss random-projection distortion audit (r5) -----
@@ -2598,7 +2592,7 @@ def _rp_proj_sq_sql() -> str:
     return " + ".join(terms)
 
 
-ORACLES_LATE["sim_rp_distortion"] = (
+ORACLES["sim_rp_distortion"] = (
     "WITH r AS (SELECT round(("
     + _rp_proj_sq_sql()
     + f") / ({float(RP_DIM)} * {_dot_sql('embedding', 'embedding')}), 6) "
@@ -2610,7 +2604,7 @@ ORACLES_LATE["sim_rp_distortion"] = (
     "round(sum(r6) / (count(*) * 1000000.0), 6) AS mean_ratio "
     "FROM b GROUP BY bk"
 )
-QUERIES_LATE["sim_rp_distortion"] = q_rp_distortion
+QUERIES["sim_rp_distortion"] = q_rp_distortion
 
 
 # --- semantic benchmark decontamination (r5) ----------------------------
@@ -2727,7 +2721,7 @@ def q_benchmark_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["sim_benchmark_decontam"] = (
+ORACLES["sim_benchmark_decontam"] = (
     "WITH e AS (SELECT vec_id, embedding, "
     f"sqrt({_dot_sql('embedding', 'embedding')}) AS nrm FROM embeddings), "
     f"b AS (SELECT vec_id AS b_id, embedding AS b_vec, nrm AS b_nrm "
@@ -2742,7 +2736,7 @@ ORACLES_LATE["sim_benchmark_decontam"] = (
     f"sum(CASE WHEN cos >= {DECON_TAU} THEN 1 ELSE 0 END) > 0 "
     "AS contaminated FROM p GROUP BY vec_id"
 )
-QUERIES_LATE["sim_benchmark_decontam"] = q_benchmark_decontam
+QUERIES["sim_benchmark_decontam"] = q_benchmark_decontam
 
 
 # --- simplified silhouette score (r5) -----------------------------------
@@ -2835,8 +2829,8 @@ def _silhouette_sql() -> str:
     )
 
 
-ORACLES_LATE["sim_silhouette"] = _silhouette_sql()
-QUERIES_LATE["sim_silhouette"] = q_silhouette
+ORACLES["sim_silhouette"] = _silhouette_sql()
+QUERIES["sim_silhouette"] = q_silhouette
 
 
 # --- k-NN graph hubness audit (r6) ------------------------------------
@@ -2940,8 +2934,8 @@ def _hubness_sql() -> str:
     )
 
 
-QUERIES_LATE["sim_knn_hubness"] = q_sim_knn_hubness
-ORACLES_LATE["sim_knn_hubness"] = _hubness_sql()
+QUERIES["sim_knn_hubness"] = q_sim_knn_hubness
+ORACLES["sim_knn_hubness"] = _hubness_sql()
 
 
 # --------------------------------------------------------------------------
@@ -2992,8 +2986,7 @@ def q_sim_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _adc_refine_topk(spark, sf_dir, adc)
 
 
-QUERIES_R8 = {"sim_topk_ivfpq": q_sim_topk_ivfpq}
-ORACLES_R8: dict[str, str] = {}
+QUERIES["sim_topk_ivfpq"] = q_sim_topk_ivfpq
 
 
 # --- LSH index health audit (r9) --------------------------------------
@@ -3069,7 +3062,5 @@ _OCC_AUDIT_SQL = (
     "FROM occ GROUP BY tbl"
 )
 
-QUERIES_R9 = {"sim_bucket_occupancy_audit": q_sim_bucket_occupancy_audit}
-ORACLES_R9: dict[str, str] = {
-    "sim_bucket_occupancy_audit": _OCC_AUDIT_SQL,
-}
+QUERIES["sim_bucket_occupancy_audit"] = q_sim_bucket_occupancy_audit
+ORACLES["sim_bucket_occupancy_audit"] = _OCC_AUDIT_SQL

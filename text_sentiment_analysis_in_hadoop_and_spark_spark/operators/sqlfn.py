@@ -513,10 +513,8 @@ def q_sql_except_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_SET_OPS_SQL)
 
 
-QUERIES_R9 = {"sql_except_intersect": q_sql_except_intersect}
-ORACLES_R9: dict[str, str] = {
-    "sql_except_intersect": _SET_OPS_SQL,  # identical string
-}
+QUERIES["sql_except_intersect"] = q_sql_except_intersect
+ORACLES["sql_except_intersect"] = _SET_OPS_SQL  # identical string
 
 
 # --- ANSI-safe error handling: try_cast / try_divide (r9) --------------
@@ -575,5 +573,5 @@ def q_sql_try_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_TRY_SPARK_SQL)
 
 
-QUERIES_R9["sql_try_semantics"] = q_sql_try_semantics
-ORACLES_R9["sql_try_semantics"] = _TRY_ORACLE_SQL
+QUERIES["sql_try_semantics"] = q_sql_try_semantics
+ORACLES["sql_try_semantics"] = _TRY_ORACLE_SQL

@@ -409,7 +409,7 @@ QUERIES = {
 }
 
 
-# --- Zipf slope fit (late, r5) ---------------------------------------
+# --- Zipf slope fit (r5) ---------------------------------------------
 
 ZIPF_TOP = 1000  # fit over the top-K ranked tokens
 
@@ -458,27 +458,23 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "text_zipf_fit": (
-        "WITH counts AS (SELECT token, CAST(count(*) AS BIGINT) AS n "
-        "FROM (SELECT unnest(string_split(text, ' ')) AS token "
-        "FROM documents) WHERE token <> '' GROUP BY token), "
-        f"top AS (SELECT n, token FROM counts ORDER BY n DESC, token "
-        f"LIMIT {ZIPF_TOP}), "
-        "xy AS (SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, token) "
-        "AS DOUBLE)) AS x, ln(CAST(n AS DOUBLE)) AS y FROM top), "
-        "s AS (SELECT CAST(count(*) AS DOUBLE) AS k, sum(x) AS sx, "
-        "sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx FROM xy) "
-        "SELECT CAST(k AS BIGINT) AS n_tokens_fit, "
-        "round((k * sxy - sx * sy) / (k * sxx - sx * sx), 6) AS zipf_slope, "
-        "round((sy - ((k * sxy - sx * sy) / (k * sxx - sx * sx)) * sx) / k, 6) "
-        "AS zipf_intercept FROM s"
-    ),
-}
+ORACLES["text_zipf_fit"] = (
+    "WITH counts AS (SELECT token, CAST(count(*) AS BIGINT) AS n "
+    "FROM (SELECT unnest(string_split(text, ' ')) AS token "
+    "FROM documents) WHERE token <> '' GROUP BY token), "
+    f"top AS (SELECT n, token FROM counts ORDER BY n DESC, token "
+    f"LIMIT {ZIPF_TOP}), "
+    "xy AS (SELECT ln(CAST(row_number() OVER (ORDER BY n DESC, token) "
+    "AS DOUBLE)) AS x, ln(CAST(n AS DOUBLE)) AS y FROM top), "
+    "s AS (SELECT CAST(count(*) AS DOUBLE) AS k, sum(x) AS sx, "
+    "sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx FROM xy) "
+    "SELECT CAST(k AS BIGINT) AS n_tokens_fit, "
+    "round((k * sxy - sx * sy) / (k * sxx - sx * sx), 6) AS zipf_slope, "
+    "round((sy - ((k * sxy - sx * sy) / (k * sxx - sx * sx)) * sx) / k, 6) "
+    "AS zipf_intercept FROM s"
+)
 
-QUERIES_LATE = {
-    "text_zipf_fit": q_zipf_fit,
-}
+QUERIES["text_zipf_fit"] = q_zipf_fit
 
 
 HEAPS_BINS = 10  # corpus-prefix deciles
@@ -538,7 +534,7 @@ def q_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_heaps_curve"] = (
+ORACLES["text_heaps_curve"] = (
     "WITH ids AS (SELECT min(doc_id) AS lo, max(doc_id) AS hi "
     "FROM documents), "
     "tok AS (SELECT least(CAST(floor(10 * (doc_id - i.lo) * 1.0 / "
@@ -561,7 +557,7 @@ ORACLES_LATE["text_heaps_curve"] = (
     "FROM mp LEFT JOIN np USING (decile)"
 )
 
-QUERIES_LATE["text_heaps_curve"] = q_heaps_curve
+QUERIES["text_heaps_curve"] = q_heaps_curve
 
 
 
@@ -604,7 +600,7 @@ def q_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_token_burstiness"] = (
+ORACLES["text_token_burstiness"] = (
     "WITH per AS (SELECT token, doc_id, CAST(count(*) AS BIGINT) AS c "
     "FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token "
     "FROM documents) WHERE token <> '' GROUP BY token, doc_id), "
@@ -618,7 +614,7 @@ ORACLES_LATE["text_token_burstiness"] = (
     "FROM top CROSS JOIN n"
 )
 
-QUERIES_LATE["text_token_burstiness"] = q_token_burstiness
+QUERIES["text_token_burstiness"] = q_token_burstiness
 
 
 def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -646,7 +642,7 @@ def q_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_lang_confusion"] = (
+ORACLES["text_lang_confusion"] = (
     "WITH p AS (SELECT lang AS actual_lang, "
     + _PRED
     + " AS pred_lang FROM documents), "
@@ -657,7 +653,7 @@ ORACLES_LATE["text_lang_confusion"] = (
     "FROM p JOIN t USING (actual_lang) GROUP BY p.actual_lang, p.pred_lang"
 )
 
-QUERIES_LATE["text_lang_confusion"] = q_lang_confusion
+QUERIES["text_lang_confusion"] = q_lang_confusion
 
 
 def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -702,7 +698,7 @@ def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_lang_vocab_overlap"] = (
+ORACLES["text_lang_vocab_overlap"] = (
     "WITH vocab AS (SELECT DISTINCT lang, token FROM "
     "(SELECT lang, unnest(string_split(text, ' ')) AS token "
     "FROM documents) WHERE token <> ''), "
@@ -719,7 +715,7 @@ ORACLES_LATE["text_lang_vocab_overlap"] = (
     "JOIN sizes sb ON sb.lang = i.lang_b"
 )
 
-QUERIES_LATE["text_lang_vocab_overlap"] = q_lang_vocab_overlap
+QUERIES["text_lang_vocab_overlap"] = q_lang_vocab_overlap
 
 
 # --- compressibility scoring (r5) ------------------------------------
@@ -761,7 +757,7 @@ def q_compressibility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["text_compressibility"] = q_compressibility
+QUERIES["text_compressibility"] = q_compressibility
 
 
 COVERAGE_GRID = [10, 50, 100, 500, 1000]
@@ -811,7 +807,7 @@ def q_token_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_token_coverage"] = (
+ORACLES["text_token_coverage"] = (
     "WITH counts AS (SELECT token, CAST(count(*) AS BIGINT) AS n "
     "FROM (SELECT unnest(string_split(text, ' ')) AS token "
     "FROM documents) WHERE token <> '' GROUP BY token), "
@@ -830,7 +826,7 @@ ORACLES_LATE["text_token_coverage"] = (
     "OR rk = mx.m"
 )
 
-QUERIES_LATE["text_token_coverage"] = q_token_coverage
+QUERIES["text_token_coverage"] = q_token_coverage
 
 
 def q_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -862,7 +858,7 @@ def q_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_fertility_by_lang"] = (
+ORACLES["text_fertility_by_lang"] = (
     "WITH p AS (SELECT lang, "
     f"CAST(len(regexp_extract_all(text, '{BPE_RE}')) AS BIGINT) AS n_tok, "
     "CAST(len(string_split(text, ' ')) AS BIGINT) AS n_words, "
@@ -875,7 +871,7 @@ ORACLES_LATE["text_fertility_by_lang"] = (
     "AS chars_per_token FROM p GROUP BY lang"
 )
 
-QUERIES_LATE["text_fertility_by_lang"] = q_fertility_by_lang
+QUERIES["text_fertility_by_lang"] = q_fertility_by_lang
 
 
 def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -916,7 +912,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_oov_rate"] = (
+ORACLES["text_oov_rate"] = (
     "WITH t AS (SELECT lang, doc_id % 8 >= 2 AS is_train, "
     "unnest(string_split(text, ' ')) AS token FROM documents), "
     "v AS (SELECT DISTINCT token FROM t WHERE is_train), "
@@ -930,7 +926,7 @@ ORACLES_LATE["text_oov_rate"] = (
     "FROM te GROUP BY lang"
 )
 
-QUERIES_LATE["text_oov_rate"] = q_oov_rate
+QUERIES["text_oov_rate"] = q_oov_rate
 
 
 def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -959,7 +955,7 @@ def q_script_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_script_mix"] = (
+ORACLES["text_script_mix"] = (
     "WITH p AS (SELECT lang, "
     "CAST(len(regexp_extract_all(text, '[a-zA-Z]')) AS BIGINT) AS n_latin, "
     "CAST(len(regexp_extract_all(text, '[\\x{4e00}-\\x{9fff}]')) AS BIGINT) "
@@ -974,7 +970,7 @@ ORACLES_LATE["text_script_mix"] = (
     "FROM p GROUP BY lang"
 )
 
-QUERIES_LATE["text_script_mix"] = q_script_mix
+QUERIES["text_script_mix"] = q_script_mix
 
 
 # --- lexicon sentiment baseline (r5) ----------------------------------
@@ -1039,7 +1035,7 @@ _LEX_CASE = (
     + " END"
 )
 
-ORACLES_LATE["text_lexicon_sentiment"] = (
+ORACLES["text_lexicon_sentiment"] = (
     "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) "
     "AS word FROM documents), "
     f"sc AS (SELECT doc_id, {_LEX_CASE} AS valence FROM toks) "
@@ -1053,7 +1049,7 @@ ORACLES_LATE["text_lexicon_sentiment"] = (
     "FROM sc GROUP BY doc_id"
 )
 
-QUERIES_LATE["text_lexicon_sentiment"] = q_lexicon_sentiment
+QUERIES["text_lexicon_sentiment"] = q_lexicon_sentiment
 
 
 # --- mapInArrow token count (zero-copy Arrow twin) -------------------
@@ -1092,12 +1088,12 @@ def q_arrow_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInArrow(_arrow_token_batches, "doc_id long, n_tokens long")
 
 
-ORACLES_LATE["text_arrow_token_count"] = (
+ORACLES["text_arrow_token_count"] = (
     "SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) "
     "AS n_tokens FROM documents"
 )
 
-QUERIES_LATE["text_arrow_token_count"] = q_arrow_token_count
+QUERIES["text_arrow_token_count"] = q_arrow_token_count
 
 
 # --- chunk-level dedup rate (RAG-prep audit, r5) ---------------------
@@ -1131,7 +1127,7 @@ def q_chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_chunk_dedup_rate"] = (
+ORACLES["text_chunk_dedup_rate"] = (
     "WITH ch AS (" + ORACLES["text_chunk_windows"] + "), "
     "per AS (SELECT md5(chunk_text) AS fp, count(*) AS n "
     "FROM ch GROUP BY 1) "
@@ -1141,7 +1137,7 @@ ORACLES_LATE["text_chunk_dedup_rate"] = (
     "CAST(max(n) AS BIGINT) AS max_multiplicity FROM per"
 )
 
-QUERIES_LATE["text_chunk_dedup_rate"] = q_chunk_dedup_rate
+QUERIES["text_chunk_dedup_rate"] = q_chunk_dedup_rate
 
 
 # --- Burrows' Delta stylometric source distance (r5) -----------------
@@ -1231,7 +1227,7 @@ def q_source_stylometry_delta(
     )
 
 
-ORACLES_LATE["text_source_stylometry_delta"] = (
+ORACLES["text_source_stylometry_delta"] = (
     "WITH st AS (SELECT source, unnest(string_split(text, ' ')) AS token "
     "FROM documents), "
     "cnt AS (SELECT source, token, CAST(count(*) AS BIGINT) AS n "
@@ -1257,7 +1253,7 @@ ORACLES_LATE["text_source_stylometry_delta"] = (
     "GROUP BY 1, 2"
 )
 
-QUERIES_LATE["text_source_stylometry_delta"] = q_source_stylometry_delta
+QUERIES["text_source_stylometry_delta"] = q_source_stylometry_delta
 
 
 # --- lexical sophistication via frequency rank (r5) --------------------------
@@ -1313,7 +1309,7 @@ def q_lexical_sophistication(spark: SparkSession, sf_dir: str) -> DataFrame:
     return per_doc
 
 
-ORACLES_LATE["text_lexical_sophistication"] = (
+ORACLES["text_lexical_sophistication"] = (
     "WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) "
     "AS token FROM documents), "
     "c AS (SELECT token, CAST(count(*) AS BIGINT) AS n FROM tok "
@@ -1329,7 +1325,7 @@ ORACLES_LATE["text_lexical_sophistication"] = (
     "CAST(max(rs.rank) AS BIGINT) AS rarest_rank "
     "FROM tok t JOIN rs USING (token) GROUP BY t.doc_id"
 )
-QUERIES_LATE["text_lexical_sophistication"] = q_lexical_sophistication
+QUERIES["text_lexical_sophistication"] = q_lexical_sophistication
 
 
 # --- weight-of-evidence / information value (r6) --------------------------
@@ -1393,7 +1389,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["text_woe_iv"] = (
+ORACLES["text_woe_iv"] = (
     "WITH b AS (SELECT least("
     f"{WOE_MAX_BUCKET}, n_chars // {WOE_BUCKET_CHARS}) AS bucket, "
     "doc_id % 2 AS pos FROM documents), "
@@ -1411,4 +1407,4 @@ ORACLES_LATE["text_woe_iv"] = (
     "((n - n_pos + 0.5) / (t_neg + 0.5 * n_buckets))), 6) AS iv_term "
     "FROM per CROSS JOIN tot"
 )
-QUERIES_LATE["text_woe_iv"] = q_woe_iv
+QUERIES["text_woe_iv"] = q_woe_iv

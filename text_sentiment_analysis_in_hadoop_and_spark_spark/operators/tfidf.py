@@ -530,9 +530,7 @@ QUERIES = {
 }
 
 
-# --- late additions (registered past the driver window via the
-# _tfidf_late namespace in __spark_entry__.py, per the rotation
-# policy: never grow an in-window module's QUERIES mid-round) --------------
+# --- per-document keyword extraction --------------------------------------
 
 TOP_KEYWORDS = 3
 
@@ -562,17 +560,15 @@ def q_tfidf_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE: dict[str, str] = {
-    "tfidf_keywords": with_ctes(
+ORACLES["tfidf_keywords"] = (
+    with_ctes(
         *_BASE, _WC_CTE, _NTRAIN_CTE, _SCORED_TFIDF_CTE
     )
     + "SELECT doc_id, rank, word, tfidf FROM ("
     "SELECT doc_id, word, round(tfidf, 6) AS tfidf, "
     "row_number() OVER (PARTITION BY doc_id "
     "ORDER BY round(tfidf, 6) DESC, word) AS rank FROM tscore) "
-    f"WHERE rank <= {TOP_KEYWORDS}",
-}
+    f"WHERE rank <= {TOP_KEYWORDS}"
+)
 
-QUERIES_LATE = {
-    "tfidf_keywords": q_tfidf_keywords,
-}
+QUERIES["tfidf_keywords"] = q_tfidf_keywords

@@ -1728,9 +1728,7 @@ def q_events_markov_next(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_R10 = {}
-QUERIES_R10 = {}
-ORACLES_R10["events_markov_next"] = (
+ORACLES["events_markov_next"] = (
     "WITH ev AS (SELECT user_id, event_type, ts, event_id FROM events "
     "WHERE user_id IS NOT NULL AND ts IS NOT NULL), "
     "bg AS (SELECT event_type, lead(event_type) OVER "
@@ -1743,4 +1741,4 @@ ORACLES_R10["events_markov_next"] = (
     "CAST(row_number() OVER (PARTITION BY event_type "
     "ORDER BY n DESC, next_type) AS INTEGER) AS nxt_rank FROM c"
 )
-QUERIES_R10["events_markov_next"] = q_events_markov_next
+QUERIES["events_markov_next"] = q_events_markov_next

@@ -297,5 +297,5 @@ _PLANNER_SQL = (
     "AS strategy FROM j"
 )
 
-QUERIES_R10 = {"catalog_stats_ndv_planner": q_catalog_stats_planner}
-ORACLES_R10 = {"catalog_stats_ndv_planner": _PLANNER_SQL}
+QUERIES["catalog_stats_ndv_planner"] = q_catalog_stats_planner
+ORACLES["catalog_stats_ndv_planner"] = _PLANNER_SQL

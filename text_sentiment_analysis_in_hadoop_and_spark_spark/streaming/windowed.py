@@ -349,20 +349,26 @@ ORACLES: dict[str, str] = {
     ),
 }
 
-ORACLES_LATE: dict[str, str] = {
-    "events_sliding_volume": (
-        "WITH e AS (SELECT user_id, event_id, "
-        "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS epoch_sec, value "
-        "FROM events) "
-        "SELECT user_id, event_id, epoch_sec, "
-        "CAST(count(*) OVER w AS BIGINT) AS n_1h, "
-        "round(sum(value) OVER w, 6) AS vol_1h "
-        "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY epoch_sec "
-        f"RANGE BETWEEN {SLIDE_SEC - 1} PRECEDING AND CURRENT ROW)"
-    ),
+QUERIES = {
+    "events_windowed": q_events_windowed,
+    "events_percentiles": q_events_percentiles,
+    "events_percentiles_approx": q_events_percentiles_approx,
+    "events_hourly_pivot": q_events_hourly_pivot,
+    "events_funnel": q_events_funnel,
 }
 
-QUERIES_LATE = {"events_sliding_volume": q_events_sliding_volume}
+ORACLES["events_sliding_volume"] = (
+    "WITH e AS (SELECT user_id, event_id, "
+    "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS epoch_sec, value "
+    "FROM events) "
+    "SELECT user_id, event_id, epoch_sec, "
+    "CAST(count(*) OVER w AS BIGINT) AS n_1h, "
+    "round(sum(value) OVER w, 6) AS vol_1h "
+    "FROM e WINDOW w AS (PARTITION BY user_id ORDER BY epoch_sec "
+    f"RANGE BETWEEN {SLIDE_SEC - 1} PRECEDING AND CURRENT ROW)"
+)
+
+QUERIES["events_sliding_volume"] = q_events_sliding_volume
 
 
 DAY_SEC = 86400
@@ -433,7 +439,7 @@ def q_events_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_retention"] = (
+ORACLES["events_retention"] = (
     "WITH act AS (SELECT DISTINCT user_id, "
     f"CAST(epoch_ns(ts) // 1000000000 // {DAY_SEC} AS BIGINT) AS day "
     "FROM events), "
@@ -449,7 +455,7 @@ ORACLES_LATE["events_retention"] = (
     "FROM ret r JOIN sizes s USING (cohort_day)"
 )
 
-ORACLES_LATE["events_anomaly"] = (
+ORACLES["events_anomaly"] = (
     "WITH hourly AS (SELECT "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 * 3600 AS BIGINT) AS hour_epoch, "
     "event_type, CAST(count(*) AS BIGINT) AS n_events "
@@ -503,33 +509,6 @@ def q_events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.coalesce("n", F.lit(0)).cast("long").alias("n_events"),
         F.last("hour_mean", ignorenulls=True).over(w).alias("locf_mean"),
     )
-
-
-# r8: renamed to events_gap_fill_locf — operators/timeseries.py had
-# registered a DIFFERENT events_gap_fill (global bounds, volume ffill,
-# gap flag) later in _MODULE_ORDER, silently shadowing this per-type-
-# bounds LOCF variant in queries()/oracle_sql() AND double-billing one
-# bench entry name.  Both semantics are useful, so this one lives on
-# under its own name, registered end-of-order (window policy).
-QUERIES_R8 = {"events_gap_fill_locf": q_events_gap_fill}
-ORACLES_R8 = {}
-ORACLES_R8["events_gap_fill_locf"] = (
-    "WITH hourly AS (SELECT event_type, "
-    "CAST(epoch_ns(ts) // 1000000000 // 3600 * 3600 AS BIGINT) AS hour_epoch, "
-    "CAST(count(*) AS BIGINT) AS n, round(avg(value), 6) AS hour_mean "
-    "FROM events GROUP BY 1, 2), "
-    "bounds AS (SELECT event_type, min(hour_epoch) AS lo, "
-    "max(hour_epoch) AS hi FROM hourly GROUP BY event_type), "
-    "spine AS (SELECT event_type, "
-    "unnest(range(lo, hi + 3600, 3600)) AS hour_epoch FROM bounds) "
-    "SELECT s.event_type, s.hour_epoch, "
-    "CAST(coalesce(h.n, 0) AS BIGINT) AS n_events, "
-    "last_value(h.hour_mean IGNORE NULLS) OVER "
-    "(PARTITION BY s.event_type ORDER BY s.hour_epoch "
-    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS locf_mean "
-    "FROM spine s LEFT JOIN hourly h USING (event_type, hour_epoch)"
-)
-
 
 
 def q_events_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,7 +585,7 @@ def q_events_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_latest_state"] = (
+ORACLES["events_latest_state"] = (
     "WITH e AS (SELECT user_id, event_type, event_id, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, value, "
     "row_number() OVER (PARTITION BY user_id, event_type "
@@ -617,7 +596,7 @@ ORACLES_LATE["events_latest_state"] = (
     "FROM e WHERE rk = 1"
 )
 
-ORACLES_LATE["events_value_histogram"] = (
+ORACLES["events_value_histogram"] = (
     "WITH bounds AS (SELECT event_type, min(value) AS lo, max(value) AS hi "
     "FROM events GROUP BY event_type), "
     "counted AS (SELECT e.event_type, "
@@ -632,8 +611,8 @@ ORACLES_LATE["events_value_histogram"] = (
     "FROM spine s LEFT JOIN counted c USING (event_type, bucket)"
 )
 
-QUERIES_LATE["events_latest_state"] = q_events_latest_state
-QUERIES_LATE["events_value_histogram"] = q_events_value_histogram
+QUERIES["events_latest_state"] = q_events_latest_state
+QUERIES["events_value_histogram"] = q_events_value_histogram
 
 
 WINSOR_LO, WINSOR_HI = 0.01, 0.99
@@ -679,7 +658,7 @@ def q_events_winsorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_winsorized"] = (
+ORACLES["events_winsorized"] = (
     "WITH fences AS (SELECT event_type, "
     f"quantile_cont(value, {WINSOR_LO}) AS lo, "
     f"quantile_cont(value, {WINSOR_HI}) AS hi "
@@ -695,7 +674,7 @@ ORACLES_LATE["events_winsorized"] = (
     "FROM events e JOIN fences f USING (event_type) GROUP BY e.event_type"
 )
 
-QUERIES_LATE["events_winsorized"] = q_events_winsorized
+QUERIES["events_winsorized"] = q_events_winsorized
 
 
 # transition matrix memo: three queries consume it (transitions
@@ -741,7 +720,7 @@ def q_events_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_transitions"] = (
+ORACLES["events_transitions"] = (
     "WITH e AS (SELECT user_id, event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, event_id "
     "FROM events), "
@@ -755,7 +734,7 @@ ORACLES_LATE["events_transitions"] = (
     "FROM c JOIN t USING (from_type)"
 )
 
-QUERIES_LATE["events_transitions"] = q_events_transitions
+QUERIES["events_transitions"] = q_events_transitions
 
 
 def q_events_daily_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -798,7 +777,7 @@ def q_events_daily_uniques_approx(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-ORACLES_LATE["events_daily_uniques"] = (
+ORACLES["events_daily_uniques"] = (
     "SELECT CAST(epoch_ns(ts) // 1000000000 // 86400 * 86400 AS BIGINT) "
     "AS day_epoch, "
     "CAST(count(DISTINCT user_id) AS BIGINT) AS n_users, "
@@ -806,8 +785,8 @@ ORACLES_LATE["events_daily_uniques"] = (
     "FROM events GROUP BY 1"
 )
 
-QUERIES_LATE["events_daily_uniques"] = q_events_daily_uniques
-QUERIES_LATE["events_daily_uniques_approx"] = q_events_daily_uniques_approx
+QUERIES["events_daily_uniques"] = q_events_daily_uniques
+QUERIES["events_daily_uniques_approx"] = q_events_daily_uniques_approx
 
 
 N_EQUIDEPTH = 10  # decile buckets
@@ -846,7 +825,7 @@ def q_events_value_histogram_equidepth(
     )
 
 
-ORACLES_LATE["events_value_histogram_equidepth"] = (
+ORACLES["events_value_histogram_equidepth"] = (
     "WITH bounds AS (SELECT event_type, ["
     + ", ".join(
         f"quantile_cont(value, {i / 10})" for i in range(1, 10)
@@ -861,7 +840,7 @@ ORACLES_LATE["events_value_histogram_equidepth"] = (
     "GROUP BY 1, 2"
 )
 
-QUERIES_LATE["events_value_histogram_equidepth"] = (
+QUERIES["events_value_histogram_equidepth"] = (
     q_events_value_histogram_equidepth
 )
 
@@ -898,7 +877,7 @@ def q_events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_user_entropy"] = (
+ORACLES["events_user_entropy"] = (
     "WITH ut AS (SELECT user_id, event_type, "
     "CAST(count(*) AS DOUBLE) AS c FROM events GROUP BY 1, 2), "
     "tot AS (SELECT user_id, sum(c) AS t FROM ut GROUP BY user_id), "
@@ -909,7 +888,7 @@ ORACLES_LATE["events_user_entropy"] = (
     "round(avg(h), 6) AS mean_entropy FROM ent GROUP BY 1"
 )
 
-QUERIES_LATE["events_user_entropy"] = q_events_user_entropy
+QUERIES["events_user_entropy"] = q_events_user_entropy
 
 
 WAU_DAYS = 7
@@ -959,7 +938,7 @@ def q_events_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_stickiness"] = (
+ORACLES["events_stickiness"] = (
     "WITH act AS (SELECT DISTINCT user_id, "
     f"CAST(epoch_ns(ts) // 1000000000 // {DAY_SEC} AS BIGINT) AS day "
     "FROM events), "
@@ -975,7 +954,7 @@ ORACLES_LATE["events_stickiness"] = (
     "WHERE d.day >= lo.lo + 6"
 )
 
-QUERIES_LATE["events_stickiness"] = q_events_stickiness
+QUERIES["events_stickiness"] = q_events_stickiness
 
 
 def q_events_stickiness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1025,7 +1004,7 @@ def q_events_stickiness_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-QUERIES_LATE["events_stickiness_sketch"] = q_events_stickiness_sketch
+QUERIES["events_stickiness_sketch"] = q_events_stickiness_sketch
 
 
 def q_events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1061,7 +1040,7 @@ def q_events_inter_arrival(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_inter_arrival"] = (
+ORACLES["events_inter_arrival"] = (
     "WITH e AS (SELECT user_id, event_type, event_id, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "g AS (SELECT event_type, s - lag(s) OVER "
@@ -1075,7 +1054,7 @@ ORACLES_LATE["events_inter_arrival"] = (
     "FROM g WHERE gap IS NOT NULL GROUP BY event_type"
 )
 
-QUERIES_LATE["events_inter_arrival"] = q_events_inter_arrival
+QUERIES["events_inter_arrival"] = q_events_inter_arrival
 
 
 def q_events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1114,7 +1093,7 @@ def q_events_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_conversion_lag"] = (
+ORACLES["events_conversion_lag"] = (
     "WITH e AS (SELECT user_id, event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "v AS (SELECT user_id, min(s) AS t_view FROM e "
@@ -1129,7 +1108,7 @@ ORACLES_LATE["events_conversion_lag"] = (
     "round(quantile_cont(lag_sec, 0.9), 6) AS p90_sec FROM lag"
 )
 
-QUERIES_LATE["events_conversion_lag"] = q_events_conversion_lag
+QUERIES["events_conversion_lag"] = q_events_conversion_lag
 
 
 def q_events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1156,7 +1135,7 @@ def q_events_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_dow_hour_heatmap"] = (
+ORACLES["events_dow_hour_heatmap"] = (
     "SELECT CAST((epoch_ns(ts) // 1000000000 // 86400 + 4) % 7 "
     "AS INTEGER) AS dow, "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 % 24 AS INTEGER) AS hour, "
@@ -1165,7 +1144,7 @@ ORACLES_LATE["events_dow_hour_heatmap"] = (
     "FROM events GROUP BY 1, 2"
 )
 
-QUERIES_LATE["events_dow_hour_heatmap"] = q_events_dow_hour_heatmap
+QUERIES["events_dow_hour_heatmap"] = q_events_dow_hour_heatmap
 
 
 def q_events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1205,7 +1184,7 @@ def q_events_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_new_vs_returning"] = (
+ORACLES["events_new_vs_returning"] = (
     "WITH base AS (SELECT user_id, "
     f"CAST(epoch_ns(ts) // 1000000000 // {DAY_SEC} AS BIGINT) AS day "
     "FROM events), "
@@ -1225,7 +1204,7 @@ ORACLES_LATE["events_new_vs_returning"] = (
     "FROM t GROUP BY day"
 )
 
-QUERIES_LATE["events_new_vs_returning"] = q_events_new_vs_returning
+QUERIES["events_new_vs_returning"] = q_events_new_vs_returning
 
 
 def q_events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1266,7 +1245,7 @@ def q_events_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_autocorr"] = (
+ORACLES["events_autocorr"] = (
     "WITH hourly AS (SELECT event_type, "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS h, "
     "CAST(count(*) AS BIGINT) AS x FROM events GROUP BY 1, 2), "
@@ -1284,7 +1263,7 @@ ORACLES_LATE["events_autocorr"] = (
     "FROM s"
 )
 
-QUERIES_LATE["events_autocorr"] = q_events_autocorr
+QUERIES["events_autocorr"] = q_events_autocorr
 
 
 def q_events_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1314,7 +1293,7 @@ def q_events_user_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_user_growth"] = (
+ORACLES["events_user_growth"] = (
     "WITH f AS (SELECT user_id, "
     f"min(CAST(epoch_ns(ts) // 1000000000 // {DAY_SEC} AS BIGINT)) "
     "AS first_day FROM events GROUP BY user_id), "
@@ -1326,7 +1305,7 @@ ORACLES_LATE["events_user_growth"] = (
     "AS cum_users FROM pd"
 )
 
-QUERIES_LATE["events_user_growth"] = q_events_user_growth
+QUERIES["events_user_growth"] = q_events_user_growth
 
 
 POWER_PCT = 0.99
@@ -1361,7 +1340,7 @@ def q_events_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_power_users"] = (
+ORACLES["events_power_users"] = (
     "WITH per AS (SELECT user_id, CAST(count(*) AS BIGINT) AS n "
     "FROM events GROUP BY user_id), "
     f"f AS (SELECT quantile_cont(n, {0.99}) AS p99, "
@@ -1374,19 +1353,11 @@ ORACLES_LATE["events_power_users"] = (
     "FROM per CROSS JOIN f WHERE per.n > f.p99"
 )
 
-QUERIES_LATE["events_power_users"] = q_events_power_users
+QUERIES["events_power_users"] = q_events_power_users
 
 
-QUERIES_LATE["events_retention"] = q_events_retention
-QUERIES_LATE["events_anomaly"] = q_events_anomaly
-
-QUERIES = {
-    "events_windowed": q_events_windowed,
-    "events_percentiles": q_events_percentiles,
-    "events_percentiles_approx": q_events_percentiles_approx,
-    "events_hourly_pivot": q_events_hourly_pivot,
-    "events_funnel": q_events_funnel,
-}
+QUERIES["events_retention"] = q_events_retention
+QUERIES["events_anomaly"] = q_events_anomaly
 
 
 MAD_K = 1.4826  # normal-consistency constant
@@ -1438,7 +1409,7 @@ def q_events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_mad_outliers"] = (
+ORACLES["events_mad_outliers"] = (
     "WITH m AS (SELECT event_type, quantile_cont(value, 0.5) AS med "
     "FROM events GROUP BY 1), "
     "d AS (SELECT e.event_type, m.med, abs(e.value - m.med) AS adev "
@@ -1455,7 +1426,7 @@ ORACLES_LATE["events_mad_outliers"] = (
     "FROM d JOIN md USING (event_type) GROUP BY d.event_type"
 )
 
-QUERIES_LATE["events_mad_outliers"] = q_events_mad_outliers
+QUERIES["events_mad_outliers"] = q_events_mad_outliers
 
 
 SLO_BUDGET = 0.25  # error-share budget (the corpus runs ~20% errors)
@@ -1509,7 +1480,7 @@ def q_events_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_burn_rate"] = (
+ORACLES["events_burn_rate"] = (
     "WITH hourly AS (SELECT "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 * 3600 AS BIGINT) AS hour_epoch, "
     "CAST(count(*) AS BIGINT) AS n_events, "
@@ -1530,7 +1501,7 @@ ORACLES_LATE["events_burn_rate"] = (
     "FROM rated"
 )
 
-QUERIES_LATE["events_burn_rate"] = q_events_burn_rate
+QUERIES["events_burn_rate"] = q_events_burn_rate
 
 
 ACTIVITY_WINDOW_SEC = 1800
@@ -1598,7 +1569,7 @@ def q_events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_peak_concurrency"] = (
+ORACLES["events_peak_concurrency"] = (
     "WITH b AS (SELECT event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "d AS (SELECT event_type, s, 1 AS delta FROM b "
@@ -1611,7 +1582,7 @@ ORACLES_LATE["events_peak_concurrency"] = (
     "AS n_intervals FROM r GROUP BY event_type"
 )
 
-QUERIES_LATE["events_peak_concurrency"] = q_events_peak_concurrency
+QUERIES["events_peak_concurrency"] = q_events_peak_concurrency
 
 
 PATH_GAP_SEC = 1800
@@ -1650,7 +1621,7 @@ def q_events_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return paths.orderBy(F.desc("n"), F.asc("path")).limit(TOP_PATHS_K)
 
 
-ORACLES_LATE["events_top_paths"] = (
+ORACLES["events_top_paths"] = (
     "WITH b AS (SELECT user_id, event_type, event_id, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "tri AS (SELECT event_type AS t1, s AS s1, "
@@ -1664,7 +1635,7 @@ ORACLES_LATE["events_top_paths"] = (
     f"GROUP BY 1 ORDER BY n DESC, path LIMIT {TOP_PATHS_K}"
 )
 
-QUERIES_LATE["events_top_paths"] = q_events_top_paths
+QUERIES["events_top_paths"] = q_events_top_paths
 
 
 DEBOUNCE_SEC = 60
@@ -1706,7 +1677,7 @@ def q_events_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_debounce"] = (
+ORACLES["events_debounce"] = (
     "WITH b AS (SELECT user_id, event_type, event_id, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "f AS (SELECT event_type, "
@@ -1720,7 +1691,7 @@ ORACLES_LATE["events_debounce"] = (
     "FROM f GROUP BY event_type"
 )
 
-QUERIES_LATE["events_debounce"] = q_events_debounce
+QUERIES["events_debounce"] = q_events_debounce
 
 
 PSI_EPS = 0.5  # Laplace smoothing count per bucket
@@ -1800,7 +1771,7 @@ def q_events_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_psi_drift"] = (
+ORACLES["events_psi_drift"] = (
     "WITH b AS (SELECT CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s, "
     "value FROM events), "
     "cut AS (SELECT (min(s) + max(s)) // 2 AS cut FROM b), "
@@ -1829,7 +1800,7 @@ ORACLES_LATE["events_psi_drift"] = (
     "FROM counts, tot"
 )
 
-QUERIES_LATE["events_psi_drift"] = q_events_psi_drift
+QUERIES["events_psi_drift"] = q_events_psi_drift
 
 
 SEASONAL_TOP_K = 20
@@ -1878,7 +1849,7 @@ def q_events_seasonal_residuals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_seasonal_residuals"] = (
+ORACLES["events_seasonal_residuals"] = (
     "WITH h AS (SELECT "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hour_idx, "
     "CAST(count(*) AS BIGINT) AS vol FROM events GROUP BY 1), "
@@ -1894,7 +1865,7 @@ ORACLES_LATE["events_seasonal_residuals"] = (
     f"LIMIT {SEASONAL_TOP_K}"
 )
 
-QUERIES_LATE["events_seasonal_residuals"] = q_events_seasonal_residuals
+QUERIES["events_seasonal_residuals"] = q_events_seasonal_residuals
 
 
 def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1947,7 +1918,7 @@ def q_events_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_cohort_ltv"] = (
+ORACLES["events_cohort_ltv"] = (
     "WITH d AS (SELECT user_id, "
     f"CAST(epoch_ns(ts) // 1000000000 // {DAY_SEC} AS BIGINT) AS day, "
     "value FROM events), "
@@ -1967,7 +1938,7 @@ ORACLES_LATE["events_cohort_ltv"] = (
     "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
 )
 
-QUERIES_LATE["events_cohort_ltv"] = q_events_cohort_ltv
+QUERIES["events_cohort_ltv"] = q_events_cohort_ltv
 
 
 CHURN_IDLE_DAYS = 7
@@ -2003,7 +1974,7 @@ def q_events_churn_by_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_churn_by_cohort"] = (
+ORACLES["events_churn_by_cohort"] = (
     "WITH b AS (SELECT user_id, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "h AS (SELECT max(s) AS horizon FROM b), "
@@ -2019,7 +1990,7 @@ ORACLES_LATE["events_churn_by_cohort"] = (
     "FROM f GROUP BY cohort_week"
 )
 
-QUERIES_LATE["events_churn_by_cohort"] = q_events_churn_by_cohort
+QUERIES["events_churn_by_cohort"] = q_events_churn_by_cohort
 
 
 # --- mergeable HLL sketch rollup (incremental distinct at scale) -----
@@ -2065,8 +2036,8 @@ def q_events_uniques_sketch_rollup(
     return daily.unionByName(total)
 
 
-# rows-only: no ORACLES_LATE entry (engine-specific sketch bytes)
-QUERIES_LATE["events_uniques_sketch_rollup"] = (
+# rows-only: no ORACLES entry (engine-specific sketch bytes)
+QUERIES["events_uniques_sketch_rollup"] = (
     q_events_uniques_sketch_rollup
 )
 
@@ -2136,8 +2107,8 @@ def q_events_funnel_windowed(
     )
 
 
-QUERIES_LATE["events_funnel_windowed"] = q_events_funnel_windowed
-ORACLES_LATE["events_funnel_windowed"] = (
+QUERIES["events_funnel_windowed"] = q_events_funnel_windowed
+ORACLES["events_funnel_windowed"] = (
     "WITH base AS (SELECT user_id, event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events), "
     "v AS (SELECT user_id, min(s) AS t_view FROM base "
@@ -2200,7 +2171,7 @@ def q_events_journey_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES_LATE["events_journey_sample"] = (
+ORACLES["events_journey_sample"] = (
     "WITH b AS (SELECT user_id, event_id, event_type, "
     "CAST(epoch_ns(ts) // 1000000000 AS BIGINT) AS s FROM events "
     f"WHERE user_id % {JOURNEY_MOD} = 0) "
@@ -2209,7 +2180,7 @@ ORACLES_LATE["events_journey_sample"] = (
     "array_to_string(list(event_type ORDER BY s, event_id), '>') "
     "AS journey FROM b GROUP BY user_id"
 )
-QUERIES_LATE["events_journey_sample"] = q_events_journey_sample
+QUERIES["events_journey_sample"] = q_events_journey_sample
 
 
 # --- absorbing-state conversion probability (r6) --------------------------
@@ -2282,9 +2253,9 @@ def q_events_absorption_prob(
     )
 
 
-ORACLES_LATE["events_absorption_prob"] = (
+ORACLES["events_absorption_prob"] = (
     "WITH RECURSIVE tr AS ("
-    + ORACLES_LATE["events_transitions"]
+    + ORACLES["events_transitions"]
     + "), "
     # NOTE: inside WITH RECURSIVE, a bare "a UNION b" CTE is parsed as
     # the base/recursive pattern and skips the global dedup — wrap in
@@ -2305,7 +2276,7 @@ ORACLES_LATE["events_absorption_prob"] = (
     "SELECT st AS state, val AS p_absorb FROM v "
     f"WHERE k = {ABSORB_ITERS}"
 )
-QUERIES_LATE["events_absorption_prob"] = q_events_absorption_prob
+QUERIES["events_absorption_prob"] = q_events_absorption_prob
 
 
 # --- Markov entropy rate of the event stream (r6) -------------------------
@@ -2368,9 +2339,9 @@ def q_events_entropy_rate(
     )
 
 
-ORACLES_LATE["events_entropy_rate"] = (
+ORACLES["events_entropy_rate"] = (
     "WITH RECURSIVE tr AS ("
-    + ORACLES_LATE["events_transitions"]
+    + ORACLES["events_transitions"]
     + "), "
     "froms AS (SELECT DISTINCT from_type AS st FROM tr), "
     "nf AS (SELECT count(*) AS n FROM froms), "
@@ -2390,7 +2361,7 @@ ORACLES_LATE["events_entropy_rate"] = (
     "round(coalesce(pi.pi, 0.0) * h.h_cond, 6) AS h_contrib_bits "
     "FROM h LEFT JOIN pi ON h.st = pi.st"
 )
-QUERIES_LATE["events_entropy_rate"] = q_events_entropy_rate
+QUERIES["events_entropy_rate"] = q_events_entropy_rate
 
 
 # --- Fano-factor burstiness audit (r6) ------------------------------------
@@ -2442,7 +2413,7 @@ def q_events_fano_factor(
     )
 
 
-ORACLES_LATE["events_fano_factor"] = (
+ORACLES["events_fano_factor"] = (
     "WITH e AS (SELECT event_type, "
     "CAST(epoch_ns(ts) // 1000000000 // 3600 AS BIGINT) AS hr "
     "FROM events), "
@@ -2460,4 +2431,29 @@ ORACLES_LATE["events_fano_factor"] = (
     "/ (s1 / CAST(n_hours AS DOUBLE)), 6) AS fano_factor "
     "FROM per CROSS JOIN span"
 )
-QUERIES_LATE["events_fano_factor"] = q_events_fano_factor
+QUERIES["events_fano_factor"] = q_events_fano_factor
+
+
+# r8: renamed to events_gap_fill_locf — operators/timeseries.py
+# registers a DIFFERENT events_gap_fill (global bounds, volume ffill,
+# gap flag) later in _MODULE_ORDER, which silently shadowed this
+# per-type-bounds LOCF variant in queries()/oracle_sql() AND
+# double-billed one bench entry name.  Both semantics are useful, so
+# this one lives on under its own name.
+QUERIES["events_gap_fill_locf"] = q_events_gap_fill
+ORACLES["events_gap_fill_locf"] = (
+    "WITH hourly AS (SELECT event_type, "
+    "CAST(epoch_ns(ts) // 1000000000 // 3600 * 3600 AS BIGINT) AS hour_epoch, "
+    "CAST(count(*) AS BIGINT) AS n, round(avg(value), 6) AS hour_mean "
+    "FROM events GROUP BY 1, 2), "
+    "bounds AS (SELECT event_type, min(hour_epoch) AS lo, "
+    "max(hour_epoch) AS hi FROM hourly GROUP BY event_type), "
+    "spine AS (SELECT event_type, "
+    "unnest(range(lo, hi + 3600, 3600)) AS hour_epoch FROM bounds) "
+    "SELECT s.event_type, s.hour_epoch, "
+    "CAST(coalesce(h.n, 0) AS BIGINT) AS n_events, "
+    "last_value(h.hour_mean IGNORE NULLS) OVER "
+    "(PARTITION BY s.event_type ORDER BY s.hour_epoch "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS locf_mean "
+    "FROM spine s LEFT JOIN hourly h USING (event_type, hour_epoch)"
+)

@@ -248,10 +248,10 @@ def main() -> int:
     oracles = entrymod.oracle_sql()
     if window_only:
         # pre-flight exactly the driver's correctness gate: the first
-        # 50 registered queries (the rotation window).  Print the
-        # derived window so a checkout whose CORRECTNESS_r*.json set
-        # differs from the committed one is VISIBLE (ADVICE r7: the
-        # import-time _PROMOTED derivation depends on those artifacts)
+        # 50 queries() entries (the rotation window).  Print the
+        # derived window so a checkout whose CORRECTNESS_r*.json or
+        # plans/ set differs from the committed one is VISIBLE (the
+        # import-time _PROMOTED derivation reads both)
         window = list(queries)[:50]
         print("derived driver window (first 50, registration order):")
         for n in window:
