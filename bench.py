@@ -4,32 +4,42 @@ Runs every ``queries()`` entry from ``__spark_entry__`` against
 ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1) on
 ``local[$SPARK_GRAFT_CPUS]``.
 
-Output contract (r3 verdict item 3: BENCH_r03 was ``parsed: null``
-because the 74-query JSON line outgrew the driver's tail capture):
+Output contract:
 
 - stdout, second-to-last line: the FULL record
   ``{"metric": "total_wall_sec", "value": N, "unit": "sec",
-  "queries": {...}, "failed": 0, "sf": 0.1}``
-- stdout, LAST line: a compact summary WITHOUT the per-query map —
-  small enough that any tail capture parses it —
-  ``{"metric": "total_wall_sec", "value": N, "unit": "sec",
-  "failed": 0, "sf": 0.1, "queries_file": "bench_queries.json"}``
-- ``bench_queries.json`` next to this script: the per-query map.
+  "queries": {...}, "min_of_k": {...}, "memo_built": {...},
+  "failed": 0, "sf": 0.1, ...}``
+- stdout, LAST line: a compact summary WITHOUT the per-query maps,
+  small enough that any tail capture parses it.
+- ``bench_queries.json`` and ``bench_queries_rNN.json`` next to this
+  script: the full record (NN is one past the newest ``BENCH_rNN.json``).
 
-Each query is forced end-to-end with the ``noop`` write format —
-full computation, no driver-side collect of the result set (row
-counts would hide sink cost; collect would bottleneck on the
-driver).  Progress goes to stderr so the stdout JSON stays clean.
+``queries`` holds each entry's first-run seconds (``-1`` when any run
+of it raised; ``failed`` counts those) and ``value`` their sum.
+Entries whose first run exceeds ``MIN_OF_K_THRESHOLD_SEC`` run
+``MIN_OF_K`` times in all; ``min_of_k`` holds their minimum and
+``value_min_of_k`` sums it with first runs elsewhere.  ``memo_built``
+maps an entry to the number of ``@memo`` entries its first run built
+(nonzero counts only).
 
-Between module families the memoized ``.cache()`` DataFrames are
-evicted via ``common.clear_caches()`` (r3 verdict item 2/6): a
-74-query run otherwise accumulates every family's cached artifacts
-(cleaned docs, shingles, banded signatures, embeddings+norms, IVF
-assignments, fitted-model predictions) in executor storage, which
-squeezed LinearSVC's treeAggregate rounds and regressed
-``ml_modified_svm_metrics`` 3.8× in r3.  The family's shared prefix
-(e.g. cleaned docs) is recomputed once per family — that cost is
-billed to the family's first query, same as r1 behavior.
+The rerun rule: a rerun pays the memo builds its first run paid.
+Before each rerun, :func:`measure` releases exactly the memo entries
+the previous run built; entries that existed before the first run stay,
+and so do the entries the last run built, so later entries of the
+family still see warm memos and their first runs do not change.
+``BENCH_PREPARE`` builds and streaming probes run once: their reruns
+would hit a table short-circuit or a checkpoint, not a memo.
+
+Each query is forced end-to-end with the ``noop`` write format (full
+computation, no driver-side collect).  Memos are cleared between
+eviction groups, so one family's cached artifacts do not squeeze the
+next family's storage memory; a family's shared prefix is billed to
+its first query.  Progress goes to stderr so the stdout JSON stays
+clean.
+
+:func:`force`, :func:`warm_up` and :func:`measure` are the measurement
+core ``tools/probe_ab.py`` and ``tools/scale_probe.py`` time through.
 """
 
 from __future__ import annotations
@@ -43,213 +53,171 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
+from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common  # noqa: E402
 
-def _force(df) -> None:
-    """Run the full plan without materializing rows on the driver."""
+MIN_OF_K = 2
+MIN_OF_K_THRESHOLD_SEC = 0.5
+
+
+def force(df) -> None:
+    """Run the full plan without materializing rows on the driver
+    (``.count()`` would let Catalyst prune the value expressions)."""
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> int:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
-    sf = float(m.group(1)) if m else None
-
-    import __spark_entry__ as entrymod
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.session import get_spark
-
-    load_start = os.getloadavg()
-    spark = get_spark("tsa_bench")
-    # warm up the JVM paths every query shares so they aren't billed to
-    # whichever query happens to run first: codegen (range), the
-    # parquet reader stack (1-row scan), the noop sink, and the
-    # HashAggregate/Exchange/BroadcastHashJoin operator pipeline that
-    # nearly every query compiles (measured ~1.5-2s of first-plan
-    # codegen + AQE spin-up on a cold JVM, previously billed to the
-    # first family's lead query)
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay the JVM and worker start-up costs every query shares, so they
+    are not billed to whichever query runs first: codegen, the parquet
+    reader, the noop sink, the aggregate/exchange/broadcast-join
+    pipeline, and the Python/Arrow worker pool (a first mapInPandas
+    plan otherwise pays worker spawn and Arrow import, 1-2 s)."""
     from pyspark.sql import functions as F
 
     spark.range(1000).count()
-    li1k = spark.read.parquet(
-        os.path.join(sf_dir, "lineitem.parquet")
-    ).limit(1000)
-    _force(li1k.limit(1))
+    li1k = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet")).limit(1000)
+    force(li1k.limit(1))
     agg = li1k.groupBy("l_returnflag").agg(
         F.sum("l_quantity").alias("q"), F.count("*").alias("n")
     )
-    _force(agg.join(F.broadcast(agg.select("l_returnflag")), "l_returnflag"))
-    # ... and the Python/Arrow worker pool: the first mapInPandas /
-    # pandas-UDF plan of the run pays worker-process spawn + Arrow
-    # import (~1-2 s, BENCH_NOTES §r8's mm_png_pixel_stats outlier —
-    # probed 1.5-2.2 s warm vs 3+ s when billed the spawn).  A 1-row
-    # ping brings the pool up so Python-boundary entries measure their
-    # plan, not interpreter startup — same rationale as the JVM warm-up
-    # above, and the same fixed cost any long-lived cluster pays once.
+    force(agg.join(F.broadcast(agg.select("l_returnflag")), "l_returnflag"))
+
     def _ping(it):
-        for pdf in it:
-            yield pdf
+        yield from it
 
-    _force(spark.range(32).repartition(32).mapInPandas(_ping, "id long"))
+    force(spark.range(32).repartition(32).mapInPandas(_ping, "id long"))
 
-    # eviction groups: caches clear between groups, not inside one.
-    # Modules that share memoized artifacts bill as ONE group, anchored
-    # at the anchor module's _MODULE_ORDER position:
-    # - nb + tfidf + csv share the cleaned-docs / front-door chain
-    #   (r4 split them across eviction boundaries, which evicted the
-    #   cleaned-docs cache nb had warmed and doubled the tfidf family —
-    #   tfidf_wordcount 0.51→1.14 s, r4 verdict item 3)
-    # - dedup + similarity + pipeline share the shingle→signature→
-    #   jaccard→CC chain and the embedding caches (the multimodal
-    #   keep-list composes text-side CC with embedding clusters; the
-    #   pretraining capstone composes keep-list + contamination +
-    #   mixture) — splitting them measured 7.8 s for
-    #   dedup_corpus_keep_mm and 7.0 s for pipe_training_corpus vs ~2 s
-    #   warm at sf0.1
-    # - graph and sqlapi consume dedup's verified-pair cache (the
-    #   pagerank/link-prediction edges and the recursive k-hop
-    #   traversal): in their own groups they re-pay the cold
-    #   shingle→minhash→verify chain (~3 s each at sf0.1)
-    _SHARED_GROUPS = {
-        "nb": ("tfidf", "csv"),
-        "dedup": ("similarity", "pipeline", "graph", "sqlapi"),
-    }
-    mods = {m.__name__.rsplit(".", 1)[-1]: m for m in entrymod._MODULE_ORDER}
-    member_names = {n for ms in _SHARED_GROUPS.values() for n in ms}
-    groups = []
-    for m in entrymod._MODULE_ORDER:
-        name = m.__name__.rsplit(".", 1)[-1]
-        if name in member_names:
-            continue  # runs inside its anchor's group
-        members = [mods[n] for n in _SHARED_GROUPS.get(name, ()) if n in mods]
-        groups.append([m, *members])
 
-    timings: dict[str, float] = {}
-    min_of_k: dict[str, float] = {}
+def measure(
+    thunk, runs: int = MIN_OF_K, rerun_over: float = 0.0
+) -> tuple[list[float], int]:
+    """Run ``thunk`` up to ``runs`` times and return the wall seconds of
+    each run and the number of memo entries the first run built.
 
-    # r6 verdict item 3: the shared box's load drift swung per-entry
-    # wall time up to 4× with zero code change, which can mask (or
-    # fake) a real plan regression.  For entries slower than the
-    # threshold, re-run and record the cross-run MINIMUM — the honest
-    # load-insensitive signal BENCH_NOTES.md argues for — as a
-    # separate ``min_of_k`` map.  ``queries``/``value`` stay first-run
-    # times for comparability with r1–r6 records.  Re-runs execute
-    # against whatever caches the first run warmed (same as a repeat
-    # within a round), which is exactly the steady-state cost a plan
-    # regression would move.
-    # r7 verdict item 5: at 2.0 s the re-run set covered only 46% of
-    # wall time; 0.5 s covers ~94% (measured on the r7 per-query map),
-    # so sub-threshold noise is bounded to a few percent of the total.
-    MIN_OF_K = 2
-    MIN_OF_K_THRESHOLD_SEC = 0.5
-
-    def timed(name: str, thunk, rerunnable: bool = True) -> None:
+    Reruns happen only when the first run took longer than
+    ``rerun_over`` seconds.  Before each rerun, the memo entries the
+    previous run built are released, so every run pays the same builds;
+    entries stored before the first run are neither rebuilt nor
+    released, and the last run's entries stay stored.  An exception
+    from any run propagates."""
+    before = common.memo_entries()
+    times: list[float] = []
+    built = 0
+    for i in range(runs):
+        if i:
+            if times[0] <= rerun_over:
+                break
+            common.release_memos(common.memo_entries() - before)
         t0 = time.perf_counter()
-        try:
-            thunk()
-        except Exception as e:  # noqa: BLE001
-            print(f"  {name}: FAILED {type(e).__name__}: {e}", file=sys.stderr)
-            timings[name] = -1.0
-            return
-        dt = time.perf_counter() - t0
-        timings[name] = round(dt, 3)
-        if rerunnable and dt > MIN_OF_K_THRESHOLD_SEC:
-            best = dt
-            for _ in range(MIN_OF_K - 1):
-                t0 = time.perf_counter()
-                try:
-                    thunk()
-                except Exception:  # noqa: BLE001
-                    break
-                best = min(best, time.perf_counter() - t0)
-            min_of_k[name] = round(best, 3)
-            print(
-                f"  {name}: {dt:.2f}s (min_of_{MIN_OF_K} {best:.2f}s)",
-                file=sys.stderr,
-            )
-        else:
-            print(f"  {name}: {dt:.2f}s", file=sys.stderr)
+        thunk()
+        times.append(time.perf_counter() - t0)
+        if not i:
+            built = len(common.memo_entries() - before)
+    return times, built
 
-    for group in groups:
-        for mod in group:
-            family = mod.__name__.rsplit(".", 1)[-1]
-            print(f"-- family {family}", file=sys.stderr)
-            # one-off build steps billed as their own entries (e.g. the
-            # IVF quantizer fit — r4 billed it to sim_ivf_assign, which
-            # made an index-build cost look like a query regression)
-            # build entries are NOT rerunnable (ADVICE r7): a rerun hits
-            # the tableExists/idempotency short-circuit and min_of_k
-            # would record the no-op instead of the real build cost
-            for name, fn in getattr(mod, "BENCH_PREPARE", {}).items():
-                timed(name, lambda fn=fn: fn(spark, sf_dir), rerunnable=False)
-            # driver-memoized trainer queries (module opt-out, ADVICE
-            # r7): their rerun is a pure dict hit, not a steady-state
-            # re-execution, so min_of_k keeps the honest first run
-            one_off = set(getattr(mod, "BENCH_ONE_OFF", ()))
-            # probe-scale overrides (r9 verdict #4): a query whose full
-            # run prices a non-production twin benches a deterministic
-            # slice instead, recorded under `name@probe` so the
-            # artifact states the measurement scale (correctness runs
-            # still execute the FULL query)
-            probe_scale = getattr(mod, "BENCH_PROBE_SCALE", {})
-            for name, fn in mod.QUERIES.items():
-                if name in probe_scale:
-                    pfn = probe_scale[name]
-                    timed(
-                        f"{name}@probe",
-                        lambda fn=pfn: _force(fn(spark, sf_dir)),
-                        rerunnable=name not in one_off,
-                    )
-                    continue
-                timed(
-                    name,
-                    lambda fn=fn: _force(fn(spark, sf_dir)),
-                    rerunnable=name not in one_off,
-                )
-        # retire this group's cached artifacts before the next group
-        common.clear_caches()
 
-    # streaming micro-bench (r4 verdict item 6): one bounded
-    # micro-batch per streaming operator, each its own timed entry
+def timed(rec: dict, name: str, thunk, runs: int = MIN_OF_K) -> None:
+    """Measure one bench entry into ``rec``'s ``queries``, ``min_of_k``
+    and ``memo_built`` maps; an exception from any run records -1."""
+    try:
+        times, built = measure(thunk, runs, MIN_OF_K_THRESHOLD_SEC)
+    except Exception as e:  # noqa: BLE001
+        print(f"  {name}: FAILED {type(e).__name__}: {e}", file=sys.stderr)
+        rec["queries"][name] = -1.0
+        return
+    rec["queries"][name] = round(times[0], 3)
+    if built:
+        rec["memo_built"][name] = built
+    note = ""
+    if len(times) > 1:
+        rec["min_of_k"][name] = round(min(times), 3)
+        note = f" (min_of_{len(times)} {min(times):.2f}s)"
+    print(f"  {name}: {times[0]:.2f}s{note}", file=sys.stderr)
+
+
+# Eviction groups: memos clear between groups, not inside one.  A
+# module listed here bills inside its anchor's group, because it reads
+# the anchor's memos: nb/tfidf/csv share the cleaned-docs chain;
+# dedup/similarity/pipeline share the shingle → signature → jaccard → CC
+# chain and the embedding memos; graph and sqlapi read dedup's
+# verified pairs.  Split apart, each re-pays the cold chain.
+_SHARED_GROUPS = {
+    "nb": ("tfidf", "csv"),
+    "dedup": ("similarity", "pipeline", "graph", "sqlapi"),
+}
+
+
+def _groups(module_order) -> list[list]:
+    mods = {m.__name__.rsplit(".", 1)[-1]: m for m in module_order}
+    member_names = {n for ms in _SHARED_GROUPS.values() for n in ms}
+    return [
+        [m, *(mods[n] for n in _SHARED_GROUPS.get(name, ()) if n in mods)]
+        for m in module_order
+        if (name := m.__name__.rsplit(".", 1)[-1]) not in member_names
+    ]
+
+
+def main() -> int:
     import shutil
     import tempfile
 
+    import __spark_entry__ as entrymod
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.session import get_spark
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+        DEFAULT_SF_DIR,
+    )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.benchprobes import (
         streaming_bench_entries,
     )
 
+    sf_dir = DEFAULT_SF_DIR
+    m = re.search(r"sf([0-9.]+)/?$", sf_dir)
+    sf = float(m.group(1)) if m else None
+
+    load_start = os.getloadavg()
+    spark = get_spark("tsa_bench")
+    warm_up(spark, sf_dir)
+
+    rec: dict[str, dict] = {"queries": {}, "min_of_k": {}, "memo_built": {}}
+    for group in _groups(entrymod._MODULE_ORDER):
+        for mod in group:
+            family = mod.__name__.rsplit(".", 1)[-1]
+            print(f"-- family {family}", file=sys.stderr)
+            # one-off build steps billed as their own entries, so an
+            # index build does not read as a query regression
+            for name, fn in getattr(mod, "BENCH_PREPARE", {}).items():
+                timed(rec, name, lambda fn=fn: fn(spark, sf_dir), runs=1)
+            # a query whose full run prices a non-production twin benches
+            # a deterministic slice, recorded as ``name@probe`` (parity
+            # still runs the full query)
+            probe_scale = getattr(mod, "BENCH_PROBE_SCALE", {})
+            for name, fn in mod.QUERIES.items():
+                if name in probe_scale:
+                    name, fn = f"{name}@probe", probe_scale[name]
+                timed(rec, name, lambda fn=fn: force(fn(spark, sf_dir)))
+        common.clear_caches()
+
     print("-- family streaming", file=sys.stderr)
     workdir = tempfile.mkdtemp(prefix="tsa_bench_stream_")
     try:
-        # streaming probes are one-shot: their timed window covers
-        # stream start→stop and a rerun resumes from the first run's
-        # checkpoints/memory tables, which isn't the same measurement
         for name, thunk in streaming_bench_entries(spark, sf_dir, workdir).items():
-            timed(name, thunk, rerunnable=False)
+            timed(rec, name, thunk, runs=1)
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
     common.clear_caches()
 
     load_end = os.getloadavg()
+    timings, min_of_k = rec["queries"], rec["min_of_k"]
     total = round(sum(t for t in timings.values() if t >= 0), 3)
     failed = sum(1 for t in timings.values() if t < 0)
-    # failures are surfaced in the JSON ("failed" count + the -1.0
-    # sentinel per query) rather than a nonzero exit, so the harness
-    # still parses the line; CI should assert failed == 0 (ADVICE r2)
-    # load-insensitive total: min-of-k where measured, first run
-    # elsewhere (entries under the threshold don't re-run — at <2 s
-    # their drift is bounded by the threshold itself)
     total_min = round(
         sum(min_of_k.get(n, t) for n, t in timings.items() if t >= 0), 3
     )
-    # fraction of total wall time the load-insensitive min-of-k signal
-    # actually covers (r7 verdict item 5 asks ≥80%)
     covered = sum(t for n, t in timings.items() if t >= 0 and n in min_of_k)
     record = {
         "metric": "total_wall_sec",
         "value": total,
         "unit": "sec",
-        "queries": timings,
-        "min_of_k": min_of_k,
+        **rec,
         "min_of_k_runs": MIN_OF_K,
         "min_of_k_threshold_sec": MIN_OF_K_THRESHOLD_SEC,
         "min_of_k_coverage": round(covered / total, 3) if total else None,
@@ -259,30 +227,15 @@ def main() -> int:
         "failed": failed,
         "sf": sf,
     }
-    queries_file = os.path.join(REPO, "bench_queries.json")
-    # round-stamped copy so per-query history survives round-over-round
-    # (r7 verdict item 2: bench_queries.json alone is overwritten each
-    # round, so a single-query regression can hide inside a better
-    # total).  Round number = 1 past the newest committed BENCH_r*.json;
-    # compare any two with tools/bench_diff.py.
     rounds = [
         int(mm.group(1))
         for f_ in os.listdir(REPO)
         if (mm := re.match(r"BENCH_r(\d+)\.json$", f_))
     ]
     this_round = (max(rounds) + 1) if rounds else 0
-    # r8 verdict item 6: stamp the comparable-entries diff vs the
-    # prior round INTO the artifact, so the judge's round-over-round
-    # ratio is computed once at close instead of re-derived from
-    # whichever same-round run landed last
-    # bench_queries_r{N}.json is REQUIRED for the ratio: the driver's
-    # BENCH_r{N}.json carries only a summary ('parsed') and a truncated
-    # stdout 'tail' — no per-query record — so falling back to it can
-    # never find comparable entries (r9 advice: that fallback was dead
-    # code silently stamping None).
-    prior = os.path.join(
-        REPO, f"bench_queries_r{this_round - 1:02d}.json"
-    )
+    # the round-over-round ratio on comparable entries, stamped into the
+    # artifact; it needs the prior round's per-query record
+    prior = os.path.join(REPO, f"bench_queries_r{this_round - 1:02d}.json")
     record["vs_prior_comparable_pct"] = None
     if os.path.exists(prior):
         try:
@@ -294,12 +247,9 @@ def main() -> int:
                 )
         except (OSError, ValueError, KeyError):
             pass
-    with open(queries_file, "w") as f:
-        json.dump(record, f, indent=1, sort_keys=True)
-    with open(
-        os.path.join(REPO, f"bench_queries_r{this_round:02d}.json"), "w"
-    ) as f:
-        json.dump(record, f, indent=1, sort_keys=True)
+    for out in ("bench_queries.json", f"bench_queries_r{this_round:02d}.json"):
+        with open(os.path.join(REPO, out), "w") as f:
+            json.dump(record, f, indent=1, sort_keys=True)
     summary = {
         "metric": "total_wall_sec",
         "value": total,

@@ -1,23 +1,31 @@
-"""The round-over-round accounting tools the r7 verdict asked for:
-tools/bench_diff.py (per-query regression diffing on the
-load-insensitive signal) and tools/rotation.py --status (the committed
-backlog manifest).  These are judge-facing artifacts — a silent bug
-here corrupts the round's bookkeeping, so they get the same test
-treatment as operators."""
+"""The round-over-round accounting tools: tools/bench_diff.py
+(per-query regression diffing on the load-insensitive signal),
+tools/rotation.py --status (the committed backlog manifest) and
+tools/scale_probe.py's SCALING.md section writer.  A silent bug here
+corrupts the repo's records, so they get the same test treatment as
+operators."""
 
 from __future__ import annotations
 
 import json
+import os
+import shutil
 import subprocess
 import sys
+
+import pytest
 
 import __spark_entry__ as entrymod
 import tools.bench_diff as bd
 import tools.rotation as rotation
+import tools.scale_probe as sp
 
 
-def _rec(queries, min_of_k=None):
-    return {"queries": queries, "min_of_k": min_of_k or {}}
+def _rec(queries, min_of_k=None, memo_built=None):
+    rec = {"queries": queries, "min_of_k": min_of_k or {}}
+    if memo_built is not None:
+        rec["memo_built"] = memo_built
+    return rec
 
 
 def test_bench_diff_min_of_k_only_when_both_sides_measured():
@@ -29,6 +37,28 @@ def test_bench_diff_min_of_k_only_when_both_sides_measured():
     assert bd._best(with_mk, with_mk, "q1") == 4.0
     assert bd._best(with_mk, without_mk, "q1") == 10.0
     assert bd._best(without_mk, with_mk, "q1") == 9.0
+
+
+def test_bench_diff_min_of_k_only_when_both_reruns_rebuilt_the_same():
+    """A record without ``memo_built`` reran against its own first
+    run's memos (a cached read); a newer one rebuilds them.  Their
+    minima compare only where both sides built the same number of memo
+    entries, else both sides fall back to first-run."""
+    old = _rec({"memo_q": 10.0, "plain": 3.0}, {"memo_q": 0.05, "plain": 2.0})
+    new = _rec(
+        {"memo_q": 9.0, "plain": 3.1},
+        {"memo_q": 4.0, "plain": 2.2},
+        {"memo_q": 2},
+    )
+    assert bd._best(old, new, "memo_q") == 10.0
+    assert bd._best(new, old, "memo_q") == 9.0
+    assert bd._best(old, new, "plain") == 2.0  # builds 0 on both sides
+    assert bd._best(new, old, "plain") == 2.2
+    newer = _rec({"memo_q": 8.0}, {"memo_q": 3.5}, {"memo_q": 2})
+    assert bd._best(new, newer, "memo_q") == 4.0
+    assert bd._best(newer, new, "memo_q") == 3.5
+    # first-run 10.0 -> 9.0 for memo_q, min-of-k 2.0 -> 2.2 for plain
+    assert bd.comparable_pct(old, new) == round((11.2 / 12.0 - 1) * 100, 1)
 
 
 def test_bench_diff_reports_added_removed_and_deltas(tmp_path, capsys):
@@ -198,3 +228,95 @@ def test_rotation_status_cli_writes_artifact(tmp_path):
     assert res.returncode == 0, res.stderr
     on_disk = json.loads(out.read_text())
     assert on_disk == json.loads(res.stdout)
+
+
+SCALING_MD = os.path.join(os.path.dirname(sp.__file__), os.pardir, "SCALING.md")
+
+
+@pytest.fixture
+def scaling(tmp_path):
+    path = tmp_path / "SCALING.md"
+    shutil.copy(SCALING_MD, path)
+    return path
+
+
+def _times(sec, chunk):
+    """The per-point seconds a committed section's table records."""
+    labels = [p[0] for p in sec.points]
+    times = {}
+    for line in chunk.splitlines():
+        cells = [c.strip() for c in line.strip("|").split("|")]
+        if cells[0] in sec.probes:
+            times[cells[0]] = {
+                lb: float(v) for lb, v in zip(labels, cells[1:-1]) if v
+            }
+    return times
+
+
+def test_scaling_sections_rewritten_with_their_own_text_are_unchanged(scaling):
+    before = scaling.read_bytes()
+    chunks = sp._chunks(before.decode())
+    assert len(chunks) == 4
+    for chunk in chunks:
+        sp.write_section(str(scaling), chunk.split("\n", 1)[0], chunk)
+        assert scaling.read_bytes() == before
+
+
+def test_scaling_render_reproduces_the_committed_tables(scaling):
+    chunks = sp._chunks(scaling.read_text())
+    for key in ("base", "decade", "decade2"):
+        sec = sp.SECTIONS[key]
+        chunk = next(c for c in chunks if c.startswith(sec.heading))
+        text, alphas, over = sp.render(sec, _times(sec, chunk), 1.1)
+        assert text.rstrip("\n") == chunk
+        assert len(alphas) == len(sec.probes) and not over
+
+
+def test_scaling_replacing_one_decade_keeps_the_others_in_order(scaling):
+    chunks = sp._chunks(scaling.read_text())
+    sec = sp.SECTIONS["decade2"]
+    times = {n: {"sf1_synth": 1.0, "sf10_synth": 5.0} for n in sec.probes}
+    text, _, _ = sp.render(sec, times, None)
+    sp.write_section(str(scaling), sec.heading, text)
+    after = sp._chunks(scaling.read_text())
+    assert after == chunks[:2] + [text.rstrip("\n")] + chunks[3:]
+    # a section missing from the file goes back where SECTIONS puts it
+    del after[2]
+    scaling.write_text("\n\n".join(after) + "\n")
+    sp.write_section(str(scaling), sec.heading, text)
+    assert sp._chunks(scaling.read_text()) == chunks[:2] + [
+        text.rstrip("\n")
+    ] + chunks[3:]
+
+
+def test_scaling_quick_base_leaves_the_decades_alone(scaling):
+    chunks = sp._chunks(scaling.read_text())
+    sec = sp.SECTIONS["base"]
+    times = {n: {"sf0.001": 2.0, "sf0.01": 1.0} for n in sec.probes}
+    text, alphas, over = sp.render(sec, times, 1.1)
+    assert not alphas and not over
+    assert "| nb_confusion | 2.0 | 1.0 |  |  |" in text
+    sp.write_section(str(scaling), sec.heading, text)
+    assert sp._chunks(scaling.read_text())[1:] == chunks[1:]
+
+
+def test_scaling_failed_gate_annotates_the_section(scaling):
+    sec = sp.SECTIONS["decade3"]
+    times = {sec.probes[0]: {"sf10_synth": 10.0, "sf100_synth": 200.0}}
+    text, alphas, over = sp.render(sec, times, 1.1)
+    assert over == {sec.probes[0]: 1.3}
+    sp.write_section(str(scaling), sec.heading, text)
+    written = sp._chunks(scaling.read_text())[3]
+    assert written.startswith("## Third extended decade — synthetic sf100 (r12)")
+    assert "GATE FAILED" in written and "1.3" in written
+    _, _, ok = sp.render(sec, times, 1.5)
+    assert not ok
+
+
+@pytest.mark.parametrize(
+    "argv", [["--decade4"], ["--max-alpha", "x"], ["--decade", "--decade2"]]
+)
+def test_scale_probe_rejects_bad_arguments_before_spark(argv):
+    with pytest.raises(SystemExit) as exc:
+        sp.main(argv)
+    assert exc.value.code == 2

@@ -180,13 +180,6 @@ QUERIES = {
     "text_bpe_tokenize": q_bpe_tokenize,
 }
 
-# bench.py min-of-k opt-out (ADVICE r7): each merges query's cost is a
-# driver-memoized trainer loop (full and sampled corpus); a rerun is a
-# pure dict hit, so min_of_k would record ~0 s and hide a real trainer
-# regression.  (The tokenize queries are NOT listed — apply_merges
-# re-executes the full plan on rerun.)
-BENCH_ONE_OFF = ("text_bpe_merges", "text_bpe_merges_sampled")
-
 
 # --------------------------------------------------------------------------
 # r7: sampled-corpus trainer — the production-vocab scale path

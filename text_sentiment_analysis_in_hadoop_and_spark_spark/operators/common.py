@@ -13,7 +13,9 @@ Expensive intermediates are memoized per Spark session and dataset with
 :func:`memo`.  Every entry is keyed ``(applicationId, sf_dir, *args)``,
 so ``key[1]`` is the dataset; ``None`` results are not stored; and
 :func:`clear_caches` releases values (``unpersist`` for DataFrames,
-``cleanup`` for temporary directories) per ``sf_dir`` or wholesale.
+``cleanup`` for temporary directories) per ``sf_dir`` or wholesale;
+:func:`release_memos` releases chosen :func:`memo_entries` (bench.py's
+rerun rule).
 """
 
 from __future__ import annotations
@@ -67,33 +69,46 @@ def memo(fn):
     return memoized
 
 
+def _release(val) -> None:
+    """Release one memo value (or each item of a tuple value) by its
+    own method: ``unpersist`` for cached DataFrames, ``cleanup`` for
+    temporary directories; plain values need nothing."""
+    for obj in val if isinstance(val, tuple) else (val,):
+        if hasattr(obj, "unpersist"):
+            # blocking: an async unpersist can leave the old blocks
+            # resident while the next run's persist already fills the
+            # heap — measured OOM after 4 back-to-back sf10 probe runs
+            # in one 8 GB JVM (r12); callers of clear_caches are
+            # exactly the re-run loops where that race bites
+            try:
+                obj.unpersist(blocking=True)
+            except TypeError:  # non-DataFrame registrants
+                obj.unpersist()
+        elif hasattr(obj, "cleanup"):
+            obj.cleanup()
+
+
 def clear_caches(sf_dir: str | None = None) -> None:
     """Release and drop memo entries — all of them, or only those whose
     key has ``key[1] == sf_dir``.  Call when a dataset is retired so
-    executor storage memory is released.  Each value (or each item of
-    a tuple value) is released by its own method: ``unpersist`` for
-    cached DataFrames, ``cleanup`` for temporary directories; plain
-    values are just dropped."""
+    executor storage memory is released."""
     for d in _CACHE_REGISTRY:
         for key in list(d):
             if sf_dir is not None and key[1] != sf_dir:
                 continue
-            val = d.pop(key)
-            items = val if isinstance(val, tuple) else (val,)
-            for obj in items:
-                if hasattr(obj, "unpersist"):
-                    # blocking: an async unpersist can leave the old
-                    # blocks resident while the next run's persist
-                    # already fills the heap — measured OOM after 4
-                    # back-to-back sf10 probe runs in one 8 GB JVM
-                    # (r12); callers of clear_caches are exactly the
-                    # re-run loops where that race bites
-                    try:
-                        obj.unpersist(blocking=True)
-                    except TypeError:  # non-DataFrame registrants
-                        obj.unpersist()
-                elif hasattr(obj, "cleanup"):
-                    obj.cleanup()
+            _release(d.pop(key))
+
+
+def memo_entries() -> set[tuple[int, tuple]]:
+    """Every stored memo entry, as ``(registry index, key)``."""
+    return {(i, key) for i, d in enumerate(_CACHE_REGISTRY) for key in d}
+
+
+def release_memos(entries) -> None:
+    """Release and drop the given :func:`memo_entries` items, leaving
+    every other entry as it is."""
+    for i, key in entries:
+        _release(_CACHE_REGISTRY[i].pop(key))
 
 
 def rebalance_scan(spark: SparkSession, df: DataFrame) -> DataFrame:

@@ -131,16 +131,6 @@ def decode_image(payload: bytes) -> tuple[int, int]:
     )
 
 
-def _fake_meta(n_bytes: int) -> tuple[int, int, int]:
-    """Deterministic fake 'decode': metadata as pure functions of the
-    payload size (stands in for width/height/frame-count probing)."""
-    return (
-        1 + n_bytes % 640,
-        1 + (n_bytes // 640) % 480,
-        1 + n_bytes % 10,
-    )
-
-
 def decode_meta_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:

@@ -229,20 +229,6 @@ def _gram_rows(docs: DataFrame) -> DataFrame:
     )
 
 
-def _shingles(text: Column) -> Column:
-    """Token CONTAM_K-grams; docs shorter than K yield the whole text
-    as one gram (same convention as the winnowing fingerprints)."""
-    toks = _toks(text)
-    return F.when(
-        F.size(toks) < CONTAM_K, F.array(F.concat_ws(" ", toks))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - CONTAM_K),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, CONTAM_K)),
-        )
-    )
-
-
 @memo
 def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc overlap with the benchmark gram set: n_grams, n_hits,

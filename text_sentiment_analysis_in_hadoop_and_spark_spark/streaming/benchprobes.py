@@ -6,10 +6,12 @@ drives ONE bounded micro-batch pass of a streaming operator end-to-end
 
 Contract: :func:`streaming_bench_entries` does the UNTIMED setup
 (landing-zone files, tempdirs) and returns name → zero-arg thunk; the
-bench times each thunk as its own entry.  Landing files are symlinks
-or one small decile write — the timed window covers stream start,
-micro-batch execution, and stop, which is the throughput being
-guarded."""
+bench times each thunk as its own entry.  Each thunk returns its
+query's ``recentProgress`` (captured before ``stop()``), which the bench
+ignores and ``tools/stream_phase_probe.py`` breaks down by phase.
+Landing files are symlinks or one small decile write — the timed window
+covers stream start, micro-batch execution, and stop, which is the
+throughput being guarded."""
 
 from __future__ import annotations
 
@@ -50,8 +52,11 @@ PROBE_PARTS = "2"
 
 
 def streaming_bench_entries(
-    spark: SparkSession, sf_dir: str, workdir: str
-) -> dict[str, Callable[[], None]]:
+    spark: SparkSession, sf_dir: str, workdir: str, join_parts: str = PROBE_PARTS
+) -> dict[str, Callable[[], list]]:
+    """Set up the landing zones under ``workdir`` and return the probes.
+    The two stream-stream join probes run at ``join_parts`` shuffle
+    partitions; the others at the session default."""
     from .enrich import enrich_stream
     from .ingest import admit_stream
     from .joins import attribution_stream
@@ -83,7 +88,7 @@ def streaming_bench_entries(
 
     _banded_cached(spark, sf_dir).count()
 
-    def ingest_probe() -> None:
+    def ingest_probe() -> list:
         admitted: list[int] = []
 
         def sink(df, batch_id):
@@ -93,10 +98,12 @@ def streaming_bench_entries(
         try:
             q.processAllAvailable()
         finally:
+            prog = q.recentProgress
             q.stop()
         assert admitted, "ingest probe admitted nothing"
+        return prog
 
-    def interval_join() -> None:
+    def interval_join() -> list:
         q = (
             attribution_stream(spark, events_land)
             .writeStream.format("memory")
@@ -108,10 +115,13 @@ def streaming_bench_entries(
             q.processAllAvailable()
             n = spark.sql("SELECT count(*) AS n FROM bench_attrib").first()["n"]
         finally:
+            prog = q.recentProgress
             q.stop()
+            spark.catalog.dropTempView("bench_attrib")
         assert n >= 0
+        return prog
 
-    def outer_join() -> None:
+    def outer_join() -> list:
         from .joins import unconverted_stream
 
         q = (
@@ -127,13 +137,16 @@ def streaming_bench_entries(
                 "n"
             ]
         finally:
+            prog = q.recentProgress
             q.stop()
+            spark.catalog.dropTempView("bench_unconv")
         # only watermark-expired views flush in one pass — the probe
         # times the join+state machinery, not full drain semantics
         # (tests/test_stream_join.py proves those)
         assert n >= 0
+        return prog
 
-    def exactly_once_sink() -> None:
+    def exactly_once_sink() -> list:
         out = os.path.join(workdir, "sink_out")
         ckpt = os.path.join(workdir, "sink_ckpt")
         q = start_idempotent_parquet_sink(
@@ -141,8 +154,9 @@ def streaming_bench_entries(
         )
         q.awaitTermination(300)
         assert spark.read.parquet(out).limit(1).count() == 1
+        return q.recentProgress
 
-    def upsert_view() -> None:
+    def upsert_view() -> list:
         from .latest import latest_state_stream
 
         emitted: list[int] = []
@@ -155,10 +169,12 @@ def streaming_bench_entries(
         try:
             q.processAllAvailable()
         finally:
+            prog = q.recentProgress
             q.stop()
         assert emitted and emitted[0] > 0
+        return prog
 
-    def scd2_builder() -> None:
+    def scd2_builder() -> list:
         from .scd2 import scd2_stream
 
         closed: list[int] = []
@@ -171,15 +187,17 @@ def streaming_bench_entries(
         try:
             q.processAllAvailable()
         finally:
+            prog = q.recentProgress
             q.stop()
         assert closed and closed[0] > 0
+        return prog
 
-    def _at_probe_scale(fn: Callable[[], None]) -> Callable[[], None]:
-        def wrapped() -> None:
+    def _at_probe_scale(fn: Callable[[], list]) -> Callable[[], list]:
+        def wrapped() -> list:
             before = spark.conf.get("spark.sql.shuffle.partitions")
-            spark.conf.set("spark.sql.shuffle.partitions", PROBE_PARTS)
+            spark.conf.set("spark.sql.shuffle.partitions", join_parts)
             try:
-                fn()
+                return fn()
             finally:
                 spark.conf.set("spark.sql.shuffle.partitions", before)
 

@@ -1,4 +1,4 @@
-"""Per-query bench diff between two rounds (r7 verdict item 2).
+"""Per-query bench diff between two rounds.
 
 Usage::
 
@@ -6,9 +6,9 @@ Usage::
     python tools/bench_diff.py BENCH_r07.json BENCH_r08.json   # same schema
 
 Compares on the load-insensitive value — ``min_of_k`` where both
-rounds measured it, first-run seconds otherwise — and prints the top
-regressions/improvements plus added/removed entries.  Exit code 0
-always (it is a reporting tool, not a gate; BENCH_NOTES.md documents
+rounds measured it the same way, first-run seconds otherwise — and
+prints the top regressions/improvements plus added/removed entries.
+Exit code 0 always (it is a reporting tool, not a gate; BENCH_NOTES.md documents
 ~1.5× uniform drift on the shared box, so regressions need a human
 eye, not a hard threshold).
 """
@@ -21,15 +21,22 @@ import sys
 
 def _best(rec: dict, other: dict, name: str) -> float:
     """Load-insensitive per-query seconds for a CROSS-ROUND diff:
-    min_of_k only when BOTH rounds measured it for this entry, else
-    first-run on both sides.  One-sided minima are not comparable —
-    r8 lowered the min-of-k threshold 2.0→0.5 s, so every 0.5–2 s
-    entry has a minimum in r8 but not r7; mixing r8's minimum against
-    r7's (up to 4× load-drifted) first run printed spurious deltas
-    for that whole band (r8 review finding)."""
+    min_of_k only when BOTH rounds measured it for this entry and both
+    say its first run built the same number of memo entries
+    (``memo_built``, 0 when absent), else first-run on both sides.
+    One-sided minima are not comparable: a minimum against the other
+    round's load-drifted first run prints a spurious delta.  Nor are
+    minima of reruns that re-paid different memo builds: records
+    without ``memo_built`` reran against their own first run's memos,
+    so they timed a cached read where newer records time a rebuild."""
     mk = rec.get("min_of_k", {})
     omk = other.get("min_of_k", {})
-    if name in mk and name in omk:
+    built = rec.get("memo_built", {}).get(name, 0)
+    if (
+        name in mk
+        and name in omk
+        and built == other.get("memo_built", {}).get(name, 0)
+    ):
         return mk[name]
     return rec["queries"][name]
 

@@ -1,126 +1,89 @@
 """Measured scaling curves for headline operators — SCALING.md.
 
 The local bench proves correctness-at-speed at ONE scale factor; this
-probe measures how each headline operator's wall time actually moves
-across the 100× SF span the test data provides (sf0.001 → sf0.1), and
-fits the per-operator scaling exponent
+probe measures how each headline operator's wall time moves across
+scale factors and fits the per-operator scaling exponent
 
-    t ∝ (corpus size)^alpha        alpha = log10(t_sf0.1 / t_sf0.01)
+    t ∝ (corpus size)^alpha        alpha = log10(t_big / t_small)
 
-(the size ratio of that decade is 10×, so log10 of the time ratio IS
-the fitted exponent)
+over the last two points of a section (each step is a 10× size ratio,
+so log10 of the time ratio IS the fitted exponent).  alpha ≈ 1 is
+linear scaling; alpha clearly above 1 flags a super-linear shuffle/pair
+blowup that would bite long before 100 TB.
 
-from the sf0.01 → sf0.1 decade (the sf0.001 point is reported but not
-fitted — at that size per-query wall time is dominated by fixed task
-scheduling / codegen costs, not data).  alpha ≈ 1 is linear scaling;
-alpha clearly above 1 flags a super-linear shuffle/pair blowup that
-would bite long before 100 TB.  Caches are cleared between SFs so
-every point pays its own full cost; each point is min-of-2.
+Every point is min-of-2 COLD: ``clear_caches()`` and then bench.py's
+measurement core, whose rerun releases the memo entries the first run
+built, so both runs pay every memoized build (a warm minimum would time
+cache reads, whose flatness says nothing about data scaling).
 
-    python tools/scale_probe.py            # writes SCALING.md
-    python tools/scale_probe.py --quick    # skip sf0.1 (fast sanity)
-    python tools/scale_probe.py --max-alpha 1.1   # gate: exit 1 if any
-                                           # fitted exponent exceeds it
-    python tools/scale_probe.py --decade [--max-alpha X]
-        # r9-verdict #5: extend ONE more decade for the two steepest
-        # curves (er_fuzzy_pairs 0.87, dedup_prefix_jaccard_join 0.78)
-        # against a synthesized sf1-equivalent corpus (documents
-        # inflated 10× from sf0.1 with VARIED per-copy lengths — the
-        # real corpus's near-uniform doc sizes understate the length
-        # filter, so this decade is the harder test).  Appends an
-        # "extended decade" section to SCALING.md; the --max-alpha
-        # gate covers these fits too.
+Each mode measures and (re)writes one SCALING.md section; the other
+sections keep their text and order:
 
-The ``--max-alpha`` gate is the r8-verdict ask: the two steepest
-curves are the quadratic-risk operators themselves (`er_fuzzy_pairs`,
-`dedup_prefix_jaccard_join`) — both have block-size/prefix pruning,
-but a corpus-shape change could silently push them super-linear.
-With the flag the round ritual fails LOUDLY instead.
+    python tools/scale_probe.py            # base: 16 operators, sf0.001-sf0.1
+    python tools/scale_probe.py --quick    # base without sf0.1 (fast sanity)
+    python tools/scale_probe.py --decade   # sf0.1 → synthetic sf1
+    python tools/scale_probe.py --decade2  # synthetic sf1 → sf10
+    python tools/scale_probe.py --decade3  # synthetic sf10 → sf100 (one cold point)
+
+``--max-alpha X`` gates any mode: when a fitted exponent exceeds X the
+section is annotated ``GATE FAILED`` and the probe exits 1.  The
+quadratic-risk operators (`er_fuzzy_pairs`, `dedup_prefix_jaccard_join`)
+have block-size/prefix pruning, but a corpus-shape change could
+silently push them super-linear; the gate makes that fail loudly.
 """
 
 from __future__ import annotations
 
+import argparse
 import math
 import os
+import re
 import sys
-import time
+from typing import NamedTuple
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-SFS = ("sf0.001", "sf0.01", "sf0.1")
-
-# headline operators: one per family whose scale posture the verdicts
-# grade — dedup banding, ANN, text LM, retrieval, relational agg/join,
-# streaming-equivalent sessionization, multimodal Arrow boundary
-PROBES = (
-    "nb_confusion",            # flagship NB DAG (clean→train→score)
-    "tfidf_scores",            # 6-job chain as one DAG
-    "rel_pricing_summary",     # Q1 scan+agg
-    "rel_waiting_suppliers",   # Q21 two-level fact⋈fact
-    "events_sessions",         # sessionization window
-    "dedup_minhash_pairs",     # banded LSH pair generation
-    "dedup_prefix_jaccard_join",  # PPJoin prefix-filter pairs
-    "sim_topk_lsh",            # bucketed ANN top-k
-    "text_lm_score",           # corpus-LM per-doc scoring
-    "text_bm25_topk",          # inverted-index retrieval
-    "mm_pair_manifest",        # CLIP-style pair scoring
-    "pipe_training_corpus",    # end-to-end keep-list composition
-    "er_fuzzy_pairs",          # blocked edit-distance verify (quadratic risk)
-    "dedup_simhash_pairs",     # banded Hamming pairs (quadratic risk)
-    "text_contamination_bloom",  # bloom prefilter decontamination
-    "sim_topk_ivf",            # inverted-list ANN probe
+from bench import force, measure, warm_up  # noqa: E402
+from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common  # noqa: E402
+from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (  # noqa: E402
+    DEFAULT_SF_DIR,
 )
 
-
-# the quadratic-risk operators the extended decade re-fits against
-# the synthetic sf1 corpus (r10 widened beyond the two steepest r9
-# curves to every candidate-generation family; build_sf1 synthesizes
-# BOTH documents.parquet AND embeddings.parquet, so embedding-side
-# probes ride along — only the sf10 decade2 corpus is documents-only)
-DECADE_PROBES = (
-    "er_fuzzy_pairs",
-    "dedup_prefix_jaccard_join",
-    "dedup_minhash_pairs",
-    "dedup_simhash_pairs",
-    "text_bm25_topk",
-    "sim_topk_lsh",
-    "dedup_embedding_pairs",
-    # the end-to-end compositions: CLIP-style pair scoring and the
-    # full keep-list capstone (quality gate ∘ exact dedup ∘ near-dup
-    # CC) — if any stage upstream goes quadratic, these inherit it
-    "mm_pair_manifest",
-    "pipe_training_corpus",
-)
+SCALING = os.path.join(REPO, "SCALING.md")
+TESTDATA = os.path.dirname(DEFAULT_SF_DIR)
+SF01 = os.path.join(TESTDATA, "sf0.1")
 SF1_DIR = os.path.join(REPO, ".sf1_synth")
+SF10_DIR = os.path.join(REPO, ".sf10_synth")
+SF100_DIR = os.path.join(REPO, ".sf100_synth")
+
+
+def _built(*parquet_dirs: str) -> bool:
+    # gate on the writer's _SUCCESS marker, not the bare directory: a
+    # build killed mid-write (the ENOSPC failure mode) leaves a partial
+    # directory that must not be reused
+    return all(os.path.exists(os.path.join(d, "_SUCCESS")) for d in parquet_dirs)
 
 
 def build_sf1(spark) -> str:
-    """Synthesize an sf1-equivalent documents corpus: 10 variants per
-    sf0.1 doc (50k rows), each variant keeping a DIFFERENT deterministic
-    prefix fraction of the text (0.30–0.93, plus one full-length copy)
-    with a per-copy suffix token so no variant is byte-identical.
+    """Synthesize an sf1-equivalent corpus: 10 variants per sf0.1 doc
+    (50k rows), each variant keeping a DIFFERENT deterministic prefix
+    fraction of the text (0.30–0.93, plus one full-length copy) with a
+    per-copy suffix token so no variant is byte-identical; and 10
+    variants per sf0.1 embedding (20k vectors).
 
-    Why varied lengths: copies of one doc share long prefixes (real
-    near-dup structure for the prefix/LSH candidate stages) but land in
-    different length buckets, so the blocking and the r9 PPJoin length
-    filter do real work — the honest shape for the candidate-growth
-    decade the r9 verdict asked about.  Deterministic (no RNG): frac
-    keys on (doc_id + k) % 10.  Built once, reused (delete the dir to
-    rebuild)."""
+    Copies of one doc share long prefixes (real near-dup structure for
+    the prefix/LSH candidate stages) but land in different length
+    buckets, so the blocking and the PPJoin length filter do real work.
+    Deterministic (no RNG): frac keys on (doc_id + k) % 10.  Built once,
+    reused (delete the dir to rebuild)."""
     from pyspark.sql import functions as F
 
     out = os.path.join(SF1_DIR, "documents.parquet")
-    # rebuild-skip gates on the writer's _SUCCESS marker, not the bare
-    # directory (ADVICE r12: a build killed mid-write — the documented
-    # ENOSPC failure mode — leaves a partial directory that a bare
-    # exists() would silently reuse)
-    emb_done = os.path.exists(
-        os.path.join(SF1_DIR, "embeddings.parquet", "_SUCCESS")
-    )
-    if os.path.exists(os.path.join(out, "_SUCCESS")) and emb_done:
+    emb_out = os.path.join(SF1_DIR, "embeddings.parquet")
+    if _built(out, emb_out):
         return SF1_DIR
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
+    docs = spark.read.parquet(os.path.join(SF01, "documents.parquet"))
     variants = spark.range(10).select(F.col("id").cast("int").alias("k"))
     frac = 0.30 + 0.07 * ((F.col("doc_id") + F.col("k")) % 10)
     cut = F.when(F.col("k") == 0, F.length("text")).otherwise(
@@ -141,14 +104,12 @@ def build_sf1(spark) -> str:
         .withColumn("n_chars", F.length("text").cast("long"))
     )
     inflated.repartition(8, "doc_id").write.mode("overwrite").parquet(out)
-    # embeddings too (20k vectors): 10 variants per sf0.1 vector —
     # k=0 is an exact duplicate, k>0 adds a deterministic per-dim
     # perturbation of growing magnitude (sin of a vec/dim/k hash — no
     # RNG), so families span exact-dup → near-dup → loosely-similar,
     # the shape the LSH bucket self-joins and the SIM_HOT_BUCKET_CAP
     # have to survive
-    emb_out = os.path.join(SF1_DIR, "embeddings.parquet")
-    emb = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
+    emb = spark.read.parquet(os.path.join(SF01, "embeddings.parquet"))
     pert = F.transform(
         F.col("embedding"),
         lambda x, i: x
@@ -173,39 +134,25 @@ def build_sf1(spark) -> str:
     return SF1_DIR
 
 
-# second extended decade (r10): sf10-equivalent documents for the
-# flagship dedup chains — three measured decades, a 1000× span.
-# r11 widened to the two banded-verify consumers now riding the
-# generalized int64-dictionary arrays (jaccard/containment verify).
-DECADE2_PROBES = (
-    "dedup_prefix_jaccard_join",
-    "dedup_minhash_pairs",
-    "dedup_jaccard_pairs",
-    "dedup_containment_pairs",
-)
-SF10_DIR = os.path.join(REPO, ".sf10_synth")
-
-
-def build_sf10(spark) -> str:
-    """sf10-equivalent documents (500k docs): 10 REPLICA GROUPS × 10
-    prefix-fraction variants per sf0.1 doc.  Replica groups diverge by
-    replacing every 7th token with a group-salted token, so cross-group
-    Jaccard falls far below threshold and near-dup FAMILY SIZE stays
-    ~10 while the corpus grows 100× — the honest shape (a real corpus
-    10× bigger has ~10× more near-dup families, not 10× bigger ones;
-    constant family size keeps TRUE output linear so the fit measures
-    the algorithm, not an output-size artifact).  Deterministic."""
+def build_replicas(spark, groups: int, out_dir: str, parts: int) -> str:
+    """Documents-only corpus of ``groups`` REPLICA GROUPS × 10
+    prefix-fraction variants per sf0.1 doc (10 groups: sf10, 500k docs;
+    100 groups: sf100, 5M docs).  Replica groups diverge by replacing
+    every 7th token with a group-salted token, so cross-group Jaccard
+    falls far below threshold and near-dup FAMILY SIZE stays ~10 while
+    the corpus grows — the honest shape (a real corpus 10× bigger has
+    ~10× more near-dup families, not 10× bigger ones; constant family
+    size keeps TRUE output linear so the fit measures the algorithm,
+    not an output-size artifact).  Deterministic."""
     from pyspark.sql import functions as F
 
-    out = os.path.join(SF10_DIR, "documents.parquet")
-    # _SUCCESS-gated like build_sf1 (ADVICE r12: partial dirs from a
-    # killed write must not be reused)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return SF10_DIR
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    copies = spark.range(100).select(
-        (F.col("id") % 10).cast("int").alias("g"),
-        (F.col("id") / 10).cast("int").alias("k"),
+    out = os.path.join(out_dir, "documents.parquet")
+    if _built(out):
+        return out_dir
+    docs = spark.read.parquet(os.path.join(SF01, "documents.parquet"))
+    copies = spark.range(groups * 10).select(
+        (F.col("id") % groups).cast("int").alias("g"),
+        (F.col("id") / groups).cast("int").alias("k"),
     )
     toks = F.split(F.col("text"), " ")
     salted = F.array_join(
@@ -230,9 +177,9 @@ def build_sf10(spark) -> str:
     inflated = (
         docs.crossJoin(copies)
         .select(
-            (F.col("doc_id") * 100 + F.col("g") * 10 + F.col("k")).alias(
-                "doc_id"
-            ),
+            (
+                F.col("doc_id") * (groups * 10) + F.col("g") * 10 + F.col("k")
+            ).alias("doc_id"),
             F.concat(
                 F.substring(salted, 1, cut),
                 F.lit(" zv"),
@@ -243,288 +190,76 @@ def build_sf10(spark) -> str:
         )
         .withColumn("n_chars", F.length("text").cast("long"))
     )
-    inflated.repartition(32, "doc_id").write.mode("overwrite").parquet(out)
-    return SF10_DIR
+    inflated.repartition(parts, "doc_id").write.mode("overwrite").parquet(out)
+    return out_dir
 
 
-# third extended decade (r12, VERDICT r11 #4): sf100-equivalent
-# documents for the ONE flagship chain — four measured decades
-# (sf0.01 → sf100, a 10,000× span).  Same replica-group construction
-# as build_sf10 scaled 10×: 100 groups × 10 prefix variants per
-# sf0.1 doc = 5M docs, family size stays ~10 so TRUE output grows
-# linearly and the fit measures the algorithm.  Probed as a single
-# cold point per the verdict ("even if probed as a single cold
-# point rather than a full family sweep").
-SF100_DIR = os.path.join(REPO, ".sf100_synth")
+class Section(NamedTuple):
+    """One SCALING.md section: its heading (the part before " — " finds
+    it in the file), prose, probed operators and measured points
+    ``(label, sf_dir or builder, runs)``; alpha fits the last two."""
+
+    heading: str
+    prose: tuple[str, ...]
+    probes: tuple[str, ...]
+    points: tuple[tuple, ...]
+    conf: dict = {}
 
 
-def build_sf100(spark) -> str:
-    from pyspark.sql import functions as F
+def _sf10(spark) -> str:
+    return build_replicas(spark, 10, SF10_DIR, 32)
 
-    out = os.path.join(SF100_DIR, "documents.parquet")
-    # _SUCCESS-gated (ADVICE r12: the prior sf100 attempt WAS killed by
-    # ENOSPC mid-write — exactly the partial directory this guards)
-    if os.path.exists(os.path.join(out, "_SUCCESS")):
-        return SF100_DIR
-    docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
-    copies = spark.range(1000).select(
-        (F.col("id") % 100).cast("int").alias("g"),
-        (F.col("id") / 100).cast("int").alias("k"),
-    )
-    toks = F.split(F.col("text"), " ")
-    salted = F.array_join(
-        F.transform(
-            toks,
-            lambda x, i: F.when(
-                (i + F.col("g")) % 7 == 0,
-                F.concat(
-                    F.lit("r"),
-                    F.col("g").cast("string"),
-                    F.lit("t"),
-                    (i % 13).cast("string"),
-                ),
-            ).otherwise(x),
+
+def _sf100(spark) -> str:
+    return build_replicas(spark, 100, SF100_DIR, 64)
+
+
+SECTIONS = {
+    "base": Section(
+        "# SCALING — measured wall-time curves across the 100× SF span",
+        (
+            "Generated by `python tools/scale_probe.py` (min-of-2 of COLD",
+            "runs per point — caches cleared before every run, so each",
+            "point pays the operator's full cost including memoized build",
+            "steps).  `alpha` is the fitted exponent of t ∝ size^alpha",
+            "over the sf0.01 → sf0.1 decade — the sf0.001 column is shown",
+            "for the fixed-cost floor but not fitted (at that size task",
+            "scheduling dominates).  alpha ≈ 1 = linear in corpus size;",
+            "alpha well below 1 = still fixed-cost-dominated at sf0.1;",
+            "alpha clearly above 1 would flag a pair/shuffle blowup that",
+            "100 TB would amplify catastrophically.",
         ),
-        " ",
-    )
-    frac = 0.30 + 0.07 * ((F.col("doc_id") + F.col("k")) % 10)
-    cut = F.when(F.col("k") == 0, F.length(salted)).otherwise(
-        F.greatest(F.lit(40), F.round(F.length(salted) * frac).cast("int"))
-    )
-    inflated = (
-        docs.crossJoin(copies)
-        .select(
-            (F.col("doc_id") * 1000 + F.col("g") * 10 + F.col("k")).alias(
-                "doc_id"
-            ),
-            F.concat(
-                F.substring(salted, 1, cut),
-                F.lit(" zv"),
-                F.col("k").cast("string"),
-            ).alias("text"),
-            "lang",
-            "source",
-        )
-        .withColumn("n_chars", F.length("text").cast("long"))
-    )
-    inflated.repartition(64, "doc_id").write.mode("overwrite").parquet(out)
-    return SF100_DIR
-
-
-def main() -> int:
-    quick = "--quick" in sys.argv[1:]
-    decade = "--decade" in sys.argv[1:]
-    decade2 = "--decade2" in sys.argv[1:]
-    decade3 = "--decade3" in sys.argv[1:]
-    max_alpha = None
-    if "--max-alpha" in sys.argv[1:]:
-        # Validate BEFORE the expensive probe path: a missing or
-        # non-numeric value must exit with usage, not IndexError after
-        # Spark spins up (r9 advice).
-        idx = sys.argv.index("--max-alpha") + 1
-        try:
-            max_alpha = float(sys.argv[idx])
-        except (IndexError, ValueError):
-            print(
-                "usage: scale_probe.py [--quick] [--max-alpha FLOAT]",
-                file=sys.stderr,
-            )
-            return 2
-    sfs = SFS[:-1] if quick else SFS
-    import __spark_entry__ as entrymod
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.session import get_spark
-
-    # decade3 runs a 5M-doc shuffle on a ~94 GB-usable disk: zstd
-    # shuffle/spill compression (~2× smaller than lz4) is the
-    # difference between fitting and ENOSPC (first attempt filled the
-    # disk with 54 GB of lz4 blockmgr files).  Opt-in via env so the
-    # default probe session stays identical to the bench's.
-    extra = {}
-    codec = os.environ.get("SCALE_PROBE_CODEC")
-    if codec:
-        extra["spark.io.compression.codec"] = codec
-    spark = get_spark("scale_probe", extra_conf=extra)
-    # same JVM warm-up rationale as bench.py: don't bill first-plan
-    # codegen to the first probe
-    spark.range(1000).count()
-    queries = entrymod.queries()
-
-    if decade3:
-        name = "dedup_prefix_jaccard_join"
-        sf10_dir = build_sf10(spark)
-        pts3: dict[str, float] = {}
-        # base point: same min-of-2 cold protocol as decade2, same
-        # session, so both points share JVM/box state
-        best = math.inf
-        for _ in range(2):
-            common.clear_caches()
-            t0 = time.perf_counter()
-            queries[name](spark, sf10_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        pts3["sf10_synth"] = round(best, 3)
-        print(f"  sf10_synth {name}: {best:.2f}s", file=sys.stderr)
-        sf100_dir = build_sf100(spark)
-        common.clear_caches()
-        t0 = time.perf_counter()
-        queries[name](spark, sf100_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        pts3["sf100_synth"] = round(time.perf_counter() - t0, 3)
-        print(f"  sf100_synth {name}: {pts3['sf100_synth']:.2f}s",
-              file=sys.stderr)
-        common.clear_caches()
-        a3 = math.log10(pts3["sf100_synth"] / pts3["sf10_synth"])
-        sec = [
-            "## Third extended decade — synthetic sf100 (r12)",
-            "",
-            "5M docs: 100 replica groups × 10 variants per sf0.1 doc",
-            "(build_sf100 — the build_sf10 construction scaled 10×;",
-            "family size stays ~10, true output linear).  Single cold",
-            "point per the r11 verdict; the sf10 base point is",
-            "min-of-2 cold in the same session.  With the earlier",
-            "decades this gives FOUR measured decades (sf0.01 → sf100,",
-            "a 10,000× span) for the flagship chain.",
-            "",
-            "| operator | t(sf10_synth) | t(sf100_synth) | alpha(10→100) |",
-            "|---|---|---|---|",
-            f"| {name} | {pts3['sf10_synth']} | {pts3['sf100_synth']} "
-            f"| {a3:.2f} |",
-            "",
-        ]
-        # ADVICE r12: evaluate the alpha gate BEFORE touching
-        # SCALING.md, and annotate the section with the gate outcome so
-        # a failing run never silently mutates the scaling record
-        gate_failed = max_alpha is not None and a3 > max_alpha
-        if gate_failed:
-            sec.append(
-                f"GATE FAILED: alpha {a3:.2f} > --max-alpha {max_alpha}"
-            )
-            sec.append("")
-        out = os.path.join(REPO, "SCALING.md")
-        body = ""
-        if os.path.exists(out):
-            with open(out) as fh:
-                body = fh.read()
-            marker = "## Third extended decade"
-            if marker in body:
-                body = body[: body.index(marker)].rstrip() + "\n"
-        # guard against a missing/empty prior body producing leading
-        # blank lines (ADVICE r12)
-        prefix = body.rstrip() + "\n\n" if body.strip() else ""
-        with open(out, "w") as fh:
-            fh.write(prefix + "\n".join(sec))
-        print(f"appended third extended decade to {out}", file=sys.stderr)
-        if gate_failed:
-            print(
-                f"FAIL: decade3 alpha exceeds {max_alpha}: {a3:.2f}",
-                file=sys.stderr,
-            )
-            return 1
-        if max_alpha is not None:
-            print(
-                f"decade3 alpha gate OK: {a3:.2f} <= {max_alpha}",
-                file=sys.stderr,
-            )
-        return 0
-
-    if decade2:
-        sf1_dir = build_sf1(spark)
-        sf10_dir = build_sf10(spark)
-        pts: dict[str, dict[str, float]] = {n: {} for n in DECADE2_PROBES}
-        for label, d in (("sf1_synth", sf1_dir), ("sf10_synth", sf10_dir)):
-            for name in DECADE2_PROBES:
-                best = math.inf
-                for _ in range(2):
-                    common.clear_caches()
-                    t0 = time.perf_counter()
-                    queries[name](spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                pts[name][label] = round(best, 3)
-                print(f"  {label} {name}: {best:.2f}s", file=sys.stderr)
-        common.clear_caches()
-        sec = [
-            "## Second extended decade — synthetic sf10 (r10)",
-            "",
-            "500k docs: 10 replica groups × 10 variants per sf0.1 doc,",
-            "groups diverged by salting every 7th token so near-dup",
-            "FAMILY SIZE stays ~10 while the corpus grows 100× (true",
-            "output scales linearly — the fit measures the algorithm,",
-            "not an output-size artifact).  With the first decade this",
-            "gives THREE measured decades (sf0.01 → sf10, a 1000×",
-            "span) for the flagship dedup chains.",
-            "",
-            "| operator | t(sf1_synth) | t(sf10_synth) | alpha(1→10) |",
-            "|---|---|---|---|",
-        ]
-        a2: dict[str, float] = {}
-        for name in DECADE2_PROBES:
-            t = pts[name]
-            a2[name] = math.log10(t["sf10_synth"] / t["sf1_synth"])
-            sec.append(
-                f"| {name} | {t['sf1_synth']} | {t['sf10_synth']} "
-                f"| {a2[name]:.2f} |"
-            )
-        sec.append("")
-        out = os.path.join(REPO, "SCALING.md")
-        body = ""
-        tail = ""
-        if os.path.exists(out):
-            with open(out) as fh:
-                body = fh.read()
-            # preserve a '## Third extended decade' section that
-            # follows this one (same class as the r11 --decade fix)
-            marker3 = "## Third extended decade"
-            if marker3 in body:
-                tail = body[body.index(marker3):]
-                body = body[: body.index(marker3)]
-            marker = "## Second extended decade"
-            if marker in body:
-                body = body[: body.index(marker)].rstrip() + "\n"
-        with open(out, "w") as fh:
-            fh.write(body.rstrip() + "\n\n" + "\n".join(sec))
-            if tail:
-                fh.write("\n" + tail)
-        print(f"appended second extended decade to {out}", file=sys.stderr)
-        if max_alpha is not None:
-            over = {n: round(a, 2) for n, a in a2.items() if a > max_alpha}
-            if over:
-                print(
-                    f"FAIL: decade2 alpha exceeds {max_alpha}: {over}",
-                    file=sys.stderr,
-                )
-                return 1
-            print(
-                f"decade2 alpha gate OK: max {max(a2.values()):.2f} "
-                f"<= {max_alpha}",
-                file=sys.stderr,
-            )
-        return 0
-
-    if decade:
-        sf1_dir = build_sf1(spark)
-        points: dict[str, dict[str, float]] = {n: {} for n in DECADE_PROBES}
-        for label, d in (("sf0.1", "/root/testdata/sf0.1"),
-                         ("sf1_synth", sf1_dir)):
-            for name in DECADE_PROBES:
-                best = math.inf
-                for _ in range(2):
-                    common.clear_caches()
-                    t0 = time.perf_counter()
-                    queries[name](spark, d).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    best = min(best, time.perf_counter() - t0)
-                points[name][label] = round(best, 3)
-                print(f"  {label} {name}: {best:.2f}s", file=sys.stderr)
-        common.clear_caches()
-        sec = [
-            "## Extended decade — synthetic sf1 (r9 verdict #5)",
-            "",
+        # one per family whose scale posture matters: NB, TF-IDF,
+        # relational agg/join, sessionization, dedup banding and
+        # prefix join, ANN, LM scoring, retrieval, the multimodal Arrow
+        # boundary, the keep-list capstone and the quadratic-risk
+        # candidate generators
+        (
+            "nb_confusion",
+            "tfidf_scores",
+            "rel_pricing_summary",
+            "rel_waiting_suppliers",
+            "events_sessions",
+            "dedup_minhash_pairs",
+            "dedup_prefix_jaccard_join",
+            "sim_topk_lsh",
+            "text_lm_score",
+            "text_bm25_topk",
+            "mm_pair_manifest",
+            "pipe_training_corpus",
+            "er_fuzzy_pairs",
+            "dedup_simhash_pairs",
+            "text_contamination_bloom",
+            "sim_topk_ivf",
+        ),
+        tuple(
+            (sf, os.path.join(TESTDATA, sf), 2)
+            for sf in ("sf0.001", "sf0.01", "sf0.1")
+        ),
+    ),
+    "decade": Section(
+        "## Extended decade — synthetic sf1 (r9 verdict #5)",
+        (
             "10× inflation of sf0.1 documents AND embeddings (50k docs",
             "/ 20k vectors; varied per-copy lengths, shared prefixes,",
             "exact-dup + perturbed embedding variants = real near-dup",
@@ -532,159 +267,185 @@ def main() -> int:
             "the decade where candidate growth starts to dominate,",
             "probed for EVERY quadratic-risk candidate-generation",
             "family.  Same min-of-2 cold protocol.",
-            "",
-            "| operator | t(sf0.1) | t(sf1_synth) | alpha(0.1→1) |",
-            "|---|---|---|---|",
-        ]
-        d_alphas: dict[str, float] = {}
-        for name in DECADE_PROBES:
-            t = points[name]
-            d_alphas[name] = math.log10(t["sf1_synth"] / t["sf0.1"])
-            sec.append(
-                f"| {name} | {t['sf0.1']} | {t['sf1_synth']} "
-                f"| {d_alphas[name]:.2f} |"
-            )
-        sec.append("")
-        out = os.path.join(REPO, "SCALING.md")
-        body = ""
-        tail = ""
-        if os.path.exists(out):
-            with open(out) as fh:
-                body = fh.read()
-            # a --decade rerun replaces ONLY its own section: preserve
-            # any '## Second extended decade' section that follows it
-            # (r11 self-review — the r10 code truncated at the first
-            # marker and silently erased the second section, the same
-            # class the base-writer fix closed)
-            for marker2 in (
-                "## Second extended decade",
-                "## Third extended decade",
-            ):
-                if marker2 in body:
-                    tail = body[body.index(marker2):]
-                    body = body[: body.index(marker2)]
-                    break
-            marker = "## Extended decade"
-            if marker in body:
-                body = body[: body.index(marker)].rstrip() + "\n"
-        with open(out, "w") as fh:
-            fh.write(body.rstrip() + "\n\n" + "\n".join(sec))
-            if tail:
-                fh.write("\n" + tail)
-        print(f"appended extended decade to {out}", file=sys.stderr)
-        if max_alpha is not None:
-            over = {
-                n: round(a, 2) for n, a in d_alphas.items() if a > max_alpha
-            }
-            if over:
-                print(
-                    f"FAIL: decade alpha exceeds {max_alpha}: {over}",
-                    file=sys.stderr,
-                )
-                return 1
-            print(
-                f"decade alpha gate OK: max {max(d_alphas.values()):.2f} "
-                f"<= {max_alpha}",
-                file=sys.stderr,
-            )
-        return 0
-    times: dict[str, dict[str, float]] = {n: {} for n in PROBES}
-    for sf in sfs:
-        sf_dir = f"/root/testdata/{sf}"
-        for name in PROBES:
-            fn = queries[name]
-            best = math.inf
-            for _ in range(2):
-                # clear BEFORE every run: the probe measures the COLD
-                # cost including each operator's memoized build steps —
-                # min-of-2 of warm runs would time cache reads, whose
-                # flatness says nothing about data scaling
-                common.clear_caches()
-                t0 = time.perf_counter()
-                # full-plan noop write, same forcing function as
-                # bench.py — .count() would let Catalyst PRUNE the
-                # expensive value expressions (measured: text_lm_score
-                # "cold" under count() was 0.3 s vs 1.3 s real)
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            times[name][sf] = round(best, 3)
-            print(f"  {sf} {name}: {best:.2f}s", file=sys.stderr)
-    common.clear_caches()
+        ),
+        (
+            "er_fuzzy_pairs",
+            "dedup_prefix_jaccard_join",
+            "dedup_minhash_pairs",
+            "dedup_simhash_pairs",
+            "text_bm25_topk",
+            "sim_topk_lsh",
+            "dedup_embedding_pairs",
+            "mm_pair_manifest",
+            "pipe_training_corpus",
+        ),
+        (("sf0.1", SF01, 2), ("sf1_synth", build_sf1, 2)),
+    ),
+    "decade2": Section(
+        "## Second extended decade — synthetic sf10 (r10)",
+        (
+            "500k docs: 10 replica groups × 10 variants per sf0.1 doc,",
+            "groups diverged by salting every 7th token so near-dup",
+            "FAMILY SIZE stays ~10 while the corpus grows 100× (true",
+            "output scales linearly — the fit measures the algorithm,",
+            "not an output-size artifact).  With the first decade this",
+            "gives THREE measured decades (sf0.01 → sf10, a 1000×",
+            "span) for the flagship dedup chains.",
+        ),
+        (
+            "dedup_prefix_jaccard_join",
+            "dedup_minhash_pairs",
+            "dedup_jaccard_pairs",
+            "dedup_containment_pairs",
+        ),
+        (("sf1_synth", build_sf1, 2), ("sf10_synth", _sf10, 2)),
+    ),
+    # a 5M-doc shuffle: zstd shuffle/spill compression (~2× smaller
+    # than lz4) is what fits the local disk (lz4 hit ENOSPC)
+    "decade3": Section(
+        "## Third extended decade — synthetic sf100 (r12)",
+        (
+            "5M docs: 100 replica groups × 10 variants per sf0.1 doc",
+            "(build_replicas — the sf10 construction scaled 10×;",
+            "family size stays ~10, true output linear).  Single cold",
+            "point per the r11 verdict; the sf10 base point is",
+            "min-of-2 cold in the same session.  With the earlier",
+            "decades this gives FOUR measured decades (sf0.01 → sf100,",
+            "a 10,000× span) for the flagship chain.",
+        ),
+        ("dedup_prefix_jaccard_join",),
+        (("sf10_synth", _sf10, 2), ("sf100_synth", _sf100, 1)),
+        {"spark.io.compression.codec": "zstd"},
+    ),
+}
 
+
+def _short(label: str) -> str:
+    return label.removeprefix("sf").removesuffix("_synth")
+
+
+def render(
+    sec: Section, times: dict[str, dict[str, float]], max_alpha: float | None
+) -> tuple[str, dict[str, float], dict[str, float]]:
+    """The section's markdown, its fitted alphas and the alphas over
+    ``max_alpha`` (the gate; a failure is annotated in the text)."""
+    labels = [p[0] for p in sec.points]
+    small, big = labels[-2:]
     lines = [
-        "# SCALING — measured wall-time curves across the 100× SF span",
+        sec.heading,
         "",
-        "Generated by `python tools/scale_probe.py` (min-of-2 of COLD",
-        "runs per point — caches cleared before every run, so each",
-        "point pays the operator's full cost including memoized build",
-        "steps).  `alpha` is the fitted exponent of t ∝ size^alpha",
-        "over the sf0.01 → sf0.1 decade — the sf0.001 column is shown",
-        "for the fixed-cost floor but not fitted (at that size task",
-        "scheduling dominates).  alpha ≈ 1 = linear in corpus size;",
-        "alpha well below 1 = still fixed-cost-dominated at sf0.1;",
-        "alpha clearly above 1 would flag a pair/shuffle blowup that",
-        "100 TB would amplify catastrophically.",
+        *sec.prose,
         "",
-        "| operator | t(sf0.001) | t(sf0.01) | t(sf0.1) | alpha(0.01→0.1) |",
-        "|---|---|---|---|---|",
+        "| operator | "
+        + " | ".join(f"t({lb})" for lb in labels)
+        + f" | alpha({_short(small)}→{_short(big)}) |",
+        "|---" * (len(labels) + 2) + "|",
     ]
     alphas: dict[str, float] = {}
-    for name in PROBES:
+    for name in sec.probes:
         t = times[name]
         a = ""
-        if "sf0.01" in t and "sf0.1" in t and t["sf0.01"] > 0:
-            alphas[name] = math.log10(t["sf0.1"] / t["sf0.01"])
+        if small in t and big in t and t[small] > 0:
+            alphas[name] = math.log10(t[big] / t[small])
             a = f"{alphas[name]:.2f}"
         lines.append(
-            f"| {name} | {t.get('sf0.001', '')} | {t.get('sf0.01', '')} "
-            f"| {t.get('sf0.1', '')} | {a} |"
+            "| " + " | ".join([name, *(str(t.get(lb, "")) for lb in labels), a])
+            + " |"
         )
     lines.append("")
-    out = os.path.join(REPO, "SCALING.md")
-    # a base (non --decade) run rewrites the file — preserve any
-    # previously-appended extended-decade sections instead of silently
-    # erasing them until someone re-runs --decade/--decade2 (ADVICE
-    # r10): carry every line from the first '## Extended decade' /
-    # '## Second extended decade' heading onward.
-    preserved = []
-    if os.path.exists(out):
-        with open(out) as fh:
-            old = fh.readlines()
-        for i, ln in enumerate(old):
-            if ln.startswith(
-                (
-                    "## Extended decade",
-                    "## Second extended decade",
-                    "## Third extended decade",
-                )
-            ):
-                preserved = old[i:]
-                print(
-                    "preserving existing extended-decade section(s) "
-                    f"({len(preserved)} lines)",
-                    file=sys.stderr,
-                )
-                break
-    with open(out, "w") as fh:
-        fh.write("\n".join(lines))
-        if preserved:
-            # blank separator line before the first preserved heading —
-            # the decade appenders write one, so a base rewrite must
-            # not produce whitespace churn in the committed artifact
-            fh.write("\n" + "".join(preserved))
-    print(f"wrote {out}", file=sys.stderr)
-    if max_alpha is not None:
-        over = {n: round(a, 2) for n, a in alphas.items() if a > max_alpha}
-        if over:
-            print(
-                f"FAIL: fitted alpha exceeds {max_alpha}: {over}",
-                file=sys.stderr,
-            )
-            return 1
-        print(f"alpha gate OK: max {max(alphas.values()):.2f} "
-              f"<= {max_alpha}", file=sys.stderr)
+    over = {
+        n: round(a, 2)
+        for n, a in alphas.items()
+        if max_alpha is not None and a > max_alpha
+    }
+    if over:
+        lines += [f"GATE FAILED: alpha > --max-alpha {max_alpha}: {over}", ""]
+    return "\n".join(lines), alphas, over
+
+
+def _chunks(body: str) -> list[str]:
+    """SCALING.md split at its ``#``/``##`` headings, each chunk without
+    the blank line that separates it from the next."""
+    starts = [m.start() for m in re.finditer(r"^#{1,2} ", body, re.M)]
+    if body.strip() and (not starts or starts[0]):
+        starts.insert(0, 0)
+    ends = starts[1:] + [len(body)]
+    return [body[a:b].rstrip("\n") for a, b in zip(starts, ends)]
+
+
+def write_section(path: str, heading: str, text: str) -> None:
+    """Replace the section of ``path`` whose heading starts like
+    ``heading`` (up to " — ") with ``text``; every other section keeps
+    its text and order.  A section not yet in the file goes before the
+    first section that ``SECTIONS`` lists after it."""
+    body = ""
+    if os.path.exists(path):
+        with open(path) as fh:
+            body = fh.read()
+    order = [s.heading.split(" — ")[0] + " " for s in SECTIONS.values()]
+
+    def rank(text: str) -> int:
+        return next((i for i, m in enumerate(order) if text.startswith(m)), -1)
+
+    chunks = _chunks(body)
+    ranks = [rank(c) for c in chunks]
+    mine = rank(heading)
+    if mine in ranks:
+        chunks[ranks.index(mine)] = text.rstrip("\n")
+    else:
+        at = next((i for i, r in enumerate(ranks) if r > mine), len(chunks))
+        chunks.insert(at, text.rstrip("\n"))
+    with open(path, "w") as fh:
+        fh.write("\n\n".join(chunks) + "\n")
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n", 1)[0])
+    mode = ap.add_mutually_exclusive_group()
+    mode.add_argument(
+        "--quick", action="store_true", help="base curve without the sf0.1 point"
+    )
+    for key in ("decade", "decade2", "decade3"):
+        mode.add_argument(
+            f"--{key}",
+            dest="mode",
+            action="store_const",
+            const=key,
+            help=SECTIONS[key].heading.lstrip("# "),
+        )
+    ap.add_argument("--max-alpha", type=float, help="exit 1 above this alpha")
+    args = ap.parse_args(argv)
+    sec = SECTIONS[args.mode or "base"]
+    points = sec.points[:-1] if args.quick else sec.points
+
+    import __spark_entry__ as entrymod
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.session import get_spark
+
+    spark = get_spark("scale_probe", extra_conf=dict(sec.conf))
+    warm_up(spark, SF01)
+    queries = entrymod.queries()
+
+    times: dict[str, dict[str, float]] = {n: {} for n in sec.probes}
+    for label, where, runs in points:
+        sf_dir = where(spark) if callable(where) else where
+        for name in sec.probes:
+            common.clear_caches()
+            run_s, _ = measure(lambda: force(queries[name](spark, sf_dir)), runs)
+            times[name][label] = round(min(run_s), 3)
+            print(f"  {label} {name}: {min(run_s):.2f}s", file=sys.stderr)
+    common.clear_caches()
+
+    text, alphas, over = render(sec, times, args.max_alpha)
+    write_section(SCALING, sec.heading, text)
+    print(f"wrote {sec.heading.split(' — ')[0]!r} in {SCALING}", file=sys.stderr)
+    if over:
+        print(f"FAIL: alpha exceeds {args.max_alpha}: {over}", file=sys.stderr)
+        return 1
+    if args.max_alpha is not None and alphas:
+        print(
+            f"alpha gate OK: max {max(alphas.values()):.2f} <= {args.max_alpha}",
+            file=sys.stderr,
+        )
     return 0
 
 

@@ -2,9 +2,10 @@
 (VERDICT r12 #2): stream_interval_join / stream_outer_join /
 stream_upsert_view, the largest unadjudicated bench cost (~10 s).
 
-Replays each bench probe exactly as bench.py does (same landing
-zone, same probe-scale shuffle partitions for the joins) for K laps,
-capturing every micro-batch's StreamingQueryProgress durationMs map
+Replays the bench's own probe thunks (``streaming_bench_entries``:
+same landing zones, same probe-scale shuffle partitions for the joins)
+for K laps, reading the ``recentProgress`` each thunk returns:
+every micro-batch's StreamingQueryProgress durationMs map
 (triggerExecution, addBatch, getBatch, queryPlanning, walCommit,
 commitOffsets, latestOffset) and the state-operator metrics — the
 same instrumentation the r12 pyds probe used (BENCH_NOTES r12).
@@ -28,9 +29,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 
-def _progress(q) -> list[dict]:
+def _batches(progress) -> list[dict]:
     out = []
-    for p in q.recentProgress:
+    for p in progress:
         d = p if isinstance(p, dict) else json.loads(p.json)
         out.append(
             {
@@ -57,6 +58,10 @@ def _progress(q) -> list[dict]:
     return out
 
 
+JOIN_PROBES = ("stream_interval_join", "stream_outer_join")
+OTHER_PROBES = ("stream_upsert_view",)
+
+
 def main() -> int:
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
         DEFAULT_SF_DIR,
@@ -69,102 +74,27 @@ def main() -> int:
     args = ap.parse_args()
     if not os.path.isdir(args.sf_dir):
         ap.error(f"sf_dir {args.sf_dir!r} is not a directory")
-    sf_dir, laps = args.sf_dir, args.laps
-    parts_list = args.parts.split(",") if args.parts else None
 
+    from bench import warm_up
     from text_sentiment_analysis_in_hadoop_and_spark_spark.session import (
         get_spark,
     )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.benchprobes import (
         PROBE_PARTS,
-    )
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.joins import (
-        attribution_stream,
-        unconverted_stream,
-    )
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.latest import (
-        latest_state_stream,
+        streaming_bench_entries,
     )
 
     spark = get_spark("stream_phase_probe")
-    spark.range(1000).count()
-
-    workdir = tempfile.mkdtemp(prefix="tsa_phase_probe_")
-    events_land = os.path.join(workdir, "events_land")
-    os.makedirs(events_land, exist_ok=True)
-    os.symlink(
-        os.path.join(sf_dir, "events.parquet"),
-        os.path.join(events_land, "events.parquet"),
-    )
-
-    def interval_join():
-        q = (
-            attribution_stream(spark, events_land)
-            .writeStream.format("memory")
-            .queryName("probe_attrib")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = _progress(q)
-            q.stop()
-            spark.catalog.dropTempView("probe_attrib")
-        return prog
-
-    def outer_join():
-        q = (
-            unconverted_stream(spark, events_land)
-            .writeStream.format("memory")
-            .queryName("probe_unconv")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = _progress(q)
-            q.stop()
-            spark.catalog.dropTempView("probe_unconv")
-        return prog
-
-    def upsert_view():
-        emitted: list[int] = []
-        q = (
-            latest_state_stream(spark, events_land)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda df, _id: emitted.append(df.count()))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = _progress(q)
-            q.stop()
-        return prog
-
-    join_probes = {
-        "stream_interval_join": interval_join,
-        "stream_outer_join": outer_join,
-    }
-    other_probes = {"stream_upsert_view": upsert_view}
+    warm_up(spark, args.sf_dir)
 
     results: dict[str, list] = {}
 
-    def run(name, fn, parts: str | None):
-        before = spark.conf.get("spark.sql.shuffle.partitions")
-        if parts is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-        try:
-            t0 = time.perf_counter()
-            prog = fn()
-            wall = round(time.perf_counter() - t0, 3)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", before)
-        label = f"{name}@{parts}" if parts else name
+    def run(label: str, thunk) -> None:
+        t0 = time.perf_counter()
+        prog = _batches(thunk())
+        wall = round(time.perf_counter() - t0, 3)
         results.setdefault(label, []).append({"wall": wall, "batches": prog})
-        tot = {}
+        tot: dict[str, int] = {}
         for b in prog:
             for k, v in (b.get("durationMs") or {}).items():
                 tot[k] = tot.get(k, 0) + (v or 0)
@@ -174,18 +104,25 @@ def main() -> int:
             file=sys.stderr,
         )
 
+    parts_list = args.parts.split(",") if args.parts else [PROBE_PARTS]
+    workdir = tempfile.mkdtemp(prefix="tsa_phase_probe_")
     try:
-        for lap in range(laps):
+        # one probe set (own landing zones) per join partition count
+        probe_sets = {}
+        for parts in parts_list:
+            sub = os.path.join(workdir, f"p{parts}")
+            os.makedirs(sub)
+            probe_sets[parts] = streaming_bench_entries(
+                spark, args.sf_dir, sub, join_parts=parts
+            )
+        for lap in range(args.laps):
             print(f"-- lap {lap}", file=sys.stderr)
-            if parts_list:
-                for parts in parts_list:
-                    for name, fn in join_probes.items():
-                        run(name, fn, parts)
-            else:
-                for name, fn in join_probes.items():
-                    run(name, fn, PROBE_PARTS)  # the bench's probe scale
-                for name, fn in other_probes.items():
-                    run(name, fn, None)
+            for parts, probes in probe_sets.items():
+                for name in JOIN_PROBES:
+                    run(f"{name}@{parts}", probes[name])
+            if not args.parts:
+                for name in OTHER_PROBES:
+                    run(name, probe_sets[PROBE_PARTS][name])
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
