@@ -9,7 +9,7 @@ Output contract:
 - stdout, second-to-last line: the FULL record
   ``{"metric": "total_wall_sec", "value": N, "unit": "sec",
   "queries": {...}, "min_of_k": {...}, "memo_built": {...},
-  "failed": 0, "sf": 0.1, ...}``
+  "codegen_compiles": {...}, "failed": 0, "sf": 0.1, ...}``
 - stdout, LAST line: a compact summary WITHOUT the per-query maps,
   small enough that any tail capture parses it.
 - ``bench_queries.json`` and ``bench_queries_rNN.json`` next to this
@@ -21,7 +21,10 @@ Entries whose first run exceeds ``MIN_OF_K_THRESHOLD_SEC`` run
 ``MIN_OF_K`` times in all; ``min_of_k`` holds their minimum and
 ``value_min_of_k`` sums it with first runs elsewhere.  ``memo_built``
 maps an entry to the number of ``@memo`` entries its first run built
-(nonzero counts only).
+(nonzero counts only).  ``codegen_compiles`` maps an entry to the
+number of generated classes Spark compiled during all its runs (driver
+and tasks share the JVM in local mode; nonzero counts only): an entry
+whose classes are still in the codegen cache compiles none.
 
 The rerun rule: a rerun pays the memo builds its first run paid.
 Before each rerun, :func:`measure` releases exactly the memo entries
@@ -63,6 +66,17 @@ def force(df) -> None:
     """Run the full plan without materializing rows on the driver
     (``.count()`` would let Catalyst prune the value expressions)."""
     df.write.format("noop").mode("overwrite").save()
+
+
+def codegen_compiles() -> int:
+    """Generated classes compiled so far in this process's JVM (0 when
+    no JVM runs yet)."""
+    from pyspark import SparkContext
+
+    if SparkContext._jvm is None:
+        return 0
+    metrics = SparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
 
 
 def warm_up(spark, sf_dir: str) -> None:
@@ -116,17 +130,22 @@ def measure(
 
 
 def timed(rec: dict, name: str, thunk, runs: int = MIN_OF_K) -> None:
-    """Measure one bench entry into ``rec``'s ``queries``, ``min_of_k``
-    and ``memo_built`` maps; an exception from any run records -1."""
+    """Measure one bench entry into ``rec``'s ``queries``, ``min_of_k``,
+    ``memo_built`` and ``codegen_compiles`` maps; an exception from any
+    run records -1."""
+    compiled = codegen_compiles()
     try:
         times, built = measure(thunk, runs, MIN_OF_K_THRESHOLD_SEC)
     except Exception as e:  # noqa: BLE001
         print(f"  {name}: FAILED {type(e).__name__}: {e}", file=sys.stderr)
         rec["queries"][name] = -1.0
         return
+    compiled = codegen_compiles() - compiled
     rec["queries"][name] = round(times[0], 3)
     if built:
         rec["memo_built"][name] = built
+    if compiled:
+        rec["codegen_compiles"][name] = compiled
     note = ""
     if len(times) > 1:
         rec["min_of_k"][name] = round(min(times), 3)
@@ -177,7 +196,9 @@ def main() -> int:
     spark = get_spark("tsa_bench")
     warm_up(spark, sf_dir)
 
-    rec: dict[str, dict] = {"queries": {}, "min_of_k": {}, "memo_built": {}}
+    rec: dict[str, dict] = {
+        "queries": {}, "min_of_k": {}, "memo_built": {}, "codegen_compiles": {}
+    }
     for group in _groups(entrymod._MODULE_ORDER):
         for mod in group:
             family = mod.__name__.rsplit(".", 1)[-1]

@@ -120,6 +120,22 @@ def test_bench_diff_comparable_pct():
     )
 
 
+def test_bench_diff_refuses_a_cross_dataset_ratio(tmp_path, capsys):
+    """An sf0.01 run against an sf0.1 record is a ratio of two
+    datasets, not a round-over-round change: no percent is stamped,
+    and the per-entry diff says so first."""
+    old = {**_rec({"a": 10.0, "b": 4.0}), "sf": 0.1}
+    new = {**_rec({"a": 6.0, "b": 2.0}), "sf": 0.01}
+    assert bd.comparable_pct(old, new) is None
+    assert bd.comparable_pct(old, {**new, "sf": 0.1}) == -42.9
+    po, pn = tmp_path / "old.json", tmp_path / "new.json"
+    po.write_text(json.dumps(old))
+    pn.write_text(json.dumps(new))
+    assert bd.main(["bench_diff.py", str(po), str(pn)]) == 0
+    first = capsys.readouterr().out.splitlines()[0]
+    assert first.startswith("warning: sf 0.1 vs sf 0.01")
+
+
 def test_rotation_padding_is_oldest_green_first():
     """Once the backlog no longer fills the window, padding re-proves
     the OLDEST green rows first (ties by registration order) — pinned

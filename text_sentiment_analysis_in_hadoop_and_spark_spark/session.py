@@ -11,6 +11,13 @@ At 100 TB scale the same settings hold: AQE coalesces/splits skewed
 shuffle partitions, `spark.sql.files.maxPartitionBytes` bounds scan
 task size, and the UTC session timezone keeps timestamp semantics
 engine-portable.
+
+Config set here, for every caller (bench, perfbench, tools, tests):
+shuffle partitions (``SPARK_GRAFT_CPUS``), AQE with partition coalescing
+and skew-join splitting, UTC session time zone, parquet nanosecond
+timestamps read as long, Arrow for pandas conversion, no UI, the driver
+heap (``SPARK_DRIVER_MEM``), and a codegen cache sized to the engine's
+working set of generated classes.  ``extra_conf`` overrides any of them.
 """
 
 from __future__ import annotations
@@ -52,6 +59,13 @@ def get_spark(
         # declared ONCE here instead of mutated mid-session by readers
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # one pass of the perfbench workloads compiles ~123 (sentiment)
+        # and ~178 (dedup/retrieval) generated classes, and the cache key
+        # holds the class loader, so each stage is cached twice (driver
+        # and tasks).  At the default 100 entries LRU evicts each class
+        # before the next pass reuses it and every pass recompiles it;
+        # static conf, so it is set before getOrCreate
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
     )

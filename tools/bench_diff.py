@@ -47,7 +47,10 @@ def comparable_pct(old: dict, new: dict) -> float | None:
     verdict adjudicated by hand; bench.py now stamps it into the
     artifact at close — r8 verdict item 6 — so the judge's ratio no
     longer depends on which same-round run landed last).  None when
-    the rounds share no entries."""
+    the rounds share no entries, or ran at different scale factors
+    (``sf``): a ratio of two datasets is not a round-over-round change."""
+    if old.get("sf") != new.get("sf"):
+        return None
     oq = {k for k, v in old.get("queries", {}).items() if v >= 0}
     nq = {k for k, v in new.get("queries", {}).items() if v >= 0}
     common = oq & nq
@@ -64,6 +67,11 @@ def main(argv: list[str]) -> int:
         return 2
     old = json.load(open(argv[1]))
     new = json.load(open(argv[2]))
+    if old.get("sf") != new.get("sf"):
+        print(
+            f"warning: sf {old.get('sf')} vs sf {new.get('sf')}: different "
+            "datasets, the deltas below are not a round-over-round change"
+        )
     oq = {k: v for k, v in old["queries"].items() if v >= 0}
     nq = {k: v for k, v in new["queries"].items() if v >= 0}
 
