@@ -166,9 +166,30 @@ def test_materialized_sources_are_removed_on_eviction(
     common.clear_caches(SF_DIR)
 
 
-def _hand_written_memos(tree: ast.Module) -> list[str]:
+# Module-level private flags that pick one of several plans kept A/B
+# losers alive next to the plan that runs; none may come back.
+_ALLOWED_SWITCHES = {
+    "_FORCE_STRING_FALLBACK",  # test hook: runs the hash-collision fallback
+}
+
+
+def _is_plan_switch(name: str, value: ast.expr | None) -> bool:
+    return (
+        name.startswith("_")
+        and name.isupper()
+        and name not in _ALLOWED_SWITCHES
+        and isinstance(value, ast.Constant)
+        and (
+            isinstance(value.value, bool)
+            or (isinstance(value.value, str) and value.value.isidentifier())
+        )
+    )
+
+
+def _guard_findings(tree: ast.Module, memos: bool) -> list[str]:
+    """Plan switches anywhere; with ``memos``, hand-written memos too."""
     found = []
-    for node in ast.walk(tree):
+    for node in ast.walk(tree) if memos else []:
         if isinstance(node, ast.ImportFrom) and any(
             a.name == "register_cache" for a in node.names
         ):
@@ -185,21 +206,28 @@ def _hand_written_memos(tree: ast.Module) -> list[str]:
             else []
         )
         for t in targets:
-            if isinstance(t, ast.Name) and t.id.endswith(("_CACHE", "_DIRS")):
+            if not isinstance(t, ast.Name):
+                continue
+            if memos and t.id.endswith(("_CACHE", "_DIRS")):
                 found.append(f"line {node.lineno}: module-level {t.id}")
+            if _is_plan_switch(t.id, node.value):
+                found.append(f"line {node.lineno}: plan switch {t.id}")
     return found
 
 
 def test_no_hand_written_memos_outside_common():
+    # memo dicts may live only in common.py; plan switches nowhere
     offenders = {}
-    skip = os.path.abspath(common.__file__)
+    common_path = os.path.abspath(common.__file__)
     for root, _, files in os.walk(PACKAGE):
         for name in files:
             path = os.path.join(root, name)
-            if not name.endswith(".py") or path == skip:
+            if not name.endswith(".py"):
                 continue
             with open(path, encoding="utf-8") as fh:
-                found = _hand_written_memos(ast.parse(fh.read()))
+                found = _guard_findings(
+                    ast.parse(fh.read()), memos=path != common_path
+                )
             if found:
                 offenders[os.path.relpath(path, PACKAGE)] = found
     assert not offenders, offenders

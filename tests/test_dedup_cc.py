@@ -1,8 +1,10 @@
 """Connected-components dedup clustering (operators/dedup.py):
 verified near-dup pairs resolve into clusters labeled by component-min
-doc_id; docs with no verified pair stay singletons.  Transitive
-closure on a real multi-hop component is pinned by the recursive-CTE
-oracle parity at sf0.01 (a 3-member cluster exists there)."""
+doc_id; docs with no verified pair stay singletons, and min-label
+propagation runs to convergence however deep the component is.
+Transitive closure on a real multi-hop component is pinned by the
+recursive-CTE oracle parity at sf0.01 (a 3-member cluster exists
+there)."""
 
 from __future__ import annotations
 
@@ -10,6 +12,7 @@ from pyspark.sql import functions as F
 
 from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.dedup import (
     JACCARD_DUP_MIN,
+    connected_components,
     q_dedup_clusters,
     q_jaccard_pairs,
 )
@@ -48,66 +51,17 @@ def test_chain_merges_and_singletons_stay(spark, tmp_path):
     assert got == {1: 1, 2: 1, 3: 1, 4: 4}
 
 
-def test_star_cc_equals_propagation_on_random_graphs(spark):
-    import random
-
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    rng = random.Random(7)
-    edges = [
-        (rng.randrange(60), rng.randrange(60)) for _ in range(80)
-    ]
-    edges = [(a, b) for a, b in edges if a != b]
-    pairs = spark.createDataFrame(edges, "doc_a LONG, doc_b LONG")
-    prop = {
-        r["node"]: r["label"]
-        for r in connected_components(pairs).collect()
-    }
-    star = {
-        r["node"]: r["label"]
-        for r in connected_components_star(pairs).collect()
-    }
-    assert star == prop
-
-
-def test_star_cc_resolves_deep_chain_in_few_rounds(spark):
-    """A 120-node path has diameter 119 — min-label propagation needs
-    ~119 rounds (far past CC_MAX_ITERS); star alternation collapses it
-    within its default O(log n) round budget."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    n = 120
+def test_propagation_converges_on_a_chain_deeper_than_25_hops(spark):
+    """A 40-node path has diameter 39: min-label propagation needs 39
+    rounds to carry label 0 to the far end.  The loop runs until no
+    label drops, so every node must come back labelled 0 — a loop
+    capped at 25 rounds returns label 7 for node 32."""
+    n = 40
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a LONG, doc_b LONG"
     )
     got = {
         r["node"]: r["label"]
-        for r in connected_components_star(pairs, max_rounds=12).collect()
+        for r in connected_components(pairs).collect()
     }
     assert got == {i: 0 for i in range(n)}
-
-
-def test_star_cc_exhausted_budget_still_one_row_per_node(spark):
-    """ADVICE r4: when max_rounds is exhausted before the edge set
-    reaches star form, the result must still be well-formed — exactly
-    one (node, label) row per node (labels may be unconverged upper
-    bounds, like the propagation variant's degradation mode)."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.dedup import (
-        connected_components_star,
-    )
-
-    n = 200  # deep path; 1 round cannot reach star form
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "doc_a LONG, doc_b LONG"
-    )
-    rows = connected_components_star(pairs, max_rounds=1).collect()
-    assert len(rows) == n
-    assert len({r["node"] for r in rows}) == n  # no conflicting dupes
-    # labels are valid upper bounds: label <= node, and label is a node
-    nodes = {r["node"] for r in rows}
-    assert all(r["label"] <= r["node"] and r["label"] in nodes for r in rows)

@@ -27,6 +27,7 @@ in functions/hashing.py exists precisely so both engines agree).
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -519,16 +520,20 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 JACCARD_DUP_MIN = 0.5  # verified-pair threshold for cluster edges
-CC_MAX_ITERS = 25      # safety bound; real convergence is diameter-fast
 
 
-def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Generic connected components over an undirected pair table
     ``(doc_a, doc_b)`` — returns ``(node, label)`` with label = the
     component-min node id.  Reusable for ANY near-dup pair family
     (text Jaccard here; embedding-cosine pairs from
     operators/similarity.py have the same shape).  See
     :func:`q_dedup_clusters` for the scale contract.
+
+    Each round is min-label propagation; labels only ever drop, so
+    the loop always terminates, and it runs until no label drops:
+    rounds = the largest component's diameter (+1 to see no change),
+    with no cap.
 
     Lineage discipline (the r4 bench caught this at 27 s/sf0.1):
     every round materializes via ``localCheckpoint`` rather than
@@ -564,7 +569,7 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
         .select("node", F.col("node").alias("label"))
         .localCheckpoint(eager=False)
     )
-    for _ in range(max_iters):
+    while True:
         prop = labels.join(edges, labels.node == edges.src).select(
             F.col("dst").alias("node"), "label"
         )
@@ -588,104 +593,10 @@ def connected_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> Dat
     return labels
 
 
-def connected_components_star(
-    pairs: DataFrame, max_rounds: int = 20
-) -> DataFrame:
-    """Connected components via large-star / small-star alternation
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    the adversarial-depth upgrade the plain min-label propagation
-    documents: propagation needs diameter rounds (a 10⁶-node chain
-    needs 10⁶ shuffles), this converges in O(log n) rounds on ANY
-    graph shape.  Near-dup clusters are shallow so propagation wins on
-    constants there; use THIS when the pair graph's shape is untrusted
-    (adversarial corpora, transitive-link chains).
-
-    Each round is two groupBy-min + join passes over the current edge
-    set (which only shrinks toward the star form), with the same
-    ``localCheckpoint`` lineage discipline as the propagation variant.
-
-    - large-star: every node links its LARGER neighbors to its
-      current minimum (min over neighborhood ∪ self).
-    - small-star: every node links its smaller-or-equal neighbors and
-      itself to that minimum.
-
-    Converged when the directed (hi → lo) edge set stops changing;
-    the stars then point every node at its component min.  Returns
-    (node, label) like :func:`connected_components`."""
-    # canonical directed form: hi --> lo
-    edges = (
-        pairs.select(
-            F.greatest("doc_a", "doc_b").alias("hi"),
-            F.least("doc_a", "doc_b").alias("lo"),
-        )
-        .filter(F.col("hi") != F.col("lo"))
-        .distinct()
-        .localCheckpoint()
-    )
-    all_nodes = (
-        edges.select(F.col("hi").alias("node"))
-        .union(edges.select(F.col("lo").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    for _ in range(max_rounds):
-        # ---- large-star ----
-        bidir = edges.select(
-            F.col("hi").alias("u"), F.col("lo").alias("v")
-        ).union(edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")))
-        mins = bidir.groupBy("u").agg(F.min("v").alias("mn")).select(
-            "u", F.least(F.col("mn"), F.col("u")).alias("m")
-        )
-        ls = (
-            bidir.join(mins, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(
-                F.col("v").alias("hi"), F.col("m").alias("lo")
-            )
-            .filter(F.col("hi") != F.col("lo"))
-            .distinct()
-        )
-        # ---- small-star over the large-star output ----
-        mins2 = ls.groupBy("hi").agg(F.min("lo").alias("mn")).select(
-            "hi", F.least(F.col("mn"), F.col("hi")).alias("m")
-        )
-        ss = (
-            ls.join(mins2, "hi")
-            .select(F.col("lo").alias("n"), F.col("m"))
-            .union(mins2.select(F.col("hi").alias("n"), F.col("m")))
-            .filter(F.col("n") != F.col("m"))
-            .select(
-                F.greatest("n", "m").alias("hi"), F.least("n", "m").alias("lo")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        diff = (
-            ss.exceptAll(edges).limit(1).count()
-            + edges.exceptAll(ss).limit(1).count()
-        )
-        edges = ss
-        if diff == 0:
-            break
-    # ADVICE r4: if max_rounds exhausts before star form, a node can
-    # still carry edges to several 'lo' targets — aggregate min per
-    # node so the result is one (node, label) row regardless (an
-    # unconverged min is still a valid upper-bound label, matching the
-    # propagation variant's degradation mode instead of emitting
-    # conflicting duplicate rows).
-    labels = edges.groupBy(F.col("hi").alias("node")).agg(
-        F.min("lo").alias("label")
-    )
-    return all_nodes.join(labels, "node", "left").select(
-        "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
-    )
-
-
 @memo
 def _cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Converged (node, label) over the verified text near-dup pairs,
-    memoized per (session, sf_dir) — the iteration's intermediates are
-    unpersisted in-loop; only the final labels table stays cached."""
+    memoized per (session, sf_dir)."""
     jac = q_jaccard_pairs(spark, sf_dir).filter(
         F.col("jaccard") >= JACCARD_DUP_MIN
     )
@@ -996,11 +907,10 @@ def q_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     singletons in one final left join.  Each round is min-label
     propagation (join labels→edges, groupBy min) — rounds needed =
     component diameter, and near-dup clusters are shallow (dup
-    groups, not social graphs).  For adversarially deep graphs the
-    standard upgrade is large-star/small-star (O(log n) rounds);
-    the per-round convergence check is a scalar `count`, the one
-    driver-side relay.  Per-round DataFrames are cached and the
-    predecessor evicted, so lineage stays one round deep."""
+    groups, not social graphs).  The per-round convergence check is a
+    scalar `count`, the one driver-side relay; it also materializes
+    that round's lazy ``localCheckpoint``, so lineage stays one round
+    deep (see :func:`connected_components`)."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id")
     labels = _cc_labels(spark, sf_dir)
     return docs.join(
@@ -1430,39 +1340,6 @@ PREFIX_JACCARD_T = 0.5
 # posting, never per candidate pair.
 SUFFIX_FILTER_CAP = 32
 
-# How okarr reaches the posting rows (r12 A/B — BENCH_NOTES r12):
-# "window" projects it onto every pre-filter row via an unbounded
-# collect_list frame (the r11 plan — the measured WINNER and the
-# default); "slice_join" builds the per-doc array once from the
-# pos <= CAP slice of the window output and joins it to the prefix
-# rows (the A/B loser — kept live as the equivalence twin).
-# Both are exact and lossless; tests pin identical output.
-_OKARR_STRATEGY = "window"
-
-# Materialize the prefix posting frame once so the candidate
-# self-join's two branches don't each re-evaluate the window subtree
-# (r12 A/B — see the inline comment at the persist site).
-_PREFIX_PERSIST = True
-
-# Conjoin the scan-free bound2 pre-gate ahead of the le-scan suffix
-# bound — semantically a no-op either way (bound2 ≥ suffix_bound, so
-# the conjunction prunes identically).  The r12 interleaved A/B at
-# sf10 measured NO wall-clock win (min-of-3 44.6 s off vs 47.3 s on,
-# laps split): codegen subexpression elimination evaluates the shared
-# array_intersect eagerly and the HOF le-scan is CodegenFallback, so
-# the And never short-circuits the cost away.  Default off; kept as
-# an executable record of the attempted lever (BENCH_NOTES r12).
-_SUFFIX_PREGATE = False
-
-
-# test hooks (r12): when _COUNT_CANDIDATES is set, the candidate-stage
-# row count of the last q_prefix_jaccard_join build lands here — the
-# strategy-equivalence test pins it across okarr strategies (a
-# weakened suffix bound is invisible in the lossless OUTPUT but not in
-# the candidate cardinality)
-_COUNT_CANDIDATES = False
-_LAST_CAND_COUNT: int | None = None
-
 
 def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT all-pairs Jaccard ≥ t similarity join WITHOUT the
@@ -1506,12 +1383,12 @@ def q_prefix_jaccard_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # memoized (r5): the EXACT truth table feeds three consumers (itself,
 # the LSH S-curve, the method-agreement eval) — cached like every
 # other pair artifact here.  The entry also holds the prefix posting
-# frame persisted on the way (None when _PREFIX_PERSIST is off), so
-# clear_caches releases it with the table.
+# frame persisted on the way, so clear_caches releases it with the
+# table.
 @memo
 def _prefix_join(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame | None]:
+) -> tuple[DataFrame, DataFrame]:
     sh = _shingles_cached(spark, sf_dir)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     df_tab = sh.groupBy("shingle").agg(F.count("*").alias("df"))
@@ -1558,7 +1435,7 @@ def _prefix_join(
         .join(sizes, "doc_id")
         .withColumn("pos", F.row_number().over(w))
     )
-    if use_okey and _OKARR_STRATEGY == "window":
+    if use_okey:
         # SUFFIX-BOUND arrays (r11, the PPJoin+ suffix-filter role):
         # each posting row carries its doc's first min(n, CAP) okeys —
         # a downward-closed PREFIX of the whole doc in the global
@@ -1566,11 +1443,12 @@ def _prefix_join(
         # ranking already shuffles on.  COST (measured, BENCH_NOTES
         # r11 stage breakdown): the unbounded collect_list frame
         # projects the CAP-long array onto EVERY pre-filter posting
-        # row — ~4.6 GB transient at the sf10 synthetic.  The
-        # "slice_join" twin below tried to avoid that projection and
-        # LOST the interleaved sf10 A/B (53.4 s vs 46.6 s — AQE never
-        # reuses the window exchange, see its comment), so THIS path
-        # is the measured winner and the default.
+        # row — ~4.6 GB transient at the sf10 synthetic.  Building the
+        # array once per doc from the `pos <= CAP` slice and joining it
+        # to the prefix rows instead LOST the interleaved sf10 A/B
+        # (BENCH_NOTES r12, min-of-3 53.4 s vs 46.6 s): AQE never
+        # reuses the window exchange across the two consumers, so the
+        # whole posting subtree re-evaluates for the array branch.
         ranked = ranked.withColumn(
             "okarr",
             F.slice(
@@ -1583,68 +1461,30 @@ def _prefix_join(
         F.col("pos")
         <= F.col("n_sh") - F.ceil(F.lit(PREFIX_JACCARD_T) * F.col("n_sh")) + 1
     )
-    if use_okey and _OKARR_STRATEGY == "slice_join":
-        # SLICE-JOIN okarr (r12, the A/B LOSER — kept live as the
-        # equivalence twin; BENCH_NOTES r12): okarr is a PER-DOC value
-        # (the doc's first min(n, CAP) okeys in the global order), so
-        # this variant builds it once per doc from the `pos <= CAP`
-        # slice of the SAME window output — BEFORE the prefix cut, so
-        # the arrays keep their full CAP length (the index prefix at
-        # t=0.5 is ~n/2+1 < CAP for median docs; a truncated array,
-        # while still lossless, loses the pruning power the CAP was
-        # sized for) — and attaches it to the prefix rows by a doc_id
-        # join.  The hypothesis was that skipping the per-row array
-        # projection (the r11 plan's ~4.6 GB transient) would win; the
-        # interleaved same-JVM A/B at the sf10 synthetic measured the
-        # OPPOSITE (min-of-3: 53.4 s vs 46.6 s for window+persist):
-        # AQE never reuses the window exchange across the two
-        # consumers, so the whole posting subtree — including a second
-        # WindowGroupLimit sort — re-evaluates for the okarr branch,
-        # costing more than the projection it avoids.
-        okarrs = (
-            ranked.filter(F.col("pos") <= SUFFIX_FILTER_CAP)
-            .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_list("okey")).alias("okarr"))
-        )
-        ranked = (
-            ranked.filter(prefix_cut)
-            .select(
-                "doc_id",
-                F.col("okey").alias("jkey"),
-                "pos",
-                "n_sh",
-            )
-            .join(okarrs, "doc_id")
-        )
-    else:
-        ranked = ranked.filter(prefix_cut).select(
-            "doc_id",
-            (F.col("okey") if use_okey else F.col("shingle")).alias("jkey"),
-            "pos",
-            "n_sh",
-            *(["okarr"] if use_okey else []),
-        )
-    postings = None
-    if _PREFIX_PERSIST:
-        # The prefix frame feeds BOTH sides of the candidate self-join
-        # (probe a + index b), and without materialization Spark
-        # evaluates the whole posting subtree — shingle⋈df join,
-        # doc_id window sort, okarr projection — TWICE (the r11 plan:
-        # 2× Window over 17.4M rows at the sf10 synthetic; AQE's
-        # ReusedExchange does not fire across the self-join branches
-        # because the broadcast/probe shapes differ).  Persisting the
-        # ~n/2-row prefix frame runs it ONCE: interleaved same-JVM A/B
-        # at sf10 (BENCH_NOTES r12), min-of-3 51.7 → 46.6 s, persist
-        # ≤ no-persist on every lap — the dual window evaluation costs
-        # ~10% end-to-end, bounded by the verify/candidate stages that
-        # dominate the chain.
-        # serialized level, not the deserialized default: the okarr
-        # arrays deserialize to 2-3× their packed size, and this frame
-        # only exists to be scanned twice — packed longs keep the
-        # ~2.6 GB sf10 footprint from crowding an 8 GB local heap
-        from pyspark import StorageLevel
-
-        ranked = postings = ranked.persist(StorageLevel.MEMORY_AND_DISK)
+    ranked = ranked.filter(prefix_cut).select(
+        "doc_id",
+        (F.col("okey") if use_okey else F.col("shingle")).alias("jkey"),
+        "pos",
+        "n_sh",
+        *(["okarr"] if use_okey else []),
+    )
+    # The prefix frame feeds BOTH sides of the candidate self-join
+    # (probe a + index b), and without materialization Spark
+    # evaluates the whole posting subtree — shingle⋈df join,
+    # doc_id window sort, okarr projection — TWICE (the r11 plan:
+    # 2× Window over 17.4M rows at the sf10 synthetic; AQE's
+    # ReusedExchange does not fire across the self-join branches
+    # because the broadcast/probe shapes differ).  Persisting the
+    # ~n/2-row prefix frame runs it ONCE: interleaved same-JVM A/B
+    # at sf10 (BENCH_NOTES r12), min-of-3 51.7 → 46.6 s, persist
+    # ≤ no-persist on every lap — the dual window evaluation costs
+    # ~10% end-to-end, bounded by the verify/candidate stages that
+    # dominate the chain.
+    # serialized level, not the deserialized default: the okarr
+    # arrays deserialize to 2-3× their packed size, and this frame
+    # only exists to be scanned twice — packed longs keep the
+    # ~2.6 GB sf10 footprint from crowding an 8 GB local heap
+    ranked = postings = ranked.persist(StorageLevel.MEMORY_AND_DISK)
     t = float(PREFIX_JACCARD_T)
     # ASYMMETRIC prefixes (Xiao et al., PPJoin): `ranked` holds the
     # INDEX prefix (n − ⌈t·n⌉ + 1 — valid because a true pair's
@@ -1745,25 +1585,7 @@ def _prefix_join(
         suffix_bound = F.size(
             F.array_intersect("okarr_s", "okarr_l")
         ) + F.least(F.col("n_s") - le_s, F.col("n_l") - le_l)
-        # SCAN-FREE PRE-GATE (r12): bound2 = intersect + (n_m − sz_m)
-        # where m is the smaller-max side — its ≤θ count is its full
-        # array size, so no lambda scan at all.  bound2 ≥ suffix_bound
-        # always (n_m − sz_m = n_m − le_m ≥ min(n_s − le_s, n_l −
-        # le_l)), so conjoining it changes NOTHING semantically; its
-        # value is evaluation order: And short-circuits per row in
-        # codegen, so the per-occurrence le lambda scan — the r11
-        # profile's HOF cost center — runs only on the ~20% of
-        # occurrences that survive the free gate (sf10 measured:
-        # bound2 alone leaves 10.8M distinct candidates of the 59.1M
-        # unfiltered; suffix_bound then cuts those to the same 1.78M
-        # as before — counts pinned load-free, BENCH_NOTES r12).
-        tail_m = F.when(
-            max_s <= max_l, F.col("n_s") - F.size("okarr_s")
-        ).otherwise(F.col("n_l") - F.size("okarr_l"))
-        bound2 = F.size(F.array_intersect("okarr_s", "okarr_l")) + tail_m
         suffix_keep = suffix_bound >= alpha - F.lit(1e-9)
-        if _SUFFIX_PREGATE:
-            suffix_keep = (bound2 >= alpha - F.lit(1e-9)) & suffix_keep
     else:
         suffix_keep = F.lit(True)
     cands = (
@@ -1799,13 +1621,6 @@ def _prefix_join(
         )
         .distinct()
     )
-    if _COUNT_CANDIDATES:
-        # test hook (r12): candidate-stage cardinality, the metric the
-        # strategy-equivalence test compares — a weakened suffix bound
-        # (e.g. okarr truncated by building it post-prefix-cut) keeps
-        # the OUTPUT identical (lossless) but inflates this count
-        global _LAST_CAND_COUNT
-        _LAST_CAND_COUNT = cands.count()
     # ARRAY verify (r10): the old verify expanded every candidate by
     # its postings (Σ n_a rows — ~200M at the synthetic sf1 for 6.6M
     # candidates) through TWO wide shuffles and a pair groupBy.  Each
