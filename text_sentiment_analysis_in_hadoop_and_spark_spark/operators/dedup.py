@@ -322,7 +322,6 @@ def verify_jaccard(
     sf_dir: str,
     pairs: DataFrame,
     shingles_a: DataFrame | None = None,
-    shingles_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for an ARBITRARY (doc_a, doc_b) pair
     table — the verify stage, shared by the full-corpus pair query
@@ -330,20 +329,15 @@ def verify_jaccard(
     intersections for the candidate pairs only; sizes attach via two
     doc_id-keyed joins.
 
-    ``shingles_a`` / ``shingles_b`` override the (doc_id, shingle)
-    source per pair side; both default to the corpus documents table.
-    The incremental-ingest probe passes its arrival batch's OWN
-    shingles as ``shingles_a`` — an arrival whose doc_id is absent
-    from the corpus table would otherwise lose every candidate pair
-    in the inner size/intersection joins and be admitted even as an
-    exact duplicate (ADVICE r4)."""
-    sh = (
-        _shingles_cached(spark, sf_dir)
-        if shingles_a is None or shingles_b is None
-        else None
-    )
-    sh_a = shingles_a if shingles_a is not None else sh
-    sh_b = shingles_b if shingles_b is not None else sh
+    ``shingles_a`` overrides the (doc_id, shingle) source of the
+    ``doc_a`` side; it defaults to the corpus documents table, which
+    is always the ``doc_b`` side.  The incremental-ingest probe passes
+    its arrival batch's OWN shingles as ``shingles_a`` — an arrival
+    whose doc_id is absent from the corpus table would otherwise lose
+    every candidate pair in the inner size/intersection joins and be
+    admitted even as an exact duplicate (ADVICE r4)."""
+    corpus = _shingles_cached(spark, sf_dir)
+    corpus_only = shingles_a is None
     # ARRAY verify (r10, same shape as the prefix-filter join): each
     # side's shingle set packs into one sorted array, the pair joins
     # pull both arrays, and array_intersect computes |A∩B| JVM-side —
@@ -360,25 +354,21 @@ def verify_jaccard(
     # shingles) keep strings: their batch side isn't covered by the
     # corpus bijection proof, and adding a per-micro-batch check would
     # put a blocking job in the stream path.
-    same = sh_b is sh_a
     key_col = (
         F.xxhash64("shingle")
-        if same
-        and shingles_a is None
+        if corpus_only
         and not _FORCE_STRING_FALLBACK
         and _corpus_hash_bijective(spark, sf_dir)
         else F.col("shingle")
     )
-    arrs_a = sh_a.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set(key_col)).alias("arr")
-    )
-    arrs_b = (
-        arrs_a
-        if same
-        else sh_b.groupBy("doc_id").agg(
+
+    def arrays(sh: DataFrame) -> DataFrame:
+        return sh.groupBy("doc_id").agg(
             F.sort_array(F.collect_set(key_col)).alias("arr")
         )
-    )
+
+    arrs_b = arrays(corpus)
+    arrs_a = arrs_b if corpus_only else arrays(shingles_a)
     ni = F.size(F.array_intersect("arr_a", "arr_b")).cast("long")
     return (
         pairs.join(

@@ -32,6 +32,27 @@ def _cnt(label: int, pred: int):
     )
 
 
+def confusion(preds: DataFrame) -> DataFrame:
+    """preds(label, prediction) → the confusion matrix as a tall
+    (label, prediction, n) table (NB.java:250-267,330-341)."""
+    return preds.groupBy("label", "prediction").agg(
+        F.count("*").cast("long").alias("n")
+    )
+
+
+def accuracy(preds: DataFrame) -> DataFrame:
+    """preds(label, prediction) → 1 row of accuracy = (tp+tn)/total
+    and n_test (NB.java:341)."""
+    return preds.agg(
+        F.round(
+            F.sum(F.when(F.col("label") == F.col("prediction"), 1).otherwise(0))
+            / F.count("*"),
+            6,
+        ).alias("accuracy"),
+        F.count("*").cast("long").alias("n_test"),
+    )
+
+
 def weighted_metrics(preds: DataFrame) -> DataFrame:
     """preds(label, prediction) → 1 row of accuracy / weighted P, R, F1."""
     counts = preds.agg(
@@ -59,6 +80,25 @@ def weighted_metrics(preds: DataFrame) -> DataFrame:
         F.round((sup1 * r1 + sup0 * r0) / n, 6).alias("weighted_recall"),
         F.round((sup1 * f1 + sup0 * f0) / n, 6).alias("weighted_f1"),
         n.cast("long").alias("n_test"),
+    )
+
+
+def confusion_sql(preds_sql: str) -> str:
+    """DuckDB twin of :func:`confusion` over a predictions subquery."""
+    return (
+        "WITH preds AS (" + preds_sql + ") "
+        "SELECT label, prediction, CAST(count(*) AS BIGINT) AS n "
+        "FROM preds GROUP BY label, prediction"
+    )
+
+
+def accuracy_sql(preds_sql: str) -> str:
+    """DuckDB twin of :func:`accuracy` over a predictions subquery."""
+    return (
+        "WITH preds AS (" + preds_sql + ") "
+        "SELECT round(sum(CASE WHEN label = prediction THEN 1 ELSE 0 END) "
+        "/ count(*), 6) AS accuracy, CAST(count(*) AS BIGINT) AS n_test "
+        "FROM preds"
     )
 
 

@@ -42,6 +42,14 @@ from .common import (
     train_filter,
     with_ctes,
 )
+from .metrics import (
+    accuracy,
+    accuracy_sql,
+    confusion,
+    confusion_sql,
+    weighted_metrics,
+    weighted_metrics_sql,
+)
 
 WS_SPLIT = r"\s+"  # word-count tokenization, NB.java:80 split("\\s+")
 
@@ -52,8 +60,10 @@ WS_SPLIT = r"\s+"  # word-count tokenization, NB.java:80 split("\\s+")
 
 
 def vocab_counts(train_tokens: DataFrame) -> DataFrame:
-    """A3 — per-word conditional counts (NB.java:103-124).  Catalyst
-    runs this as partial+final hash aggregate (the reference needed an
+    """A3 — per-word conditional counts over (word, label) rows
+    (NB.java:103-124; over the feature-selected (doc, word) rows these
+    are Modified_NB.java:329-378's presence counts).  Catalyst runs
+    this as partial+final hash aggregate (the reference needed an
     explicit combiner for the same effect)."""
     return train_tokens.groupBy("word").agg(
         F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
@@ -65,14 +75,20 @@ def vocab_counts(train_tokens: DataFrame) -> DataFrame:
     )
 
 
-def corpus_stats_df(train_docs: DataFrame, train_tokens: DataFrame) -> DataFrame:
-    """A1/A2 + FEATURES_SIZE counters (NB.java:50,79-85,107).
+# The five per-class corpus counters, in the order ``_class_totals``
+# builds them.
+_TOTALS = ("tweets", "pos_tweets", "neg_tweets", "pos_words", "neg_words")
+
+
+def _class_totals() -> list[Column]:
+    """A1/A2 counters (NB.java:50,79-85) as aggregate Columns over
+    (label, text) rows, one per name in :data:`_TOTALS`.
 
     Quirk preserved: per-class word totals are counted *before* the
     empty-text check, and ``"".split("\\s+")`` has length 1, so a doc
     that cleans to empty still contributes 1 (SURVEY §2.3 A2)."""
     wc = F.size(F.split(F.col("text"), WS_SPLIT))
-    stats = train_docs.agg(
+    return [
         F.count("*").cast("long").alias("tweets"),
         F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
         .cast("long")
@@ -86,33 +102,43 @@ def corpus_stats_df(train_docs: DataFrame, train_tokens: DataFrame) -> DataFrame
         F.sum(F.when(F.col("label") == 0, wc).otherwise(0))
         .cast("long")
         .alias("neg_words"),
-    )
+    ]
+
+
+def corpus_stats_df(train_docs: DataFrame, train_tokens: DataFrame) -> DataFrame:
+    """A1/A2 + FEATURES_SIZE counters (NB.java:50,79-85,107)."""
     vsize = train_tokens.agg(
         F.countDistinct("word").cast("long").alias("vocab_size")
     )
-    return stats.crossJoin(vsize)
+    return train_docs.agg(*_class_totals()).crossJoin(vsize)
+
+
+def log_likelihoods(counts: DataFrame, pos_den, neg_den) -> DataFrame:
+    """Model ``(word, lpw_pos, lpw_neg)`` from per-word class counts:
+    ``lpw_c = ln((count_c(w)+1) / den_c)`` — the Laplace-smoothed
+    multinomial likelihood (NB.java:190-194, Modified_NB.java:443-448)
+    in log-space.  Each chain passes its own denominators (words_c + V):
+    NB an int, the feature-selected chain a float."""
+    return counts.select(
+        "word",
+        F.log((F.col("pos_count") + 1) / F.lit(pos_den)).alias("lpw_pos"),
+        F.log((F.col("neg_count") + 1) / F.lit(neg_den)).alias("lpw_neg"),
+    )
 
 
 def model_for_docs(docs: DataFrame) -> tuple[DataFrame, dict]:
     """Train over an arbitrary cleaned-docs frame (doc_id, label, text):
-    returns (model_df(word, lpw_pos, lpw_neg), stats dict).
-
-    ``lpw_c = ln((count_c(w)+1) / (words_c + V))`` — Laplace-smoothed
-    multinomial likelihood (NB.java:190-194) in log-space.  The six
+    returns (model_df(word, lpw_pos, lpw_neg), stats dict).  The six
     corpus scalars are collected to the driver (the reference's
     Hadoop-Counter→Configuration relay, NB.java:305-316)."""
     train_docs = docs.filter(train_filter())
     train_tokens = doc_tokens(train_docs)
     stats = corpus_stats_df(train_docs, train_tokens).collect()[0].asDict()
     v = stats["vocab_size"]
-    model = vocab_counts(train_tokens).select(
-        "word",
-        F.log((F.col("pos_count") + 1) / F.lit(stats["pos_words"] + v)).alias(
-            "lpw_pos"
-        ),
-        F.log((F.col("neg_count") + 1) / F.lit(stats["neg_words"] + v)).alias(
-            "lpw_neg"
-        ),
+    model = log_likelihoods(
+        vocab_counts(train_tokens),
+        stats["pos_words"] + v,
+        stats["neg_words"] + v,
     )
     return model, stats
 
@@ -127,26 +153,42 @@ def nb_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     return model.cache(), stats
 
 
-def scores_for_docs(docs: DataFrame, model: DataFrame, stats: dict) -> DataFrame:
-    """Score test docs: broadcast-join tokens against the model (J1 —
-    the reference's O(doc·V) HashMap probe, NB.java:230-243, becomes a
-    broadcast hash join), sum logs per doc, add the class prior.
-    Unknown words are skipped (inner-join ≡ the reference's semi-join
-    semantics); docs with no known words fall back to the prior.
+def log_priors(stats: dict) -> tuple[Column, Column]:
+    """NB's class log-priors ``ln(tweets_c / tweets)``, evaluated by
+    Spark (``F.log`` of a literal ratio)."""
+    return (
+        F.log(F.lit(stats["pos_tweets"] / stats["tweets"])),
+        F.log(F.lit(stats["neg_tweets"] / stats["tweets"])),
+    )
+
+
+def log_sums(tokens: DataFrame, model: DataFrame) -> DataFrame:
+    """J1 + the per-doc log-sum: broadcast-join (doc_id, word) tokens
+    against the model (the reference's O(doc·V) HashMap probe,
+    NB.java:230-243) and sum each class's log-likelihoods per doc
+    into ``(doc_id, s_pos, s_neg)``.  Unknown words are skipped
+    (inner join ≡ the reference's semi-join semantics)."""
+    return (
+        tokens.join(F.broadcast(model), "word")
+        .groupBy("doc_id")
+        .agg(F.sum("lpw_pos").alias("s_pos"), F.sum("lpw_neg").alias("s_neg"))
+    )
+
+
+def scores_for_docs(
+    docs: DataFrame, model: DataFrame, prior_pos: Column, prior_neg: Column
+) -> DataFrame:
+    """M8 — score the test split of ``docs``: :func:`log_sums` plus the
+    class log-prior, as (doc_id, label, pos_score, neg_score).  Each
+    caller passes its own log-prior Columns; docs with no known words
+    fall back to the prior.
 
     Docs that clean to empty are scored too: the reference classifies
     every test tweet (Hadoop/NB.java:482-521 — an empty tweet keeps the
     1.0 product, scores prior-only, tie → NEGATIVE) and counts it in
     the confusion counters, so no nonempty filter here (ADVICE r1)."""
     test_docs = docs.filter(test_filter())
-    ttok = doc_tokens(test_docs).select("doc_id", "word")
-    scored = (
-        ttok.join(F.broadcast(model), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("lpw_pos").alias("s_pos"), F.sum("lpw_neg").alias("s_neg"))
-    )
-    prior_pos = F.log(F.lit(stats["pos_tweets"] / stats["tweets"]))
-    prior_neg = F.log(F.lit(stats["neg_tweets"] / stats["tweets"]))
+    scored = log_sums(doc_tokens(test_docs).select("doc_id", "word"), model)
     return (
         test_docs.select("doc_id", "label")
         .join(scored, "doc_id", "left")
@@ -159,22 +201,27 @@ def scores_for_docs(docs: DataFrame, model: DataFrame, stats: dict) -> DataFrame
     )
 
 
-def nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    model, stats = nb_model(spark, sf_dir)
-    return scores_for_docs(labeled_docs(spark, sf_dir), model, stats)
-
-
-def nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """M9 argmax: pos > neg → 1 else 0 (ties → negative, NB.java:250,259)."""
-    s = nb_scores(spark, sf_dir)
-    return s.select(
-        "doc_id",
-        "label",
+def predictions(scores: DataFrame) -> DataFrame:
+    """M9 argmax: pos_score > neg_score → 1 else 0 (ties → NEGATIVE,
+    NB.java:250,259).  The two score columns become ``prediction``;
+    every other column passes through."""
+    keys = [c for c in scores.columns if c not in ("pos_score", "neg_score")]
+    return scores.select(
+        *keys,
         F.when(F.col("pos_score") > F.col("neg_score"), 1)
         .otherwise(0)
         .cast("int")
         .alias("prediction"),
     )
+
+
+def nb_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    model, stats = nb_model(spark, sf_dir)
+    return scores_for_docs(labeled_docs(spark, sf_dir), model, *log_priors(stats))
+
+
+def nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return predictions(nb_scores(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -341,19 +388,13 @@ def q_nb_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_nb_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7 — confusion matrix as a tall table (NB.java:250-267,330-341)."""
-    return (
-        nb_predictions(spark, sf_dir)
-        .groupBy("label", "prediction")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    return confusion(nb_predictions(spark, sf_dir))
 
 
 def q_nb_f1_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8/M7 — accuracy + weighted precision/recall/F1, the Spark
     reference's MulticlassMetrics surface (NB.scala:96-99) as one
     hash aggregate."""
-    from .metrics import weighted_metrics
-
     return weighted_metrics(nb_predictions(spark, sf_dir))
 
 
@@ -380,15 +421,7 @@ def output_for_docs(docs: DataFrame) -> DataFrame:
     ``id@text \\t sentiment`` rows — one Catalyst DAG, used by the
     end-to-end CSV pipeline (sources/csv.py: csv_nb_frontdoor)."""
     model, stats = model_for_docs(docs)
-    scores = scores_for_docs(docs, model, stats)
-    preds = scores.select(
-        "doc_id",
-        "label",
-        F.when(F.col("pos_score") > F.col("neg_score"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("prediction"),
-    )
+    preds = predictions(scores_for_docs(docs, model, *log_priors(stats)))
     return _output_rows(preds, docs)
 
 
@@ -403,15 +436,7 @@ def q_nb_output(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_nb_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 — accuracy = (tp+tn)/total (NB.java:341)."""
-    p = nb_predictions(spark, sf_dir)
-    return p.agg(
-        F.round(
-            F.sum(F.when(F.col("label") == F.col("prediction"), 1).otherwise(0))
-            / F.count("*"),
-            6,
-        ).alias("accuracy"),
-        F.count("*").cast("long").alias("n_test"),
-    )
+    return accuracy(nb_predictions(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -577,27 +602,10 @@ ORACLES: dict[str, str] = {
     "nb_predictions": _PREDS_SQL,
     "nb_predictions_fidelity": _FID_PRED_SQL,
     "nb_output": output_oracle_sql(DOCS_CTE),
-    "nb_confusion": (
-        "WITH preds AS (" + _PREDS_SQL + ") "
-        "SELECT label, prediction, CAST(count(*) AS BIGINT) AS n "
-        "FROM preds GROUP BY label, prediction"
-    ),
-    "nb_accuracy": (
-        "WITH preds AS (" + _PREDS_SQL + ") "
-        "SELECT round(sum(CASE WHEN label = prediction THEN 1 ELSE 0 END) "
-        "/ count(*), 6) AS accuracy, CAST(count(*) AS BIGINT) AS n_test "
-        "FROM preds"
-    ),
+    "nb_confusion": confusion_sql(_PREDS_SQL),
+    "nb_accuracy": accuracy_sql(_PREDS_SQL),
+    "nb_f1_metrics": weighted_metrics_sql(_PREDS_SQL),
 }
-
-
-def _add_f1_oracle() -> None:
-    from .metrics import weighted_metrics_sql
-
-    ORACLES["nb_f1_metrics"] = weighted_metrics_sql(_PREDS_SQL)
-
-
-_add_f1_oracle()
 
 QUERIES = {
     "nb_clean_text": q_clean_text,
@@ -1079,25 +1087,10 @@ def q_nb_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("neg_count"),
     )
-    # ONE stats job: per-fold doc/word contributions × the five
-    # training-vocab sizes (empty-doc quirk preserved — same wc expr
-    # as corpus_stats_df: "".split("\\s+") has length 1)
-    wc = F.size(F.split(F.col("text"), WS_SPLIT))
-    per_fold = docs.groupBy(fold.alias("fold")).agg(
-        F.count("*").cast("long").alias("tweets"),
-        F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("pos_tweets"),
-        F.sum(F.when(F.col("label") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("neg_tweets"),
-        F.sum(F.when(F.col("label") == 1, wc).otherwise(0))
-        .cast("long")
-        .alias("pos_words"),
-        F.sum(F.when(F.col("label") == 0, wc).otherwise(0))
-        .cast("long")
-        .alias("neg_words"),
-    )
+    # ONE stats job: per-fold doc/word contributions (the counters of
+    # corpus_stats_df, empty-doc quirk included) × the five
+    # training-vocab sizes
+    per_fold = docs.groupBy(fold.alias("fold")).agg(*_class_totals())
     in_fold = wf.groupBy("word").agg(
         *[
             F.max(F.when(F.col("fold") == j, 1).otherwise(0)).alias(
@@ -1125,11 +1118,7 @@ def q_nb_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = [r.asDict() for r in per_fold.crossJoin(vocab_row).collect()]
     by_fold = {r["fold"]: r for r in rows}
-    tot = {
-        c: sum(r[c] for r in rows)
-        for c in ("tweets", "pos_tweets", "neg_tweets", "pos_words",
-                  "neg_words")
-    }
+    tot = {c: sum(r[c] for r in rows) for c in _TOTALS}
     # per-arm driver scalars (training stats = totals minus fold k's
     # contribution; rows is empty on an empty documents table — default
     # v=0 so the degenerate input still returns a well-formed zero
@@ -1137,11 +1126,7 @@ def q_nb_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     arm = []
     for k in range(CV_FOLDS):
         fr = by_fold.get(k, {})
-        stats = {
-            c: tot[c] - fr.get(c, 0)
-            for c in ("tweets", "pos_tweets", "neg_tweets", "pos_words",
-                      "neg_words")
-        }
+        stats = {c: tot[c] - fr.get(c, 0) for c in _TOTALS}
         v = rows[0][f"v{k}"] if rows else 0
         n_tw = stats["tweets"]
         arm.append(
@@ -1569,7 +1554,7 @@ def q_nb_null_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
     )
     model, stats = model_for_docs(docs)
-    preds = scores_for_docs(docs, model, stats).select(
+    preds = scores_for_docs(docs, model, *log_priors(stats)).select(
         "label",
         (F.col("pos_score") > F.col("neg_score"))
         .cast("int")

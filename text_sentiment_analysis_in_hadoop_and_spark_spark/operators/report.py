@@ -25,7 +25,7 @@ def classification_report(
 ) -> dict:
     """Print the reference-style report; returns the numbers too."""
     from . import nb, tfidf
-    from .metrics import weighted_metrics
+    from .metrics import confusion, weighted_metrics
 
     t0 = time.perf_counter()
     preds_fn = (
@@ -34,7 +34,7 @@ def classification_report(
     preds = preds_fn(spark, sf_dir)
     conf = {
         (r["label"], r["prediction"]): r["n"]
-        for r in preds.groupBy("label", "prediction").count().withColumnRenamed("count", "n").collect()
+        for r in confusion(preds).collect()
     }
     m = weighted_metrics(preds).collect()[0].asDict()
     dt = time.perf_counter() - t0

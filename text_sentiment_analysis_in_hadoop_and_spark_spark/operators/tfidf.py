@@ -18,7 +18,10 @@ Reference semantics re-expressed (SURVEY §2.3/§2.5/§2.6, all from
       word → doc becomes window shuffles in
       one DAG, no HDFS materialization        Modified_NB.java:530-652
 - then train/score like NB, but counts are per-(doc, word) *presence*
-  (each surviving word counts once per doc)   Modified_NB.java:329-378
+  (each surviving word counts once per doc)   Modified_NB.java:329-378;
+  the likelihood, log-sum scorer, argmax and metrics are NB's own
+  (operators/nb.py: log_likelihoods, scores_for_docs, predictions;
+  operators/metrics.py) — only the features and the prior differ
 
 Fidelity notes:
 - N for the IDF is the NUM_OF_TWEETS counter, incremented per input
@@ -54,10 +57,18 @@ from .common import (
     doc_tokens,
     labeled_docs,
     memo,
-    test_filter,
     train_filter,
     with_ctes,
 )
+from .metrics import (
+    accuracy,
+    accuracy_sql,
+    confusion,
+    confusion_sql,
+    weighted_metrics,
+    weighted_metrics_sql,
+)
+from .nb import log_likelihoods, predictions, scores_for_docs, vocab_counts
 
 
 # --------------------------------------------------------------------------
@@ -158,73 +169,31 @@ def featsel_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
         .collect()[0]
         .asDict()
     )
-    model = (
-        kept.groupBy("word")
-        .agg(
-            F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("pos_count"),
-            F.sum(F.when(F.col("label") == 0, 1).otherwise(0))
-            .cast("long")
-            .alias("neg_count"),
-        )
-        .select(
-            "word",
-            F.log(
-                (F.col("pos_count") + 1)
-                / F.lit(float(stats["pos_words"] + stats["features"]))
-            ).alias("lpw_pos"),
-            F.log(
-                (F.col("neg_count") + 1)
-                / F.lit(float(stats["neg_words"] + stats["features"]))
-            ).alias("lpw_neg"),
-        )
-        .cache()
-    )
+    model = log_likelihoods(
+        vocab_counts(kept),
+        float(stats["pos_words"] + stats["features"]),
+        float(stats["neg_words"] + stats["features"]),
+    ).cache()
     return model, stats
 
 
 def featsel_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Score ALL test docs against the feature-selected model — same
-    broadcast-join + log-sum shape as NB (Modified_NB.java:451-522);
-    empty-cleaning docs score prior-only."""
+    """Score ALL test docs against the feature-selected model with NB's
+    scorer (Modified_NB.java:451-522); empty-cleaning docs score
+    prior-only.  The log-prior is computed driver-side (Python's
+    ``math.log``), unlike NB's ``F.log`` — the two differ in the last
+    bit on some ratios, so each chain keeps its own."""
     model, stats = featsel_model(spark, sf_dir)
-    docs = labeled_docs(spark, sf_dir)
-    test_docs = docs.filter(test_filter())
-    ttok = doc_tokens(test_docs).select("doc_id", "word")
-    scored = (
-        ttok.join(F.broadcast(model), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("lpw_pos").alias("s_pos"), F.sum("lpw_neg").alias("s_neg"))
-    )
-    prior_pos = F.lit(math.log(stats["pos_tweets"] / stats["tweets"]))
-    prior_neg = F.lit(math.log(stats["neg_tweets"] / stats["tweets"]))
-    return (
-        test_docs.select("doc_id", "label")
-        .join(scored, "doc_id", "left")
-        .select(
-            "doc_id",
-            "label",
-            (prior_pos + F.coalesce(F.col("s_pos"), F.lit(0.0))).alias(
-                "pos_score"
-            ),
-            (prior_neg + F.coalesce(F.col("s_neg"), F.lit(0.0))).alias(
-                "neg_score"
-            ),
-        )
+    return scores_for_docs(
+        labeled_docs(spark, sf_dir),
+        model,
+        F.lit(math.log(stats["pos_tweets"] / stats["tweets"])),
+        F.lit(math.log(stats["neg_tweets"] / stats["tweets"])),
     )
 
 
 def featsel_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    s = featsel_scores(spark, sf_dir)
-    return s.select(
-        "doc_id",
-        "label",
-        F.when(F.col("pos_score") > F.col("neg_score"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("prediction"),
-    )
+    return predictions(featsel_scores(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -303,14 +272,7 @@ def q_featsel_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_featsel_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept, _ = featsel(spark, sf_dir)
-    return kept.groupBy("word").agg(
-        F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("pos_count"),
-        F.sum(F.when(F.col("label") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("neg_count"),
-    )
+    return vocab_counts(kept)
 
 
 def q_featsel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -335,29 +297,15 @@ def q_predictions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        featsel_predictions(spark, sf_dir)
-        .groupBy("label", "prediction")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
+    return confusion(featsel_predictions(spark, sf_dir))
 
 
 def q_f1_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .metrics import weighted_metrics
-
     return weighted_metrics(featsel_predictions(spark, sf_dir))
 
 
 def q_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    p = featsel_predictions(spark, sf_dir)
-    return p.agg(
-        F.round(
-            F.sum(F.when(F.col("label") == F.col("prediction"), 1).otherwise(0))
-            / F.count("*"),
-            6,
-        ).alias("accuracy"),
-        F.count("*").cast("long").alias("n_test"),
-    )
+    return accuracy(featsel_predictions(spark, sf_dir))
 
 
 # --------------------------------------------------------------------------
@@ -490,27 +438,10 @@ ORACLES: dict[str, str] = {
         "round(neg_score, 6) AS neg_score FROM fscores"
     ),
     "tfidf_nb_predictions": _FPREDS_SQL,
-    "tfidf_nb_confusion": (
-        "WITH fpreds AS (" + _FPREDS_SQL + ") "
-        "SELECT label, prediction, CAST(count(*) AS BIGINT) AS n "
-        "FROM fpreds GROUP BY label, prediction"
-    ),
-    "tfidf_nb_accuracy": (
-        "WITH fpreds AS (" + _FPREDS_SQL + ") "
-        "SELECT round(sum(CASE WHEN label = prediction THEN 1 ELSE 0 END) "
-        "/ count(*), 6) AS accuracy, CAST(count(*) AS BIGINT) AS n_test "
-        "FROM fpreds"
-    ),
+    "tfidf_nb_confusion": confusion_sql(_FPREDS_SQL),
+    "tfidf_nb_accuracy": accuracy_sql(_FPREDS_SQL),
+    "tfidf_nb_f1_metrics": weighted_metrics_sql(_FPREDS_SQL),
 }
-
-
-def _add_f1_oracle() -> None:
-    from .metrics import weighted_metrics_sql
-
-    ORACLES["tfidf_nb_f1_metrics"] = weighted_metrics_sql(_FPREDS_SQL)
-
-
-_add_f1_oracle()
 
 QUERIES = {
     "tfidf_wordcount": q_wordcount,

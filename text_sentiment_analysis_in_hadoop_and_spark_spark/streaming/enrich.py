@@ -23,9 +23,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windowed import load_events
-
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+from .windowed import events_stream, load_events
 
 
 def _dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,10 +58,7 @@ def enrich_stream(
     """The same join with the fact side as a file stream.  The static
     customer read is a plain batch DataFrame — Spark picks it up
     fresh each micro-batch (slowly-changing dims update for free)."""
-    spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    return _project(stream, _dim(spark, sf_dir))
+    return _project(events_stream(spark, events_dir), _dim(spark, sf_dir))
 
 
 def q_events_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .windowed import WATERMARK, event_ts_col, load_events
+from .windowed import WATERMARK, event_ts_col, events_stream, load_events
 
 ATTRIB_SEC = 1800  # purchase counts for a view seen ≤ 30 min before
 
@@ -84,11 +84,8 @@ def attribution_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     both sides read it independently — in production they would be
     two topics.  The equality key (user_id) plus the two-sided
     event-time range is what lets Spark bound both state stores."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
-
     def side() -> DataFrame:
-        raw = spark.readStream.schema(schema).parquet(events_dir)
+        raw = events_stream(spark, events_dir)
         return raw.withColumn("event_ts", event_ts_col(raw))
 
     views = (
@@ -192,11 +189,8 @@ def unconverted_stream(spark: SparkSession, events_dir: str) -> DataFrame:
 
     State stays bounded exactly as in the inner join; the only cost of
     OUTER is holding left rows until expiry rather than last-match."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
-
     def side() -> DataFrame:
-        raw = spark.readStream.schema(schema).parquet(events_dir)
+        raw = events_stream(spark, events_dir)
         return raw.withColumn("event_ts", event_ts_col(raw))
 
     views = (

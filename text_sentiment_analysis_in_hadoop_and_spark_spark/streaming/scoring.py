@@ -39,33 +39,28 @@ from pyspark.sql.streaming import StreamingQuery
 from ..functions.cleaning import clean_text, explode_tokens, nonempty
 from ..operators import nb
 
+MAX_FILES_PER_TRIGGER = 8  # parquet files per micro-batch
+
 
 def score_docs(model: DataFrame, stats: dict, docs: DataFrame) -> DataFrame:
     """Pure batch scorer: (doc_id, text) → (doc_id, prediction), the
     same clean → tokenize → broadcast-join → log-sum → argmax chain as
     operators/nb.py.  Called per micro-batch by the stream runner and
     directly by batch users."""
-    prior_pos = F.log(F.lit(stats["pos_tweets"] / stats["tweets"]))
-    prior_neg = F.log(F.lit(stats["neg_tweets"] / stats["tweets"]))
+    prior_pos, prior_neg = nb.log_priors(stats)
     cleaned = docs.select(
         "doc_id", clean_text(F.col("text")).alias("text")
     ).filter(nonempty(F.col("text")))
     tokens = cleaned.select(
         "doc_id", explode_tokens(F.col("text")).alias("word")
     )
-    scored = (
-        tokens.join(F.broadcast(model), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("lpw_pos").alias("s_pos"), F.sum("lpw_neg").alias("s_neg"))
-    )
-    return scored.select(
-        "doc_id",
-        F.when(
-            prior_pos + F.col("s_pos") > prior_neg + F.col("s_neg"), 1
+    scored = nb.log_sums(tokens, model)
+    return nb.predictions(
+        scored.select(
+            "doc_id",
+            (prior_pos + F.col("s_pos")).alias("pos_score"),
+            (prior_neg + F.col("s_neg")).alias("neg_score"),
         )
-        .otherwise(0)
-        .cast("int")
-        .alias("prediction"),
     )
 
 
@@ -74,7 +69,6 @@ def start_score_stream(
     docs_dir: str,
     model_sf_dir: str,
     sink: Callable[[DataFrame, int], None],
-    max_files_per_trigger: int = 8,
 ) -> StreamingQuery:
     """Start scoring parquet documents arriving in ``docs_dir`` with
     the model trained in batch from ``model_sf_dir``; each micro-batch
@@ -87,7 +81,7 @@ def start_score_stream(
     schema = spark.read.parquet(docs_dir).schema
     stream = (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(docs_dir)
     )
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .windowed import event_ts_col, load_events
+from .windowed import event_ts_col, events_stream, load_events
 
 GAP_SEC = 1800
 GAP = "30 minutes"
@@ -57,9 +57,7 @@ def sessions_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """Same sessions via the native streaming session_window (gap
     merge + watermark state eviction built in).  ``events_dir`` is a
     file landing zone, as in windowed.py."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(events_dir).schema
-    raw = spark.readStream.schema(schema).parquet(events_dir)
+    raw = events_stream(spark, events_dir)
     stream = raw.withColumn(
         "event_ts", event_ts_col(raw)
     ).withWatermark("event_ts", WATERMARK)

@@ -13,10 +13,8 @@ Why this shape matters at 100 TB: state lives partitioned by group key
 in the state store (RocksDB/HDFS-backed on a real cluster), each
 micro-batch shuffles only its own rows to the key's partition, and the
 pandas function sees one key's Arrow batches at a time — so state size
-is O(distinct keys), not O(stream).  For unbounded key spaces pass
-``idle_timeout_ms`` to evict keys idle longer than the timeout (the
-state-TTL contract; without it an ever-growing key space is the
-streaming analogue of the complete-mode mistake).
+is O(distinct keys), not O(stream).  Keys have no timeout: state is
+kept for every key the stream has seen.
 
 Cross-batch semantics are pinned by tests/test_stateful.py: totals
 emitted after a second file lands must equal batch1+batch2, proving
@@ -31,63 +29,44 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from .windowed import events_stream
+
 OUT_SCHEMA = "event_type STRING, n_events LONG, sum_value DOUBLE"
 STATE_SCHEMA = "n_events LONG, sum_value DOUBLE"
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
 
-def _make_update(idle_timeout_ms: int | None):
-    def update(
-        key: tuple,
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle key: emit nothing further and free its state
-            state.remove()
-            return
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            s += float(pdf["value"].sum())
-        state.update((n, s))
-        if idle_timeout_ms is not None:
-            state.setTimeoutDuration(idle_timeout_ms)
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "n_events": pd.Series([n], dtype="int64"),
-                "sum_value": pd.Series([round(s, 6)], dtype="float64"),
-            }
-        )
-
-    return update
+def _update(
+    key: tuple,
+    pdfs: Iterator[pd.DataFrame],
+    state: GroupState,
+) -> Iterator[pd.DataFrame]:
+    n, s = state.get if state.exists else (0, 0.0)
+    for pdf in pdfs:
+        n += len(pdf)
+        s += float(pdf["value"].sum())
+    state.update((n, s))
+    yield pd.DataFrame(
+        {
+            "event_type": [key[0]],
+            "n_events": pd.Series([n], dtype="int64"),
+            "sum_value": pd.Series([round(s, 6)], dtype="float64"),
+        }
+    )
 
 
-def running_totals_stream(
-    spark: SparkSession,
-    events_dir: str,
-    idle_timeout_ms: int | None = None,
-) -> DataFrame:
+def running_totals_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     """Streaming running (n_events, sum_value) per event_type from a
     parquet landing zone; one updated row per touched key per
     micro-batch."""
-    spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
     return (
-        stream.select("event_type", "value")
+        events_stream(spark, events_dir)
+        .select("event_type", "value")
         .groupBy("event_type")
         .applyInPandasWithState(
-            _make_update(idle_timeout_ms),
+            _update,
             OUT_SCHEMA,
             STATE_SCHEMA,
             "update",
-            timeout,
+            GroupStateTimeout.NoTimeout,
         )
     )

@@ -27,7 +27,8 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from .stateful import _NANOS_CONF, OUT_SCHEMA
+from .stateful import OUT_SCHEMA
+from .windowed import events_stream
 
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
@@ -89,14 +90,12 @@ def running_totals_stream_tws(
     ``transformWithStateInPandas`` — requires the RocksDB state store
     provider (the only backend the new operator supports) and a
     protobuf-capable Python environment (`tws_available()`)."""
-    spark.conf.set(_NANOS_CONF, "true")
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
     )
-    schema = spark.read.parquet(events_dir).schema
-    stream = spark.readStream.schema(schema).parquet(events_dir)
     return (
-        stream.select("event_type", "value")
+        events_stream(spark, events_dir)
+        .select("event_type", "value")
         .groupBy("event_type")
         .transformWithStateInPandas(
             _make_processor(),

@@ -88,6 +88,15 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn("epoch_sec", epoch_sec_col(ev))
 
 
+def events_stream(spark: SparkSession, events_dir: str) -> DataFrame:
+    """``readStream`` over a parquet landing zone of events, with the
+    schema of the files already there and ``ts`` read the way
+    :func:`load_events` reads it (the nanosAsLong conf)."""
+    spark.conf.set(_NANOS_CONF, "true")
+    schema = spark.read.parquet(events_dir).schema
+    return spark.readStream.schema(schema).parquet(events_dir)
+
+
 def windowed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_events(spark, sf_dir)
     return (
@@ -112,9 +121,7 @@ def windowed_stream(spark: SparkSession, events_dir: str) -> DataFrame:
     real landing zone; new files are discovered per micro-batch).
     ``unix_timestamp(window.start)`` equals the batch's integer
     bucket because hour windows align to the epoch."""
-    spark.conf.set(_NANOS_CONF, "true")
-    schema = spark.read.parquet(events_dir).schema
-    raw = spark.readStream.schema(schema).parquet(events_dir)
+    raw = events_stream(spark, events_dir)
     stream = raw.withColumn("event_ts", event_ts_col(raw)).withWatermark(
         "event_ts", WATERMARK
     )
