@@ -63,14 +63,13 @@ def test_memo_applies_defaults_to_the_key(spark):
     assert keys == [(app, SF_DIR, "nb", 0, False)]
 
 
-def test_ivf_assignments_key_on_the_resolved_level(spark):
-    assert len(similarity._centroids(spark, SF_DIR)) < similarity.TWO_LEVEL_MIN_K
+def test_ivf_assignments_is_one_memo_entry(spark):
     a = similarity.ivf_assignments(spark, SF_DIR)
-    b = similarity.ivf_assignments(spark, SF_DIR, two_level=False)
+    b = similarity.ivf_assignments(spark, SF_DIR)
     assert a is b
     app = spark.sparkContext.applicationId
-    keys = [k for k in similarity._ivf_assignments.memo if k[:2] == (app, SF_DIR)]
-    assert keys == [(app, SF_DIR, False)]
+    keys = [k for k in similarity.ivf_assignments.memo if k[:2] == (app, SF_DIR)]
+    assert keys == [(app, SF_DIR)]
 
 
 def test_memo_stores_false_but_not_none(spark, monkeypatch):

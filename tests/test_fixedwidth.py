@@ -8,10 +8,13 @@ from pyspark.sql import functions as F
 from conftest import SF_DIR
 
 from text_sentiment_analysis_in_hadoop_and_spark_spark.sources import fixedwidth
+from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+    register_data_source,
+)
 
 
 def _read(spark):
-    fixedwidth._ensure_registered(spark)
+    register_data_source(spark, fixedwidth.FixedWidthDataSource)
     path = fixedwidth.fixedwidth_path(spark, SF_DIR)
     return spark.read.format("fixedwidth").option("path", path).load()
 

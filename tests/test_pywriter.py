@@ -10,6 +10,9 @@ import pytest
 
 from tests.conftest import SF_DIR
 from text_sentiment_analysis_in_hadoop_and_spark_spark.sources import pywriter
+from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+    register_data_source,
+)
 
 
 def test_commit_publishes_manifest_matching_parts(spark):
@@ -125,7 +128,7 @@ def test_overwrite_mode_is_refused(spark):
     overwrite loudly instead of publishing a duplicate-bearing
     manifest."""
     df = spark.createDataFrame([(1, 10)], "doc_id bigint, n_chars bigint")
-    pywriter.register(spark)
+    register_data_source(spark, pywriter.ManifestSinkDataSource)
     with tempfile.TemporaryDirectory(prefix="tsa_pyw_ow_") as d:
         with pytest.raises(Exception, match="append"):
             (

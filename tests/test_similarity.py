@@ -144,49 +144,6 @@ def test_ivf_centroids_are_kmeans_sized(spark):
     assert ids <= set(range(len(cents)))
 
 
-def test_ivf_two_level_assignment_agrees(spark, planted_dir):
-    """The two-level (coarse→fine) assignment path: every vector gets
-    exactly one centroid, the ids come from the same fine-centroid
-    space, and ≥90% of vectors receive the SAME centroid as the exact
-    one-level assignment (W_PROBE=2 coarse probes; only vectors on a
-    coarse-cell boundary may diverge — an IVF index tolerates that by
-    construction)."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common
-
-    d, _ = planted_dir
-    common.clear_caches(d)
-    try:
-        one = {
-            r["vec_id"]: r["centroid_id"]
-            for r in S.ivf_assignments(spark, d, two_level=False).collect()
-        }
-        two = {
-            r["vec_id"]: r["centroid_id"]
-            for r in S.ivf_assignments(spark, d, two_level=True).collect()
-        }
-        assert set(one) == set(two)
-        k = len(S._centroids(spark, d))
-        assert all(0 <= c < k for c in two.values())
-        agree = sum(one[v] == two[v] for v in one) / len(one)
-        assert agree >= 0.9, agree
-    finally:
-        common.clear_caches(d)
-
-
-def test_ivf_two_level_recall_holds(spark, planted_dir, monkeypatch):
-    """End-to-end recall with the two-level quantizer forced on the
-    whole IVF path (assignments feed the inverted lists)."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import common
-
-    d, expected = planted_dir
-    common.clear_caches(d)
-    monkeypatch.setattr(S, "TWO_LEVEL_MIN_K", 1)
-    try:
-        assert _recall(S.q_sim_topk_ivf(spark, d), expected) >= 0.9
-    finally:
-        common.clear_caches(d)
-
-
 def test_quantize_dequant_error_bound(spark):
     from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.similarity import (
         Q8_SCALE,

@@ -1,39 +1,11 @@
-"""Skew helpers: salted exact countDistinct and the HLL approximate
-document-frequency variant."""
+"""Skew: the HLL approximate document frequency stays within its error
+bound, and AQE splits a skewed join partition at runtime."""
 
 from __future__ import annotations
 
 import __spark_entry__ as entrymod
 
 from conftest import SF_DIR
-
-
-def test_salted_count_distinct_exact(spark):
-    """The salted two-stage plan must equal plain countDistinct."""
-    from pyspark.sql import functions as F
-
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.functions.skew import (
-        salted_count_distinct,
-    )
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.common import (
-        doc_tokens,
-        labeled_docs,
-    )
-
-    tokens = doc_tokens(labeled_docs(spark, SF_DIR))
-    direct = {
-        r["word"]: r["n"]
-        for r in tokens.groupBy("word")
-        .agg(F.countDistinct("doc_id").alias("n"))
-        .collect()
-    }
-    salted = {
-        r["word"]: r["n_distinct"]
-        for r in salted_count_distinct(
-            tokens, ["word"], "doc_id", buckets=8
-        ).collect()
-    }
-    assert salted == direct
 
 
 def test_approx_df_bounded_error(spark):
@@ -49,89 +21,6 @@ def test_approx_df_bounded_error(spark):
     assert set(approx) == set(exact)
     for w, n in exact.items():
         assert abs(approx[w] - n) <= max(1, 0.05 * n), (w, n, approx[w])
-
-
-def test_salted_join_equals_plain_join(spark):
-    from pyspark.sql import functions as F
-
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.functions.skew import (
-        salted_join,
-    )
-
-    # skewed left: one hot key with 5000 rows, 50 cold keys
-    left = spark.range(5000).select(
-        F.lit("hot").alias("k"), F.col("id").alias("lv")
-    ).union(
-        spark.range(50).select(
-            F.concat(F.lit("cold"), F.col("id")).alias("k"),
-            F.col("id").alias("lv"),
-        )
-    )
-    right = spark.createDataFrame(
-        [("hot", 1), ("hot", 2), ("cold7", 3), ("absent", 4)],
-        "k STRING, rv INT",
-    )
-    plain = {
-        (r["k"], r["lv"], r["rv"]) for r in left.join(right, ["k"]).collect()
-    }
-    salted = {
-        (r["k"], r["lv"], r["rv"])
-        for r in salted_join(left, right, ["k"], n_salts=4).collect()
-    }
-    assert salted == plain
-    assert len(plain) == 10001  # 5000*2 hot + 1 cold
-
-    plain_l = left.join(right, ["k"], "left").count()
-    salted_l = salted_join(left, right, ["k"], n_salts=4, how="left").count()
-    assert salted_l == plain_l
-
-
-def test_salted_join_spreads_duplicate_rows(spark):
-    """ADVICE r3: a hot key of EXACT-DUPLICATE rows all hash to one
-    salt under the default (content hash), defeating the spread.
-    ``spread_duplicates=True`` must (a) keep results identical and
-    (b) land the copies on more than one salt."""
-    from pyspark.sql import functions as F
-
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.functions.skew import (
-        salted_join,
-    )
-
-    # 4000 BYTE-IDENTICAL left rows — the pathological shape
-    left = spark.range(4000).select(
-        F.lit("hot").alias("k"), F.lit(1).alias("lv")
-    )
-    right = spark.createDataFrame([("hot", 7), ("hot", 8)], "k STRING, rv INT")
-
-    plain = sorted(
-        (r["k"], r["lv"], r["rv"]) for r in left.join(right, ["k"]).collect()
-    )
-    spread = sorted(
-        (r["k"], r["lv"], r["rv"])
-        for r in salted_join(
-            left, right, ["k"], n_salts=4, spread_duplicates=True
-        ).collect()
-    )
-    assert spread == plain
-    assert len(plain) == 8000
-
-    # default salt: every duplicate shares one bucket; spread salt: >1
-    n_buckets_default = (
-        left.withColumn(
-            "_s", F.pmod(F.xxhash64("k", "lv"), F.lit(4))
-        ).select("_s").distinct().count()
-    )
-    assert n_buckets_default == 1
-    n_buckets_spread = (
-        left.withColumn(
-            "_s",
-            F.pmod(
-                F.xxhash64("k", "lv") + F.monotonically_increasing_id(),
-                F.lit(4),
-            ),
-        ).select("_s").distinct().count()
-    )
-    assert n_buckets_spread > 1
 
 
 def test_aqe_splits_the_skewed_join_partition(spark):

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.cleaning import tokenize
 from ..functions.hashing import hex32, hex32_sql
 from ..sources.tables import load_table
 from .common import memo
@@ -53,10 +54,6 @@ PHONE_RE = r"\+[0-9][0-9\- ]{5,}[0-9]"  # intl-prefixed, ≥7 chars
 CONTAM_K = 5        # token n-gram width for contamination overlap
 BENCH_MOD = 97      # content-hash modulus selecting the benchmark set
 BENCH_RESIDUE = 13  # ~1% of docs play the held-out benchmark
-
-
-def _toks(col: Column) -> Column:
-    return F.split(col, " ")
 
 
 @memo
@@ -87,7 +84,7 @@ def q_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # barrier 1: materialize the token array
     tokd = docs.select(
         "doc_id",
-        F.explode(F.array(_toks(F.col("text")))).alias("toks"),
+        F.explode(F.array(tokenize(F.col("text")))).alias("toks"),
     )
     toks = F.col("toks")
     n = F.size(toks)
@@ -213,7 +210,7 @@ def _gram_rows(docs: DataFrame) -> DataFrame:
     tok_df = docs.select(
         "doc_id",
         member.alias("member"),
-        F.explode(F.array(_toks(F.col("text")))).alias("tk"),
+        F.explode(F.array(tokenize(F.col("text")))).alias("tk"),
     )
     toks = F.col("tk")
     sh = F.when(
@@ -277,7 +274,7 @@ def _bigrams_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the doc_shingles/_gram_rows pitfall)
     base = docs.select(
         "doc_id",
-        F.explode(F.array(_toks(F.col("text")))).alias("tk"),
+        F.explode(F.array(tokenize(F.col("text")))).alias("tk"),
     )
     return (
         base.select(
@@ -659,7 +656,7 @@ def q_source_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     st = (
         docs.select(
-            "source", F.explode(_toks(F.col("text"))).alias("token")
+            "source", F.explode(tokenize(F.col("text"))).alias("token")
         )
         .filter(F.col("token") != "")
         .groupBy("source", "token")
@@ -715,7 +712,7 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     densities are regexp_count/size expressions — a shuffle-free
     narrow map in the Java∩RE2 regex subset, like the PII chain."""
     docs = load_table(spark, sf_dir, "documents")
-    n_words = F.size(F.filter(_toks(F.col("text")), lambda t: t != ""))
+    n_words = F.size(F.filter(tokenize(F.col("text")), lambda t: t != ""))
     n_sent = F.greatest(
         F.regexp_count(F.col("text"), F.lit(r"[.!?]+")), F.lit(1)
     ).cast("long")

@@ -1271,8 +1271,8 @@ def q_join_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-orderkey row-count distribution (avg / p99 / max / top-1-key
     share).  This is the measurement that decides the join strategy at
     scale — a top-1 share near uniform means plain shuffle-hash is
-    fine; a hot key means salting or AQE skew-split (functions/skew.py
-    implements the cure; this query is the diagnosis).
+    fine; a hot key means AQE skew-split (on in session.py; this query
+    is the diagnosis).
 
     Scale: one partial-agg groupBy on the join key, then a 1-row
     summary over the (keys-sized) count table with an exact

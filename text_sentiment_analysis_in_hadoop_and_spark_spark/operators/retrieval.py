@@ -34,15 +34,15 @@ N_QUERY_DOCS = 8
 BM25_TOP_K = 10
 
 
+def _postings(docs: DataFrame) -> DataFrame:
+    """(doc_id, token, tf) over whitespace tokens of ``docs.text``.
 
-def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r12: a session-memoized .cache() of this postings table was
-    # tried and REVERTED — reading the ~750k-row cache once per plan
-    # branch measured SLOWER in the bench (family sum 4.9 -> 7.1 s)
-    # than re-running the pipelined explode+partial-agg, which stays
-    # in whole-stage codegen and feeds the exchanges map-side.
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    postings = (
+    r12: a session-memoized .cache() of this postings table was
+    tried and REVERTED — reading the ~750k-row cache once per plan
+    branch measured SLOWER in the bench (family sum 4.9 -> 7.1 s)
+    than re-running the pipelined explode+partial-agg, which stays
+    in whole-stage codegen and feeds the exchanges map-side."""
+    return (
         docs.select(
             "doc_id", F.explode(F.split("text", " ")).alias("token")
         )
@@ -50,6 +50,20 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id", "token")
         .agg(F.count("*").cast("double").alias("tf"))
     )
+
+
+# DuckDB twin of _postings, the first CTE of both oracles
+_POSTINGS_CTE = (
+    "WITH postings AS (SELECT doc_id, token, "
+    "CAST(count(*) AS DOUBLE) AS tf FROM (SELECT doc_id, "
+    "unnest(string_split(text, ' ')) AS token FROM documents) "
+    "WHERE token <> '' GROUP BY doc_id, token), "
+)
+
+
+def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    postings = _postings(docs)
     dlen = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     scalars = dlen.agg(
         F.count("*").cast("double").alias("n_docs"),
@@ -103,11 +117,7 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES: dict[str, str] = {
-    "text_bm25_topk": (
-        "WITH postings AS (SELECT doc_id, token, "
-        "CAST(count(*) AS DOUBLE) AS tf FROM (SELECT doc_id, "
-        "unnest(string_split(text, ' ')) AS token FROM documents) "
-        "WHERE token <> '' GROUP BY doc_id, token), "
+    "text_bm25_topk": _POSTINGS_CTE + (
         "dlen AS (SELECT doc_id, sum(tf) AS dl FROM postings "
         "GROUP BY doc_id), "
         "scal AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs, "
@@ -230,14 +240,7 @@ QLM_MU = 2000.0
 
 def q_qlm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    postings = (
-        docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("token")
-        )
-        .filter(F.col("token") != "")
-        .groupBy("doc_id", "token")
-        .agg(F.count("*").cast("double").alias("tf"))
-    )
+    postings = _postings(docs)
     dlen = postings.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     # collection unigram model: cf_t / total_tokens
     cf = postings.groupBy("token").agg(F.sum("tf").alias("cf"))
@@ -332,11 +335,7 @@ def q_qlm_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLES["text_qlm_topk"] = (
-    "WITH postings AS (SELECT doc_id, token, "
-    "CAST(count(*) AS DOUBLE) AS tf FROM (SELECT doc_id, "
-    "unnest(string_split(text, ' ')) AS token FROM documents) "
-    "WHERE token <> '' GROUP BY doc_id, token), "
+ORACLES["text_qlm_topk"] = _POSTINGS_CTE + (
     "dlen AS (SELECT doc_id, sum(tf) AS dl FROM postings GROUP BY doc_id), "
     "cf AS (SELECT token, sum(tf) AS cf FROM postings GROUP BY token), "
     "pc AS (SELECT token, cf / (SELECT sum(cf) FROM cf) AS p_t FROM cf), "

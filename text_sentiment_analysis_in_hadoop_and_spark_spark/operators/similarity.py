@@ -111,20 +111,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def plane_lit(t: int, r: int) -> Column:
-    return F.array(*[F.lit(w) for w in PLANES[t][r]])
-
-
-def bucket_of(vec: Column, t: int) -> Column:
-    """LSH bucket id in table t: bit r = sign of ⟨vec, plane_{t,r}⟩."""
-    acc = F.lit(0)
-    for r in range(PLANES_PER_TABLE):
-        acc = acc + F.when(
-            dot(vec, plane_lit(t, r)) > 0, F.lit(1 << r)
-        ).otherwise(F.lit(0))
-    return acc.cast("int")
-
-
 def _pair_cos_raw(
     df: DataFrame,
     a_emb: str,
@@ -246,9 +232,9 @@ def _buckets_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     row (~2.5 s of the family's cold wall at sf0.1); vectorized in
     one mapInPandas pass with the same dimension-order exact fold, so
     every plane dot is the bit-identical double and every sign bit —
-    and therefore every bucket id — matches ``bucket_of`` exactly
-    (pinned by the LSH recall/occupancy tests and the DuckDB bucket
-    replay oracles downstream)."""
+    and therefore every bucket id — matches the oracle's per-plane
+    sign test exactly (pinned by the LSH recall/occupancy tests and
+    the DuckDB bucket replay oracles downstream)."""
     import numpy as np
 
     planes = np.array(PLANES, dtype=np.float64)  # (T, R, DIM)
@@ -394,20 +380,16 @@ def _centroids(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     k×64 floats ride the sanctioned driver relay (same shape as the
     reference's counters→conf), cached per (session, sf_dir).
 
-    100 TB posture: the quantizer trains on a DETERMINISTIC HASH-SAMPLE
-    of ~TRAIN_PER_CENTROID·k vectors (the pipe_sample_decile filter
+    The quantizer trains on a DETERMINISTIC HASH-SAMPLE of
+    ~TRAIN_PER_CENTROID·k vectors (the pipe_sample_decile filter
     shape — membership is a pure function of vec_id, so retries and
     re-runs train on the identical sample), never the full table: full
     -table training is O(N·k·iters) dot products, which at k = √N is
     O(N^1.5) and dominates the whole index build; sampled training is
     O(64·k²·iters) — independent of N beyond the one narrow sampling
-    scan.  Remaining growth bound (documented contract): the centroid
-    table itself is k×DIM doubles ≈ 512·√N bytes — ~500 MB broadcast +
-    k dot-products per assigned vector at N = 10¹² — so beyond ~10¹⁰
-    vectors the next step is a two-level quantizer (assign to √k
-    coarse cells, then k within the cell) or an HNSW graph over the
-    centroids; at every sf this repo targets, one-level broadcast wins
-    because it needs no second shuffle."""
+    scan.  The centroid table is k×DIM doubles ≈ 512·√N bytes, which
+    :func:`ivf_assignments` broadcasts whole (0.5 MB at k = 1024,
+    N ≈ 10⁶)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
@@ -449,165 +431,35 @@ def _centroids_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---- two-level quantizer (the documented escape hatch, implemented) --
-
-W_PROBE = 2             # coarse cells probed per vector on assignment
-# Engage the two-level path once the fine-centroid count is past the
-# one-level/two-level crossover (measured at sf0.1: k=70 two-level runs
-# ~2× the one-level time — three extra N-row joins outweigh saving
-# (k − 4√k) ≈ 37 dot products; the savings term grows as k, the join
-# overhead stays flat, so the crossover sits at k ~ 10³).  k = 1024 ↔
-# N ≈ 10⁶ vectors at k = √N.
-TWO_LEVEL_MIN_K = 1024
-
-
-def _coarse_cells(
-    spark: SparkSession, sf_dir: str
-) -> tuple[list[list[float]], list[int]]:
-    """√k coarse centroids over the k fine centroids plus each fine
-    centroid's coarse-cell id — a driver-side seeded Lloyd loop on a
-    k×DIM float array (k ≈ √N rows: trivially driver-sized exactly
-    because the fine table is the thing that outgrew one level)."""
-    import numpy as np
-
-    cents = np.asarray(_centroids(spark, sf_dir), dtype=np.float64)
-    k = len(cents)
-    k1 = max(2, math.isqrt(k))
-    norm = cents / np.maximum(
-        np.linalg.norm(cents, axis=1, keepdims=True), 1e-12
-    )
-    rng = np.random.RandomState(KMEANS_SEED)
-    coarse = norm[rng.choice(k, size=k1, replace=False)]
-    for _ in range(10):
-        sims = norm @ coarse.T                      # k × k1 cosines
-        cells = np.argmax(sims, axis=1)
-        for c in range(k1):
-            members = norm[cells == c]
-            if len(members):
-                m = members.mean(axis=0)
-                coarse[c] = m / max(float(np.linalg.norm(m)), 1e-12)
-    cells = np.argmax(norm @ coarse.T, axis=1)
-    return [[float(x) for x in c] for c in coarse], [int(c) for c in cells]
-
-
-def ivf_assignments(
-    spark: SparkSession, sf_dir: str, two_level: bool | None = None
-) -> DataFrame:
+@memo
+def ivf_assignments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, centroid_id): nearest centroid by cosine, ties to the
     smallest id.  Cached: assign + topk both consume it.
 
-    One-level (k < TWO_LEVEL_MIN_K): broadcast the k×DIM centroid
-    table, one partial-aggregating max_by per vector — no N×k shuffle.
-
-    Two-level (the 100 TB path — at k = √N ≈ 10⁶ the fine table is a
-    ~500 MB broadcast and k dot-products per vector): assign each
-    vector to its W_PROBE nearest COARSE cells (√k centroids — two
-    broadcast max_by passes, both map-side combinable), then score
-    only the fine centroids of those cells: ~2√k + 2·(k/√k) ≈ 4√k
-    dots per vector instead of k (250× at k = 10⁶).  The fine join
-    keys on the coarse cell, so beyond broadcast range it degrades to
-    a plain shuffle join with bounded fan-out — no k-sized broadcast
-    anywhere.  W_PROBE > 1 is the recall guard for vectors near a
-    coarse-cell boundary; assignment is then approximate (the true
-    nearest fine centroid can live outside the probed cells), which
-    an inverted-file index tolerates by construction — recall is
-    pinned end-to-end by tests/test_similarity.py (which also forces
-    this path at small k).  At this repo's scales the extra joins
-    cost more than they save, so the auto switch waits for
-    TWO_LEVEL_MIN_K (see the constant's crossover measurement)."""
-    k = len(_centroids(spark, sf_dir))
-    if two_level is None:
-        two_level = k >= TWO_LEVEL_MIN_K
-    return _ivf_assignments(spark, sf_dir, bool(two_level))
-
-
-@memo
-def _ivf_assignments(
-    spark: SparkSession, sf_dir: str, two_level: bool
-) -> DataFrame:
-    emb = _emb_with_norm(spark, sf_dir)
-    cents = _centroids_df(spark, sf_dir)
-    sim = dot(F.col("embedding"), F.col("cvec")) / (
-        F.col("nrm") * F.col("cnrm")
-    )
-    if not two_level:
-        # r12: the N·k assignment dots run vectorized (guide §4.2,
-        # same exact-fold contract as _pair_cos_raw); the argmax
-        # stays a JVM max_by over the raw similarity
-        return (
-            _pair_cos_raw(
-                emb.crossJoin(F.broadcast(cents)),
-                "embedding",
-                "cvec",
-                "nrm",
-                "cnrm",
-                keep=["vec_id", "cid"],
-                out="sim",
-            )
-            .groupBy("vec_id")
-            .agg(
-                F.max_by(
-                    F.col("cid"),
-                    F.struct(
-                        F.col("sim").alias("sim"),
-                        (-F.col("cid")).alias("tie"),
-                    ),
-                ).alias("centroid_id")
-            )
-            .cache()
-        )
-    coarse_vecs, cells = _coarse_cells(spark, sf_dir)
-    coarse = spark.createDataFrame(
-        [
-            (i, v, math.sqrt(sum(x * x for x in v)))
-            for i, v in enumerate(coarse_vecs)
-        ],
-        "ccell INT, covec ARRAY<DOUBLE>, conrm DOUBLE",
-    )
-    fine = cents.join(
-        F.broadcast(
-            spark.createDataFrame(
-                list(enumerate(cells)), "cid INT, ccell INT"
-            )
-        ),
-        "cid",
-    )
-    csim = dot(F.col("embedding"), F.col("covec")) / (
-        F.col("nrm") * F.col("conrm")
-    )
-    best = (
-        emb.crossJoin(F.broadcast(coarse))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("ccell"),
-                F.struct(csim.alias("s"), (-F.col("ccell")).alias("t")),
-            ).alias("c1")
-        )
-    )
-    second = (
-        emb.join(best, "vec_id")
-        .crossJoin(F.broadcast(coarse))
-        .filter(F.col("ccell") != F.col("c1"))
-        .groupBy("vec_id")
-        .agg(
-            F.max_by(
-                F.col("ccell"),
-                F.struct(csim.alias("s"), (-F.col("ccell")).alias("t")),
-            ).alias("c2")
-        )
-    )
-    probes = best.select("vec_id", F.col("c1").alias("ccell")).union(
-        second.select("vec_id", F.col("c2").alias("ccell"))
-    )
+    Broadcast the k×DIM centroid table, one partial-aggregating max_by
+    per vector — no N×k shuffle.  The N·k assignment dots run
+    vectorized in :func:`_pair_cos_raw` (its exact-fold contract);
+    the argmax stays a JVM max_by over the raw similarity."""
     return (
-        probes.join(emb, "vec_id")
-        .join(fine, "ccell")
+        _pair_cos_raw(
+            _emb_with_norm(spark, sf_dir).crossJoin(
+                F.broadcast(_centroids_df(spark, sf_dir))
+            ),
+            "embedding",
+            "cvec",
+            "nrm",
+            "cnrm",
+            keep=["vec_id", "cid"],
+            out="sim",
+        )
         .groupBy("vec_id")
         .agg(
             F.max_by(
                 F.col("cid"),
-                F.struct(sim.alias("sim"), (-F.col("cid")).alias("tie")),
+                F.struct(
+                    F.col("sim").alias("sim"),
+                    (-F.col("cid")).alias("tie"),
+                ),
             ).alias("centroid_id")
         )
         .cache()

@@ -262,7 +262,7 @@ def q_text_cms_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("n").cast("long").alias("cell_n"))
     )
     # identical expression chain to textstats.q_top_tokens (same
-    # tokenization: _toks == split(text, ' ')), sharing tok_counts
+    # tokenization: cleaning.tokenize == split(text, ' ')), sharing tok_counts
     cand = (
         tok_counts.orderBy(F.desc("n"), F.asc("token"))
         .limit(textstats.TOP_TOKENS_K)

@@ -31,8 +31,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.sqlapi import register_views
-from ..sources.tables import load_table
+from ..sources.tables import load_table, register_views
 from .textstats import CHUNK_SIZE, CHUNK_STRIDE
 from .textstats import ORACLES as _TEXTSTATS_ORACLES
 

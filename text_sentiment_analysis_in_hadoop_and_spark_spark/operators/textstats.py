@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.cleaning import tokenize
 from ..functions.hashing import hex32, hex32_sql, md5_fingerprint
 from ..sources.tables import load_table
 from .common import memo, rebalance_scan
@@ -41,13 +42,9 @@ CHUNK_SIZE = 64    # tokens per chunk (embedding-model context)
 CHUNK_STRIDE = 48  # overlap = CHUNK_SIZE - stride = 16 tokens
 
 
-def _toks(col: Column) -> Column:
-    return F.split(col, " ")
-
-
 def _hits(col: Column, words: tuple[str, ...]) -> Column:
     """Occurrences (with multiplicity) of lexicon words in the text."""
-    return F.size(F.filter(_toks(col), lambda t: t.isin(*words)))
+    return F.size(F.filter(tokenize(col), lambda t: t.isin(*words)))
 
 
 def _hits_sql(expr: str, words: tuple[str, ...]) -> str:
@@ -66,7 +63,7 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token statistics: counts, distinct counts, mean token
     length, type-token ratio."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = tokenize(F.col("text"))
     n = F.size(toks)
     tok_chars = F.aggregate(
         F.transform(toks, lambda t: F.length(t).cast("long")),
@@ -96,7 +93,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     isin scan; now the first consumer pays it once and the rest read
     the cached (doc_id, quality, …) rollup."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = tokenize(F.col("text"))
     n = F.size(toks)
     ttr = F.size(F.array_distinct(toks)) / n
     stop_ratio = _hits(F.col("text"), _EN_STOP) / n
@@ -144,7 +141,7 @@ def q_bpe_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count(F.col("text"), F.lit(BPE_RE)).cast("long").alias(
             "n_bpe_tokens"
         ),
-        F.size(_toks(F.col("text"))).cast("long").alias("n_ws_tokens"),
+        F.size(tokenize(F.col("text"))).cast("long").alias("n_ws_tokens"),
     )
 
 
@@ -317,7 +314,7 @@ def q_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut is deterministic on both engines."""
     docs = load_table(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_toks(F.col("text"))).alias("token"))
+        docs.select(F.explode(tokenize(F.col("text"))).alias("token"))
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
         .orderBy(F.desc("n"), F.asc("token"))
@@ -351,7 +348,7 @@ def q_top_tokens_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     The widened emit is driver-side-cheap: one 10⁴-entry array on the
     single merged sketch row, not per-partition."""
     docs = load_table(spark, sf_dir, "documents")
-    sk = docs.select(F.explode(_toks(F.col("text"))).alias("token")).agg(
+    sk = docs.select(F.explode(tokenize(F.col("text"))).alias("token")).agg(
         F.expr("approx_top_k(token, 10000, 10000)").alias("tk")
     )
     return (
@@ -374,7 +371,7 @@ def q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     at least one chunk (short docs chunk to themselves), so no doc
     silently vanishes before embedding."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = tokenize(F.col("text"))
     base = docs.select("doc_id", F.explode(F.array(toks)).alias("tk"))
     starts = F.expr(
         f"sequence(0, greatest(size(tk) - 1, 0), {CHUNK_STRIDE})"
@@ -429,7 +426,7 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tie-break on token so both engines rank identically."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_toks(F.col("text"))).alias("token"))
+        docs.select(F.explode(tokenize(F.col("text"))).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
@@ -504,7 +501,7 @@ def q_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 + 1,
                 F.lit(HEAPS_BINS),
             ).alias("decile"),
-            F.explode(_toks(F.col("text"))).alias("token"),
+            F.explode(tokenize(F.col("text"))).alias("token"),
         )
         .filter(F.col("token") != "")
     )
@@ -579,7 +576,7 @@ def q_token_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.count()
     per = (
         docs.select(
-            "doc_id", F.explode(_toks(F.col("text"))).alias("token")
+            "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
         )
         .filter(F.col("token") != "")
         .groupBy("token", "doc_id")
@@ -666,7 +663,7 @@ def q_lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     product."""
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
-        docs.select("lang", F.explode(_toks(F.col("text"))).alias("token"))
+        docs.select("lang", F.explode(tokenize(F.col("text"))).alias("token"))
         .filter(F.col("token") != "")
         .distinct()
     )
@@ -773,7 +770,7 @@ def q_token_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix again); total mass rides a 1-row broadcast."""
     docs = load_table(spark, sf_dir, "documents")
     counts = (
-        docs.select(F.explode(_toks(F.col("text"))).alias("token"))
+        docs.select(F.explode(tokenize(F.col("text"))).alias("token"))
         .filter(F.col("token") != "")
         .groupBy("token")
         .agg(F.count("*").cast("long").alias("n"))
@@ -843,7 +840,7 @@ def q_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.regexp_count(F.col("text"), F.lit(BPE_RE))
         .cast("long")
         .alias("n_tok"),
-        F.size(_toks(F.col("text"))).cast("long").alias("n_words"),
+        F.size(tokenize(F.col("text"))).cast("long").alias("n_words"),
         F.length("text").cast("long").alias("n_chars"),
     )
     return per_doc.groupBy("lang").agg(
@@ -888,7 +885,7 @@ def q_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "lang",
         (F.col("doc_id") % 8 >= 2).alias("is_train"),
-        F.explode(_toks(F.col("text"))).alias("token"),
+        F.explode(tokenize(F.col("text"))).alias("token"),
     )
     vocab = (
         toks.filter(F.col("is_train"))
@@ -1165,7 +1162,7 @@ def q_source_stylometry_delta(
     identically in both engines."""
     docs = load_table(spark, sf_dir, "documents")
     st = docs.select(
-        "source", F.explode(_toks(F.col("text"))).alias("token")
+        "source", F.explode(tokenize(F.col("text"))).alias("token")
     ).groupBy("source", "token").agg(F.count("*").alias("n"))
     topk = (
         st.groupBy("token")
@@ -1281,7 +1278,7 @@ LEXRANK_SCALE = 1_000_000
 
 def q_lexical_sophistication(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(_toks(F.col("text"))).alias("token")
+        "doc_id", F.explode(tokenize(F.col("text"))).alias("token")
     )
     counts = docs.groupBy("token").agg(
         F.count("*").cast("long").alias("n")

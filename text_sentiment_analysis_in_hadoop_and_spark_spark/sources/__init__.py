@@ -1,1 +1,1 @@
-from .tables import TABLE_NAMES, load_table, load_tables, register_views  # noqa: F401
+from .tables import TABLE_NAMES, load_table, register_views  # noqa: F401

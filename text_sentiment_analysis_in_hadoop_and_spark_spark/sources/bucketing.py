@@ -83,19 +83,13 @@ def read_table(spark: SparkSession, table: str) -> DataFrame:
 # BIGINT.
 
 import os as _os
-import re as _re
 
 from pyspark.sql import functions as F
 
+from .catalog import _tag
 from .tables import load_table
 
 BUCKET_N = 16
-
-
-def _tag(sf_dir: str) -> str:
-    return _re.sub(
-        r"[^0-9A-Za-z]", "_", _os.path.basename(_os.path.normpath(sf_dir))
-    )
 
 
 def _fresh_external_path(spark: SparkSession, table: str) -> str:

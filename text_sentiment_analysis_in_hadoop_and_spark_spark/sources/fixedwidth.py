@@ -40,13 +40,11 @@ from pyspark.sql.datasource import (
 
 from ..functions.hashing import hex32, hex32_sql
 from ..operators.common import memo
-from .tables import load_table
+from .tables import load_table, register_data_source
 
 ID_W = 12
 LANG_W = 8
 NCHARS_W = 8
-
-_REGISTERED: set[str] = set()
 
 FW_SCHEMA = "doc_id bigint, lang string, n_chars bigint, text string"
 
@@ -88,13 +86,6 @@ class FixedWidthDataSource(DataSource):
         return FixedWidthReader(self.options)
 
 
-def _ensure_registered(spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    if app not in _REGISTERED:
-        spark.dataSource.register(FixedWidthDataSource)
-        _REGISTERED.add(app)
-
-
 def fixedwidth_path(spark: SparkSession, sf_dir: str) -> str:
     """documents materialized as fixed-width part-files, once per
     (session, sf_dir)."""
@@ -120,7 +111,7 @@ def _fixedwidth_dir(
 
 
 def q_fixedwidth_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    _ensure_registered(spark)
+    register_data_source(spark, FixedWidthDataSource)
     path = fixedwidth_path(spark, sf_dir)
     docs = spark.read.format("fixedwidth").option("path", path).load()
     return docs.groupBy("lang").agg(

@@ -42,10 +42,10 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
+from .tables import register_data_source
+
 N_BATCHES = 4
 N_SPLITS = 4
-
-_REGISTERED: set[str] = set()
 
 REPLAY_SCHEMA = (
     "event_id bigint, user_id bigint, event_type string, "
@@ -157,17 +157,10 @@ class EventsReplayDataSource(DataSource):
         return EventsReplayStreamReader(self.options)
 
 
-def register(spark: SparkSession) -> None:
-    app = spark.sparkContext.applicationId
-    if app not in _REGISTERED:
-        spark.dataSource.register(EventsReplayDataSource)
-        _REGISTERED.add(app)
-
-
 def q_stream_pyds_windowed(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    register(spark)
+    register_data_source(spark, EventsReplayDataSource)
     stream = (
         spark.readStream.format("events_replay")
         .option("path", os.path.join(sf_dir, "events.parquet"))

@@ -47,7 +47,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .tables import load_table
+from .tables import load_table, register_data_source
 
 N_WRITE_PARTS = 8
 MANIFEST_NAME = "_MANIFEST.json"
@@ -199,20 +199,10 @@ class ManifestSinkDataSource(DataSource):
         return LedgerStreamWriter(self.options["path"])
 
 
-_REGISTERED: set[str] = set()
-
-
-def register(spark: SparkSession) -> None:
-    key = spark.sparkContext.applicationId
-    if key not in _REGISTERED:
-        spark.dataSource.register(ManifestSinkDataSource)
-        _REGISTERED.add(key)
-
-
 def write_manifest(spark: SparkSession, df: DataFrame, path: str) -> dict:
     """Write ``df`` (doc_id, n_chars) through the manifest sink and
     return the parsed committed manifest."""
-    register(spark)
+    register_data_source(spark, ManifestSinkDataSource)
     os.makedirs(path, exist_ok=True)
     (
         df.repartition(N_WRITE_PARTS, "doc_id")
@@ -315,8 +305,8 @@ def q_stream_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     partially-committed batch hash-mismatches the oracle."""
     from . import pystream
 
-    pystream.register(spark)
-    register(spark)
+    register_data_source(spark, pystream.EventsReplayDataSource)
+    register_data_source(spark, ManifestSinkDataSource)
     workdir = tempfile.mkdtemp(prefix="tsa_pyw_stream_")
     try:
         stream = (

@@ -36,12 +36,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so the SQL API sees the same
     catalog the DuckDB oracle does."""
     for name in TABLE_NAMES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+
+
+_DATA_SOURCES: set[tuple[str, str]] = set()
+
+
+def register_data_source(spark: SparkSession, cls: type) -> None:
+    """Register a Python DataSource class once per session."""
+    key = (spark.sparkContext.applicationId, cls.name())
+    if key not in _DATA_SOURCES:
+        spark.dataSource.register(cls)
+        _DATA_SOURCES.add(key)
