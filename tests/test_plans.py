@@ -80,16 +80,12 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     not a post-scan row filter."""
     from pyspark.sql import functions as F
 
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
-        write_parquet,
-    )
-
     out = str(tmp_path / "events_by_type")
     df = spark.createDataFrame(
         [(t, float(i)) for i, t in enumerate(["click", "view", "error"] * 20)],
         "event_type STRING, value DOUBLE",
     )
-    write_parquet(df, out, partition_by=["event_type"])
+    df.write.partitionBy("event_type").parquet(out)
 
     q = spark.read.parquet(out).filter(F.col("event_type") == "click")
     plan = _plan(q)

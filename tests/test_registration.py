@@ -5,7 +5,8 @@ entries.  ``__spark_entry__._PROMOTED`` puts the window that
 ``tools/rotation.py`` derives there; these tests pin that the window
 is the head of ``queries()``, that it leads with every never-checked
 name, and that each query and oracle is registered exactly once, in
-one module's ``QUERIES``/``ORACLES``.
+one module's ``QUERIES``/``ORACLES``.  A static scan pins that every
+package function is reached from code other than tests.
 """
 
 from __future__ import annotations
@@ -14,6 +15,7 @@ import ast
 import inspect
 import types
 from collections import Counter
+from pathlib import Path
 
 import __spark_entry__ as entrymod
 
@@ -180,3 +182,64 @@ def test_repeated_registration_detector_sees_every_form():
         "QUERIES": ["'a'"],
         "ORACLES": [],
     }
+
+
+# The reference's own program — tweets.csv → NB → text dir → console
+# report (Hadoop/NB.java:273-341) — is kept as a library surface with
+# no CLI command; only tests drive these four.
+_FRONT_DOOR = {
+    "nb_frontdoor_from_path": "the reference's whole program as one call",
+    "write_text": "the reference's tab-separated output dir (S6/S7)",
+    "read_text_sink": "reads write_text's dir back for chaining",
+    "classification_report": "the reference's console confusion report (S8)",
+}
+
+
+def _names_referenced(tree: ast.AST) -> Counter:
+    """Every name a tree loads, reads as an attribute or imports."""
+    refs: Counter = Counter()
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
+            refs[n.id] += 1
+        elif isinstance(n, ast.Attribute):
+            refs[n.attr] += 1
+        elif isinstance(n, ast.ImportFrom):
+            refs.update(a.name for a in n.names)
+    return refs
+
+
+def unreached_functions(repo: Path) -> list[str]:
+    """Module-level functions of the package that no non-test code
+    names: the package, tools/, perfbench/, bench.py and
+    __spark_entry__.py.  A function's references to itself do not
+    count.  Name-based, so a same-named attribute elsewhere hides a
+    dead function."""
+    pkg = repo / "text_sentiment_analysis_in_hadoop_and_spark_spark"
+    files = [repo / "bench.py", repo / "__spark_entry__.py"]
+    for top in (pkg, repo / "tools", repo / "perfbench"):
+        files += [p for p in top.rglob("*.py") if not p.name.startswith("test_")]
+    refs: Counter = Counter()
+    defs = []
+    for path in files:
+        tree = ast.parse(path.read_text())
+        refs += _names_referenced(tree)
+        if path.is_relative_to(pkg):
+            defs += [
+                (path.relative_to(repo), fn)
+                for fn in tree.body
+                if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+    return [
+        f"{path}:{fn.lineno} {fn.name}"
+        for path, fn in defs
+        if refs[fn.name] <= _names_referenced(fn)[fn.name]
+        and fn.name not in _FRONT_DOOR
+    ]
+
+
+def test_every_package_function_is_reached_outside_tests():
+    """A function only tests call is code the engine does not run:
+    register it as a query, probe or tool, or delete it with its
+    tests."""
+    unreached = unreached_functions(Path(entrymod.__file__).resolve().parent)
+    assert not unreached, "\n".join(unreached)

@@ -1,5 +1,5 @@
-"""Streaming extension: the streamed windowed agg must equal its
-batch twin on the same files (one logical declaration, two runners)."""
+"""Event-time queries of streaming/windowed.py: the hour-bucket oracle,
+approximate percentiles, RANGE frames and the windowed funnel."""
 
 from __future__ import annotations
 
@@ -50,41 +50,6 @@ def test_approx_percentiles_bounded_error(spark):
             target = frac * (n - 1)
             tol = n * 1e-4 + 2
             assert abs(rank - target) <= tol, (etype, q, rank, target, n)
-
-
-def test_stream_equals_batch(spark, tmp_path):
-    import os
-
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.streaming.windowed import (
-        windowed_batch,
-        windowed_stream,
-    )
-
-    # stage a landing-zone directory (the file stream source's contract)
-    land = tmp_path / "events_land"
-    land.mkdir()
-    os.symlink(f"{SF_DIR}/events.parquet", land / "events.parquet")
-
-    batch = {
-        (r["window_start_epoch"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in windowed_batch(spark, SF_DIR).collect()
-    }
-    q = (
-        windowed_stream(spark, str(land))
-        .writeStream.format("memory")
-        .queryName("win_test")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        streamed = {
-            (r["window_start_epoch"], r["event_type"]): (r["n_events"], r["sum_value"])
-            for r in spark.sql("SELECT * FROM win_test").collect()
-        }
-    finally:
-        q.stop()
-    assert streamed == batch
 
 
 def test_sliding_volume_range_frame_includes_peers(spark, tmp_path):

@@ -195,8 +195,7 @@ def q_dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smallest doc_id of each exact-content cluster survives, with
     its text.  doc_id is unique, so the min-per-fingerprint set
     identifies surviving rows directly — one partial-agg groupBy and
-    one doc_id-keyed semi join, both hash-partitioned at any scale.
-    streaming/dedup.py is the stream twin of this query."""
+    one doc_id-keyed semi join, both hash-partitioned at any scale."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     keep = (
         docs.select(md5_fingerprint(F.col("text")).alias("fp"), "doc_id")
@@ -232,14 +231,10 @@ def q_minhash_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (r11 — SURVEY's "all inputs memoized bounded pair tables" claim was
 # true for the truth side only; method_agreement / lsh_s_curve /
 # minhash_error re-ran the band joins and the whole tfidf-cosine
-# token pipeline on every call, ~4 s/run at sf0.1).  Also holds the
-# span-scrub output (consumed by dedup_savings).  One entry per
-# (session, sf_dir, method); the builders are in _PAIR_BUILDERS.
+# token pipeline on every call, ~4 s/run at sf0.1).  The span-scrub
+# output (consumed by dedup_savings) is memoized the same way: each
+# of the five is one @memo function returning its cached frame.
 @memo
-def _method_pairs(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
-    return _PAIR_BUILDERS[method](spark, sf_dir).cache()
-
-
 def _candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized LSH candidate pair table per (session, sf_dir).
 
@@ -251,16 +246,13 @@ def _candidates_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe: 1.2 s per evaluation of a 3.6 s query).  One cached table
     serves all of them; the build bills to the family's first
     toucher inside the dedup group, same as every other memo."""
-    return _method_pairs(spark, sf_dir, "lsh_candidates")
+    return candidate_pairs(_banded_cached(spark, sf_dir)).cache()
 
 
+@memo
 def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH candidate pairs with estimated Jaccard = fraction of the 16
     signature components that agree."""
-    return _method_pairs(spark, sf_dir, "minhash")
-
-
-def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = _banded_cached(spark, sf_dir)
     pairs = _candidates_cached(spark, sf_dir)
     a = sigs.select(
@@ -283,6 +275,7 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_b",
             F.round(matches / F.lit(float(N_PERM)), 6).alias("est_jaccard"),
         )
+        .cache()
     )
 
 
@@ -729,6 +722,7 @@ def q_span_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@memo
 def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level dedup SCRUB — the corpus-transforming output of Lee
     et al. 2021-style substring dedup: every cross-document duplicated
@@ -753,10 +747,6 @@ def q_span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     reuses.  Output memoized (r11): the scrubbed corpus feeds both
     this query and the dedup_savings rollup — same bounded-artifact
     convention as the pair tables."""
-    return _method_pairs(spark, sf_dir, "span_scrub")
-
-
-def _span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     gpos = _span_gpos_cached(spark, sf_dir)
     dup_g = (
@@ -818,7 +808,7 @@ def _span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("n_kept_tokens"),
         F.coalesce(F.col("scrubbed_text"), F.lit("")).alias("scrubbed_text"),
-    )
+    ).cache()
 
 
 def q_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1231,6 +1221,7 @@ SIMHASH_BANDS = HAMMING_MAX + 1      # pigeonhole: ≤3 flips can't touch all 4
 BAND_BITS = SIMHASH_BITS // SIMHASH_BANDS
 
 
+@memo
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate pairs by SimHash Hamming distance ≤ HAMMING_MAX,
     found WITHOUT an all-pairs product (Manku et al., WWW'07): split
@@ -1252,10 +1243,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     family already applies; 8-bit blocks are the 32-bit-hash
     instantiation that the DuckDB oracle can replicate bit-for-bit.
     """
-    return _method_pairs(spark, sf_dir, "simhash")
-
-
-def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = q_simhash(spark, sf_dir)
     stack_expr = "stack({}, {}) AS (band, val)".format(
         SIMHASH_BANDS,
@@ -1289,6 +1276,7 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("hamming") <= HAMMING_MAX)
         .select("doc_a", "doc_b", F.col("hamming").cast("int").alias("hamming"))
+        .cache()
     )
 
 
@@ -2256,6 +2244,7 @@ QUERIES["dedup_rate_by_length"] = q_dup_rate_by_length
 # --- sparse TF-IDF cosine over the banded candidates (r5) ------------
 
 
+@memo
 def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-IDF-weighted cosine for the banded candidate pairs — the
     sparse-vector similarity join of classical IR, as the WEIGHTED
@@ -2272,10 +2261,6 @@ def q_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot product as a token-keyed join RESTRICTED to the memoized
     banded candidates (never all-pairs).  Every join keys on doc or
     token; norms broadcast-join onto the bounded pair set."""
-    return _method_pairs(spark, sf_dir, "tfidf_cosine")
-
-
-def _tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     tok = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("token")
@@ -2338,6 +2323,7 @@ def _tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6,
             ).alias("cosine"),
         )
+        .cache()
     )
 
 
@@ -2368,17 +2354,6 @@ ORACLES["dedup_tfidf_cosine_pairs"] = _with(
 )
 
 QUERIES["dedup_tfidf_cosine_pairs"] = q_tfidf_cosine_pairs
-
-# the builders behind _method_pairs, one per method tag
-_PAIR_BUILDERS = {
-    "lsh_candidates": lambda spark, sf_dir: candidate_pairs(
-        _banded_cached(spark, sf_dir)
-    ),
-    "minhash": _minhash_pairs,
-    "span_scrub": _span_scrub,
-    "simhash": _simhash_pairs,
-    "tfidf_cosine": _tfidf_cosine_pairs,
-}
 
 
 # --- quality-aware representative selection (r5) ---------------------

@@ -5,15 +5,14 @@ text-only).
 
 What is REAL here and tested: the Spark-side plumbing — binary column
 schema, explicit output schema, Arrow batch iteration, partition-
-preserving narrow execution — AND image-dimension decoding:
-``probe_image_dims`` parses png/gif/bmp/jpeg container headers with no
-codec dependency (``decode_image`` falls back to Pillow when installed
-for other formats).  What remains out of scope in this environment is
-PIXEL work (full decode/resample needs a codec lib); the deterministic
-``decode_meta_batches`` fake stands in for it on the driver's
-text-payload testdata so the pipeline shape is oracle-checkable
-end-to-end (its outputs are pure functions of the payload bytes, so
-the DuckDB oracle can recompute them from ``octet_length``).
+preserving narrow execution — AND pixel decoding: ``decode_pixels``
+reads 24-bit BMP and 8-bit PNG with numpy and stdlib zlib only
+(Pillow covers other formats when installed).  On the driver's
+text-payload testdata the deterministic ``decode_meta_batches`` fake
+stands in for image metadata so the pipeline shape is
+oracle-checkable end-to-end (its outputs are pure functions of the
+payload bytes, so the DuckDB oracle can recompute them from
+``octet_length``).
 
 At 100 TB: payloads stay in executor memory one Arrow batch at a
 time (bound with ``spark.sql.execution.arrow.maxRecordsPerBatch``);
@@ -53,84 +52,6 @@ except ImportError:  # pragma: no cover - environment-dependent
     _PILImage = None
 
 
-def probe_image_dims(payload: bytes) -> tuple[str, int, int]:
-    """REAL image-dimension decode, no codec library required:
-    (format, width, height) parsed straight from the container header
-    for the four formats that cover virtually all web-crawled images.
-
-    - PNG: IHDR is always the first chunk — width/height are big-endian
-      u32 at bytes 16/20 (PNG spec §11.2.2).
-    - GIF87a/89a: logical-screen width/height, little-endian u16 at 6/8.
-    - BMP: BITMAPINFOHEADER width/height, little-endian i32 at 18/22
-      (height may be negative for top-down rows → abs).
-    - JPEG: scan marker segments for the first SOFn frame header;
-      height/width are big-endian u16 at +5/+7 within it.
-
-    Raises ValueError for unrecognized/truncated payloads — callers
-    decide whether to fall back (``decode_image`` tries Pillow)."""
-    b = payload
-    if len(b) >= 24 and b[:8] == b"\x89PNG\r\n\x1a\n":
-        return (
-            "png",
-            int.from_bytes(b[16:20], "big"),
-            int.from_bytes(b[20:24], "big"),
-        )
-    if len(b) >= 10 and b[:6] in (b"GIF87a", b"GIF89a"):
-        return (
-            "gif",
-            int.from_bytes(b[6:8], "little"),
-            int.from_bytes(b[8:10], "little"),
-        )
-    if len(b) >= 26 and b[:2] == b"BM":
-        return (
-            "bmp",
-            int.from_bytes(b[18:22], "little", signed=True),
-            abs(int.from_bytes(b[22:26], "little", signed=True)),
-        )
-    if len(b) >= 4 and b[:2] == b"\xff\xd8":
-        # walk marker segments; SOF0-15 (minus DHT/JPG/DAC) carry dims
-        sof = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7,
-               0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF}
-        i = 2
-        while i + 9 <= len(b):
-            if b[i] != 0xFF:
-                i += 1
-                continue
-            marker = b[i + 1]
-            if marker in sof:
-                return (
-                    "jpeg",
-                    int.from_bytes(b[i + 7 : i + 9], "big"),
-                    int.from_bytes(b[i + 5 : i + 7], "big"),
-                )
-            if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-                i += 2  # standalone markers carry no length
-                continue
-            seg_len = int.from_bytes(b[i + 2 : i + 4], "big")
-            i += 2 + seg_len
-        raise ValueError("jpeg: no SOF frame header found")
-    raise ValueError("unrecognized image container")
-
-
-def decode_image(payload: bytes) -> tuple[int, int]:
-    """(width, height) of an encoded image: header probe first (free,
-    covers png/gif/bmp/jpeg), Pillow for anything else when installed.
-    Raises NotImplementedError only for formats outside both paths."""
-    try:
-        _, w, h = probe_image_dims(payload)
-        return w, h
-    except ValueError:
-        pass
-    if _PILImage is not None:  # pragma: no cover - Pillow not in CI env
-        import io
-
-        with _PILImage.open(io.BytesIO(payload)) as im:
-            return im.width, im.height
-    raise NotImplementedError(
-        "payload is not a png/gif/bmp/jpeg and Pillow is not installed"
-    )
-
-
 def decode_meta_batches(
     batches: Iterator[pd.DataFrame],
 ) -> Iterator[pd.DataFrame]:
@@ -157,43 +78,6 @@ def q_mm_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     return with_payload(docs).mapInPandas(
         decode_meta_batches, schema=MM_META_SCHEMA
     )
-
-
-MM_REAL_META_SCHEMA = "doc_id long, format string, width int, height int"
-
-
-def real_decode_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker over REAL image payloads: per-row header
-    probe (see :func:`probe_image_dims`).  Same narrow Arrow-batched
-    shape as the fake path; used by :func:`decode_image_meta` on
-    DataFrames whose binary column holds actual encoded images (the
-    driver's testdata has none, so this has no queries() entry — it is
-    pinned by crafted-header tests in tests/test_multimodal.py)."""
-    for pdf in batches:
-        fmts: list[str] = []
-        ws: list[int] = []
-        hs: list[int] = []
-        for payload in pdf["payload"]:
-            f, w, h = probe_image_dims(bytes(payload))
-            fmts.append(f)
-            ws.append(w)
-            hs.append(h)
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "format": pd.Series(fmts, dtype="object"),
-                "width": pd.Series(ws, dtype="int32"),
-                "height": pd.Series(hs, dtype="int32"),
-            }
-        )
-
-
-def decode_image_meta(images: DataFrame) -> DataFrame:
-    """(doc_id, payload: binary) → (doc_id, format, width, height) via
-    the header probe — the real-decode twin of ``q_mm_decode_meta``."""
-    return images.mapInPandas(real_decode_batches, schema=MM_REAL_META_SCHEMA)
 
 
 MM_RESIZE_SCHEMA = (
@@ -379,7 +263,7 @@ def decode_bmp_pixels(payload: bytes):
     Handles row padding, bottom-up (positive height) and top-down
     (negative height) storage, and BGR→RGB channel order.  Raises
     NotImplementedError for compressed or non-24-bit BMPs (those need
-    a codec library — Pillow, when installed, via decode_image)."""
+    a codec library — Pillow, when installed, via decode_pixels)."""
     import numpy as np
 
     if payload[:2] != b"BM":

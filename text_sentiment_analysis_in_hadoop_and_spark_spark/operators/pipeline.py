@@ -143,8 +143,8 @@ def q_export_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy on an N_SHARDS-value key — partial aggregation reduces
     each input partition to ≤ N_SHARDS rows before the shuffle, so
     the exchange is O(partitions · shards) regardless of corpus
-    size.  The actual export is ``write_parquet(df,
-    partition_by=["shard"])`` on the same assignment column."""
+    size.  The actual export is ``df.write.partitionBy("shard")
+    .parquet(path)`` on the same assignment column."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(

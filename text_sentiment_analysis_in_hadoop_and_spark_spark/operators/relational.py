@@ -199,6 +199,14 @@ def q_customers_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _year_custkeys(orders: DataFrame, y: int) -> DataFrame:
+    """Distinct customers with an order in calendar year ``y``."""
+    return orders.filter(
+        (F.col("o_orderdate") >= F.lit(f"{y}-01-01"))
+        & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01"))
+    ).select("o_custkey").distinct()
+
+
 def q_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set-operation coverage (INTERSECT — absent from the reference,
     free in the engine): customers who ordered in both 1996 and 1997,
@@ -206,13 +214,9 @@ def q_repeat_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
 
-    def year_keys(y: int) -> DataFrame:
-        return orders.filter(
-            (F.col("o_orderdate") >= F.lit(f"{y}-01-01"))
-            & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01"))
-        ).select("o_custkey").distinct()
-
-    both = year_keys(1996).intersect(year_keys(1997))
+    both = _year_custkeys(orders, 1996).intersect(
+        _year_custkeys(orders, 1997)
+    )
     return (
         both.join(F.broadcast(cust), F.col("o_custkey") == cust.c_custkey)
         .groupBy("c_mktsegment")
@@ -226,13 +230,9 @@ def q_lapsed_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
 
-    def year_keys(y: int) -> DataFrame:
-        return orders.filter(
-            (F.col("o_orderdate") >= F.lit(f"{y}-01-01"))
-            & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01"))
-        ).select("o_custkey").distinct()
-
-    lapsed = year_keys(1996).exceptAll(year_keys(1997))
+    lapsed = _year_custkeys(orders, 1996).exceptAll(
+        _year_custkeys(orders, 1997)
+    )
     return (
         lapsed.join(F.broadcast(cust), F.col("o_custkey") == cust.c_custkey)
         .groupBy("c_mktsegment")

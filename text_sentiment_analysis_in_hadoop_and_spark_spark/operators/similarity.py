@@ -1971,22 +1971,15 @@ def q_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _qdot_sql(a: str, b: str) -> str:
-    return (
-        f"list_sum(list_transform(range(1, {DIM + 1}), "
-        f"i -> CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE)))"
-    )
-
-
 ORACLES["sim_quantized_recall"] = (
     "WITH qv AS (SELECT vec_id, qvec FROM ("
     + _QUANT_SQL
     + ")), "
     "qn AS (SELECT vec_id, qvec, "
-    f"sqrt({_qdot_sql('qvec', 'qvec')}) AS qnrm FROM qv "
-    f"WHERE sqrt({_qdot_sql('qvec', 'qvec')}) > 0), "
+    f"sqrt({_dot_sql('qvec', 'qvec')}) AS qnrm FROM qv "
+    f"WHERE sqrt({_dot_sql('qvec', 'qvec')}) > 0), "
     "sc AS (SELECT q.vec_id AS q_id, c.vec_id, "
-    f"{_qdot_sql('c.qvec', 'q.qvec')} / (c.qnrm * q.qnrm) AS qcos "
+    f"{_dot_sql('c.qvec', 'q.qvec')} / (c.qnrm * q.qnrm) AS qcos "
     f"FROM qn c, qn q WHERE q.vec_id < {N_QUERIES} "
     "AND c.vec_id <> q.vec_id), "
     "topq AS (SELECT q_id, vec_id, rank FROM (SELECT q_id, vec_id, "

@@ -1,5 +1,4 @@
-"""CSV ingestion — fidelity mode (the reference's naive splitter) and
-correct mode (a real CSV reader).
+"""CSV ingestion in fidelity mode: the reference's naive splitter.
 
 The reference parses the Sentiment140 CSV layout
 ``ItemID, Sentiment, SentimentSource, SentimentText`` with a naive
@@ -12,9 +11,9 @@ in /root/reference/Hadoop/NB.java:52-61.  Quotes are NOT handled; they
 survive into the text and die later in the punctuation regex.
 
 ``fidelity_parse`` reproduces that exactly as a pure Column expression
-(S3).  ``read_csv_correct`` is the idiomatic path: Spark's CSV reader
-with proper quote handling — what a user migrating off the reference
-should switch to once they accept the (intended) semantic difference.
+(S3).  A user migrating off the reference who accepts the (intended)
+semantic difference switches to Spark's own CSV reader with quote
+handling (``spark.read.option("escape", '"').csv``).
 
 Difference vs Java kept in mind: Java's ``split(",")`` drops trailing
 empty fields; Spark's keeps them.  Sentiment140 text is never empty,
@@ -27,9 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-SENTIMENT140_COLUMNS = ("item_id", "sentiment", "source", "text")
-
 
 def fidelity_parse(line: Column) -> list[Column]:
     """S3 — naive comma split + comma-destroying re-stitch, as four
@@ -51,17 +47,6 @@ def read_csv_fidelity(spark: SparkSession, path: str) -> DataFrame:
     """Read a Sentiment140-layout CSV the way the reference does."""
     lines = spark.read.text(path)
     return lines.select(*fidelity_parse(F.col("value")))
-
-
-def read_csv_correct(spark: SparkSession, path: str) -> DataFrame:
-    """Idiomatic mode: proper CSV semantics (quoting, embedded commas
-    preserved)."""
-    return (
-        spark.read.option("quote", '"')
-        .option("escape", '"')
-        .csv(path)
-        .toDF(*SENTIMENT140_COLUMNS)
-    )
 
 
 # --------------------------------------------------------------------------

@@ -6,9 +6,7 @@ Hadoop/Modified_NB.java:541-553).
 
 Here both are one declarative write: ``mode("overwrite")`` IS the
 delete-then-write (S7), and the sep option reproduces the
-``key \\t value`` text layout (S6).  Parquet is the engine-native
-sink a migrating user should prefer — columnar, compressed, split-
-table, predicate-pushdown-friendly on re-read.
+``key \\t value`` text layout (S6).
 """
 
 from __future__ import annotations
@@ -21,17 +19,6 @@ def write_text(
 ) -> None:
     """S6+S7 — tab-separated text sink with overwrite semantics."""
     df.write.mode(mode).option("sep", sep).option("header", "false").csv(path)
-
-
-def write_parquet(
-    df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None
-) -> None:
-    """Engine-native sink.  ``partition_by`` maps to directory
-    partitioning — the 100 TB knob for downstream partition pruning."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def read_text_sink(spark: SparkSession, path: str, schema: str, sep: str = "\t") -> DataFrame:

@@ -20,6 +20,7 @@ from collections.abc import Callable
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.dedup import BATCH_MOD
 from ..sources.tables import load_table
@@ -51,6 +52,17 @@ from ..sources.tables import load_table
 PROBE_PARTS = "2"
 
 
+def _drained(q: StreamingQuery) -> list:
+    """Run a started query until its sources are drained, then stop
+    it; returns its ``recentProgress``, read before ``stop()``."""
+    try:
+        q.processAllAvailable()
+    finally:
+        prog = q.recentProgress
+        q.stop()
+    return prog
+
+
 def streaming_bench_entries(
     spark: SparkSession, sf_dir: str, workdir: str, join_parts: str = PROBE_PARTS
 ) -> dict[str, Callable[[], list]]:
@@ -59,7 +71,9 @@ def streaming_bench_entries(
     partitions; the others at the session default."""
     from .enrich import enrich_stream
     from .ingest import admit_stream
-    from .joins import attribution_stream
+    from .joins import attribution_stream, unconverted_stream
+    from .latest import latest_state_stream
+    from .scd2 import scd2_stream
     from .sink import start_idempotent_parquet_sink
 
     # --- setup (untimed): landing zones -------------------------------
@@ -94,57 +108,32 @@ def streaming_bench_entries(
         def sink(df, batch_id):
             admitted.extend(r["doc_id"] for r in df.collect())
 
-        q = admit_stream(spark, docs_land, sf_dir, sink)
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = q.recentProgress
-            q.stop()
+        prog = _drained(admit_stream(spark, docs_land, sf_dir, sink))
         assert admitted, "ingest probe admitted nothing"
         return prog
 
-    def interval_join() -> list:
-        q = (
-            attribution_stream(spark, events_land)
-            .writeStream.format("memory")
-            .queryName("bench_attrib")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            n = spark.sql("SELECT count(*) AS n FROM bench_attrib").first()["n"]
-        finally:
-            prog = q.recentProgress
-            q.stop()
-            spark.catalog.dropTempView("bench_attrib")
-        assert n >= 0
-        return prog
+    def memory_sink_probe(stream: Callable, view: str) -> Callable[[], list]:
+        def probe() -> list:
+            q = (
+                stream(spark, events_land)
+                .writeStream.format("memory")
+                .queryName(view)
+                .outputMode("append")
+                .start()
+            )
+            try:
+                prog = _drained(q)
+                n = spark.sql(f"SELECT count(*) AS n FROM {view}").first()["n"]
+            finally:
+                spark.catalog.dropTempView(view)
+            # only watermark-expired views flush in one pass for the
+            # outer join — the probe times the join+state machinery,
+            # not full drain semantics (tests/test_stream_join.py
+            # proves those)
+            assert n >= 0
+            return prog
 
-    def outer_join() -> list:
-        from .joins import unconverted_stream
-
-        q = (
-            unconverted_stream(spark, events_land)
-            .writeStream.format("memory")
-            .queryName("bench_unconv")
-            .outputMode("append")
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            n = spark.sql("SELECT count(*) AS n FROM bench_unconv").first()[
-                "n"
-            ]
-        finally:
-            prog = q.recentProgress
-            q.stop()
-            spark.catalog.dropTempView("bench_unconv")
-        # only watermark-expired views flush in one pass — the probe
-        # times the join+state machinery, not full drain semantics
-        # (tests/test_stream_join.py proves those)
-        assert n >= 0
-        return prog
+        return probe
 
     def exactly_once_sink() -> list:
         out = os.path.join(workdir, "sink_out")
@@ -156,41 +145,19 @@ def streaming_bench_entries(
         assert spark.read.parquet(out).limit(1).count() == 1
         return q.recentProgress
 
-    def upsert_view() -> list:
-        from .latest import latest_state_stream
+    def batch_count_probe(stream: Callable) -> Callable[[], list]:
+        def probe() -> list:
+            counts: list[int] = []
+            prog = _drained(
+                stream(spark, events_land)
+                .writeStream.outputMode("update")
+                .foreachBatch(lambda df, _id: counts.append(df.count()))
+                .start()
+            )
+            assert counts and counts[0] > 0
+            return prog
 
-        emitted: list[int] = []
-        q = (
-            latest_state_stream(spark, events_land)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda df, _id: emitted.append(df.count()))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = q.recentProgress
-            q.stop()
-        assert emitted and emitted[0] > 0
-        return prog
-
-    def scd2_builder() -> list:
-        from .scd2 import scd2_stream
-
-        closed: list[int] = []
-        q = (
-            scd2_stream(spark, events_land)
-            .writeStream.outputMode("update")
-            .foreachBatch(lambda df, _id: closed.append(df.count()))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            prog = q.recentProgress
-            q.stop()
-        assert closed and closed[0] > 0
-        return prog
+        return probe
 
     def _at_probe_scale(fn: Callable[[], list]) -> Callable[[], list]:
         def wrapped() -> list:
@@ -205,9 +172,13 @@ def streaming_bench_entries(
 
     return {
         "stream_ingest_probe": ingest_probe,
-        "stream_interval_join": _at_probe_scale(interval_join),
-        "stream_outer_join": _at_probe_scale(outer_join),
+        "stream_interval_join": _at_probe_scale(
+            memory_sink_probe(attribution_stream, "bench_attrib")
+        ),
+        "stream_outer_join": _at_probe_scale(
+            memory_sink_probe(unconverted_stream, "bench_unconv")
+        ),
         "stream_exactly_once_sink": exactly_once_sink,
-        "stream_upsert_view": upsert_view,
-        "stream_scd2_builder": scd2_builder,
+        "stream_upsert_view": batch_count_probe(latest_state_stream),
+        "stream_scd2_builder": batch_count_probe(scd2_stream),
     }

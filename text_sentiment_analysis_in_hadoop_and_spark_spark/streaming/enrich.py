@@ -1,17 +1,16 @@
 """Stream-static enrichment join — events enriched with the customer
 dimension (EXTENSION; the reference has no streaming, SURVEY §2.7).
 
-The third and last streaming join shape after stream⋈stream
-(streaming/joins.py) and stateful aggregation (stateful.py): an
-unbounded stream joined to a BOUNDED table.  Spark re-plans the static
+The streaming join shape after stream⋈stream (streaming/joins.py):
+an unbounded stream joined to a BOUNDED table.  Spark re-plans the static
 side per micro-batch, so the join is completely STATELESS — no
 watermark, no state store, append mode — and the static side
 broadcasts exactly as it would in batch.  At scale this is the
 "enrich the click stream with the user table" pattern: the stream
 shuffles nothing, each micro-batch hash-probes the broadcast dim.
 
-The SAME logical join is exposed twice (module pattern of
-streaming/windowed.py): :func:`enrich_batch` is the oracle-checked
+The SAME logical join is exposed twice (as in streaming/joins.py):
+:func:`enrich_batch` is the oracle-checked
 ``events_enriched`` query; :func:`enrich_stream` is the readStream
 twin, proven equal on the same files by tests/test_stream_enrich.py.
 """

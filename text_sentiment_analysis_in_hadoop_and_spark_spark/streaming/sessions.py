@@ -1,23 +1,14 @@
-"""Gap-based sessionization over ``events`` — stateful-operator
-extension (nothing like it exists in the reference; SURVEY §2.7).
+"""Gap-based sessionization over ``events`` (nothing like it exists in
+the reference; SURVEY §2.7).
 
-Two implementations of the same semantics (30-minute inactivity gap):
-
-- :func:`sessions_batch` — lag/cumsum window functions, declared as
-  the ``events_sessions`` query with a DuckDB oracle.  The session
-  id is the running count of session-starts per user in event-time
-  order, so both engines number sessions identically.
-- :func:`sessions_stream` — Structured Streaming's native
-  ``session_window`` (the Spark-first choice over a hand-rolled
-  ``applyInPandasWithState``: merge logic, state bounding and
-  watermark eviction are built in).  Emitted sessions carry
-  (user_id, start, end, n) — tests match them against the batch
-  result; append mode only emits sessions closed by the watermark,
-  which is exactly the production contract.
+:func:`sessions_batch` — lag/cumsum window functions over a
+30-minute inactivity gap, declared as the ``events_sessions`` query
+with a DuckDB oracle.  The session id is the running count of
+session-starts per user in event-time order, so both engines number
+sessions identically.
 
 Scale notes: batch sessionization is one shuffle (hash by user_id)
-plus two in-partition window passes; streaming state is per-open-
-session and evicted at watermark — both O(users), not O(events).
+plus two in-partition window passes — O(users) state, not O(events).
 """
 
 from __future__ import annotations
@@ -26,11 +17,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from .windowed import event_ts_col, events_stream, load_events
+from .windowed import load_events
 
 GAP_SEC = 1800
-GAP = "30 minutes"
-WATERMARK = "1 hour"
 
 
 def sessions_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,29 +39,6 @@ def sessions_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("epoch_sec").cast("long").alias("end_epoch"),
             F.count("*").cast("long").alias("n_events"),
         )
-    )
-
-
-def sessions_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Same sessions via the native streaming session_window (gap
-    merge + watermark state eviction built in).  ``events_dir`` is a
-    file landing zone, as in windowed.py."""
-    raw = events_stream(spark, events_dir)
-    stream = raw.withColumn(
-        "event_ts", event_ts_col(raw)
-    ).withWatermark("event_ts", WATERMARK)
-    return (
-        stream.groupBy(
-            F.col("user_id"), F.session_window(F.col("event_ts"), GAP)
-        )
-        .agg(
-            F.min(F.unix_timestamp("event_ts"))
-            .cast("long")
-            .alias("start_epoch"),
-            F.max(F.unix_timestamp("event_ts")).cast("long").alias("end_epoch"),
-            F.count("*").cast("long").alias("n_events"),
-        )
-        .select("user_id", "start_epoch", "end_epoch", "n_events")
     )
 
 

@@ -1,20 +1,14 @@
-"""Structured Streaming surface — a clearly-marked EXTENSION.
+"""Event-time queries over ``events`` and the shared event-stream
+readers — a clearly-marked EXTENSION.
 
 The reference has no streaming at all: ``spark-streaming`` is a
 commented-out dependency in every build file
 (/root/reference/Spark/NB/build.sbt:13) and no streaming code exists
-(SURVEY §2.7).  This module is the engine's beyond-reference stream
-path: tumbling-window aggregation over the ``events`` table with
-event-time watermarking for late data.
-
-The SAME logical aggregation is exposed twice:
-
-- :func:`windowed_batch` — batch DataFrame, declared as the
-  ``events_windowed`` query with a DuckDB oracle.
-- :func:`windowed_stream` — identical agg over ``readStream`` through
-  the real ``window()`` operator with ``withWatermark`` bounding
-  state; tests/test_streaming.py proves stream ≡ batch on the same
-  files.
+(SURVEY §2.7).  This module holds the batch event-time family (the
+``events_windowed`` hour buckets, funnels, retention, …) and the two
+readers every stream probe builds on: :func:`events_stream` (a
+``readStream`` over a parquet landing zone) and :func:`event_ts_col`
+(the watermark column).
 
 Timestamp handling: the driver's parquet has shipped ``ts`` as BOTH
 TIMESTAMP(NANOS) (earlier rounds — Spark's vectorized reader rejects
@@ -29,10 +23,6 @@ The DuckDB oracle uses ``epoch_ns`` integer division, so both engines
 bucket identically with no float rounding at window edges.  The
 session timezone is pinned UTC (session.py), which makes the
 NTZ→instant interpretation match DuckDB's.
-
-Watermarking is what makes this run forever at scale: state for an
-hour window is dropped once the watermark (max event time − 1 hour)
-passes its end, so executor state is O(active windows), not O(stream).
 """
 
 from __future__ import annotations
@@ -45,7 +35,6 @@ from pyspark.sql import types as T
 
 from ..operators.common import memo
 
-WINDOW = "1 hour"
 WATERMARK = "1 hour"
 _NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -109,37 +98,6 @@ def windowed_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("n_events"),
             F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-    )
-
-
-def windowed_stream(spark: SparkSession, events_dir: str) -> DataFrame:
-    """Same aggregation through the streaming ``window()`` operator.
-
-    ``events_dir`` is a DIRECTORY into which event parquet files
-    arrive — the file stream source's contract (and the shape of a
-    real landing zone; new files are discovered per micro-batch).
-    ``unix_timestamp(window.start)`` equals the batch's integer
-    bucket because hour windows align to the epoch."""
-    raw = events_stream(spark, events_dir)
-    stream = raw.withColumn("event_ts", event_ts_col(raw)).withWatermark(
-        "event_ts", WATERMARK
-    )
-    return (
-        stream.groupBy(
-            F.window(F.col("event_ts"), WINDOW).alias("w"), F.col("event_type")
-        )
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start"))
-            .cast("long")
-            .alias("window_start_epoch"),
-            "event_type",
-            "n_events",
-            "sum_value",
         )
     )
 
