@@ -51,3 +51,29 @@ def test_cli_parity_subcommand_runs_the_gate():
     )
     assert out.returncode == 0
     assert "1/1 queries match" in out.stdout
+
+
+def test_cli_classify_runs_the_reference_program(spark, tmp_path, capsys):
+    """``classify`` is the reference's whole program (Hadoop/NB.java:
+    273-341): CSV → parse → clean → NB → text dir → console report."""
+    from conftest import write_tweets_csv
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.nb import (
+        output_for_docs,
+    )
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.csv import (
+        frontdoor_docs,
+        read_csv_fidelity,
+    )
+
+    csv, out = tmp_path / "tweets.csv", str(tmp_path / "out")
+    write_tweets_csv(csv)
+    assert main(["classify", str(csv), out]) == 0
+    written = spark.read.option("sep", "\t").schema(
+        "key STRING, sentiment STRING"
+    ).csv(out)
+    expect = output_for_docs(frontdoor_docs(read_csv_fidelity(spark, str(csv))))
+    assert sorted(written.collect()) == sorted(expect.collect())
+    # the 4 test docs classify by parity: 2 true positives, 2 true negatives
+    report = capsys.readouterr().out
+    assert "CONFUSION MATRIX\n2\t0\n0\t2\n" in report
+    assert "ACCURACY: 1.0" in report

@@ -6,7 +6,12 @@ import __spark_entry__ as entrymod
 from pyspark.sql import Row
 from tools.parity import compare
 
-from conftest import SF_DIR
+from conftest import SF_DIR, write_tweets_csv
+
+
+def _read_text(spark, path, schema):
+    """Read back a tab-separated write_text directory."""
+    return spark.read.option("sep", "\t").schema(schema).csv(path)
 
 
 def test_csv_fidelity_restitch(spark):
@@ -43,7 +48,6 @@ def test_csv_fidelity_oracle_parity(spark, duck):
 
 def test_text_sink_roundtrip_and_overwrite(spark, tmp_path):
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
-        read_text_sink,
         write_text,
     )
 
@@ -54,7 +58,7 @@ def test_text_sink_roundtrip_and_overwrite(spark, tmp_path):
     write_text(df, out)
     # S7: overwrite must replace, not append or fail
     write_text(df, out)
-    back = read_text_sink(spark, out, "doc_id INT, verdict STRING")
+    back = _read_text(spark, out, "doc_id INT, verdict STRING")
     assert sorted((r["doc_id"], r["verdict"]) for r in back.collect()) == [
         (1, "POSITIVE"),
         (2, "NEGATIVE"),
@@ -66,7 +70,6 @@ def test_nb_output_rows_roundtrip(spark, tmp_path):
     ``id@cleaned_text`` TAB ``POSITIVE|NEGATIVE`` — write through the
     text sink and read back byte-identically."""
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
-        read_text_sink,
         write_text,
     )
 
@@ -78,7 +81,7 @@ def test_nb_output_rows_roundtrip(spark, tmp_path):
 
     out = str(tmp_path / "nb_out")
     write_text(df, out)
-    back = read_text_sink(spark, out, "key STRING, sentiment STRING")
+    back = _read_text(spark, out, "key STRING, sentiment STRING")
     assert {r["key"]: r["sentiment"] for r in back.collect()} == rows
 
 
@@ -87,24 +90,20 @@ def test_frontdoor_csv_file_to_text_sink(spark, tmp_path):
     disk → fidelity parse → clean → train → predict → text sink dir,
     matching the reference's whole program (Hadoop/NB.java:273-341).
     doc_ids cover both label parities and both split residues."""
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.nb import (
+        output_for_docs,
+    )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.csv import (
-        nb_frontdoor_from_path,
+        frontdoor_docs,
+        read_csv_fidelity,
     )
     from text_sentiment_analysis_in_hadoop_and_spark_spark.sources.sinks import (
-        read_text_sink,
         write_text,
     )
 
     p = tmp_path / "tweets.csv"
-    p.write_text(
-        "".join(
-            f"{i},{i % 2},Sentiment140,tweet number {i} says "
-            + ("great happy fun" if i % 2 else "awful sad bad")
-            + "\n"
-            for i in range(16)
-        )
-    )
-    out_rows = nb_frontdoor_from_path(spark, str(p))
+    write_tweets_csv(p)
+    out_rows = output_for_docs(frontdoor_docs(read_csv_fidelity(spark, str(p))))
     rows = {r["key"]: r["sentiment"] for r in out_rows.collect()}
     # test split = doc_id % 8 in {0, 1} → ids 0,1,8,9
     assert len(rows) == 4
@@ -117,7 +116,7 @@ def test_frontdoor_csv_file_to_text_sink(spark, tmp_path):
 
     out = str(tmp_path / "frontdoor_out")
     write_text(out_rows, out)
-    back = read_text_sink(spark, out, "key STRING, sentiment STRING")
+    back = _read_text(spark, out, "key STRING, sentiment STRING")
     assert {r["key"]: r["sentiment"] for r in back.collect()} == rows
 
 

@@ -10,7 +10,10 @@ columns fails here, not in a profile three rounds later.
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as entrymod
+import pytest
 
 from conftest import SF_DIR
 
@@ -34,6 +37,18 @@ def test_nb_score_joins_are_broadcast(spark):
     for line in plan.splitlines():
         if "SortMergeJoin" in line:
             assert "word" not in line, line
+
+
+@pytest.mark.parametrize("name", ["nb_learning_curve", "nb_cv_accuracy"])
+def test_multi_arm_nb_probes_the_model_once(spark, name):
+    """All arms of the learning curve and k-fold CV score through ONE
+    broadcast model probe on ``word`` (operators/nb.py::arm_accuracy),
+    never one join per arm and never a word-keyed shuffle join."""
+    df = entrymod.queries()[name](spark, SF_DIR)
+    df.collect()
+    plan = _plan(df).split("== Initial Plan ==")[0]  # AQE's final plan
+    assert len(re.findall(r"BroadcastHashJoin \[word#", plan)) == 1, plan
+    assert not re.search(r"SortMergeJoin \[word#", plan), plan
 
 
 def test_docs_scan_prunes_columns(spark):

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
+
 from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.quality import (
     BENCH_MOD,
     BENCH_RESIDUE,
@@ -426,13 +428,26 @@ def test_nb_lift_gains_reconciles_and_front_loads(spark):
     assert rows[0]["n_pos"] == sum(r["label"] for r in d1)
 
 
-def test_nb_cv_accuracy_empty_corpus_degrades_gracefully(spark, tmp_path):
-    """ADVICE r10 + r11 self-review: an EMPTY documents table must
-    yield a well-formed zero result — the first guard (v = 0) still
-    died on the driver-side prior division (ZeroDivisionError)."""
+# An EMPTY documents table must yield a well-formed empty or zero
+# result: query → expected row count.  The scalar relay maps the NULL
+# sums of an empty training split to 0, and the class priors of an
+# empty split are NULL instead of a driver-side division by zero.
+_EMPTY_CORPUS_ROWS = {
+    "nb_accuracy": 1,
+    "nb_confusion": 0,
+    "nb_uncertainty_sample": 0,
+    "nb_null_calibration": 1,
+    "tfidf_nb_accuracy": 1,
+    "nb_learning_curve": 4,
+    "nb_cv_accuracy": 5,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_EMPTY_CORPUS_ROWS))
+def test_empty_corpus_degrades_gracefully(spark, tmp_path, name):
     import os
 
-    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import nb
+    import __spark_entry__ as entrymod
     from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.common import (
         clear_caches,
     )
@@ -446,12 +461,13 @@ def test_nb_cv_accuracy_empty_corpus_degrades_gracefully(spark, tmp_path):
     )
     clear_caches()
     try:
-        rows = nb.q_nb_cv_accuracy(spark, d).collect()
-        assert [r["fold"] for r in rows] == list(range(nb.CV_FOLDS))
-        assert all(r["n_test"] == 0 and r["n_correct"] == 0 for r in rows)
-        assert all(r["accuracy"] is None for r in rows)
+        rows = [r.asDict() for r in entrymod.queries()[name](spark, d).collect()]
     finally:
         clear_caches()
+    assert len(rows) == _EMPTY_CORPUS_ROWS[name]
+    for r in rows:
+        assert all(r[c] == 0 for c in ("n_test", "n_correct", "n_train") if c in r)
+        assert r.get("accuracy") is None
 
 
 def test_nb_cv_folds_partition_the_corpus(spark):

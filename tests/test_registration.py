@@ -184,17 +184,6 @@ def test_repeated_registration_detector_sees_every_form():
     }
 
 
-# The reference's own program — tweets.csv → NB → text dir → console
-# report (Hadoop/NB.java:273-341) — is kept as a library surface with
-# no CLI command; only tests drive these four.
-_FRONT_DOOR = {
-    "nb_frontdoor_from_path": "the reference's whole program as one call",
-    "write_text": "the reference's tab-separated output dir (S6/S7)",
-    "read_text_sink": "reads write_text's dir back for chaining",
-    "classification_report": "the reference's console confusion report (S8)",
-}
-
-
 def _names_referenced(tree: ast.AST) -> Counter:
     """Every name a tree loads, reads as an attribute or imports."""
     refs: Counter = Counter()
@@ -233,7 +222,6 @@ def unreached_functions(repo: Path) -> list[str]:
         f"{path}:{fn.lineno} {fn.name}"
         for path, fn in defs
         if refs[fn.name] <= _names_referenced(fn)[fn.name]
-        and fn.name not in _FRONT_DOOR
     ]
 
 

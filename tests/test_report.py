@@ -12,12 +12,14 @@ from conftest import SF_DIR
 @pytest.mark.parametrize("flavor", ["nb", "tfidf"])
 def test_classification_report_matches_queries(spark, flavor):
     import __spark_entry__ as entrymod
+    from text_sentiment_analysis_in_hadoop_and_spark_spark.operators import nb, tfidf
     from text_sentiment_analysis_in_hadoop_and_spark_spark.operators.report import (
         classification_report,
     )
 
+    preds_fn = nb.nb_predictions if flavor == "nb" else tfidf.featsel_predictions
     buf = io.StringIO()
-    rep = classification_report(spark, SF_DIR, flavor=flavor, out=buf)
+    rep = classification_report(preds_fn(spark, SF_DIR), out=buf)
     text = buf.getvalue()
     assert "CONFUSION MATRIX" in text and "ACCURACY" in text
 

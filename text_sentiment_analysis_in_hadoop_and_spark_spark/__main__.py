@@ -12,6 +12,7 @@ query registry:
     python -m text_sentiment_analysis_in_hadoop_and_spark_spark oracle nb_scores
     python -m text_sentiment_analysis_in_hadoop_and_spark_spark parity nb_scores \
         [--sf-dir /root/testdata/sf0.001]
+    python -m text_sentiment_analysis_in_hadoop_and_spark_spark classify tweets.csv out_dir
 
 ``run`` executes distributed end-to-end and only collects the shown
 rows (or writes parquet and collects nothing); ``explain`` prints the
@@ -20,6 +21,9 @@ assert on; ``oracle`` prints the DuckDB parity SQL so any reader can
 re-verify a result outside Spark; ``parity`` actually RUNS that
 re-verification (Spark vs DuckDB, order-insensitive value compare) for
 the named queries — the correctness gate as a user-facing command.
+``classify`` is the reference's own program (Hadoop/NB.java:273-341):
+a Sentiment140-layout CSV → naive parse → clean → train 75% → predict
+25% → ``id@text \\t POSITIVE|NEGATIVE`` text dir → console report.
 """
 
 from __future__ import annotations
@@ -48,6 +52,24 @@ def _registry():
     import __spark_entry__ as entry
 
     return entry.queries(), entry.oracle_sql(), entry.rows_only()
+
+
+def _classify(csv_path: str, out_dir: str) -> int:
+    from .operators import nb
+    from .operators.report import classification_report
+    from .session import get_spark
+    from .sources.csv import frontdoor_docs, read_csv_fidelity
+    from .sources.sinks import write_text
+
+    spark = get_spark(app_name="tsa_cli_classify")
+    # parsed + cleaned once: training, the output rows and the report
+    # all read it
+    docs = frontdoor_docs(read_csv_fidelity(spark, csv_path)).cache()
+    preds = nb.predictions_for_docs(docs)
+    write_text(nb.output_rows(preds, docs), out_dir)
+    classification_report(preds)
+    docs.unpersist()
+    return 0
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -79,7 +101,16 @@ def main(argv: list[str] | None = None) -> int:
     p_or = sub.add_parser("oracle", help="print the DuckDB parity SQL")
     p_or.add_argument("query")
 
+    p_cl = sub.add_parser(
+        "classify", help="train and classify a Sentiment140-layout CSV"
+    )
+    p_cl.add_argument("csv")
+    p_cl.add_argument("out_dir")
+
     args = p.parse_args(argv)
+
+    if args.cmd == "classify":
+        return _classify(args.csv, args.out_dir)
 
     if args.cmd == "parity":
         import subprocess

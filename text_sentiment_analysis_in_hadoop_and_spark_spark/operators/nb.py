@@ -21,11 +21,18 @@ Scale notes (100 TB posture):
 - Corpus scalars (6 numbers) are collected to the driver and inlined
   as literals — the reference's Hadoop-Counter→Configuration relay
   (NB.java:305-316) with one tiny Spark job instead.
+- Queries that train several models (the learning curve's quarters,
+  k-fold CV's folds) run them as the arms of :func:`arm_accuracy`:
+  one training rollup, one scalar collect and one broadcast scoring
+  pass for all arms, not one pipeline per arm.
 - Everything else is partial-aggregating hash aggregation; no Python
   touches a row.
 """
 
 from __future__ import annotations
+
+from functools import reduce
+from operator import or_
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -80,6 +87,18 @@ def vocab_counts(train_tokens: DataFrame) -> DataFrame:
 _TOTALS = ("tweets", "pos_tweets", "neg_tweets", "pos_words", "neg_words")
 
 
+def _class_counts() -> dict[str, Column]:
+    """Each doc row's contribution to the four per-class counters of
+    :data:`_TOTALS` (``tweets`` is the row itself)."""
+    wc = F.size(F.split(F.col("text"), WS_SPLIT))
+    return {
+        "pos_tweets": F.when(F.col("label") == 1, 1).otherwise(0),
+        "neg_tweets": F.when(F.col("label") == 0, 1).otherwise(0),
+        "pos_words": F.when(F.col("label") == 1, wc).otherwise(0),
+        "neg_words": F.when(F.col("label") == 0, wc).otherwise(0),
+    }
+
+
 def _class_totals() -> list[Column]:
     """A1/A2 counters (NB.java:50,79-85) as aggregate Columns over
     (label, text) rows, one per name in :data:`_TOTALS`.
@@ -87,21 +106,8 @@ def _class_totals() -> list[Column]:
     Quirk preserved: per-class word totals are counted *before* the
     empty-text check, and ``"".split("\\s+")`` has length 1, so a doc
     that cleans to empty still contributes 1 (SURVEY §2.3 A2)."""
-    wc = F.size(F.split(F.col("text"), WS_SPLIT))
-    return [
-        F.count("*").cast("long").alias("tweets"),
-        F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("pos_tweets"),
-        F.sum(F.when(F.col("label") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("neg_tweets"),
-        F.sum(F.when(F.col("label") == 1, wc).otherwise(0))
-        .cast("long")
-        .alias("pos_words"),
-        F.sum(F.when(F.col("label") == 0, wc).otherwise(0))
-        .cast("long")
-        .alias("neg_words"),
+    return [F.count("*").cast("long").alias("tweets")] + [
+        F.sum(c).cast("long").alias(name) for name, c in _class_counts().items()
     ]
 
 
@@ -113,27 +119,40 @@ def corpus_stats_df(train_docs: DataFrame, train_tokens: DataFrame) -> DataFrame
     return train_docs.agg(*_class_totals()).crossJoin(vsize)
 
 
+def collect_scalars(row_df: DataFrame) -> dict:
+    """Collect a one-row frame of corpus scalars to the driver (the
+    reference's Hadoop-Counter→Configuration relay, NB.java:305-316).
+    A SUM over no rows is NULL; it relays as 0, so an empty corpus
+    yields zero counters instead of driver-side ``None`` arithmetic."""
+    row = row_df.collect()[0].asDict()
+    return {k: 0 if v is None else v for k, v in row.items()}
+
+
+def _lpw(count: Column, den) -> Column:
+    """``ln((count + 1) / den)`` — the Laplace-smoothed multinomial
+    likelihood (NB.java:190-194, Modified_NB.java:443-448) in
+    log-space."""
+    return F.log((count + 1) / F.lit(den))
+
+
 def log_likelihoods(counts: DataFrame, pos_den, neg_den) -> DataFrame:
-    """Model ``(word, lpw_pos, lpw_neg)`` from per-word class counts:
-    ``lpw_c = ln((count_c(w)+1) / den_c)`` — the Laplace-smoothed
-    multinomial likelihood (NB.java:190-194, Modified_NB.java:443-448)
-    in log-space.  Each chain passes its own denominators (words_c + V):
-    NB an int, the feature-selected chain a float."""
+    """Model ``(word, lpw_pos, lpw_neg)`` from per-word class counts.
+    Each chain passes its own denominators (words_c + V): NB an int,
+    the feature-selected chain a float."""
     return counts.select(
         "word",
-        F.log((F.col("pos_count") + 1) / F.lit(pos_den)).alias("lpw_pos"),
-        F.log((F.col("neg_count") + 1) / F.lit(neg_den)).alias("lpw_neg"),
+        _lpw(F.col("pos_count"), pos_den).alias("lpw_pos"),
+        _lpw(F.col("neg_count"), neg_den).alias("lpw_neg"),
     )
 
 
 def model_for_docs(docs: DataFrame) -> tuple[DataFrame, dict]:
     """Train over an arbitrary cleaned-docs frame (doc_id, label, text):
     returns (model_df(word, lpw_pos, lpw_neg), stats dict).  The six
-    corpus scalars are collected to the driver (the reference's
-    Hadoop-Counter→Configuration relay, NB.java:305-316)."""
+    corpus scalars are relayed by :func:`collect_scalars`."""
     train_docs = docs.filter(train_filter())
     train_tokens = doc_tokens(train_docs)
-    stats = corpus_stats_df(train_docs, train_tokens).collect()[0].asDict()
+    stats = collect_scalars(corpus_stats_df(train_docs, train_tokens))
     v = stats["vocab_size"]
     model = log_likelihoods(
         vocab_counts(train_tokens),
@@ -155,10 +174,12 @@ def nb_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
 
 def log_priors(stats: dict) -> tuple[Column, Column]:
     """NB's class log-priors ``ln(tweets_c / tweets)``, evaluated by
-    Spark (``F.log`` of a literal ratio)."""
+    Spark (``F.log`` of a literal ratio).  With no training docs the
+    ratio is 0.0, whose Spark log is NULL."""
+    n = stats["tweets"]
     return (
-        F.log(F.lit(stats["pos_tweets"] / stats["tweets"])),
-        F.log(F.lit(stats["neg_tweets"] / stats["tweets"])),
+        F.log(F.lit(stats["pos_tweets"] / n if n else 0.0)),
+        F.log(F.lit(stats["neg_tweets"] / n if n else 0.0)),
     )
 
 
@@ -173,6 +194,12 @@ def log_sums(tokens: DataFrame, model: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(F.sum("lpw_pos").alias("s_pos"), F.sum("lpw_neg").alias("s_neg"))
     )
+
+
+def _score(prior: Column, log_sum: str) -> Column:
+    """Class score = log-prior + the doc's log-sum; a doc with no known
+    words scores the prior alone."""
+    return prior + F.coalesce(F.col(log_sum), F.lit(0.0))
 
 
 def scores_for_docs(
@@ -195,23 +222,136 @@ def scores_for_docs(
         .select(
             "doc_id",
             "label",
-            (prior_pos + F.coalesce(F.col("s_pos"), F.lit(0.0))).alias("pos_score"),
-            (prior_neg + F.coalesce(F.col("s_neg"), F.lit(0.0))).alias("neg_score"),
+            _score(prior_pos, "s_pos").alias("pos_score"),
+            _score(prior_neg, "s_neg").alias("neg_score"),
         )
     )
 
 
+def argmax(pos: Column, neg: Column) -> Column:
+    """M9 argmax: pos > neg → 1 else 0 (ties → NEGATIVE, NB.java:250,259;
+    a NULL score predicts 0)."""
+    return F.when(pos > neg, 1).otherwise(0).cast("int")
+
+
 def predictions(scores: DataFrame) -> DataFrame:
-    """M9 argmax: pos_score > neg_score → 1 else 0 (ties → NEGATIVE,
-    NB.java:250,259).  The two score columns become ``prediction``;
-    every other column passes through."""
+    """:func:`argmax` over (pos_score, neg_score): the two score
+    columns become ``prediction``; every other column passes through."""
     keys = [c for c in scores.columns if c not in ("pos_score", "neg_score")]
     return scores.select(
-        *keys,
-        F.when(F.col("pos_score") > F.col("neg_score"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("prediction"),
+        *keys, argmax(F.col("pos_score"), F.col("neg_score")).alias("prediction")
+    )
+
+
+def predictions_for_docs(docs: DataFrame) -> DataFrame:
+    """Train on the 75% split of an arbitrary cleaned-docs frame
+    (doc_id, label, text) and predict its 25% test split:
+    (doc_id, label, prediction)."""
+    model, stats = model_for_docs(docs)
+    return predictions(scores_for_docs(docs, model, *log_priors(stats)))
+
+
+def arm_accuracy(docs: DataFrame, arms: list[tuple]) -> DataFrame:
+    """Train and test one NB model per arm in a single plan:
+    ``(arm, n_train, n_test, n_correct, accuracy)``, one row per arm.
+
+    Each arm is ``(name, train_cond, test_cond)``, two Column conditions
+    over doc rows of ``docs`` (doc_id, label, text).  All arms share one
+    per-word rollup of per-arm class counts, one scalar collect (their
+    class totals and vocabulary sizes), one broadcast probe on ``word``
+    and one per-doc log-sum aggregate: arm ``i``'s columns are the
+    single-split model's, masked by its conditions.  A word belongs to
+    arm ``i``'s model iff it occurs in arm ``i``'s training docs."""
+
+    def masked(cond: Column, contrib: Column) -> Column:
+        return F.sum(F.when(cond, contrib).otherwise(0)).cast("long")
+
+    names, trains, tests = zip(*arms)
+    ids = range(len(arms))
+    counts = dict(tweets=F.lit(1), **_class_counts())
+    tokens = doc_tokens(docs)
+    # per word, a token's class count is its doc's class indicator
+    wf = tokens.filter(reduce(or_, trains)).groupBy("word").agg(
+        *[
+            masked(trains[i], counts[f"{s}_tweets"]).alias(f"{s}_{i}")
+            for i in ids
+            for s in ("pos", "neg")
+        ]
+    )
+    cnt = {(s, i): F.col(f"{s}_{i}") for s in ("pos", "neg") for i in ids}
+    member = [cnt["pos", i] + cnt["neg", i] > 0 for i in ids]
+    stats = docs.agg(
+        *[
+            masked(trains[i], c).alias(f"{name}_{i}")
+            for i in ids
+            for name, c in counts.items()
+        ]
+    ).crossJoin(
+        wf.agg(*[F.sum(member[i].cast("long")).alias(f"v_{i}") for i in ids])
+    )
+    srow = collect_scalars(stats)
+    st = [{c: srow[f"{c}_{i}"] for c in _TOTALS} for i in ids]
+    model = wf.select(
+        "word",
+        *[
+            F.when(
+                member[i],
+                _lpw(cnt[s, i], st[i][f"{s}_words"] + srow[f"v_{i}"]),
+            ).alias(f"lpw_{s}_{i}")
+            for i in ids
+            for s in ("pos", "neg")
+        ],
+    )
+    any_test = reduce(or_, tests)
+    sums = (
+        tokens.filter(any_test)
+        .select("doc_id", "word")
+        .join(F.broadcast(model), "word")
+        .groupBy("doc_id")
+        .agg(
+            *[
+                F.sum(F.when(tests[i], F.col(f"lpw_{s}_{i}"))).alias(f"s_{s}_{i}")
+                for i in ids
+                for s in ("pos", "neg")
+            ]
+        )
+    )
+    agg_cols = []
+    for i in ids:
+        prior_pos, prior_neg = log_priors(st[i])
+        pred = argmax(_score(prior_pos, f"s_pos_{i}"), _score(prior_neg, f"s_neg_{i}"))
+        agg_cols += [
+            F.count(F.when(tests[i], 1)).alias(f"n_test_{i}"),
+            F.count(F.when(tests[i] & (pred == F.col("label")), 1)).alias(
+                f"n_correct_{i}"
+            ),
+        ]
+    per_arm = F.array(
+        *[
+            F.struct(
+                F.lit(names[i]).alias("arm"),
+                F.lit(st[i]["tweets"]).cast("long").alias("n_train"),
+                F.col(f"n_test_{i}").alias("n_test"),
+                F.col(f"n_correct_{i}").alias("n_correct"),
+            )
+            for i in ids
+        ]
+    )
+    n_test, n_correct = F.col("s.n_test"), F.col("s.n_correct")
+    # one aggregate evaluation, exploded into one row per arm
+    return (
+        docs.filter(any_test)
+        .select("doc_id", "label")
+        .join(sums, "doc_id", "left")
+        .agg(*agg_cols)
+        .select(F.explode(per_arm).alias("s"))
+        .select(
+            "s.*",
+            # NULL, not a division by zero, for an arm with no test docs
+            F.when(
+                n_test > 0, F.round(n_correct / n_test.cast("double"), 6)
+            ).alias("accuracy"),
+        )
     )
 
 
@@ -327,10 +467,7 @@ def nb_predictions_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return s.select(
         "doc_id",
         "label",
-        F.when(F.col("pos_prob") > F.col("neg_prob"), 1)
-        .otherwise(0)
-        .cast("int")
-        .alias("prediction"),
+        argmax(F.col("pos_prob"), F.col("neg_prob")).alias("prediction"),
         ((F.col("pos_prob") == 0.0) & (F.col("neg_prob") == 0.0)).alias(
             "underflow"
         ),
@@ -402,7 +539,7 @@ def q_nb_predictions_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return nb_predictions_fidelity(spark, sf_dir)
 
 
-def _output_rows(preds: DataFrame, docs: DataFrame) -> DataFrame:
+def output_rows(preds: DataFrame, docs: DataFrame) -> DataFrame:
     """S6 row shape (NB.java:257,266,302): ``tweet_id@cleaned_text``
     TAB ``POSITIVE|NEGATIVE``."""
     return preds.join(docs.select("doc_id", "text"), "doc_id").select(
@@ -419,19 +556,17 @@ def output_for_docs(docs: DataFrame) -> DataFrame:
     """The reference's whole front door over an arbitrary cleaned-docs
     frame: train (75% split) → score the 25% test split → argmax →
     ``id@text \\t sentiment`` rows — one Catalyst DAG, used by the
-    end-to-end CSV pipeline (sources/csv.py: csv_nb_frontdoor)."""
-    model, stats = model_for_docs(docs)
-    preds = predictions(scores_for_docs(docs, model, *log_priors(stats)))
-    return _output_rows(preds, docs)
+    end-to-end CSV pipeline (sources/csv.py: q_csv_nb_frontdoor)."""
+    return output_rows(predictions_for_docs(docs), docs)
 
 
 def q_nb_output(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's user-visible output rows (NB.java:257,266,302).
-    Feed this to sources.sinks.write_text for the byte-identical
-    text-dir layout; tests/test_io.py round-trips it."""
+    The ``classify`` command writes the same rows through
+    sources.sinks.write_text for the text-dir layout."""
     preds = nb_predictions(spark, sf_dir)
     docs = labeled_docs(spark, sf_dir)
-    return _output_rows(preds, docs)
+    return output_rows(preds, docs)
 
 
 def q_nb_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,135 +928,20 @@ def q_nb_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     previous one's — so the curve is monotone in DATA, not in
     sampling noise.
 
-    Shape: four trainings of the same broadcast-model pipeline over
-    shrinking inputs (each is the S4/S5 pattern: vocab partial-agg +
-    six-scalar collect); the test side and its tokens are computed
-    from the shared cleaned-docs memo.  The oracle re-parameterizes
-    the ONE nb prelude with each fraction filter — same SQL text,
-    four instantiations."""
+    Shape: the four trainings are the four arms of :func:`arm_accuracy`
+    (one training rollup, one scalar collect, one broadcast scoring
+    pass).  The oracle re-parameterizes the ONE nb prelude with each
+    fraction filter — same SQL text, four instantiations."""
     from ..functions.hashing import hex32
 
-    docs = labeled_docs(spark, sf_dir)
     frac = F.pmod(hex32(F.col("doc_id").cast("string")), 4)
-
-    # r12 fusion (guide §1.2/§2.4): the four per-quarter trainings
-    # (each a stats-collect job + a vocab rollup + a broadcast scoring
-    # join) collapse into ONE training rollup and ONE scoring pass.
-    # Quarters are NESTED (frac < q), so the per-quarter counts are
-    # conditional sums over the same token rows, the per-quarter vocab
-    # is "any occurrence below q", and the model table carries the four
-    # (lpw_pos, lpw_neg) pairs side by side.  Counts, denominators and
-    # priors are bit-identical to the per-arm build.
-    train = docs.filter(train_filter())
-    ttrain = doc_tokens(train)
-    wf = ttrain.groupBy("word").agg(
-        *[
-            F.sum(
-                F.when((F.col("label") == lbl) & (frac < q), 1).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"{name}_{q}")
-            for q in CURVE_QUARTERS
-            for lbl, name in ((1, "pos"), (0, "neg"))
-        ]
+    arms = [(q, train_filter() & (frac < q), test_filter()) for q in CURVE_QUARTERS]
+    return arm_accuracy(labeled_docs(spark, sf_dir), arms).select(
+        F.col("arm").cast("long").alias("train_quarter"),
+        "n_train",
+        "accuracy",
+        "n_test",
     )
-    wc = F.size(F.split(F.col("text"), WS_SPLIT))
-    stats_row = train.agg(
-        *[
-            F.sum(F.when(frac < q, contrib).otherwise(0))
-            .cast("long")
-            .alias(f"{name}_{q}")
-            for q in CURVE_QUARTERS
-            for contrib, name in (
-                (F.lit(1), "tweets"),
-                (F.when(F.col("label") == 1, 1).otherwise(0), "pos_tweets"),
-                (F.when(F.col("label") == 0, 1).otherwise(0), "neg_tweets"),
-                (F.when(F.col("label") == 1, wc).otherwise(0), "pos_words"),
-                (F.when(F.col("label") == 0, wc).otherwise(0), "neg_words"),
-            )
-        ]
-    )
-    vocab_row = wf.agg(
-        *[
-            F.sum(
-                ((F.col(f"pos_{q}") + F.col(f"neg_{q}")) > 0).cast("long")
-            )
-            .cast("long")
-            .alias(f"v_{q}")
-            for q in CURVE_QUARTERS
-        ]
-    )
-    srow = stats_row.crossJoin(vocab_row).collect()[0].asDict()
-
-    model_cols = []
-    for q in CURVE_QUARTERS:
-        pos_den = srow[f"pos_words_{q}"] + srow[f"v_{q}"]
-        neg_den = srow[f"neg_words_{q}"] + srow[f"v_{q}"]
-        model_cols.extend(
-            [
-                ((F.col(f"pos_{q}") + F.col(f"neg_{q}")) > 0).alias(
-                    f"in_{q}"
-                ),
-                F.log((F.col(f"pos_{q}") + 1) / F.lit(pos_den)).alias(
-                    f"lpw_pos_{q}"
-                ),
-                F.log((F.col(f"neg_{q}") + 1) / F.lit(neg_den)).alias(
-                    f"lpw_neg_{q}"
-                ),
-            ]
-        )
-    model = wf.select("word", *model_cols)
-
-    test_docs = docs.filter(test_filter())
-    ttok = doc_tokens(test_docs).select("doc_id", "word")
-    scored = (
-        ttok.join(F.broadcast(model), "word")
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sum(
-                    F.when(F.col(f"in_{q}"), F.col(f"lpw_{side}_{q}"))
-                ).alias(f"s_{side}_{q}")
-                for q in CURVE_QUARTERS
-                for side in ("pos", "neg")
-            ]
-        )
-    )
-    sc = test_docs.select("doc_id", "label").join(scored, "doc_id", "left")
-    acc_cols = []
-    for q in CURVE_QUARTERS:
-        tw = srow[f"tweets_{q}"]
-        prior_pos = F.log(
-            F.lit(srow[f"pos_tweets_{q}"] / tw if tw else 0.0)
-        )
-        prior_neg = F.log(
-            F.lit(srow[f"neg_tweets_{q}"] / tw if tw else 0.0)
-        )
-        pred = (
-            (prior_pos + F.coalesce(F.col(f"s_pos_{q}"), F.lit(0.0)))
-            > (prior_neg + F.coalesce(F.col(f"s_neg_{q}"), F.lit(0.0)))
-        ).cast("int")
-        acc_cols.append(
-            F.round(
-                F.sum((pred == F.col("label")).cast("int")) / F.count("*"),
-                6,
-            ).alias(f"acc_{q}")
-        )
-    agg1 = sc.agg(F.count("*").cast("long").alias("n_test"), *acc_cols)
-    # ONE aggregate evaluation → four output rows via explode (no
-    # re-computation per arm, no cache needed)
-    arms = F.array(
-        *[
-            F.struct(
-                F.lit(q).cast("long").alias("train_quarter"),
-                F.lit(srow[f"tweets_{q}"]).cast("long").alias("n_train"),
-                F.col(f"acc_{q}").alias("accuracy"),
-                F.col("n_test").alias("n_test"),
-            )
-            for q in CURVE_QUARTERS
-        ]
-    )
-    return agg1.select(F.explode(arms).alias("s")).select("s.*")
 
 
 def _learning_curve_sql() -> str:
@@ -1055,198 +1075,23 @@ ORACLES["nb_lift_gains"] = _lift_gains_sql()
 # all.  Fold = doc_id % 5 (odd modulus, so the doc_id%2 label is
 # represented in every fold on both sides of the split).
 #
-# Each fold retrains the full chain (clean docs are the shared cached
-# snapshot).  The corpus scalars for ALL five training complements
-# come from ONE stats job (r9 verdict #3 — this was five sequential
-# scan+agg collects, one per fold): a single groupBy(doc_id % 5) pass
-# gives per-fold doc/word contributions (train_k = total − fold_k,
-# sum-decomposable), and a single per-(word, fold) token rollup gives
-# both the five vocabulary sizes (a word counts for fold k's training
-# vocab iff it appears in ANY other fold) and the five models (the
-# complement re-aggregation runs over the tiny vocab×5 frame, and its
-# shared token-scan Exchange is reused across arms, not re-scanned).
-# Still the S5 scalar-side-input shape (reference's Counter→
-# Configuration relay, Hadoop/NB.java:305-316) — one driver round-trip
-# of 5 rows instead of five.  The per-fold model stays a broadcast
-# join exactly like nb_scores; fold outputs are 1-row aggregates
-# unioned at the end, so the whole query ships 5 rows.
+# Each fold is one arm of :func:`arm_accuracy` (train on fold != k,
+# test on fold == k), so the five trainings share one token rollup,
+# one scalar collect and one broadcast scoring pass; the whole query
+# ships 5 rows.
 
 CV_FOLDS = 5
 
 
 def q_nb_cv_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = labeled_docs(spark, sf_dir)
-    fold = (F.col("doc_id") % CV_FOLDS).cast("int")
-    tokens = doc_tokens(docs)
-    # one (word, fold) rollup feeds the vocab sizes AND the 5 models
-    wf = tokens.groupBy("word", fold.alias("fold")).agg(
-        F.sum(F.when(F.col("label") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("pos_count"),
-        F.sum(F.when(F.col("label") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("neg_count"),
-    )
-    # ONE stats job: per-fold doc/word contributions (the counters of
-    # corpus_stats_df, empty-doc quirk included) × the five
-    # training-vocab sizes
-    per_fold = docs.groupBy(fold.alias("fold")).agg(*_class_totals())
-    in_fold = wf.groupBy("word").agg(
-        *[
-            F.max(F.when(F.col("fold") == j, 1).otherwise(0)).alias(
-                f"in{j}"
-            )
-            for j in range(CV_FOLDS)
-        ]
-    )
-    vocab_row = in_fold.agg(
-        *[
-            F.sum(
-                F.when(
-                    sum(
-                        (F.col(f"in{j}") for j in range(CV_FOLDS) if j != k),
-                        F.lit(0),
-                    )
-                    > 0,
-                    1,
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias(f"v{k}")
-            for k in range(CV_FOLDS)
-        ]
-    )
-    rows = [r.asDict() for r in per_fold.crossJoin(vocab_row).collect()]
-    by_fold = {r["fold"]: r for r in rows}
-    tot = {c: sum(r[c] for r in rows) for c in _TOTALS}
-    # per-arm driver scalars (training stats = totals minus fold k's
-    # contribution; rows is empty on an empty documents table — default
-    # v=0 so the degenerate input still returns a well-formed zero
-    # result, ADVICE r10/r11)
-    arm = []
-    for k in range(CV_FOLDS):
-        fr = by_fold.get(k, {})
-        stats = {c: tot[c] - fr.get(c, 0) for c in _TOTALS}
-        v = rows[0][f"v{k}"] if rows else 0
-        n_tw = stats["tweets"]
-        arm.append(
-            {
-                "n_train": stats["tweets"],
-                # int denominators, same as the pre-fusion F.lit args
-                "pos_den": stats["pos_words"] + v,
-                "neg_den": stats["neg_words"] + v,
-                # guard the driver-side division for the empty input
-                # (F.log(0.0) is NULL JVM-side, so an absent class
-                # degrades to NULL scores rather than raising)
-                "prior_pos": stats["pos_tweets"] / n_tw if n_tw else 0.0,
-                "prior_neg": stats["neg_tweets"] / n_tw if n_tw else 0.0,
-            }
-        )
-
-    # r12 fusion (guide §1.2/§2.4 — remove redundant passes): each doc
-    # is TESTED in exactly its own fold, so the five per-arm broadcast
-    # joins + five wf re-evaluations collapse into ONE scoring pass.
-    # The word side carries per-fold counts; the arm-k model values
-    # (counts-outside-k, the old wf.filter(fold != k) rollup) are CASE
-    # branches selected by the doc's own fold at join time.  Counts,
-    # denominators and priors are bit-identical to the per-arm build.
-    word_tbl = wf.groupBy("word").agg(
-        F.sum("pos_count").alias("pos_tot"),
-        F.sum("neg_count").alias("neg_tot"),
-        *[
-            F.sum(F.when(F.col("fold") == k, F.col(cnt)).otherwise(0)).alias(
-                f"{cnt[:3]}_{k}"
-            )
-            for k in range(CV_FOLDS)
-            for cnt in ("pos_count", "neg_count")
-        ],
-    )
-
-    f_col = (F.col("doc_id") % CV_FOLDS).cast("int")
-
-    def arm_case(builder):
-        expr = None
-        for k in range(CV_FOLDS):
-            cond = f_col == k
-            expr = (
-                F.when(cond, builder(k))
-                if expr is None
-                else expr.when(cond, builder(k))
-            )
-        return expr
-
-    def _pos_cnt(k):
-        return F.col("pos_tot") - F.col(f"pos_{k}")
-
-    def _neg_cnt(k):
-        return F.col("neg_tot") - F.col(f"neg_{k}")
-
-    # word is in arm k's model iff it occurs in some fold != k — the
-    # membership the old inner join against the arm-k rollup enforced
-    incl = arm_case(lambda k: (_pos_cnt(k) + _neg_cnt(k)) > 0)
-    lpw_pos = arm_case(
-        lambda k: F.log((_pos_cnt(k) + 1) / F.lit(arm[k]["pos_den"]))
-    )
-    lpw_neg = arm_case(
-        lambda k: F.log((_neg_cnt(k) + 1) / F.lit(arm[k]["neg_den"]))
-    )
-    ttok = doc_tokens(docs).select("doc_id", "word")
-    scored = (
-        ttok.join(F.broadcast(word_tbl), "word")
-        .groupBy("doc_id")
-        .agg(
-            # SUM of an all-NULL/empty group is NULL — same "doc has no
-            # known words" sentinel the old left join produced
-            F.sum(F.when(incl, lpw_pos)).alias("s_pos"),
-            F.sum(F.when(incl, lpw_neg)).alias("s_neg"),
-        )
-    )
-    prior_pos = arm_case(lambda k: F.log(F.lit(arm[k]["prior_pos"])))
-    prior_neg = arm_case(lambda k: F.log(F.lit(arm[k]["prior_neg"])))
-    counts = (
-        docs.select("doc_id", "label")
-        .join(scored, "doc_id", "left")
-        .select(
-            f_col.alias("fold"),
-            "label",
-            (
-                (prior_pos + F.coalesce(F.col("s_pos"), F.lit(0.0)))
-                > (prior_neg + F.coalesce(F.col("s_neg"), F.lit(0.0)))
-            )
-            .cast("int")
-            .alias("prediction"),
-        )
-        .groupBy("fold")
-        .agg(
-            F.count("*").cast("long").alias("n_test"),
-            F.coalesce(
-                F.sum((F.col("prediction") == F.col("label")).cast("long")),
-                F.lit(0),
-            )
-            .cast("long")
-            .alias("n_correct"),
-        )
-    )
-    # driver-built 5-row spine: an empty fold (or the empty corpus)
-    # still yields its row with n_test = 0, n_correct = 0 — the
-    # degenerate contract the old per-arm aggregates provided
-    folds_df = spark.createDataFrame(
-        [(k, arm[k]["n_train"]) for k in range(CV_FOLDS)],
-        "fold INT, n_train BIGINT",
-    )
-    return folds_df.join(counts, "fold", "left").select(
-        F.col("fold").cast("int").alias("fold"),
-        F.col("n_train").cast("long").alias("n_train"),
-        F.coalesce(F.col("n_test"), F.lit(0)).cast("long").alias("n_test"),
-        F.coalesce(F.col("n_correct"), F.lit(0))
-        .cast("long")
-        .alias("n_correct"),
-        # NULL (not NaN) accuracy on an empty fold — identical to the
-        # oracle's value for every non-degenerate input
-        F.when(
-            F.col("n_test") > 0,
-            F.round(F.col("n_correct") / F.col("n_test").cast("double"), 6),
-        ).alias("accuracy"),
+    fold = F.col("doc_id") % CV_FOLDS
+    arms = [(k, fold != k, fold == k) for k in range(CV_FOLDS)]
+    return arm_accuracy(labeled_docs(spark, sf_dir), arms).select(
+        F.col("arm").cast("int").alias("fold"),
+        "n_train",
+        "n_test",
+        "n_correct",
+        "accuracy",
     )
 
 
@@ -1351,9 +1196,7 @@ def q_nb_uncertainty_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.abs(F.col("pos_score") - F.col("neg_score")), 6
         ).alias("abs_margin"),
-        (F.col("pos_score") > F.col("neg_score"))
-        .cast("int")
-        .alias("prediction"),
+        argmax(F.col("pos_score"), F.col("neg_score")).alias("prediction"),
     )
     ranked = s.orderBy(F.asc("abs_margin"), F.asc("doc_id")).limit(
         UNCERTAIN_K
@@ -1478,9 +1321,7 @@ def q_nb_label_issues(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = q_nb_scores(spark, sf_dir).select(
         "doc_id",
         "label",
-        (F.col("pos_score") > F.col("neg_score"))
-        .cast("int")
-        .alias("prediction"),
+        argmax(F.col("pos_score"), F.col("neg_score")).alias("prediction"),
         F.round(
             F.abs(F.col("pos_score") - F.col("neg_score")), 6
         ).alias("abs_margin"),
@@ -1535,14 +1376,9 @@ ORACLES["nb_label_issues"] = _label_issues_sql()
 def q_nb_null_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.hashing import hex32
 
-    # r12: derive from the cached cleaned-docs memo instead of
-    # re-running the 7-regex clean chain from the raw table — the
-    # cleaning is IDENTICAL (labeled_docs cleans the same column with
-    # the same chain); only the label column is swapped for the
-    # content-hash coin flip, so every downstream count and score is
-    # bit-identical.  Before: the stats job, the vocab rollup and the
-    # scoring pass each re-ran the regex chain over the raw scan
-    # (~3 full cleans per call); after: all three read the memo.
+    # the cached cleaned-docs memo with its label swapped for the
+    # content-hash coin flip (the oracle cleans the raw text with the
+    # same chain)
     docs = labeled_docs(spark, sf_dir).select(
         "doc_id",
         F.pmod(
@@ -1553,23 +1389,16 @@ def q_nb_null_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("label"),
         "text",
     )
-    model, stats = model_for_docs(docs)
-    preds = scores_for_docs(docs, model, *log_priors(stats)).select(
-        "label",
-        (F.col("pos_score") > F.col("neg_score"))
-        .cast("int")
-        .alias("prediction"),
-    )
-    agg = preds.agg(
+    agg = predictions_for_docs(docs).agg(
         F.count("*").cast("long").alias("n_test"),
-        F.sum((F.col("prediction") == F.col("label")).cast("long"))
-        .cast("long")
-        .alias("n_correct"),
+        F.count(F.when(F.col("prediction") == F.col("label"), 1)).alias(
+            "n_correct"
+        ),
     )
-    acc = F.col("n_correct") / F.col("n_test").cast("double")
-    sigma3 = 3.0 * F.sqrt(
-        F.lit(0.25) / F.col("n_test").cast("double")
-    )
+    # a NULL denominator on an empty test split, not a division by zero
+    n = F.when(F.col("n_test") > 0, F.col("n_test").cast("double"))
+    acc = F.col("n_correct") / n
+    sigma3 = 3.0 * F.sqrt(F.lit(0.25) / n)
     return agg.select(
         "n_test",
         "n_correct",

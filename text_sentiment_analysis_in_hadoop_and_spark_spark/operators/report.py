@@ -3,35 +3,27 @@ matrix, accuracy and duration to stdout at the end of each run
 (/root/reference/Hadoop/NB.java:330-341;
 /root/reference/Spark/NB/src/main/scala/NB.scala:96-100).
 
-Same surface here: format the engine's metric DataFrames into the
-reference's report shape.  The aggregates are the already-tested
-confusion/metrics queries; this module only formats and prints —
-4 + 1 rows collected, never data."""
+Same surface here: format the engine's metric DataFrames over any
+predictions frame into the reference's report shape (the ``classify``
+command prints it after writing the text output).  The aggregates are
+the already-tested confusion/metrics queries; this module only formats
+and prints — 4 + 1 rows collected, never data."""
 
 from __future__ import annotations
 
-import sys
 import time
 from typing import TextIO
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame
 
 
-def classification_report(
-    spark: SparkSession,
-    sf_dir: str,
-    flavor: str = "nb",
-    out: TextIO = sys.stdout,
-) -> dict:
-    """Print the reference-style report; returns the numbers too."""
-    from . import nb, tfidf
+def classification_report(preds: DataFrame, out: TextIO | None = None) -> dict:
+    """Print the reference-style report for a (label, prediction)
+    frame to ``out`` (default: the current ``sys.stdout``); returns the
+    numbers too."""
     from .metrics import confusion, weighted_metrics
 
     t0 = time.perf_counter()
-    preds_fn = (
-        nb.nb_predictions if flavor == "nb" else tfidf.featsel_predictions
-    )
-    preds = preds_fn(spark, sf_dir)
     conf = {
         (r["label"], r["prediction"]): r["n"]
         for r in confusion(preds).collect()

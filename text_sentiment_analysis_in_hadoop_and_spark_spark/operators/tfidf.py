@@ -46,7 +46,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .common import (
@@ -68,7 +68,13 @@ from .metrics import (
     weighted_metrics,
     weighted_metrics_sql,
 )
-from .nb import log_likelihoods, predictions, scores_for_docs, vocab_counts
+from .nb import (
+    collect_scalars,
+    log_likelihoods,
+    predictions,
+    scores_for_docs,
+    vocab_counts,
+)
 
 
 # --------------------------------------------------------------------------
@@ -149,7 +155,7 @@ def featsel_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
     log-likelihoods exactly like NB (same smoothing shape,
     Modified_NB.java:443-448)."""
     kept, _ = featsel(spark, sf_dir)
-    stats = (
+    stats = collect_scalars(
         kept.agg(
             F.countDistinct("doc_id").cast("long").alias("tweets"),
             F.countDistinct(
@@ -166,8 +172,6 @@ def featsel_model(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, dict]:
             .alias("neg_words"),
             F.countDistinct("word").cast("long").alias("features"),
         )
-        .collect()[0]
-        .asDict()
     )
     model = log_likelihoods(
         vocab_counts(kept),
@@ -184,11 +188,17 @@ def featsel_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``math.log``), unlike NB's ``F.log`` — the two differ in the last
     bit on some ratios, so each chain keeps its own."""
     model, stats = featsel_model(spark, sf_dir)
+    n = stats["tweets"]
+
+    def log_prior(k: int) -> Column:
+        # NULL for an absent class, like NB's F.log(F.lit(0.0))
+        return F.lit(math.log(k / n)) if k else F.lit(None).cast("double")
+
     return scores_for_docs(
         labeled_docs(spark, sf_dir),
         model,
-        F.lit(math.log(stats["pos_tweets"] / stats["tweets"])),
-        F.lit(math.log(stats["neg_tweets"] / stats["tweets"])),
+        log_prior(stats["pos_tweets"]),
+        log_prior(stats["neg_tweets"]),
     )
 
 

@@ -90,18 +90,6 @@ def frontdoor_docs(parsed: DataFrame) -> DataFrame:
     )
 
 
-def nb_frontdoor_from_path(spark: SparkSession, csv_path: str) -> DataFrame:
-    """The reference's ACTUAL front door (Hadoop/NB.java:273-341) as one
-    composition: raw tweets.csv → naive parse → clean → train 75% →
-    predict 25% → ``id@text \\t POSITIVE|NEGATIVE`` rows.  Write with
-    ``sources.sinks.write_text`` for the on-disk layout (S6/S7);
-    tests/test_io.py round-trips exactly that."""
-    from ..operators.nb import output_for_docs
-
-    parsed = read_csv_fidelity(spark, csv_path)
-    return output_for_docs(frontdoor_docs(parsed))
-
-
 # Parsed+cleaned front-door docs are read by four passes inside one
 # query (stats collect, vocab agg, test tokens, output text join) —
 # the 7-regex clean chain dominates, so memoize like labeled_docs.
@@ -121,7 +109,7 @@ def _frontdoor_docs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_csv_nb_frontdoor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-checkable twin of :func:`nb_frontdoor_from_path`: the CSV
+    """Oracle-checkable twin of the ``classify`` command's chain: the CSV
     lines are synthesized from `documents` (embedded comma exercises the
     re-stitch), then the identical parse→clean→train→predict→format
     chain runs.  End-to-end this covers S1+S3+P2..P11+A1..A3+J1+M8+M9+S6

@@ -11,7 +11,7 @@ delete-then-write (S7), and the sep option reproduces the
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 
 def write_text(
@@ -19,10 +19,3 @@ def write_text(
 ) -> None:
     """S6+S7 — tab-separated text sink with overwrite semantics."""
     df.write.mode(mode).option("sep", sep).option("header", "false").csv(path)
-
-
-def read_text_sink(spark: SparkSession, path: str, schema: str, sep: str = "\t") -> DataFrame:
-    """Read back a :func:`write_text` directory (for tests / chaining)."""
-    return (
-        spark.read.option("sep", sep).option("header", "false").schema(schema).csv(path)
-    )
